@@ -266,9 +266,9 @@ object SparkEntry {
       val idf = Linker.buildIdf(s, docs).persist()
       try {
         val mentions = graft.kg.KgPipeline.detectMentions(s, turns, b)
-        val index = graft.link.LinkIndex.build(s, docs, idf = Some(idf))
+        val index = graft.link.LinkIndex.build(s, docs, idf)
         try {
-          val hits = index.link(s, mentions.map(_.doc), 5, stampQueries = true)
+          val hits = index.link(s, mentions.map(_.doc), 5)
           stash(s, hits.toDF()
             .withColumn("similarity", round(col("similarity"), 9))
             .orderBy("queryId", "rank"), "kg_links_indexed")
@@ -291,7 +291,7 @@ object SparkEntry {
         // topN=5 run IS the topN=3 run, so explain shares the run's hits.
         val hits3 = r.hits.filter(_.rank <= 3)
         // mentionsIdf: the on-demand stamped view (run() persists mentions
-        // unstamped since round 6 — the link stamps in-cell).
+        // unstamped — the link stamps in-cell).
         Linker.explainHits(s, r.mentionsIdf.map(_.doc), r.docsIdf, hits3).toDF()
           .select(col("queryId"), col("docId"), col("rank"),
             round(col("similarity"), 9).as("similarity"),
@@ -1200,7 +1200,7 @@ object SparkEntry {
     // Per-term explain stage tables: the kg_links_explain oracle recomputes
     // scoreExplain (lookups, boosts, coord/density, tfidf) in DuckDB from
     // these. Query side = the stamped mention docs (the on-demand
-    // mentionsIdf view — run() keeps mentions unstamped since round 6); doc
+    // mentionsIdf view — run() keeps mentions unstamped); doc
     // side = docsIdf — both straight from the run the hit tables came from.
     val qdocs = r.mentionsIdf.map(_.doc)
     w(qdocs.flatMap(d => d.texts.indices.map(i =>

@@ -41,19 +41,16 @@ object Accuracy {
     val docs = Linker.buildDocs(spark, corpus, dict)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val idf = Linker.buildIdf(spark, docs)
-      .persist(StorageLevel.MEMORY_AND_DISK) // fused link + analyseQueries
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
     // Query ids offset so they never collide with corpus doc ids.
     val queries = pairs.map(p => (p.id + n, p.queryText))
-    // Round 6: interpret only — query idfs stamp IN-CELL (stampQueries, the
-    // KgPipeline.run contract), so the analyseQueries idf cogroup is out of
-    // this DAG too; the interpreted-flag consumer below reads ids only.
+    // Interpret only — the link stamps query idfs in-cell; the
+    // interpreted-flag consumer below reads ids only.
     val qdocs = Linker.buildDocs(spark, queries, dict)
       .persist(StorageLevel.MEMORY_AND_DISK) // interpreted-flag + linkTopK
 
-    // Fused idf attach: no separate docsIdf stage (round 4).
-    val hits = Linker.linkTopKAuto(spark, qdocs, docs, topN = 1,
-      idf = Some(idf), stampQueries = true)
+    val hits = Linker.linkTopKAuto(spark, qdocs, docs, topN = 1, idf)
 
     val labels = pairs.select($"id", $"gridId")
     val interpreted = qdocs.map(_.docId - n).toDF("pair_id")

@@ -7,6 +7,7 @@ import graft.analyse.DocAnalyser
 import graft.interpret.{AddressInterpreter, MutableAddress, RegionVisitor}
 import graft.link.{Dict, Linker}
 import graft.model._
+import graft.pipeline.{PersistStages, Stages}
 
 /** A detected mention inside one transcript turn: identity + interpretation +
   * query term vector. */
@@ -481,13 +482,14 @@ object KgPipeline {
   }
 
   /** One pipeline run's outputs plus ownership of the caches it holds.
-    * `run` persists five datasets (the expensive shared stages); without a
-    * release seam every invocation in a long-lived session (Verify, Bench, a
-    * service) leaks them — measured 30 persistent RDDs after 7 driver
-    * queries in round 2. Callers materialize what they need from the
-    * outputs, then call `unpersistAll()`. The intermediate `docsIdf`/`idf`
-    * stages are exposed for consumers that extend the run (per-term explain,
-    * stage materialization) without re-deriving them. */
+    * Under the default policy `run` persists four datasets (docs, idf,
+    * mentions, hits); without a release seam every invocation in a
+    * long-lived session (Verify, Bench, a service) leaks them — measured 30
+    * persistent RDDs after 7 driver queries in round 2. Callers materialize
+    * what they need from the outputs, then call `unpersistAll()`. The
+    * intermediate `docsIdf`/`idf` stages are exposed for consumers that
+    * extend the run (per-term explain, stage materialization) without
+    * re-deriving them. */
   final case class KgRun(
       mentions: Dataset[MentionDoc],
       triples: Dataset[Triple],
@@ -495,8 +497,8 @@ object KgPipeline {
       idf: Dataset[graft.model.IdfRow],
       docsIdf: Dataset[DocVec],
       mentionsIdf: Dataset[MentionDoc],
-      private val cached: Seq[Dataset[_]]) {
-    def unpersistAll(): Unit = cached.foreach(_.unpersist())
+      private val stages: Stages) {
+    def unpersistAll(): Unit = stages.release()
   }
 
   /** Canonicalization feedback loop (the reference's fourth entry point,
@@ -523,51 +525,38 @@ object KgPipeline {
   /** End-to-end: turns + historical corpus → KgRun(mentions, triples, hits).
     * topN per the reference query default.
     *
-    * The interpret stages (buildDocs, detectMentions) are the expensive
-    * narrow maps and feed 2-3 downstream consumers each — persist them so
-    * each computes exactly once per job DAG (the Spark analog of the
-    * reference's per-district doc/IDF memoization,
-    * `SimilarityComputer.java:567-613`). MEMORY_AND_DISK: partitions spill
-    * rather than recompute at scale. In the checkpointed-stage runner these
-    * become materialized tables instead. The returned KgRun owns the five
-    * persists — callers release them via `unpersistAll()` once outputs are
-    * materialized. */
+    * docs, idf, mentions and hits each feed two or more consumers, so each
+    * goes through `stages` and computes exactly once per job DAG (the Spark
+    * analog of the reference's per-district doc/IDF memoization,
+    * `SimilarityComputer.java:567-613`). The default policy persists them
+    * and the returned KgRun releases them via `unpersistAll()`;
+    * `graft.pipeline.KgJob` passes a `StageRunner`, which makes each one a
+    * resumable table. */
   def run(spark: SparkSession, turns: Dataset[Turn],
-      corpus: Dataset[(Long, String)], dict: Broadcast[Dict], topN: Int)
-      : KgRun = {
-    import org.apache.spark.storage.StorageLevel
+      corpus: Dataset[(Long, String)], dict: Broadcast[Dict], topN: Int,
+      stages: Stages = new PersistStages): KgRun = {
     import spark.implicits._
     // Exact ingest dedup first (`AddressPersister.isDuplicatedAddress`
     // `AddressPersister.java:214-243` — interpret is pure, so deduping the
     // raw text before interpretation is equivalent and cheaper).
-    val docs = Linker.buildDocs(spark, Linker.dedupCorpus(spark, corpus), dict)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val idf = Linker.buildIdf(spark, docs)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Round 6: mentions persist UNSTAMPED — the link stamps query idfs
-    // IN-CELL from the shipped idf blobs (stampQueries below, the same
-    // contract the streaming LinkIndex has used since round 5), so the
-    // per-run stampQueryIdf cogroup — two exchanges of the mention side —
-    // is out of the pipeline DAG. Every other mentions consumer (triples,
-    // co-mention/timeline/tool edges) reads identity/addr fields only.
-    val mentions = detectMentions(spark, turns, dict)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // FUSED idf attach (round 4): the doc side goes into the link shuffle
-    // with zero idfs and the per-district IDF table ships into the scoring
-    // cells, where BOTH sides are stamped before scoring. One fewer full
-    // doc-side shuffle (the old attachIdf cogroup) and one fewer persisted
-    // stage; bit-identical hits (KgPipelineSpec fused gate, DriftPinSpec).
-    val hits = Linker.linkTopKAuto(spark, mentions.map(_.doc), docs, topN,
-        idf = Some(idf), stampQueries = true)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val docs = stages.stage[DocVec]("docs") {
+      Linker.buildDocs(spark, Linker.dedupCorpus(spark, corpus), dict)
+    }
+    val idf = stages.stage[IdfRow]("idf")(Linker.buildIdf(spark, docs))
+    // Mentions stay unstamped: the link stamps both sides in-cell, and every
+    // other consumer reads identity/addr fields only.
+    val mentions = stages.stage[MentionDoc]("mentions") {
+      detectMentions(spark, turns, dict)
+    }
+    val hits = stages.stage[LinkHit]("hits") {
+      Linker.linkTopKAuto(spark, mentions.map(_.doc), docs, topN, idf)
+    }
     // Cold-path views for consumers that need idf-stamped vectors (per-term
-    // explain, stage materialization): derived on demand, NOT persisted —
-    // they no longer participate in the link job.
+    // explain, stage materialization): derived on demand, never persisted.
     val docsIdf = Linker.attachIdf(spark, docs, idf)
     val mentionsIdf = stampQueryIdf(spark, mentions, idf)
     val triples = mentionTriples(spark, mentions, dict)
       .union(linkTriples(spark, mentions, hits))
-    KgRun(mentions, triples, hits, idf, docsIdf, mentionsIdf,
-      Seq(docs, idf, mentions, hits))
+    KgRun(mentions, triples, hits, idf, docsIdf, mentionsIdf, stages)
   }
 }

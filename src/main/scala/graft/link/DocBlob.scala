@@ -16,24 +16,19 @@ import graft.model.DocVec
   * exactly the Side arrays (no intermediate DocVec, no per-term Strings).
   *
   * Layout per doc: docId i64 | n u16 | types chars | per-term text lens u16*n
-  * | packed text chars | [idfs f64*n, only when withIdfs] | [town|village|
-  * road|roadNum as u16 len + chars] | roadNumValue i32.
-  * Blob = u32 count + docs.
+  * | packed text chars | [town|village|road|roadNum as u16 len + chars] |
+  * roadNumValue i32. Blob = u32 count + docs.
+  *
+  * Idfs are not on the wire: they are ~8 of the ~12-18 bytes a term costs,
+  * and the doc side replicates ×qBuckets, so each scoring cell receives its
+  * district's idf table once (`IdfBlob`) and stamps the unpacked sides.
   */
 object DocBlob {
 
   /** Group a partition's docs by partKey and pack into blobs of at most
-    * `maxPerBlob` docs. Emits (partKey, blobBytes).
-    *
-    * `withIdfs = false` omits the per-term idf doubles from the wire format
-    * (the in-cell idf-stamp path, `Linker.linkTopK(idf = Some(...))`): idfs
-    * are ~8 of the ~12-18 bytes a term costs on the wire, and the doc side
-    * replicates ×qBuckets — shipping the per-district idf table once per
-    * cell instead shrinks the dominant shuffle payload by roughly a third.
-    * Pack and unpack must agree on the flag (no self-describing header: the
-    * caller owns both ends of the shuffle). */
-  def packGroups(it: Iterator[DocVec], maxPerBlob: Int,
-      withIdfs: Boolean = true): Iterator[(String, Array[Byte])] = {
+    * `maxPerBlob` docs. Emits (partKey, blobBytes). */
+  def packGroups(it: Iterator[DocVec],
+      maxPerBlob: Int): Iterator[(String, Array[Byte])] = {
     val open = new scala.collection.mutable.HashMap[String, (ByteArrayOutputStream, DataOutputStream, Array[Int])]()
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Byte])]
     def flush(pk: String): Unit = {
@@ -53,7 +48,7 @@ object DocBlob {
         val b = new ByteArrayOutputStream(16 * 1024)
         (b, new DataOutputStream(b), Array(0))
       })
-      writeDoc(dos, d, withIdfs)
+      writeDoc(dos, d)
       cnt(0) += 1
       if (cnt(0) >= maxPerBlob) flush(d.partKey)
     }
@@ -69,8 +64,7 @@ object DocBlob {
     }
   }
 
-  private def writeDoc(dos: DataOutputStream, d: DocVec,
-      withIdfs: Boolean): Unit = {
+  private def writeDoc(dos: DataOutputStream, d: DocVec): Unit = {
     dos.writeLong(d.docId)
     val n = d.nTerms
     dos.writeShort(n)
@@ -79,10 +73,6 @@ object DocBlob {
     while (i < n) { dos.writeShort(d.texts(i).length); i += 1 }
     i = 0
     while (i < n) { dos.writeChars(d.texts(i)); i += 1 }
-    if (withIdfs) {
-      i = 0
-      while (i < n) { dos.writeDouble(d.idfs(i)); i += 1 }
-    }
     writeStr(dos, d.town)
     writeStr(dos, d.village)
     writeStr(dos, d.road)
@@ -90,11 +80,11 @@ object DocBlob {
     dos.writeInt(d.roadNumValue)
   }
 
-  /** Unpack a blob straight into compiled scoring sides. With
-    * `withIdfs = false` the idf arrays come back zeroed — the cell stamps
-    * them from its idf map before scoring (`Scoring.stampSideIdfs`). */
-  def unpackSides(blob: Array[Byte], out: scala.collection.mutable.ArrayBuffer[Scoring.Side],
-      withIdfs: Boolean = true): Unit = {
+  /** Unpack a blob straight into compiled scoring sides. The idf arrays
+    * come back zeroed — the cell stamps them from its idf map before scoring
+    * (`Scoring.stampSideIdfs`). */
+  def unpackSides(blob: Array[Byte],
+      out: scala.collection.mutable.ArrayBuffer[Scoring.Side]): Unit = {
     val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(blob))
     val count = in.readInt()
     var k = 0
@@ -113,10 +103,6 @@ object DocBlob {
       i = 0
       while (i < total) { packed(i) = in.readChar(); i += 1 }
       val idfs = new Array[Double](n)
-      if (withIdfs) {
-        i = 0
-        while (i < n) { idfs(i) = in.readDouble(); i += 1 }
-      }
       def readStr(): String = {
         val len = in.readShort() & 0xffff
         if (len == 0xffff) null
@@ -138,7 +124,7 @@ object DocBlob {
 }
 
 /** Binary block format for shipping a district's IDF table into the scoring
-  * cells (the fused idf-attach path): rows of (termKey, idf) packed per
+  * cells: rows of (termKey, idf) packed per
   * partKey, chunked so one hot district's dictionary never becomes a single
   * giant shuffle row. The cell unions all received chunks into one lookup
   * map before stamping doc sides. */

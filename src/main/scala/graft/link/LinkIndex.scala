@@ -18,18 +18,17 @@ import graft.model.{DocVec, IdfRow, LinkHit}
   *  - doc-bucket count per district is a pure function of the STATIC side
   *    (`db = ⌈d / maxDocsPerCell⌉`, the same task-memory valve the batch
   *    planner applies), so cell membership never depends on the batch;
-  *  - doc blobs and (when idf is fused) the district idf blobs are packed
-  *    and hash-partitioned by cell key `(partKey, dbk)` once, then persisted
-  *    partitioner-aware — idf cells SEPARATELY from doc cells;
+  *  - doc blobs and the district idf blobs are packed and hash-partitioned
+  *    by cell key `(partKey, dbk)` once, then persisted partitioner-aware —
+  *    idf cells SEPARATELY from doc cells;
   *  - each micro-batch replicates its (tiny) QUERY side ×db and cogroups
   *    against the persisted cells **with the index's own partitioner** — a
   *    narrow dependency on the static side: only the queries shuffle, and
   *    corpus passes per batch drop to zero.
   *
-  * Because the fused layout keeps idfs OUT of the doc payload, the index
-  * also supports incremental maintenance without touching the existing
-  * corpus bytes (the reference's import loop grows its corpus batch by
-  * batch):
+  * Because idfs stay OUT of the doc payload, the index also supports
+  * incremental maintenance without touching the existing corpus bytes (the
+  * reference's import loop grows its corpus batch by batch):
   *
   *  - [[appended]] packs only the delta docs into the existing cell space
   *    (partitioner-aware union — still narrow at link time);
@@ -44,7 +43,7 @@ import graft.model.{DocVec, IdfRow, LinkHit}
   * partitioning cannot be carried ACROSS queries — the pair-RDD
   * `partitionBy` + same-partitioner `cogroup`/union contract is exactly the
   * cross-query reuse the streaming path needs. Scoring reuses the batch
-  * kernel (`Linker.scoreCellBlocked`, fused idf stamping, quantized TopK),
+  * kernel (`Linker.scoreCellBlocked`, in-cell idf stamping, quantized TopK),
   * so indexed output is bit-identical to `linkTopKAuto` (LinkIndexSpec).
   *
   * Query buckets are fixed at g=1: micro-batch query sets are small, so
@@ -57,8 +56,7 @@ final class LinkIndex private (
     val docCountByPk: Map[String, Long],
     val maxDocsPerCell: Int,
     private val docCells: RDD[((String, Int), (Int, Array[Byte]))],
-    private val idfCells: Option[RDD[((String, Int), (Int, Array[Byte]))]],
-    val fused: Boolean,
+    private val idfCells: RDD[((String, Int), (Int, Array[Byte]))],
     // Every RDD this generation chain has persisted — the cells themselves
     // plus any parents contributed by earlier generations. `appended` builds
     // a (never-persisted) union RDD, so unpersisting `docCells` alone would
@@ -81,22 +79,13 @@ final class LinkIndex private (
     }.toSet
 
   /** Link one (micro-)batch of queries against the indexed corpus. Only the
-    * query side shuffles; the static side is read in place.
-    *
-    * With `stampQueries` (fused index only) the queries may arrive with NO
-    * idfs: each cell stamps them from its tag-1 idf blobs via the SAME
-    * `DocAnalyser.stampIdf` the batch `stampQueryIdf` cogroup applies — so
-    * the stream drops that per-batch idf-table shuffle too, and the only
-    * per-trigger movement left is the raw query rows. */
-  def link(spark: SparkSession, queries: Dataset[DocVec], topN: Int,
-      wand: Boolean = Linker.WandDefault,
-      stampQueries: Boolean = false): Dataset[LinkHit] = {
+    * query side shuffles; the static side is read in place. Each cell stamps
+    * both sides from its tag-1 idf blobs (input query idfs are ignored), so
+    * the only per-trigger movement is the raw query rows. */
+  def link(spark: SparkSession, queries: Dataset[DocVec],
+      topN: Int): Dataset[LinkHit] = {
     import spark.implicits._
-    require(!stampQueries || fused,
-      "stampQueries needs a fused index (built with idf = Some(...))")
     val bdb = spark.sparkContext.broadcast(dbByPk)
-    val isFused = fused
-    val doStamp = stampQueries
     val qPairs: RDD[((String, Int), DocVec)] = queries.rdd.flatMap { q =>
       (0 until bdb.value.getOrElse(q.partKey, 0))
         .map(dbk => ((q.partKey, dbk), q))
@@ -104,7 +93,7 @@ final class LinkIndex private (
     // Partitioner-aware union of the doc and idf cells: both sides carry
     // the SAME partitioner, so the union is narrow and so is the cogroup's
     // static leg.
-    val cells = idfCells.fold(docCells)(ic => docCells.union(ic))
+    val cells = docCells.union(idfCells)
     assert(cells.partitioner.contains(partitioner),
       "cell union lost its partitioner — static side would re-shuffle")
     val partial: RDD[LinkHit] = cells.cogroup(qPairs, partitioner)
@@ -112,26 +101,20 @@ final class LinkIndex private (
         if (qIt.isEmpty || cellIt.isEmpty) Iterator.empty
         else {
           val buf = scala.collection.mutable.ArrayBuffer.empty[Scoring.Side]
-          val idfMap =
-            if (isFused) new java.util.HashMap[String, java.lang.Double]()
-            else null
+          val idfMap = new java.util.HashMap[String, java.lang.Double]()
           cellIt.foreach { case (tag, bytes) =>
             if (tag == 1) IdfBlob.unpackInto(bytes, idfMap)
-            else DocBlob.unpackSides(bytes, buf, withIdfs = !isFused)
+            else DocBlob.unpackSides(bytes, buf)
           }
           if (buf.isEmpty) Iterator.empty
           else {
-            if (isFused) {
-              var i = 0
-              while (i < buf.length) {
-                Scoring.stampSideIdfs(buf(i), idfMap); i += 1
-              }
+            var i = 0
+            while (i < buf.length) {
+              Scoring.stampSideIdfs(buf(i), idfMap); i += 1
             }
-            val qDocs =
-              if (doStamp)
-                qIt.iterator.map(graft.analyse.DocAnalyser.stampIdf(_, idfMap))
-              else qIt.iterator
-            Linker.scoreCellBlocked(qDocs, buf.toArray, topN, wand = wand)
+            Linker.scoreCellBlocked(
+              qIt.iterator.map(graft.analyse.DocAnalyser.stampIdf(_, idfMap)),
+              buf.toArray, topN)
           }
         }
       }
@@ -144,19 +127,27 @@ final class LinkIndex private (
     }
   }
 
+  /** The pre-collapse call shape of [[link]], kept only because the frozen
+    * benchmark sources (`perfbench/`) call it; it goes with the next change
+    * to the benchmark. `stampQueries` must be true: queries are always
+    * stamped in-cell. */
+  @deprecated("queries are always stamped in-cell; drop stampQueries", "0.1.0")
+  def link(spark: SparkSession, queries: Dataset[DocVec], topN: Int,
+      stampQueries: Boolean): Dataset[LinkHit] = {
+    require(stampQueries, "the link always stamps query idfs in-cell")
+    link(spark, queries, topN)
+  }
+
   /** Incremental corpus growth: pack ONLY the delta docs into the existing
     * cell space (new districts get fresh buckets; existing districts keep
     * their frozen bucket count) and union partitioner-aware — the existing
-    * corpus bytes are never repacked or re-shuffled. Fused-only: an unfused
-    * index carries idfs inside every doc blob, so any delta would invalidate
-    * the whole payload — which is exactly why the fused layout is the one
-    * that scales. Pair with [[withIdf]] for the recomputed table; check
+    * corpus bytes are never repacked or re-shuffled — possible because doc
+    * blobs carry no idfs, which a growing corpus would invalidate wholesale.
+    * Pair with [[withIdf]] for the recomputed table; check
     * [[compactionDue]] periodically. The returned index SHARES this index's
     * persisted cells — unpersist only the final generation. */
   def appended(spark: SparkSession, delta: Dataset[DocVec],
       blobSize: Int = 256): LinkIndex = {
-    require(fused, "appended() needs a fused index: unfused doc blobs embed " +
-      "idfs, which a growing corpus invalidates wholesale")
     val deltaCounts = delta.rdd.map(d => (d.partKey, 1L))
       .reduceByKey(_ + _).collect()
     val mdc = maxDocsPerCell
@@ -170,7 +161,7 @@ final class LinkIndex private (
     val bdb = spark.sparkContext.broadcast(newDb)
     val deltaCells = delta.rdd.mapPartitions { it =>
       var blobIdx = 0
-      DocBlob.packGroups(it, blobSize, withIdfs = false).map {
+      DocBlob.packGroups(it, blobSize).map {
         case (pk, bytes) =>
           blobIdx += 1
           ((pk, blobIdx % bdb.value.getOrElse(pk, 1)), (0, bytes))
@@ -178,20 +169,19 @@ final class LinkIndex private (
     }.partitionBy(partitioner).persist(StorageLevel.MEMORY_AND_DISK)
     deltaCells.count()
     new LinkIndex(newDb, newCounts, mdc, docCells.union(deltaCells),
-      idfCells, fused, owned :+ deltaCells)
+      idfCells, owned :+ deltaCells)
   }
 
   /** Swap the idf cells for a recomputed table (after [[appended]] deltas
     * shift document frequencies): re-ships only the per-district DISTINCT
     * -term dictionaries — the doc payload, which dwarfs them, stays put. */
   def withIdf(spark: SparkSession, idf: Dataset[IdfRow]): LinkIndex = {
-    require(fused, "withIdf() applies to a fused index")
     val bdb = spark.sparkContext.broadcast(dbByPk)
     val cells = LinkIndex.packIdfCells(idf, bdb)
       .partitionBy(partitioner).persist(StorageLevel.MEMORY_AND_DISK)
     cells.count()
     new LinkIndex(dbByPk, docCountByPk, maxDocsPerCell, docCells,
-      Some(cells), fused, owned :+ cells)
+      cells, owned :+ cells)
   }
 
   /** Unpersist EVERY cell RDD this generation chain has persisted —
@@ -216,13 +206,11 @@ object LinkIndex {
 
   /** Build (and EAGERLY materialize) the index: one pass over the static
     * docs to count, one pack + partition shuffle per cell family (docs,
-    * idf), persisted. With `idf` given the doc blobs carry no idfs and the
-    * district idf tables ride as tag-1 blobs into every cell of their
-    * district — the same fused wire format as the batch path. */
-  def build(spark: SparkSession, docs: Dataset[DocVec],
-      idf: Option[Dataset[IdfRow]] = None,
+    * idf), persisted. The doc blobs carry no idfs; the district idf tables
+    * ride as tag-1 blobs into every cell of their district — the same wire
+    * format as the batch path. */
+  def build(spark: SparkSession, docs: Dataset[DocVec], idf: Dataset[IdfRow],
       maxDocsPerCell: Int = 1 << 16, blobSize: Int = 256): LinkIndex = {
-    val fused = idf.isDefined
     val counts = docs.rdd.map(d => (d.partKey, 1L)).reduceByKey(_ + _)
       .collect()
     val docCountByPk: Map[String, Long] = counts.toMap
@@ -237,20 +225,27 @@ object LinkIndex {
     val partitioner = new HashPartitioner(math.max(1, numParts))
     val docCells = docs.rdd.mapPartitions { it =>
       var blobIdx = 0
-      DocBlob.packGroups(it, blobSize, withIdfs = !fused).map {
+      DocBlob.packGroups(it, blobSize).map {
         case (pk, bytes) =>
           blobIdx += 1
           ((pk, blobIdx % bdb.value.getOrElse(pk, 1)), (0, bytes))
       }
     }.partitionBy(partitioner).persist(StorageLevel.MEMORY_AND_DISK)
     docCells.count() // materialize NOW: the one-time cost the stream amortizes
-    val idfCells = idf.map { rows =>
-      val cells = packIdfCells(rows, bdb)
-        .partitionBy(partitioner).persist(StorageLevel.MEMORY_AND_DISK)
-      cells.count()
-      cells
-    }
+    val idfCells = packIdfCells(idf, bdb)
+      .partitionBy(partitioner).persist(StorageLevel.MEMORY_AND_DISK)
+    idfCells.count()
     new LinkIndex(dbByPk, docCountByPk, maxDocsPerCell, docCells, idfCells,
-      fused, Seq(docCells) ++ idfCells)
+      Seq(docCells, idfCells))
+  }
+
+  /** The pre-collapse call shape of [[build]], kept only because the frozen
+    * benchmark sources (`perfbench/`) call it; it goes with the next change
+    * to the benchmark. `idf` must be given. */
+  @deprecated("pass idf: Dataset[IdfRow]", "0.1.0")
+  def build(spark: SparkSession, docs: Dataset[DocVec],
+      idf: Option[Dataset[IdfRow]]): LinkIndex = {
+    require(idf.isDefined, "the index always ships idf into its cells")
+    build(spark, docs, idf.get)
   }
 }

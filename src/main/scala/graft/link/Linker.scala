@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.analyse.DocAnalyser
 import graft.dict.{Regions, TermIndex}
 import graft.interpret.AddressInterpreter
-import graft.model.{DocVec, IdfRow, LinkHit, TermRow}
+import graft.model.{DocVec, IdfRow, LinkHit}
 
 /** Broadcastable dictionary bundle: region tree + trie, built once on the
   * driver (cf. the reference's Spring singletons `TermIndexBuilder` +
@@ -113,13 +113,14 @@ object Dict {
   *  - `buildIdf`: one partial+final hash aggregation over exploded term keys
   *    (`SimilarityComputer.statInverseDocRefers` + idf rule `:580-599` as a
   *    DataFrame job). Shuffles once on (partKey, termKey).
-  *  - `attachIdf` / `analyseQueries`: cogroup on partKey — the equivalent of
-  *    the reference's per-district IDF stamp, one shuffle each side, memory
-  *    bounded by one district's term dictionary.
+  *  - `attachIdf`: cogroup on partKey — the reference's per-district IDF
+  *    stamp as a cold-path view (explain, stage dumps); the link itself
+  *    stamps idfs inside its scoring cells.
   *  - `linkTopK`: the reference's partition-pruned candidate retrieval (D1)
   *    + weighted-cosine scoring (D2/D3) + bounded top-k (E1/E2) as a
   *    skew-safe blocked cross join — see the method doc for the shuffle
-  *    design (binary doc blocks, query bucketing, optional doc bucketing).
+  *    design (binary doc blocks, query bucketing, optional doc bucketing,
+  *    in-cell idf stamping).
   *  - `linkTopKBroadcast`: alternative for hot partitions when the query
   *    side fits a broadcast — the doc side streams with NO shuffle.
   */
@@ -293,20 +294,8 @@ object Linker {
     }
   }
 
-  /** Analyse + idf-stamp the query side. Query terms missing from the
-    * partition IDF table get MISSING_IDF=4 (`SimilarityComputer.java:146-154`).
-    * Input: (queryId, rawText). Un-interpretable queries are dropped. */
-  def analyseQueries(spark: SparkSession, queries: Dataset[(Long, String)],
-      dict: Broadcast[Dict], idf: Dataset[IdfRow]): Dataset[DocVec] = {
-    import spark.implicits._
-    val qdocs = buildDocs(spark, queries, dict)
-    qdocs.groupByKey(_.partKey).cogroup(idf.groupByKey(_.partKey)) {
-      (_, qIt, idfIt) =>
-        val idfMap = new java.util.HashMap[String, java.lang.Double]()
-        idfIt.foreach(r => idfMap.put(r.termKey, r.idf))
-        qIt.map(DocAnalyser.stampIdf(_, idfMap))
-    }
-  }
+  /** Per-partKey cell-split knobs (query buckets × doc buckets). */
+  final case class CellKnobs(qBuckets: Int, dBuckets: Int)
 
   /** Top-k linking: blocked cross join of queries × candidate docs within
     * each partKey, with the DOC side shipped as packed binary blocks
@@ -331,28 +320,21 @@ object Linker {
     *    1/dBuckets of a district's docs and partial top-k heaps merge in a
     *    tiny final reduce) — the memory valve for districts whose full doc
     *    set would not fit a task; results are bit-identical for any knobs.
+    *  - idfs are stamped INSIDE each cell: the per-district `idf` table
+    *    ships into every cell of its district as chunked binary blocks, and
+    *    both sides are stamped from it (`Scoring.stampSideIdfs` for docs,
+    *    `DocAnalyser.stampIdf` for queries) before scoring. Neither side
+    *    needs a stamping cogroup, the replicated doc blobs carry no idf
+    *    payload, and input idfs are ignored (stamping overwrites them). A
+    *    district's distinct-term table is far smaller than its doc-term
+    *    payload, so shipping it ×(g·db) is cheap.
     */
-  /** Per-partKey cell-split knobs (query buckets × doc buckets). */
-  final case class CellKnobs(qBuckets: Int, dBuckets: Int)
-
   def linkTopK(spark: SparkSession, queries: Dataset[DocVec],
-      docs: Dataset[DocVec], topN: Int, qBuckets: Int = 64,
-      dBuckets: Int = 1, blobSize: Int = 256,
+      docs: Dataset[DocVec], topN: Int, idf: Dataset[IdfRow],
+      qBuckets: Int = 64, dBuckets: Int = 1, blobSize: Int = 256,
       knobsByPk: Map[String, CellKnobs] = Map.empty,
-      idf: Option[Dataset[graft.model.IdfRow]] = None,
-      wand: Boolean = WandDefault,
-      qspread: Boolean = QSpreadDefault,
-      stampQueries: Boolean = false): Dataset[LinkHit] = {
+      wand: Boolean = WandDefault): Dataset[LinkHit] = {
     import spark.implicits._
-    // Fused QUERY stamping (round 6): with `stampQueries` the query side may
-    // arrive with ZERO idfs and each cell stamps it from the same in-cell
-    // idf map the doc sides use (`DocAnalyser.stampIdf` — the identical
-    // rule, so scores are bit-identical to the pre-stamped path; the
-    // LinkIndex stream link has used exactly this contract since round 5).
-    // This removes the per-run `stampQueryIdf` cogroup — two exchanges of
-    // the mention side — from the pipeline DAG.
-    require(!stampQueries || idf.isDefined,
-      "stampQueries needs the fused idf path (idf = Some(...))")
     val default = CellKnobs(math.max(1, qBuckets), math.max(1, dBuckets))
     val bknobs = spark.sparkContext.broadcast(knobsByPk)
     def gOf(knobs: Map[String, CellKnobs], pk: String): Int =
@@ -360,24 +342,12 @@ object Linker {
     def dbOf(knobs: Map[String, CellKnobs], pk: String): Int =
       math.max(1, knobs.getOrElse(pk, default).dBuckets)
     val anyDb = default.dBuckets > 1 || knobsByPk.valuesIterator.exists(_.dBuckets > 1)
-    // Fused idf attach (round 4): with `idf` given, `docs` carry ZERO idfs
-    // and the per-district IDF table ships into every scoring cell as
-    // chunked binary blocks alongside the doc blobs; sides are stamped
-    // in-cell before scoring (`Scoring.stampSideIdfs`). This removes the
-    // separate `attachIdf` cogroup — one fewer full doc-side shuffle and no
-    // per-task district-dictionary buffer on the doc path — and the doc
-    // blobs drop their 8-bytes-per-term idf payload from the ×qBuckets
-    // replication. Replication trade: idf rows travel ×(g·db) per district,
-    // but a district's DISTINCT-term table is far smaller than its
-    // doc-term payload. Bit-identical: same map content, same stamp rule
-    // (KgPipelineSpec fused-vs-prestamped gate, DriftPinSpec hashes).
-    val fused = idf.isDefined
 
     // db(pk)==1: each query visits exactly one cell. db(pk)>1: queries
     // replicate across the doc buckets (partial top-k merged below).
     //
-    // The query side typically arrives CLUSTERED by partKey (stampQueryIdf's
-    // cogroup leaves one partition per district), so without a rebalance the
+    // The query side may arrive CLUSTERED by partKey (one partition per
+    // district after any partKey-keyed stage), so without a rebalance the
     // ×dBuckets replication flatMap and its shuffle write for a hot district
     // run inside ONE map task — measured as an 81 s straggler (= the fixed
     // Amdahl term that capped 2→8-core scaling at 0.62) at the sf0.1 scaling
@@ -387,7 +357,7 @@ object Linker {
     // stage embarrassingly parallel. Bit-identical results: the cell cogroup
     // re-keys every row anyway, and per-query top-k is order-independent.
     val qSpread =
-      if (!qspread || !anyDb) queries // no ×db replication ⇒ nothing to spread
+      if (!anyDb) queries // no ×db replication ⇒ nothing to spread
       else queries.repartition(
         math.max(spark.sparkContext.defaultParallelism,
           spark.sessionState.conf.numShufflePartitions),
@@ -404,7 +374,7 @@ object Linker {
     // doc blob, tag 1 = idf blob (replicated to every cell of its partKey).
     val blobs = docs.mapPartitions { it =>
       var blobIdx = 0
-      DocBlob.packGroups(it, blobSize, withIdfs = !fused).map { case (pk, bytes) =>
+      DocBlob.packGroups(it, blobSize).map { case (pk, bytes) =>
         blobIdx += 1
         (pk, blobIdx % dbOf(bknobs.value, pk), bytes)
       }
@@ -412,47 +382,31 @@ object Linker {
     val dTagged = blobs.flatMap { case (pk, dbk, bytes) =>
       (0 until gOf(bknobs.value, pk)).map(qb => (pk, qb, dbk, 0, bytes))
     }
-    val dAll = idf match {
-      case None => dTagged
-      case Some(rows) =>
-        val idfTagged = rows.mapPartitions(it => IdfBlob.packGroups(it))
-          .flatMap { case (pk, bytes) =>
-            val knobs = bknobs.value
-            val g = gOf(knobs, pk)
-            val db = dbOf(knobs, pk)
-            val dbks = if (db == 1) 1 else db
-            for { qb <- 0 until g; dbk <- 0 until dbks }
-              yield (pk, qb, dbk, 1, bytes)
-          }
-        dTagged.union(idfTagged)
-    }
-    val dKeyed = dAll.groupByKey { case (pk, qb, dbk, _, _) =>
+    val idfTagged = idf.mapPartitions(it => IdfBlob.packGroups(it))
+      .flatMap { case (pk, bytes) =>
+        val knobs = bknobs.value
+        for { qb <- 0 until gOf(knobs, pk); dbk <- 0 until dbOf(knobs, pk) }
+          yield (pk, qb, dbk, 1, bytes)
+      }
+    val dKeyed = dTagged.union(idfTagged).groupByKey { case (pk, qb, dbk, _, _) =>
       (pk, qb, if (dbOf(bknobs.value, pk) == 1) 0 else dbk)
     }
 
     val partial = qKeyed.cogroup(dKeyed) { (_, qIt, dIt) =>
       val buf = scala.collection.mutable.ArrayBuffer.empty[Scoring.Side]
-      val idfMap =
-        if (fused) new java.util.HashMap[String, java.lang.Double]() else null
+      val idfMap = new java.util.HashMap[String, java.lang.Double]()
       dIt.foreach { case (_, _, _, tag, bytes) =>
         if (tag == 1) IdfBlob.unpackInto(bytes, idfMap)
-        else DocBlob.unpackSides(bytes, buf, withIdfs = !fused)
+        else DocBlob.unpackSides(bytes, buf)
       }
       if (buf.isEmpty) Iterator.empty
       else {
-        if (fused) {
-          // Stamp AFTER the full pass: idf chunks interleave arbitrarily
-          // with doc blobs in the cell's iterator.
-          var i = 0
-          while (i < buf.length) { Scoring.stampSideIdfs(buf(i), idfMap); i += 1 }
-        }
-        // Lazy map over the query iterator: stamping runs inside
-        // scoreCellBlocked's drain, which happens after the idf map above
-        // is complete.
-        val qs =
-          if (stampQueries) qIt.map(p => DocAnalyser.stampIdf(p._2, idfMap))
-          else qIt.map(_._2)
-        scoreCellBlocked(qs, buf.toArray, topN, wand = wand)
+        // Stamp AFTER the full pass: idf chunks interleave arbitrarily
+        // with doc blobs in the cell's iterator.
+        var i = 0
+        while (i < buf.length) { Scoring.stampSideIdfs(buf(i), idfMap); i += 1 }
+        scoreCellBlocked(qIt.map(p => DocAnalyser.stampIdf(p._2, idfMap)),
+          buf.toArray, topN, wand = wand)
       }
     }
     if (!anyDb) partial
@@ -553,7 +507,7 @@ object Linker {
         val db = math.max(dbWork, dbMem)
         // Round 6: a db>1 split has costs the replicated-bytes minimum
         // (g/db ≈ q/d) does not see — the query side is replicated ×db
-        // AND re-shuffled (qspread), and every query pays a k-row partial
+        // AND re-shuffled (qSpread), and every query pays a k-row partial
         // top-k merge exchange. When the memory valve does not force the
         // split, prefer covering the cells with query buckets ALONE if the
         // extra doc-blob replication stays within 4× of the split plan's
@@ -596,86 +550,77 @@ object Linker {
     *    district's blobs buffered in a single task — cannot occur by
     *    construction. */
   def linkTopKAuto(spark: SparkSession, queries: Dataset[DocVec],
-      docs: Dataset[DocVec], topN: Int,
+      docs: Dataset[DocVec], topN: Int, idf: Dataset[IdfRow],
       targetPairsPerCell: Long = 1L << 22, maxDocsPerCell: Int = 1 << 16,
       maxQBuckets: Int = 256, bcastQMax: Long = 512,
       bcastTotalMax: Long = 1L << 17,
-      idf: Option[Dataset[graft.model.IdfRow]] = None,
-      wand: Boolean = WandDefault,
-      qspread: Boolean = QSpreadDefault,
-      stampQueries: Boolean = false): Dataset[LinkHit] = {
-    import spark.implicits._
-    require(!stampQueries || idf.isDefined,
-      "stampQueries needs the fused idf path (idf = Some(...))")
+      wand: Boolean = WandDefault): Dataset[LinkHit] = {
     val plan = planRoutes(countStats(spark, queries, docs),
       spark.sparkContext.defaultParallelism, targetPairsPerCell,
       maxDocsPerCell, maxQBuckets, bcastQMax, bcastTotalMax)
-    val qCounts = plan.qCounts
     val bcastPks = plan.bcastPks
-    val shufflePks = plan.shufflePks
-    val knobs = plan.knobs
 
-    val bShuffle = spark.sparkContext.broadcast(shufflePks)
+    val bShuffle = spark.sparkContext.broadcast(plan.shufflePks)
     val restHits = linkTopK(spark,
       queries.filter(q => bShuffle.value.contains(q.partKey)),
       docs.filter(d => bShuffle.value.contains(d.partKey)),
-      topN, qBuckets = 1, dBuckets = 1, knobsByPk = knobs,
-      idf = idf.map(_.filter(r => bShuffle.value.contains(r.partKey))),
-      wand = wand, qspread = qspread, stampQueries = stampQueries)
+      topN, idf.filter(r => bShuffle.value.contains(r.partKey)),
+      qBuckets = 1, dBuckets = 1, knobsByPk = plan.knobs, wand = wand)
 
     if (bcastPks.isEmpty) restHits
     else {
       val bBcast = spark.sparkContext.broadcast(bcastPks)
-      val qB = queries.filter(q => bBcast.value.contains(q.partKey)).collect()
-      // Fused idf on the broadcast route: the route's districts' idf tables
-      // are collected and broadcast next to the queries, and the streamed
-      // doc sides are stamped in-task. Driver memory is bounded by those
-      // districts' DISTINCT-term dictionaries — the same structure the
-      // pre-fusion attachIdf cogroup buffered per task (and ≪ the doc
-      // payload the route exists to avoid shuffling); address-shaped
-      // vocabularies saturate, so this is a broadcast-dimension-sized
-      // collect, like the queries themselves.
-      val idfB = idf.map { rows =>
-        val m = new scala.collection.mutable.HashMap[
-          String, java.util.HashMap[String, java.lang.Double]]()
-        rows.filter(r => bBcast.value.contains(r.partKey)).collect()
-          .foreach { r =>
-            m.getOrElseUpdate(r.partKey,
-              new java.util.HashMap[String, java.lang.Double]())
-              .put(r.termKey, r.idf)
-          }
-        spark.sparkContext.broadcast(m.toMap)
-      }
-      // Fused query stamping on the broadcast route: the collected queries
-      // are stamped DRIVER-side from the same collected per-district idf
-      // maps the streamed doc sides use — identical rule, and a partKey
-      // absent from the maps stamps against the empty map (every term
-      // MISSING_IDF), exactly the stampQueryIdf cogroup's behavior for an
-      // idf-less district.
-      val qBStamped =
-        if (!stampQueries) qB
-        else {
-          val maps = idfB.get.value
-          qB.map(q => DocAnalyser.stampIdf(q,
-            maps.getOrElse(q.partKey, EmptyIdfMap)))
-        }
       val hitsB = linkTopKBroadcast(spark,
-        qBStamped, docs.filter(d => bBcast.value.contains(d.partKey)), topN,
-        idfB, wand = wand)
+        queries.filter(q => bBcast.value.contains(q.partKey)).collect(),
+        docs.filter(d => bBcast.value.contains(d.partKey)), topN,
+        idf.filter(r => bBcast.value.contains(r.partKey)), wand = wand)
       restHits.union(hitsB)
     }
+  }
+
+  /** The pre-collapse call shape of [[linkTopKAuto]], kept only because the
+    * frozen benchmark sources (`perfbench/`) call it; it goes with the next
+    * change to the benchmark. `idf` must be given and `stampQueries` true:
+    * the link has one semantics, idf stamped in-cell on both sides. */
+  @deprecated("pass idf: Dataset[IdfRow]; queries are always stamped in-cell", "0.1.0")
+  def linkTopKAuto(spark: SparkSession, queries: Dataset[DocVec],
+      docs: Dataset[DocVec], topN: Int, idf: Option[Dataset[IdfRow]],
+      stampQueries: Boolean): Dataset[LinkHit] = {
+    require(idf.isDefined && stampQueries,
+      "the link always stamps idf in-cell: pass idf and stampQueries = true")
+    linkTopKAuto(spark, queries, docs, topN, idf.get)
   }
 
   /** Broadcast-query variant for hot partitions / huge doc side: the docs side
     * streams with NO shuffle; queries (small) are broadcast grouped by
     * partKey. Emits per-partition partial top-k; final top-k is a tiny
-    * shuffle of k*|queries| rows. */
+    * shuffle of k*|queries| rows.
+    *
+    * idf: the districts' idf tables are collected and broadcast next to the
+    * queries. Queries are stamped driver-side and each streamed doc side
+    * in-task, both from the same per-district map; a partKey absent from
+    * the map stamps against the empty map (every term MISSING_IDF). Driver
+    * memory is bounded by those districts' DISTINCT-term dictionaries,
+    * which address-shaped vocabularies saturate — a broadcast-dimension-
+    * sized collect, like the queries themselves. */
   def linkTopKBroadcast(spark: SparkSession, queries: Array[DocVec],
-      docs: Dataset[DocVec], topN: Int,
-      idfByPk: Option[Broadcast[Map[String, java.util.HashMap[String, java.lang.Double]]]] = None,
+      docs: Dataset[DocVec], topN: Int, idf: Dataset[IdfRow],
       wand: Boolean = WandDefault): Dataset[LinkHit] = {
     import spark.implicits._
-    val byPart = queries.groupBy(_.partKey)
+    val idfByPk = {
+      val m = new scala.collection.mutable.HashMap[
+        String, java.util.HashMap[String, java.lang.Double]]()
+      idf.collect().foreach { r =>
+        m.getOrElseUpdate(r.partKey,
+          new java.util.HashMap[String, java.lang.Double]())
+          .put(r.termKey, r.idf)
+      }
+      spark.sparkContext.broadcast(m.toMap)
+    }
+    val byPart = queries
+      .map(q => DocAnalyser.stampIdf(q,
+        idfByPk.value.getOrElse(q.partKey, EmptyIdfMap)))
+      .groupBy(_.partKey)
     val bq = spark.sparkContext.broadcast(byPart)
     val partial = docs.mapPartitions { it =>
       locally { // scoring-stage attribution, same hook as scoreCellBlocked
@@ -687,7 +632,7 @@ object Linker {
       // (the mirror of scoreCellBlocked's doc postings): each streamed doc
       // only scores the queries it shares ≥1 term text with — exact, see
       // `candidatesOf`'s argument. `masses` parallels `postings` with each
-      // entry's maxQtfidf² (WAND, round 5): pass 1 over a doc's hashes
+      // entry's maxQtfidf² (WAND): pass 1 over a doc's hashes
       // accumulates a per-query bound mass, pass 2 scores only queries
       // whose bound can still beat their heap's kth key — the same
       // admissible, bit-identical skip as the shuffle cells. The RoadNum
@@ -736,15 +681,8 @@ object Linker {
           }
           stamp += 1
           val ds = new Scoring.Side(d)
-          // Fused idf attach: streamed docs carry zero idfs; stamp from the
-          // broadcast per-district map (same rule as the cell path). A
-          // missing district stamps against the empty map — every term gets
-          // MISSING_IDF, exactly attachIdf's behavior for an idf-less
-          // partKey (cannot occur when idf derives from these docs).
-          idfByPk.foreach { b =>
-            Scoring.stampSideIdfs(ds,
-              b.value.getOrElse(d.partKey, EmptyIdfMap))
-          }
+          Scoring.stampSideIdfs(ds,
+            idfByPk.value.getOrElse(d.partKey, EmptyIdfMap))
           // Pass 1: candidates + bound mass for THIS doc.
           cands.n = 0
           val hs = ds.hashes
@@ -942,16 +880,11 @@ object Linker {
     *    the exact ascending doc order of the full scan, so heap contents —
     *    already order-independent via pinned ties — are bit-identical. */
   private val DocChunk = 1024
+
   /** WAND safety factor: the per-doc bound mass accumulates in FLOAT (4
     * bytes × cell pairs, inside the task-memory valve); float summation of
     * ≤ ~64 non-negative terms has relative error ≤ 63·2^-24 ≈ 3.8e-6, so
     * inflating by 1e-4 provably restores admissibility. */
-  /** Kill switch for A/B measurement (GRAFT_QSPREAD=0) of the query-side
-    * rebalance before the ×dBuckets replication; results are bit-identical
-    * either way (partitioning never reaches semantics). */
-  private[graft] val QSpreadDefault: Boolean =
-    sys.env.get("GRAFT_QSPREAD").forall(_ != "0")
-
   private val WandSafety = 1.0001
   /** Kill switch for A/B measurement (GRAFT_WAND=0); results are
     * bit-identical either way (WandSpec), only CPU changes. */

@@ -342,8 +342,8 @@ object Scoring {
     score(new QuerySide(qdoc), new Side(ddoc))
 
   /** Stamp per-term idfs onto an unpacked doc side from a partition idf map
-    * — the in-cell half of the fused idf attach (`Linker.linkTopK(idf =
-    * Some(...))`). EXACTLY `DocAnalyser.stampIdf` on the compiled layout:
+    * — the in-cell idf stamp of `Linker.linkTopK` and `LinkIndex.link`.
+    * EXACTLY `DocAnalyser.stampIdf` on the compiled layout:
     * key = term text, except RoadNum's composite `"<roadText>-<num>"`
     * (`generateIDFCacheEntryKey` `SimilarityComputer.java:180-187`); misses
     * get MISSING_IDF. Safe after Side construction: nothing in Side derives

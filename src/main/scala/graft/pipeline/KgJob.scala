@@ -4,19 +4,18 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.kg.{KgPipeline, MentionDoc}
+import graft.kg.KgPipeline
 import graft.link.{Dict, Linker}
 import graft.model._
 
-/** The checkpointed end-to-end transcript→KG job (north rule shape): every
-  * stage materializes a table under `root` and re-runs resume from the first
-  * missing stage with per-partition lineage/metrics (`StageRunner`).
+/** The checkpointed end-to-end transcript→KG job (north rule shape):
+  * `KgPipeline.run` under a `StageRunner`, so every shared stage (docs, idf,
+  * mentions, hits) and the triples materialize as tables under `root`, and a
+  * re-run resumes from the first missing stage with per-partition
+  * lineage/metrics.
   *
-  * Partitioning is explicit:
-  *  - the transcript side is repartitioned by hash(conv_id) so one
-  *    conversation's turns co-locate (and re-runs are layout-stable);
-  *  - docs/idf shuffle on partKey (the district key);
-  *  - linking uses the grid cogroup (skew-safe, see Linker.linkTopK).
+  * The transcript side is repartitioned by hash(conv_id) first, so one
+  * conversation's turns co-locate and re-runs are layout-stable.
   */
 object KgJob {
 
@@ -25,42 +24,16 @@ object KgJob {
       root: String, runId: String, parallelism: Int): Dataset[Triple] = {
     import spark.implicits._
     val runner = StageRunner(spark, root, runId)
-
-    // Explicit conv_id-hash repartitioning of the input-hint table.
-    val turnsPart = turns.repartition(parallelism, col("conv_id"))
-
-    val docs = runner.stage[DocVec]("docs") {
-      Linker.buildDocs(spark, Linker.dedupCorpus(spark, corpus), dict)
-    }
-    val idf = runner.stage[IdfRow]("idf") {
-      Linker.buildIdf(spark, docs)
-    }
-    val mentions = runner.stage[MentionDoc]("mentions") {
-      KgPipeline.stampQueryIdf(spark,
-        KgPipeline.detectMentions(spark, turnsPart, dict), idf)
-    }
-    // FUSED idf attach (round 5, unified with KgPipeline.run): the link
-    // stage reads the materialized docs + idf tables directly and stamps doc
-    // idfs inside the scoring cells — the standalone docs_idf cogroup
-    // shuffle is out of the checkpointed DAG, and batch/checkpointed/
-    // streaming all share ONE link semantics (bit-identity gated by
-    // KgPipelineSpec's fused==prestamped test; resumed==clean by
-    // PipelineExtrasSpec).
-    val hits = runner.stage[LinkHit]("hits") {
-      Linker.linkTopKAuto(spark, mentions.map(_.doc), docs, topN,
-        idf = Some(idf))
-    }
-    runner.stage[Triple]("triples") {
-      KgPipeline.mentionTriples(spark, mentions, dict)
-        .union(KgPipeline.linkTriples(spark, mentions, hits))
-    }
+    val r = KgPipeline.run(spark, turns.repartition(parallelism, col("conv_id")),
+      corpus, dict, topN, runner)
+    runner.stage[Triple]("triples")(r.triples)
   }
 
   /** On-demand idf-stamped docs stage for explain/stage consumers
-    * (`Linker.explainHits`, the Verify stage materializer). NOT part of the
-    * `run` DAG: the link stage stamps idfs in-cell (fused), so the cogroup
-    * here only runs when a consumer actually asks for the table — and then
-    * checkpoints/resumes like any other stage. */
+    * (`Linker.explainHits`, the Verify stage materializer). Not part of the
+    * `run` DAG: the link stamps idfs in-cell, so this cogroup only runs when
+    * a consumer asks for the table — and then checkpoints/resumes like any
+    * other stage. */
   def docsIdfStage(spark: SparkSession, root: String, runId: String)
       : Dataset[DocVec] = {
     import spark.implicits._

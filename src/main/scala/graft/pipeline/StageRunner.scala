@@ -3,7 +3,33 @@ package graft.pipeline
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{Dataset, Encoder, SaveMode, SparkSession}
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.CollectionAccumulator
+
+/** How a pipeline materializes the stages it reads more than once.
+  * `KgPipeline.run` defines its DAG once against this; [[PersistStages]]
+  * keeps each stage in the session's block manager, [[StageRunner]] writes
+  * it as a resumable table. */
+trait Stages {
+  def stage[T: Encoder](name: String)(compute: => Dataset[T]): Dataset[T]
+
+  /** Drop whatever this policy holds in the session's block manager. */
+  def release(): Unit
+}
+
+/** Persist each stage MEMORY_AND_DISK (partitions spill rather than
+  * recompute at scale) and remember it for [[release]]. */
+final class PersistStages extends Stages {
+  private val held = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+
+  def stage[T: Encoder](name: String)(compute: => Dataset[T]): Dataset[T] = {
+    val ds = compute.persist(StorageLevel.MEMORY_AND_DISK)
+    held += ds
+    ds
+  }
+
+  def release(): Unit = { held.foreach(_.unpersist()); held.clear() }
+}
 
 /** One row of per-partition lineage/metrics (north rule: every stage is
   * resumable with per-partition lineage + metrics; FIXTURES.md §6). */
@@ -33,7 +59,8 @@ final case class StageMetric(
   *    stages therefore read checkpointed data, not a recomputed lineage —
   *    resume-identical by construction).
   */
-final class StageRunner(spark: SparkSession, root: String, runId: String) {
+final class StageRunner(spark: SparkSession, root: String, runId: String)
+    extends Stages {
 
   private def dir(name: String) = s"$root/$name"
   def isComplete(name: String): Boolean =
@@ -74,6 +101,9 @@ final class StageRunner(spark: SparkSession, root: String, runId: String) {
     }
     spark.read.parquet(dir(name)).as[T]
   }
+
+  /** Stage tables live under `root`; nothing is cached in the session. */
+  def release(): Unit = ()
 
   def metrics(): Dataset[StageMetric] = {
     import spark.implicits._

@@ -110,7 +110,7 @@ object TranscriptStream {
     // narrow on the corpus, so per-batch cost no longer scales with corpus
     // size. Output is bit-identical to the per-batch `linkTopKAuto` this
     // replaces (LinkIndexSpec + StreamingSpec stream==batch).
-    val index = graft.link.LinkIndex.build(spark, docs, idf = Some(idf))
+    val index = graft.link.LinkIndex.build(spark, docs, idf)
     LinkStreamHandle(
       linkStreamWith(spark, turns, dict, index, topN, checkpointDir)(sink),
       index)
@@ -134,10 +134,6 @@ object TranscriptStream {
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Turn], batchId: Long) =>
-        // No stampQueryIdf here: the index stamps query idfs IN-CELL from
-        // its idf blobs (same DocAnalyser.stampIdf, bit-identical scores),
-        // so the per-batch idf-table cogroup shuffle disappears as well.
-        //
         // (Round 6 A/B'd a Par.scanSpread-style parallelism floor on the
         // batch before detection — a consistent measured LOSS at sf0.1
         // (5.3→6.2 s): the added exchange's map side still reads the
@@ -148,8 +144,7 @@ object TranscriptStream {
         val mentions = KgPipeline.detectMentions(spark, batch, dict)
           .persist()
         try {
-          val hits = index.link(spark, mentions.map(_.doc), topN,
-            stampQueries = true)
+          val hits = index.link(spark, mentions.map(_.doc), topN)
           sink(KgPipeline.mentionTriples(spark, mentions, dict)
             .union(KgPipeline.linkTriples(spark, mentions, hits)), batchId)
         } finally { mentions.unpersist(); () }

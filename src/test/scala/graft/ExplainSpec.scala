@@ -64,7 +64,7 @@ class ExplainSpec extends AnyFunSuite {
     val docs0 = Linker.buildDocs(s, s.createDataset(corpusRows).repartition(5), bdict)
     val idf = Linker.buildIdf(s, docs0)
     val docs = Linker.attachIdf(s, docs0, idf).persist()
-    val hits = Linker.linkTopKAuto(s, docs, docs, 3)
+    val hits = Linker.linkTopKAuto(s, docs, docs, 3, idf)
     val ex = Linker.explainHits(s, docs, docs, hits).collect()
     assert(ex.nonEmpty)
     val byId = docs.collect().map(d => d.docId -> d).toMap

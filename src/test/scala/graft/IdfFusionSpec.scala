@@ -6,13 +6,12 @@ import graft.analyse.DocAnalyser
 import graft.link.{DocBlob, IdfBlob, Scoring}
 import graft.model.{DocVec, IdfRow}
 
-/** Pure-JVM unit gates for the fused idf-attach seams (round 4): the
-  * IdfBlob wire codec, the idf-less DocBlob mode, and the in-cell
-  * `Scoring.stampSideIdfs` contract — each pinned against the pre-fusion
-  * reference implementation (`DocAnalyser.stampIdf`), which stays the
-  * cold-path semantics owner. Spark-level fused==prestamped bit-identity
-  * lives in KgPipelineSpec; these isolate the pieces so a codec or keying
-  * bug points at itself. */
+/** Pure-JVM unit gates for the in-cell idf seams: the IdfBlob wire codec,
+  * the idf-less DocBlob codec, and the in-cell `Scoring.stampSideIdfs`
+  * contract — pinned against `DocAnalyser.stampIdf`, which stays the
+  * cold-path semantics owner. Spark-level knob bit-identity lives in
+  * KgPipelineSpec; these isolate the pieces so a codec or keying bug points
+  * at itself. */
 class IdfFusionSpec extends AnyFunSuite {
 
   private def doc(id: Long, pk: String): DocVec = DocVec(
@@ -41,14 +40,12 @@ class IdfFusionSpec extends AnyFunSuite {
     assert(merged.size == rows.size)
   }
 
-  test("DocBlob withIdfs=false round-trips every field except idfs (zeroed)") {
+  test("DocBlob round-trips every field except idfs (zeroed)") {
     val d = doc(7L, "110000-110100-110101").copy(
       idfs = Array(1.0, 2.0, 3.0, 4.0, 5.0, 6.0))
-    val blobs = DocBlob.packGroups(Iterator(d), 16, withIdfs = false).toSeq
+    val blobs = DocBlob.packGroups(Iterator(d), 16).toSeq
     val buf = scala.collection.mutable.ArrayBuffer.empty[Scoring.Side]
-    blobs.foreach { case (_, bytes) =>
-      DocBlob.unpackSides(bytes, buf, withIdfs = false)
-    }
+    blobs.foreach { case (_, bytes) => DocBlob.unpackSides(bytes, buf) }
     assert(buf.size == 1)
     val s = buf.head
     assert(s.docId == 7L && s.types == d.tTypes)

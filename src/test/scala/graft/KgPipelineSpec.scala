@@ -2,6 +2,7 @@ package graft
 
 import scala.collection.mutable
 
+import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analyse.DocAnalyser
@@ -176,120 +177,39 @@ class KgPipelineSpec extends AnyFunSuite {
     import s.implicits._
     val corpusRows = SynthCorpus.corpus(regions, 400, 4, seed = 17)
     val bdict = s.sparkContext.broadcast(d0)
-    val docs0 = Linker.buildDocs(s, s.createDataset(corpusRows).repartition(6), bdict)
-    val idf = Linker.buildIdf(s, docs0)
-    val docs = Linker.attachIdf(s, docs0, idf)
-    // Use corpus docs themselves as queries (self-link).
+    val docs = Linker.buildDocs(s, s.createDataset(corpusRows).repartition(6), bdict)
+    val idf = Linker.buildIdf(s, docs)
+    def key(hs: Dataset[LinkHit]) = hs.collect()
+      .map(h => (h.queryId, h.docId, h.rank,
+        java.lang.Double.doubleToLongBits(h.similarity))).toSet
+    // Use corpus docs themselves as queries (self-link); one cell per
+    // district is the base every knob setting must reproduce.
     def run(qb: Int, db: Int, blob: Int) =
-      Linker.linkTopK(s, docs, docs, 5, qBuckets = qb, dBuckets = db,
-        blobSize = blob)
-        .collect()
-        .map(h => (h.queryId, h.docId, h.rank,
-          java.lang.Double.doubleToLongBits(h.similarity))).toSet
+      key(Linker.linkTopK(s, docs, docs, 5, idf, qBuckets = qb, dBuckets = db,
+        blobSize = blob))
     val base = run(1, 1, 1000000)
     assert(base.nonEmpty)
     assert(run(24, 1, 256) == base)
     assert(run(7, 3, 16) == base)
 
     // Broadcast-query variant (hot-partition escape hatch) agrees too.
-    val bc = Linker.linkTopKBroadcast(s, docs.collect(), docs, 5)
-      .collect()
-      .map(h => (h.queryId, h.docId, h.rank,
-        java.lang.Double.doubleToLongBits(h.similarity))).toSet
-    assert(bc == base)
+    assert(key(Linker.linkTopKBroadcast(s, docs.collect(), docs, 5, idf)) == base)
 
     // Per-partKey knob overrides agree (mixed g/db across districts).
     val pks = docs.collect().map(_.partKey).distinct.sorted
     val mixed = pks.zipWithIndex.map { case (pk, i) =>
       pk -> Linker.CellKnobs(1 + (i % 5), 1 + (i % 3))
     }.toMap
-    val perPk = Linker.linkTopK(s, docs, docs, 5, qBuckets = 2, dBuckets = 1,
-        blobSize = 64, knobsByPk = mixed)
-      .collect()
-      .map(h => (h.queryId, h.docId, h.rank,
-        java.lang.Double.doubleToLongBits(h.similarity))).toSet
-    assert(perPk == base)
+    assert(key(Linker.linkTopK(s, docs, docs, 5, idf, qBuckets = 2,
+      dBuckets = 1, blobSize = 64, knobsByPk = mixed)) == base)
 
     // Auto mode (counted stats → knobs + broadcast routing) agrees, with
     // thresholds forced low enough that BOTH the 2-D blocking and the
     // broadcast route actually exercise on this small input.
-    val auto = Linker.linkTopKAuto(s, docs, docs, 5,
-        targetPairsPerCell = 64, maxDocsPerCell = 32, bcastQMax = 0)
-      .collect()
-      .map(h => (h.queryId, h.docId, h.rank,
-        java.lang.Double.doubleToLongBits(h.similarity))).toSet
-    assert(auto == base)
-    val autoBcast = Linker.linkTopKAuto(s, docs, docs, 5,
-        targetPairsPerCell = 64, maxDocsPerCell = 32, bcastQMax = 1000000)
-      .collect()
-      .map(h => (h.queryId, h.docId, h.rank,
-        java.lang.Double.doubleToLongBits(h.similarity))).toSet
-    assert(autoBcast == base)
-
-    // FUSED idf attach (round 4): zero-idf docs + in-cell stamping from the
-    // shipped idf table is bit-identical to pre-stamped docs — across plain
-    // cells, doc-bucketed cells, auto knobs, and the broadcast route (which
-    // stamps streamed sides from the broadcast per-district maps).
-    def runFused(qb: Int, db: Int, blob: Int) =
-      Linker.linkTopK(s, docs, docs0, 5, qBuckets = qb, dBuckets = db,
-        blobSize = blob, idf = Some(idf))
-        .collect()
-        .map(h => (h.queryId, h.docId, h.rank,
-          java.lang.Double.doubleToLongBits(h.similarity))).toSet
-    assert(runFused(1, 1, 1000000) == base)
-    assert(runFused(7, 3, 16) == base)
-    val autoFused = Linker.linkTopKAuto(s, docs, docs0, 5,
-        targetPairsPerCell = 64, maxDocsPerCell = 32, bcastQMax = 0,
-        idf = Some(idf))
-      .collect()
-      .map(h => (h.queryId, h.docId, h.rank,
-        java.lang.Double.doubleToLongBits(h.similarity))).toSet
-    assert(autoFused == base)
-    val autoBcastFused = Linker.linkTopKAuto(s, docs, docs0, 5,
-        targetPairsPerCell = 64, maxDocsPerCell = 32, bcastQMax = 1000000,
-        idf = Some(idf))
-      .collect()
-      .map(h => (h.queryId, h.docId, h.rank,
-        java.lang.Double.doubleToLongBits(h.similarity))).toSet
-    assert(autoBcastFused == base)
-
-    // Query-side rebalance (round 5): the repartition before the ×dBuckets
-    // replication is pure partitioning — on vs off must be bit-identical,
-    // with db > 1 so the replicated path actually runs, and through the
-    // fused auto route (the shape the scaling job executes). The runs above
-    // all use the default (on); these pin the off arm to the same set.
-    val noSpread = Linker.linkTopK(s, docs, docs, 5, qBuckets = 7,
-        dBuckets = 3, blobSize = 16, qspread = false)
-      .collect()
-      .map(h => (h.queryId, h.docId, h.rank,
-        java.lang.Double.doubleToLongBits(h.similarity))).toSet
-    assert(noSpread == base)
-    val autoFusedNoSpread = Linker.linkTopKAuto(s, docs, docs0, 5,
-        targetPairsPerCell = 64, maxDocsPerCell = 32, bcastQMax = 0,
-        idf = Some(idf), qspread = false)
-      .collect()
-      .map(h => (h.queryId, h.docId, h.rank,
-        java.lang.Double.doubleToLongBits(h.similarity))).toSet
-    assert(autoFusedNoSpread == base)
-
-    // Fused QUERY stamping (round 6): ZERO-IDF queries stamped in-cell from
-    // the shipped idf blobs (shuffle cells) and driver-side from the
-    // collected per-district maps (broadcast route) must be bit-identical
-    // to the pre-stamped query side — the KgPipeline.run link shape.
-    val autoQStamp = Linker.linkTopKAuto(s, docs0, docs0, 5,
-        targetPairsPerCell = 64, maxDocsPerCell = 32, bcastQMax = 0,
-        idf = Some(idf), stampQueries = true)
-      .collect()
-      .map(h => (h.queryId, h.docId, h.rank,
-        java.lang.Double.doubleToLongBits(h.similarity))).toSet
-    assert(autoQStamp == base)
-    val autoQStampBcast = Linker.linkTopKAuto(s, docs0, docs0, 5,
-        targetPairsPerCell = 64, maxDocsPerCell = 32, bcastQMax = 1000000,
-        idf = Some(idf), stampQueries = true)
-      .collect()
-      .map(h => (h.queryId, h.docId, h.rank,
-        java.lang.Double.doubleToLongBits(h.similarity))).toSet
-    assert(autoQStampBcast == base)
+    assert(key(Linker.linkTopKAuto(s, docs, docs, 5, idf,
+      targetPairsPerCell = 64, maxDocsPerCell = 32, bcastQMax = 0)) == base)
+    assert(key(Linker.linkTopKAuto(s, docs, docs, 5, idf,
+      targetPairsPerCell = 64, maxDocsPerCell = 32, bcastQMax = 1000000)) == base)
   }
 
   test("co-mention adjacency: edge weights count distinct conversations") {

@@ -7,7 +7,7 @@ import graft.data.SynthCorpus
 import graft.link.{LinkIndex, Linker}
 
 /** The streaming static-side index: bit-identity with the batch link across
-  * fused/unfused and single-/multi-bucket shapes, plus the locality property
+  * single-/multi-bucket shapes and grow-in-place, plus the locality property
   * the index exists for — a micro-batch link must NOT re-shuffle the corpus.
   */
 class LinkIndexSpec extends AnyFunSuite {
@@ -19,7 +19,7 @@ class LinkIndexSpec extends AnyFunSuite {
     hs.map(h => (h.queryId, h.docId, h.rank,
       java.lang.Double.doubleToLongBits(h.similarity))).toSet
 
-  test("indexed link is bit-identical to linkTopKAuto (fused + unfused, db>1)") {
+  test("indexed link is bit-identical to linkTopKAuto (db>1)") {
     val s = spark
     import s.implicits._
     val corpusRows = SynthCorpus.corpus(d0.regions, 400, 4, seed = 17)
@@ -28,28 +28,19 @@ class LinkIndexSpec extends AnyFunSuite {
     val idf = Linker.buildIdf(s, docs0)
     val docs = Linker.attachIdf(s, docs0, idf)
 
-    val base = hitsKey(Linker.linkTopKAuto(s, docs, docs, 5).collect())
+    val base = hitsKey(Linker.linkTopKAuto(s, docs0, docs0, 5, idf).collect())
     assert(base.nonEmpty)
 
-    // Unfused (docs carry idfs), default cell valve (db == 1 everywhere).
-    val plain = LinkIndex.build(s, docs)
-    assert(hitsKey(plain.link(s, docs, 5).collect()) == base)
+    // Valve forced low so every district splits into multiple doc buckets
+    // and the partial-topk merge actually runs.
+    val index = LinkIndex.build(s, docs0, idf, maxDocsPerCell = 8, blobSize = 4)
+    assert(index.dbByPk.valuesIterator.exists(_ > 1))
+    assert(hitsKey(index.link(s, docs0, 5).collect()) == base)
     // Second batch against the SAME index: identical again (reuse path).
-    assert(hitsKey(plain.link(s, docs, 5).collect()) == base)
-    plain.unpersist()
-
-    // Fused (zero-idf docs + tag-1 idf blobs), valve forced low so every
-    // district splits into multiple doc buckets and the partial-topk merge
-    // actually runs.
-    val fusedIdx = LinkIndex.build(s, docs0, idf = Some(idf),
-      maxDocsPerCell = 8, blobSize = 4)
-    assert(fusedIdx.dbByPk.valuesIterator.exists(_ > 1))
-    assert(hitsKey(fusedIdx.link(s, docs, 5).collect()) == base)
-    // In-cell QUERY stamping: zero-idf queries + stampQueries == the same
-    // bits as pre-stamped queries (the stream's no-idf-shuffle path).
-    assert(hitsKey(fusedIdx.link(s, docs0, 5, stampQueries = true).collect())
-      == base)
-    fusedIdx.unpersist()
+    assert(hitsKey(index.link(s, docs0, 5).collect()) == base)
+    // Queries that already carry idfs are re-stamped in-cell to the same bits.
+    assert(hitsKey(index.link(s, docs, 5).collect()) == base)
+    index.unpersist()
   }
 
   test("incremental append + idf refresh == full rebuild == batch auto, bit-identical") {
@@ -65,7 +56,7 @@ class LinkIndexSpec extends AnyFunSuite {
     val queries = Linker.attachIdf(s, docsAll0, idfAll)
 
     val base = hitsKey(
-      Linker.linkTopKAuto(s, queries, docsAll0, 5, idf = Some(idfAll))
+      Linker.linkTopKAuto(s, queries, docsAll0, 5, idfAll)
         .collect())
     assert(base.nonEmpty)
 
@@ -75,11 +66,11 @@ class LinkIndexSpec extends AnyFunSuite {
     // full corpus AND the batch auto link, bit for bit.
     val persistedBefore = s.sparkContext.getPersistentRDDs.keySet
     val idf300 = Linker.buildIdf(s, docsOf(first))
-    val gen0 = LinkIndex.build(s, docsOf(first), idf = Some(idf300))
+    val gen0 = LinkIndex.build(s, docsOf(first), idf300)
     val gen1 = gen0.appended(s, docsOf(delta)).withIdf(s, idfAll)
     assert(hitsKey(gen1.link(s, queries, 5).collect()) == base)
 
-    val rebuilt = LinkIndex.build(s, docsAll0, idf = Some(idfAll))
+    val rebuilt = LinkIndex.build(s, docsAll0, idfAll)
     assert(hitsKey(rebuilt.link(s, queries, 5).collect()) == base)
 
     // The valve bookkeeping survives the append.
@@ -120,12 +111,12 @@ class LinkIndexSpec extends AnyFunSuite {
       shuffleWrite.sum()
     }
 
-    val index = LinkIndex.build(s, docs0, idf = Some(idf))
+    val index = LinkIndex.build(s, docs0, idf)
     val perBatch = measured {
       index.link(s, queries, 5).collect(); ()
     }
     val perAuto = measured {
-      Linker.linkTopKAuto(s, queries, docs0, 5, idf = Some(idf)).collect(); ()
+      Linker.linkTopKAuto(s, queries, docs0, 5, idf).collect(); ()
     }
     // The auto path shuffles the packed corpus every call; the indexed path
     // shuffles only the 20 queries (plus the hit rows). An order of

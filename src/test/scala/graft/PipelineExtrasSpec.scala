@@ -102,6 +102,58 @@ class CheckpointSpec extends AnyFunSuite {
     assert(m.exists(_.runId == "run-b1") && m.exists(_.runId == "run-b2"))
     assert(m.forall(_.rowsOut >= 0) && m.exists(_.rowsOut > 0))
   }
+
+  private def tripleBits(ts: Array[Triple]) = ts.map(t =>
+    (t.subj, t.pred, t.obj, t.partKey,
+      java.lang.Double.doubleToLongBits(t.score))).toSet
+
+  private def kgInputs(s: org.apache.spark.sql.SparkSession) = {
+    import s.implicits._
+    (s.createDataset(SynthCorpus.transcripts(d0.regions, 60, 4, seed = 32))
+      .repartition(5),
+     s.createDataset(SynthCorpus.corpus(d0.regions, 300, 4, seed = 31))
+      .repartition(5))
+  }
+
+  test("KgJob.run and KgPipeline.run produce bit-identical triples") {
+    val s = spark
+    val bdict = s.sparkContext.broadcast(d0)
+    val (turns, corpus) = kgInputs(s)
+    val root = Files.createTempDirectory("graft-onedag").toString
+    val job = tripleBits(
+      KgJob.run(s, turns, corpus, bdict, 5, root, "run", 5).collect())
+    val r = KgPipeline.run(s, turns, corpus, bdict, 5)
+    val pipe = try tripleBits(r.triples.collect()) finally r.unpersistAll()
+    assert(job.exists(_._2 == "linkedTo"))
+    assert(job == pipe)
+  }
+
+  test("a root whose mentions stage carries stamped idfs resumes to identical triples") {
+    // Roots written before the link stamped queries in-cell hold
+    // idf-stamped mentions; re-stamping them in the cells must be a no-op.
+    val s = spark
+    import s.implicits._
+    val bdict = s.sparkContext.broadcast(d0)
+    val (turns, corpus) = kgInputs(s)
+    val fresh = tripleBits(KgJob.run(s, turns, corpus, bdict, 5,
+      Files.createTempDirectory("graft-fresh").toString, "run", 5).collect())
+
+    val root = Files.createTempDirectory("graft-oldroot").toString
+    val runner = StageRunner(s, root, "old")
+    val docs = runner.stage[DocVec]("docs") {
+      graft.link.Linker.buildDocs(s, graft.link.Linker.dedupCorpus(s, corpus),
+        bdict)
+    }
+    val idf = runner.stage[IdfRow]("idf")(graft.link.Linker.buildIdf(s, docs))
+    val mentions = runner.stage[graft.kg.MentionDoc]("mentions") {
+      KgPipeline.stampQueryIdf(s, KgPipeline.detectMentions(s, turns, bdict), idf)
+    }
+    assert(mentions.collect().exists(_.doc.idfs.exists(_ > 0)))
+    val resumed = tripleBits(
+      KgJob.run(s, turns, corpus, bdict, 5, root, "new", 5).collect())
+    assert(fresh.exists(_._2 == "linkedTo"))
+    assert(resumed == fresh)
+  }
 }
 
 /** `.vt` serialization golden — format from `SimilarityServiceTest.java:58-89`
@@ -312,11 +364,11 @@ class StreamingSpec extends AnyFunSuite {
     // Batch reference: identical stages over ALL turns at once. Mention
     // triples are per-turn and link top-k is per-query vs the static side,
     // so the micro-batch union must equal the one-shot batch exactly —
-    // including bit-identical scores (fused link, pinned ties).
-    val mentions = graft.kg.KgPipeline.stampQueryIdf(s,
-      graft.kg.KgPipeline.detectMentions(s, s.createDataset(turns), bdict), idf)
+    // including bit-identical scores (in-cell idf stamping, pinned ties).
+    val mentions =
+      graft.kg.KgPipeline.detectMentions(s, s.createDataset(turns), bdict)
     val hits = graft.link.Linker.linkTopKAuto(s, mentions.map(_.doc), docs, 3,
-      idf = Some(idf))
+      idf)
     val batch = graft.kg.KgPipeline.mentionTriples(s, mentions, bdict)
       .union(graft.kg.KgPipeline.linkTriples(s, mentions, hits))
       .collect()
@@ -366,18 +418,17 @@ class StreamingSpec extends AnyFunSuite {
     def batchRef(rows: Seq[Turn], corpus: Seq[(Long, String)]) = {
       val docs = docsOf(corpus)
       val idf = graft.link.Linker.buildIdf(s, docs)
-      val mentions = graft.kg.KgPipeline.stampQueryIdf(s,
-        graft.kg.KgPipeline.detectMentions(s, s.createDataset(rows), bdict),
-        idf)
+      val mentions =
+        graft.kg.KgPipeline.detectMentions(s, s.createDataset(rows), bdict)
       val hits = graft.link.Linker.linkTopKAuto(s, mentions.map(_.doc), docs,
-        3, idf = Some(idf))
+        3, idf)
       graft.kg.KgPipeline.mentionTriples(s, mentions, bdict)
         .union(graft.kg.KgPipeline.linkTriples(s, mentions, hits))
         .collect().map(key).toSet
     }
 
     val idf0 = graft.link.Linker.buildIdf(s, docsOf(first))
-    val gen0 = graft.link.LinkIndex.build(s, docsOf(first), idf = Some(idf0))
+    val gen0 = graft.link.LinkIndex.build(s, docsOf(first), idf0)
     val epoch1 = runEpoch(gen0, t1)
     assert(epoch1 == batchRef(t1, first))
 

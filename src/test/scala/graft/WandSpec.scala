@@ -80,8 +80,9 @@ class WandSpec extends AnyFunSuite {
     val docs = cellInputs(1500)
     val queries = docs.take(120).toArray
     val ds = s.createDataset(docs).repartition(4)
+    val idf = Linker.buildIdf(s, ds).persist()
     def run(wand: Boolean) =
-      Linker.linkTopKBroadcast(s, queries, ds, 5, wand = wand)
+      Linker.linkTopKBroadcast(s, queries, ds, 5, idf, wand = wand)
         .collect()
         .map(h => (h.queryId, h.docId, h.rank,
           java.lang.Double.doubleToLongBits(h.similarity)))
@@ -89,6 +90,7 @@ class WandSpec extends AnyFunSuite {
     val on = run(wand = true)
     val off = run(wand = false)
     assert(on.nonEmpty && on.sameElements(off))
+    idf.unpersist(); ()
   }
 
   test("full-pipeline link is bit-identical with pruning on vs off") {
@@ -99,12 +101,10 @@ class WandSpec extends AnyFunSuite {
     val turns = SynthCorpus.transcriptsDS(s, b, 200L, 5, seed = 7)
     val docs = Linker.buildDocs(s, corpus, b).persist()
     val idf = Linker.buildIdf(s, docs).persist()
-    val mentions = graft.kg.KgPipeline.stampQueryIdf(s,
-      graft.kg.KgPipeline.detectMentions(s, turns, b), idf).persist()
+    val mentions = graft.kg.KgPipeline.detectMentions(s, turns, b).persist()
     try {
       def hits(wand: Boolean) =
-        Linker.linkTopKAuto(s, mentions.map(_.doc), docs, 5,
-            idf = Some(idf), wand = wand)
+        Linker.linkTopKAuto(s, mentions.map(_.doc), docs, 5, idf, wand = wand)
           .collect()
           .map(h => (h.queryId, h.docId, h.rank,
             java.lang.Double.doubleToLongBits(h.similarity)))
