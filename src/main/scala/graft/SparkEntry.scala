@@ -115,7 +115,7 @@ object SparkEntry {
   }
 
   /** `scoped` for derived analytics that return EAGERLY CHECKPOINTED results
-    * (the round-6 `Par.sized` ops — coMentionEdges/pmiEdges/negativeSamples/
+    * (the sized ops — coMentionEdges/pmiEdges/negativeSamples/
     * entityTimeline/toolEntityEdges): stash the finished table, then free
     * the derivation's checkpoint blocks deterministically (closing the
     * pmiEdges lingering-blocks note from round-5 ADVICE). `f` also receives

@@ -2,6 +2,8 @@ package graft.kg
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointBlocks.release
+import org.apache.spark.sql.graft.SizedSession
 import org.apache.spark.storage.StorageLevel
 
 /** Analytics over the MATERIALIZED knowledge graph (north rule: "graph
@@ -56,24 +58,21 @@ object GraphOps {
     * LinkIndex lesson). */
   def pageRank[T](edges: DataFrame, iters: Int, damping: Double = 0.85)
       (use: DataFrame => T): T = {
-    val spark = edges.sparkSession
     // The edge list often arrives with an expensive lineage (the co-mention
     // self-join over the full pipeline); it is read twice below (node list,
     // transition table) — cache it for the duration. Everything after this
     // persist runs inside the try: a mid-iteration failure must still
-    // restore the session's shuffle-partition setting and release every
-    // cache/checkpoint (the leak class the loan pattern exists to prevent).
-    val e = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    // AQE off for the iteration loop — per-stage re-planning latency is
-    // pure overhead on graph-sized exchanges (the labelPropagation lesson:
-    // it dominated the round jobs at sf0.1); restored in the finally.
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    // release every cache/checkpoint (the leak class the loan pattern exists
+    // to prevent).
+    val e0 = edges.persist(StorageLevel.MEMORY_AND_DISK)
     var nodes: DataFrame = null
     var trans: DataFrame = null
     var ranks: DataFrame = null
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // AQE off for the iteration loop: per-stage re-planning latency is pure
+    // overhead on graph-sized exchanges (it dominated the round jobs at
+    // sf0.1).
+    try SizedSession(edges.sparkSession) { w =>
+      val e = w(e0)
       val ud = e.select(col("src"), col("dst"),
           col("weight").cast("double").as("w"))
         .union(e.select(col("dst").as("src"), col("src").as("dst"),
@@ -84,53 +83,46 @@ object GraphOps {
       if (n == 0)
         // No edges (e.g. a scale where no rank-1 co-mentions exist): empty
         // result with the right schema — the oracle likewise returns 0 rows.
-        return use(e.select(col("src").as("doc_id"),
+        use(e.select(col("src").as("doc_id"),
           lit(0.0).as("pagerank")).where(lit(false)))
-      val outW = ud.groupBy("src").agg(sum("w").as("out_w"))
-      trans = ud.join(outW, "src")
-        .select(col("src"), col("dst"), (col("w") / col("out_w")).as("p"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val m = trans.count() // materialize once; iterations re-read the blocks
-      // Size the ITERATION shuffles to the graph, not the session default:
-      // the sessions here pin spark.sql.shuffle.partitions to corpus width
-      // with AQE coalescing off (the scoring-cell requirement), so a graph
-      // orders of magnitude smaller than the corpus would otherwise pay
-      // corpus-width task-launch overhead × stages × iterations (measured:
-      // ~6s/iteration on a 6.6k-node graph at 64 partitions). ~50k rows per
-      // partition, capped at 4× cluster width for genuinely large graphs;
-      // restored in the finally below. (Round 6 A/B'd moving this sizing
-      // BEFORE the nodes/trans builds — an extra edge-lineage action made it
-      // a net loss at sf0.1; kept in the round-5 shape.)
-      spark.conf.set("spark.sql.shuffle.partitions",
-        math.max(1L, math.min(math.max(n, m) / 50000L + 1,
-          4L * spark.sparkContext.defaultParallelism)).toString)
-      val base = (1.0 - damping) / n
-      ranks = nodes.select(col("id"), lit(1.0 / n).as("rank"))
-        .localCheckpoint(true)
-      var it = 0
-      while (it < iters) {
-        val next = trans.join(ranks, trans("src") === ranks("id"))
-          .groupBy(trans("dst").as("nid"))
-          .agg(sum(col("p") * col("rank")).as("inflow"))
-          .join(nodes, nodes("id") === col("nid"), "right")
-          .select(col("id"),
-            (lit(base) + lit(damping) * coalesce(col("inflow"), lit(0.0)))
-              .as("rank"))
-          .localCheckpoint(true) // eager: materialized before old blocks go
-        org.apache.spark.sql.graft.CheckpointBlocks.release(ranks)
-        ranks = next
-        it += 1
+      else {
+        val outW = ud.groupBy("src").agg(sum("w").as("out_w"))
+        trans = ud.join(outW, "src")
+          .select(col("src"), col("dst"), (col("w") / col("out_w")).as("p"))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        val m = trans.count() // materialize once; iterations re-read the blocks
+        // Size the ITERATION shuffles to the graph, not the corpus-width
+        // session default (measured: ~6s/iteration on a 6.6k-node graph at
+        // 64 partitions). Sized only after the counts: sizing before the
+        // nodes/trans builds costs an extra edge-lineage action, a net loss
+        // at sf0.1.
+        w.size(math.max(n, m))
+        val base = (1.0 - damping) / n
+        ranks = nodes.select(col("id"), lit(1.0 / n).as("rank"))
+          .localCheckpoint(true)
+        var it = 0
+        while (it < iters) {
+          val next = trans.join(ranks, trans("src") === ranks("id"))
+            .groupBy(trans("dst").as("nid"))
+            .agg(sum(col("p") * col("rank")).as("inflow"))
+            .join(nodes, nodes("id") === col("nid"), "right")
+            .select(col("id"),
+              (lit(base) + lit(damping) * coalesce(col("inflow"), lit(0.0)))
+                .as("rank"))
+            .localCheckpoint(true) // eager: materialized before old blocks go
+          release(ranks)
+          ranks = next
+          it += 1
+        }
+        use(ranks.select(col("id").as("doc_id"),
+          round(col("rank"), 9).as("pagerank")))
       }
-      use(ranks.select(col("id").as("doc_id"),
-        round(col("rank"), 9).as("pagerank")))
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      e.unpersist()
+      e0.unpersist()
       if (nodes != null) { nodes.unpersist(); () }
       if (trans != null) { trans.unpersist(); () }
       // the final iteration's checkpoint blocks
-      if (ranks != null) org.apache.spark.sql.graft.CheckpointBlocks.release(ranks)
+      if (ranks != null) release(ranks)
       ()
     }
   }
@@ -169,74 +161,67 @@ object GraphOps {
     * caches and checkpoint blocks are released on return. */
   def labelPropagation[T](edges: DataFrame, iters: Int)
       (use: DataFrame => T): T = {
-    val spark = edges.sparkSession
-    val e = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    // AQE's per-stage re-planning adds scheduling latency to every exchange
-    // of every round job — pure overhead once the shuffles are already
-    // graph-sized (measured: it dominated the 13k-edge rounds at sf0.1).
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val e0 = edges.persist(StorageLevel.MEMORY_AND_DISK)
     var ud: DataFrame = null
     var labels: DataFrame = null
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // AQE's per-stage re-planning adds scheduling latency to every exchange
+    // of every round job — pure overhead once the shuffles are graph-sized
+    // (measured: it dominated the 13k-edge rounds at sf0.1).
+    try SizedSession(edges.sparkSession) { w =>
+      val e = w(e0)
       val eCnt = e.count()
       if (eCnt == 0)
-        return use(e.select(col("src").as("doc_id"),
+        use(e.select(col("src").as("doc_id"),
           col("src").as("community")).where(lit(false)))
-      // Size round shuffles AND the cached edge layout to the graph, not
-      // the corpus-width session default (see pageRank: task-launch
-      // overhead × stages × rounds). The symmetrized table is REPARTITIONED
-      // down before persisting — each round scans it from two branches, and
-      // scanning hundreds of corpus-width cached partitions per round was
-      // the measured q40 cost at sf0.1 (a 13k-edge graph cached in 64
-      // partitions × 2 scans × 8 half-steps ≈ a thousand no-op tasks).
-      val gp = math.max(1L, math.min(2 * eCnt / 50000L + 1,
-        4L * spark.sparkContext.defaultParallelism)).toInt
-      spark.conf.set("spark.sql.shuffle.partitions", gp.toString)
-      val sym = e.select(col("src"), col("dst"),
-          col("weight").cast("long").as("w"))
-        .union(e.select(col("dst").as("src"), col("src").as("dst"),
-          col("weight").cast("long").as("w")))
-      ud = sym.repartition(gp).persist(StorageLevel.MEMORY_AND_DISK)
-      val m = ud.count() // materialize once; rounds re-read the blocks
-      // Every node in an edge list has ≥1 incident edge, so the dst-side
-      // aggregation reaches ALL parity-p nodes each half-step — no
-      // dangling-node join.
-      labels = ud.select(col("src").as("id"), col("src").as("label"))
-        .distinct().localCheckpoint(true)
-      def halfStep(prev: DataFrame, p: Int): DataFrame = {
-        val upd = ud.join(prev, ud("src") === prev("id"))
-          .where(pmod(ud("dst"), lit(2)) === p)
-          .groupBy(ud("dst").as("nid"), col("label"))
-          .agg(sum(col("w")).as("wsum"))
-          // argmax(wsum) with ties to the SMALLEST label: one struct-ordered
-          // max_by — (wsum, -label) is unique per nid, so max_by is
-          // deterministic.
-          .groupBy(col("nid").as("id"))
-          .agg(max_by(col("label"),
-            struct(col("wsum"), (-col("label")).as("neg"))).as("label"))
-        prev.where(pmod(col("id"), lit(2)) =!= p).unionByName(upd)
+      else {
+        // Size round shuffles AND the cached edge layout to the graph (see
+        // pageRank). The symmetrized table is REPARTITIONED down before
+        // persisting — each round scans it from two branches, and scanning
+        // hundreds of corpus-width cached partitions per round was the
+        // measured q40 cost at sf0.1 (a 13k-edge graph cached in 64
+        // partitions × 2 scans × 8 half-steps ≈ a thousand no-op tasks).
+        val gp = w.size(2 * eCnt)
+        val sym = e.select(col("src"), col("dst"),
+            col("weight").cast("long").as("w"))
+          .union(e.select(col("dst").as("src"), col("src").as("dst"),
+            col("weight").cast("long").as("w")))
+        ud = sym.repartition(gp).persist(StorageLevel.MEMORY_AND_DISK)
+        val m = ud.count() // materialize once; rounds re-read the blocks
+        // Every node in an edge list has ≥1 incident edge, so the dst-side
+        // aggregation reaches ALL parity-p nodes each half-step — no
+        // dangling-node join.
+        labels = ud.select(col("src").as("id"), col("src").as("label"))
+          .distinct().localCheckpoint(true)
+        def halfStep(prev: DataFrame, p: Int): DataFrame = {
+          val upd = ud.join(prev, ud("src") === prev("id"))
+            .where(pmod(ud("dst"), lit(2)) === p)
+            .groupBy(ud("dst").as("nid"), col("label"))
+            .agg(sum(col("w")).as("wsum"))
+            // argmax(wsum) with ties to the SMALLEST label: one struct-ordered
+            // max_by — (wsum, -label) is unique per nid, so max_by is
+            // deterministic.
+            .groupBy(col("nid").as("id"))
+            .agg(max_by(col("label"),
+              struct(col("wsum"), (-col("label")).as("neg"))).as("label"))
+          prev.where(pmod(col("id"), lit(2)) =!= p).unionByName(upd)
+        }
+        var it = 0
+        while (it < iters) {
+          // ONE eager checkpoint per ROUND (not per half-step): the odd
+          // half-step composes lazily over the even one — the round's plan
+          // stays constant-size over the checkpointed leaf, and the job count
+          // halves (job-launch overhead dominated the 6.6k-node graph).
+          val next = halfStep(halfStep(labels, 0), 1).localCheckpoint(true)
+          release(labels)
+          labels = next
+          it += 1
+        }
+        use(labels.select(col("id").as("doc_id"), col("label").as("community")))
       }
-      var it = 0
-      while (it < iters) {
-        // ONE eager checkpoint per ROUND (not per half-step): the odd
-        // half-step composes lazily over the even one — the round's plan
-        // stays constant-size over the checkpointed leaf, and the job count
-        // halves (job-launch overhead dominated the 6.6k-node graph).
-        val next = halfStep(halfStep(labels, 0), 1).localCheckpoint(true)
-        org.apache.spark.sql.graft.CheckpointBlocks.release(labels)
-        labels = next
-        it += 1
-      }
-      use(labels.select(col("id").as("doc_id"), col("label").as("community")))
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      e.unpersist()
+      e0.unpersist()
       if (ud != null) { ud.unpersist(); () }
-      if (labels != null)
-        org.apache.spark.sql.graft.CheckpointBlocks.release(labels)
+      if (labels != null) release(labels)
       ()
     }
   }
@@ -266,8 +251,8 @@ object GraphOps {
     * co-mention aggregation (measured: ~30 re-executions, 230-480 s at
     * sf0.1). The shared tables (edges, degrees, oriented) are therefore
     * eagerly `localCheckpoint`ed — each is computed ONCE and every branch
-    * reads its blocks — and the shuffles are sized to the graph, not the
-    * corpus-width session default (the pageRank lesson). Loan-pattern API
+    * reads its blocks — and the shuffles are sized to the graph, with AQE
+    * off, like [[pageRank]]. Loan-pattern API
     * like [[pageRank]]: materialize inside `use`; all checkpoint blocks
     * are released on return.
     *
@@ -275,24 +260,15 @@ object GraphOps {
     * 2·T/(deg·(deg−1)) rounded to 9 (the one division; counts are exact
     * BIGINTs), 0 for degree-1 nodes. */
   def triangleStats[T](edges: DataFrame)(use: DataFrame => T): T = {
-    val spark = edges.sparkSession
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    // AQE off for the whole operator (round 6): its many graph-sized
-    // exchanges (degrees, orientation joins, wedge join, corner agg) each
-    // paid AQE's per-stage re-planning latency — pure overhead once the
-    // shuffles are already sized to the graph (the labelPropagation lesson).
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val release = org.apache.spark.sql.graft.CheckpointBlocks.release _
     var e: DataFrame = null
     var deg: DataFrame = null
     var oriented: DataFrame = null
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      e = edges.select(col("src"), col("dst")).localCheckpoint(true)
-      val m = e.count() // cheap: counts the checkpointed blocks
-      spark.conf.set("spark.sql.shuffle.partitions",
-        math.max(1L, math.min(m / 50000L + 1,
-          4L * spark.sparkContext.defaultParallelism)).toString)
+    // AQE off for the whole operator: its many graph-sized exchanges
+    // (degrees, orientation joins, wedge join, corner agg) each paid AQE's
+    // per-stage re-planning latency.
+    try SizedSession(edges.sparkSession) { w =>
+      e = w(edges).select(col("src"), col("dst")).localCheckpoint(true)
+      w.size(e.count()) // cheap: counts the checkpointed blocks
       deg = e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id")))
         .groupBy("id").agg(count(lit(1)).as("deg"))
@@ -333,8 +309,6 @@ object GraphOps {
                 (col("deg") * (col("deg") - lit(1L))), 9))
             .as("clustering")))
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       if (e != null) release(e)
       if (deg != null) release(deg)
       if (oriented != null) release(oriented)
@@ -361,29 +335,18 @@ object GraphOps {
   def kCore[T](edges: DataFrame, k: Int, rounds: Int = 6)
       (use: DataFrame => T): T = {
     require(k >= 1 && rounds >= 1)
-    val spark = edges.sparkSession
-    val release = org.apache.spark.sql.graft.CheckpointBlocks.release _
-    // Round 6: the peeling loop gets the same treatment pageRank/
-    // labelPropagation already had — AQE off (per-stage re-planning latency
-    // on graph-sized exchanges is pure overhead) and every shuffle sized to
-    // the graph instead of the corpus-width session default; the symmetrized
-    // table is REPARTITIONED down before the eager checkpoint so each
-    // round's two alive-joins scan gp graph-sized blocks, not one tiny
-    // block per upstream corpus-width partition. Both settings restored in
-    // the finally; output bit-identical (partitioning never reaches
-    // semantics — the same argument as the q35/q40 sizing).
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    val ep = edges.select(col("src"), col("dst"))
+    val ep0 = edges.select(col("src"), col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     var sym: DataFrame = null
     val aliveTables = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // Sized and AQE off like pageRank. The symmetrized table is
+    // REPARTITIONED down before the eager checkpoint so each round's two
+    // alive-joins scan gp graph-sized blocks, not one tiny block per
+    // upstream corpus-width partition.
+    try SizedSession(edges.sparkSession) { w =>
+      val ep = w(ep0)
       val eCnt = ep.count() // materializes the edge cache; one bounded action
-      val gp = math.max(1L, math.min(2 * eCnt / 50000L + 1,
-        4L * spark.sparkContext.defaultParallelism)).toInt
-      spark.conf.set("spark.sql.shuffle.partitions", gp.toString)
+      val gp = w.size(2 * eCnt)
       sym = ep.select(col("src").as("id"), col("dst").as("nbr"))
         .union(ep.select(col("dst").as("id"), col("src").as("nbr")))
         .repartition(gp)
@@ -430,9 +393,7 @@ object GraphOps {
           lit(converged).as("converged"))
       use(out)
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      ep.unpersist()
+      ep0.unpersist()
       if (sym != null) release(sym)
       aliveTables.foreach(release)
       ()
@@ -456,28 +417,18 @@ object GraphOps {
     * by construction, and cheap to accept since a hub's 1/ln(deg) evidence
     * is near-zero anyway); the cap must be mirrored by any oracle. Degrees
     * are exact BIGINTs; the 1/ln terms and their sum sit under the
-    * round(…,6) contract. Loan pattern: the result is materialized inside
-    * `use` and the shared checkpoints are released on return. */
+    * round(…,6) contract. The declared q49 entry (`q49_adamic_adar`) runs
+    * with `maxHubDeg` = ∞ and its DuckDB oracle replays every wedge, so a
+    * hub-capped entry changes the declared output. Sized and AQE off like
+    * [[pageRank]]. Loan pattern: the result is materialized inside `use`
+    * and the shared checkpoints are released on return. */
   def adamicAdar[T](edges: DataFrame, minCommon: Int = 2,
       maxHubDeg: Long = Long.MaxValue)(use: DataFrame => T): T = {
-    val spark = edges.sparkSession
-    val release = org.apache.spark.sql.graft.CheckpointBlocks.release _
-    // Round 6: same sizing treatment as the rest of the family — AQE off
-    // (re-planning latency per graph-sized exchange) and shuffles sized to
-    // the graph, not the corpus-width session default; restored in the
-    // finally. The wedge join and (a,b) agg dominate and were running at
-    // 64 corpus-width partitions on a 1.2k-edge graph.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     var e: DataFrame = null
     var nbr: DataFrame = null
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      e = edges.select(col("src"), col("dst")).localCheckpoint(true)
-      val m = e.count() // cheap: counts the checkpointed blocks
-      spark.conf.set("spark.sql.shuffle.partitions",
-        math.max(1L, math.min(2 * m / 50000L + 1,
-          4L * spark.sparkContext.defaultParallelism)).toString)
+    try SizedSession(edges.sparkSession) { w =>
+      e = w(edges).select(col("src"), col("dst")).localCheckpoint(true)
+      w.size(2 * e.count()) // cheap: counts the checkpointed blocks
       val sym = e.select(col("src").as("c"), col("dst").as("n"))
         .union(e.select(col("dst").as("c"), col("src").as("n")))
       val deg = sym.groupBy("c").agg(count(lit(1)).as("cdeg"))
@@ -496,8 +447,6 @@ object GraphOps {
         .where(col("n_common") >= minCommon)
       use(out)
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       if (e != null) release(e)
       if (nbr != null) release(nbr)
       ()

@@ -2,6 +2,7 @@ package graft.kg
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.graft.SizedSession
 
 import graft.analyse.DocAnalyser
 import graft.interpret.{AddressInterpreter, MutableAddress, RegionVisitor}
@@ -161,15 +162,12 @@ object KgPipeline {
       hits: Dataset[LinkHit], topRank: Int = 1): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    // Round 6: the per-conversation link list is query-batch-sized, so the
-    // self-join + edge aggregation run in a `Par.sized` window (shuffles
-    // proportional to the counted link rows, AQE re-planning off — the
-    // GraphOps loop treatment applied to the one-shot edge build; at sf0.1
-    // the lazy version paid 8 session-width exchanges for a 1.2k-edge
-    // output). The links table is persisted for its two join branches and
-    // the count; the result is eagerly checkpointed (bounded: one row per
-    // co-mentioned entity pair) so the caller holds edge-sized blocks only —
-    // release them with CheckpointBlocks.release when done.
+    // The per-conversation link list is query-batch-sized: at sf0.1 the
+    // session-width version paid 8 exchanges for a 1.2k-edge output. The
+    // links table is persisted for its two join branches and the count; the
+    // result is eagerly checkpointed (one row per co-mentioned entity pair),
+    // so the caller holds edge-sized blocks only — release them with
+    // CheckpointBlocks.release when done.
     val links = hits.filter(_.rank <= topRank).toDF()
       .join(mentions.map(m => (m.queryId, m.convId)).toDF("queryId", "convId"),
         "queryId")
@@ -177,12 +175,13 @@ object KgPipeline {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = links.count() // also materializes the upstream pipeline caches
-      graft.ops.Par.sized(spark, n) {
-        links.as("l").join(links.as("r"),
+      SizedSession(spark) { w =>
+        w.size(n)
+        val l = w(links)
+        w.checkpoint(l.as("l").join(l.as("r"),
             col("l.convId") === col("r.convId") && col("l.docId") < col("r.docId"))
           .groupBy(col("l.docId").as("src"), col("r.docId").as("dst"))
-          .agg(count(lit(1)).as("weight"))
-          .localCheckpoint(true)
+          .agg(count(lit(1)).as("weight")))
       }
     } finally { links.unpersist(); () }
   }
@@ -213,24 +212,24 @@ object KgPipeline {
     import org.apache.spark.sql.functions._
     val p = graft.ops.DedupOps.HashP
     val params = graft.ops.DedupOps.minHashParams(k)
-    // Round 6: positives are query-batch-sized — persist + count once, then
-    // derive the pool prefix-sum, the pick join, and the filter anti-join
-    // with shuffles sized to that count and AQE re-planning off (Par.sized;
-    // the session-width version was 15 jobs / 674 tasks at sf0.1 for a
-    // 5.8k-row output). Result eagerly checkpointed (≤ |pos|·k rows — the
-    // same query-batch bound as the hits themselves) so the shared pos
-    // table can be released here; callers free the blocks with
+    // Positives are query-batch-sized (the session-width version was 15
+    // jobs / 674 tasks at sf0.1 for a 5.8k-row output): persist + count
+    // once, then derive the pool prefix-sum, the pick join and the filter
+    // anti-join sized to that count. Result eagerly checkpointed (≤ |pos|·k
+    // rows — the same query-batch bound as the hits themselves) so the
+    // shared pos table can be released here; callers free the blocks with
     // CheckpointBlocks.release after materializing.
-    val pos = hits.filter(_.rank <= topRank).toDF()
+    val pos0 = hits.filter(_.rank <= topRank).toDF()
       .select(col("queryId"), col("docId")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val nPos = pos.count() // also materializes the upstream pipeline caches
-      graft.ops.Par.sized(spark, nPos) {
+      val nPos = pos0.count() // also materializes the upstream pipeline caches
+      SizedSession(spark) { w =>
+        val width = w.size(nPos)
+        val pos = w(pos0)
         val pool = graft.ops.OrderedScan.exclusivePrefixSum(
           pos.select(col("docId").as("pool_doc")).distinct(),
-          Seq(col("pool_doc")), lit(1L), "pool_idx",
-          numPartitions = graft.ops.Par.partitionsFor(spark, nPos))
+          Seq(col("pool_doc")), lit(1L), "pool_idx", numPartitions = width)
         val nPool = pool.agg(count(lit(1)).as("n_pool"))
         val seed = pmod(
           pmod(col("queryId"), lit(p)) * 31L + pmod(col("docId"), lit(p)),
@@ -248,14 +247,13 @@ object KgPipeline {
           .join(pool, "pool_idx")
         // Filtered setting: a corruption that equals the positive's own
         // entity or ANY true link of the same query is dropped.
-        picks
+        w.checkpoint(picks
           .join(pos.toDF("queryId", "pool_doc"), Seq("queryId", "pool_doc"),
             "left_anti")
           .select(col("queryId").as("query_id"), col("docId").as("pos_doc_id"),
-            col("slot"), col("pool_doc").as("neg_doc_id"))
-          .localCheckpoint(true)
+            col("slot"), col("pool_doc").as("neg_doc_id")))
       }
-    } finally { pos.unpersist(); () }
+    } finally { pos0.unpersist(); () }
   }
 
   /** TF-IDF keyphrase extraction per conversation — the document-TAGGING
@@ -279,9 +277,9 @@ object KgPipeline {
       n: Int = 2, topK: Int = 3, maxDfFrac: Double = 0.5): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    // (Round 6 A/B'd a persist-once + Par.sized rewrite here — it measured
-    // SLOWER at sf0.1: the persist/count/checkpoint jobs cost more than the
-    // second source scan they removed. Kept in the lazy round-5 shape.)
+    // Lazy on purpose: a persist-once + sized rewrite measured slower at
+    // sf0.1 — its persist/count/checkpoint jobs cost more than the second
+    // source scan they removed.
     val t = turns.toDF().select(col("conv_id"), col("text"))
     val grams = t.select(col("conv_id"),
       explode(graft.ops.DedupOps.shingles(col("text"), n)).as("gram"))
@@ -316,19 +314,20 @@ object KgPipeline {
       hits: Dataset[LinkHit], topRank: Int = 1): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val links = hits.filter(_.rank <= topRank).toDF()
+    val links0 = hits.filter(_.rank <= topRank).toDF()
       .join(mentions.map(m => (m.queryId, m.convId)).toDF("queryId", "convId"),
         "queryId")
       .select("convId", "docId").distinct()
       .persist()
     try {
-      // Round 6: count the (query-batch-sized) links once, then run the
-      // whole PMI derivation — two aggs, the pair self-join, two joins —
-      // with shuffles sized to that count and AQE re-planning off
-      // (Par.sized; at sf0.1 the session-width version was 19 jobs / 1090
-      // tasks for a 1.2k-row output).
-      val n = links.count()
-      graft.ops.Par.sized(spark, n) {
+      // Count the (query-batch-sized) links once, then size the whole PMI
+      // derivation — two aggs, the pair self-join, two joins — to that
+      // count (at sf0.1 the session-width version was 19 jobs / 1090 tasks
+      // for a 1.2k-row output).
+      val n = links0.count()
+      SizedSession(spark) { w =>
+        w.size(n)
+        val links = w(links0)
         val tot = links.agg(count_distinct(col("convId")).as("n_convs"))
         val ent = links.groupBy(col("docId")).agg(count(lit(1)).as("w_ent"))
         val pairs = links.as("l").join(links.as("r"),
@@ -344,9 +343,9 @@ object KgPipeline {
             round(log(col("w_pair").cast("double") * col("n_convs") /
               (col("w_src").cast("double") * col("w_dst"))), 6).as("pmi"))
         // Materialize before releasing the shared links table.
-        out.localCheckpoint(true)
+        w.checkpoint(out)
       }
-    } finally { links.unpersist(); () }
+    } finally { links0.unpersist(); () }
   }
 
   /** Transcript-structure metadata triples — the agent-action facet of the
@@ -380,11 +379,11 @@ object KgPipeline {
       topRank: Int = 1): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    // Round 6: the links side is query-batch-sized — persist + count it,
-    // then broadcast it into the turns join so the turns side never
-    // shuffles, and run the final entity agg sized to the counted links
-    // (Par.sized). Output checkpointed (one row per linked entity); callers
-    // release with CheckpointBlocks.release.
+    // The links side is query-batch-sized: persist + count it, then
+    // broadcast it into the turns join so the turns side never shuffles, and
+    // size the final entity agg to the counted links. Output checkpointed
+    // (one row per linked entity); callers release with
+    // CheckpointBlocks.release.
     val links = hits.filter(_.rank <= topRank).toDF()
       .join(mentions.map(m =>
           (m.queryId, s"${m.convId}#${m.turnIdx}", m.convId))
@@ -392,15 +391,16 @@ object KgPipeline {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = links.count() // also materializes the upstream pipeline caches
-      graft.ops.Par.sized(spark, n) {
-        val tdf = turns.map(t => (s"${t.conv_id}#${t.turn_idx}", t.ts.getTime))
-          .toDF("subj", "ts_ms")
-        broadcast(links).join(tdf, "subj")
+      SizedSession(spark) { w =>
+        w.size(n)
+        val tdf = w(turns
+          .map(t => (s"${t.conv_id}#${t.turn_idx}", t.ts.getTime))
+          .toDF("subj", "ts_ms"))
+        w.checkpoint(broadcast(w(links)).join(tdf, "subj")
           .groupBy(col("docId").as("doc_id"))
           .agg(min("ts_ms").as("first_ms"), max("ts_ms").as("last_ms"),
             count(lit(1)).as("n_mentions"),
-            countDistinct("convId").as("n_convs"))
-          .localCheckpoint(true)
+            countDistinct("convId").as("n_convs")))
       }
     } finally { links.unpersist(); () }
   }
@@ -419,11 +419,10 @@ object KgPipeline {
       topRank: Int = 1): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    // Round 6: the entity-conversation side is query-batch-sized — persist +
-    // count, then broadcast it into the tool join (the per-conv tool
-    // DISTINCT still shuffles, but sized to the counted links) and run the
-    // edge agg in the same Par.sized window. Output checkpointed; callers
-    // release with CheckpointBlocks.release.
+    // The entity-conversation side is query-batch-sized: persist + count,
+    // then broadcast it into the tool join (the per-conv tool DISTINCT still
+    // shuffles, but sized to the counted links, as is the edge agg). Output
+    // checkpointed; callers release with CheckpointBlocks.release.
     val entConv = hits.filter(_.rank <= topRank).toDF()
       .join(mentions.map(m => (m.queryId, m.convId))
         .toDF("queryId", "convId"), "queryId")
@@ -431,13 +430,13 @@ object KgPipeline {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val n = entConv.count() // also materializes the upstream pipeline caches
-      graft.ops.Par.sized(spark, n) {
-        val toolConv = turns.filter(t => t.tool != null && t.tool.nonEmpty)
-          .map(t => (t.conv_id, t.tool)).toDF("convId", "tool").distinct()
-        broadcast(entConv).join(toolConv, "convId")
+      SizedSession(spark) { w =>
+        w.size(n)
+        val toolConv = w(turns.filter(t => t.tool != null && t.tool.nonEmpty)
+          .map(t => (t.conv_id, t.tool)).toDF("convId", "tool")).distinct()
+        w.checkpoint(broadcast(w(entConv)).join(toolConv, "convId")
           .groupBy(col("tool"), col("docId").as("doc_id"))
-          .agg(count(lit(1)).as("weight"))
-          .localCheckpoint(true)
+          .agg(count(lit(1)).as("weight")))
       }
     } finally { entConv.unpersist(); () }
   }

@@ -98,33 +98,12 @@ final class LinkIndex private (
       "cell union lost its partitioner — static side would re-shuffle")
     val partial: RDD[LinkHit] = cells.cogroup(qPairs, partitioner)
       .flatMap { case (_, (cellIt, qIt)) =>
-        if (qIt.isEmpty || cellIt.isEmpty) Iterator.empty
-        else {
-          val buf = scala.collection.mutable.ArrayBuffer.empty[Scoring.Side]
-          val idfMap = new java.util.HashMap[String, java.lang.Double]()
-          cellIt.foreach { case (tag, bytes) =>
-            if (tag == 1) IdfBlob.unpackInto(bytes, idfMap)
-            else DocBlob.unpackSides(bytes, buf)
-          }
-          if (buf.isEmpty) Iterator.empty
-          else {
-            var i = 0
-            while (i < buf.length) {
-              Scoring.stampSideIdfs(buf(i), idfMap); i += 1
-            }
-            Linker.scoreCellBlocked(
-              qIt.iterator.map(graft.analyse.DocAnalyser.stampIdf(_, idfMap)),
-              buf.toArray, topN)
-          }
-        }
+        if (qIt.isEmpty) Iterator.empty
+        else Linker.scoreCell(cellIt.iterator, qIt.iterator, topN)
       }
     val hits = spark.createDataset(partial)
     if (!dbByPk.valuesIterator.exists(_ > 1)) hits
-    else hits.groupByKey(_.queryId).flatMapGroups { (qid, partials) =>
-      val heap = new Linker.TopK(topN)
-      partials.foreach(h => heap.offer(h.docId, h.similarity))
-      heap.toHits(qid)
-    }
+    else Linker.mergeTopK(hits, topN)
   }
 
   /** The pre-collapse call shape of [[link]], kept only because the frozen

@@ -393,24 +393,41 @@ object Linker {
     }
 
     val partial = qKeyed.cogroup(dKeyed) { (_, qIt, dIt) =>
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Scoring.Side]
-      val idfMap = new java.util.HashMap[String, java.lang.Double]()
-      dIt.foreach { case (_, _, _, tag, bytes) =>
-        if (tag == 1) IdfBlob.unpackInto(bytes, idfMap)
-        else DocBlob.unpackSides(bytes, buf)
-      }
-      if (buf.isEmpty) Iterator.empty
-      else {
-        // Stamp AFTER the full pass: idf chunks interleave arbitrarily
-        // with doc blobs in the cell's iterator.
-        var i = 0
-        while (i < buf.length) { Scoring.stampSideIdfs(buf(i), idfMap); i += 1 }
-        scoreCellBlocked(qIt.map(p => DocAnalyser.stampIdf(p._2, idfMap)),
-          buf.toArray, topN, wand = wand)
-      }
+      scoreCell(dIt.map(d => (d._4, d._5)), qIt.map(_._2), topN, wand)
     }
-    if (!anyDb) partial
-    else partial.groupByKey(_.queryId).flatMapGroups { (qid, hits) =>
+    if (!anyDb) partial else mergeTopK(partial, topN)
+  }
+
+  /** Score one link cell: unpack its tag-0 doc blobs and tag-1 idf blobs,
+    * stamp both sides from the cell's idfs, and run the blocked kernel. The
+    * batch cells ([[linkTopK]]) and the persisted streaming cells
+    * (`LinkIndex.link`) share it, so their scores are bit-identical. */
+  private[link] def scoreCell(blobs: Iterator[(Int, Array[Byte])],
+      queries: Iterator[DocVec], topN: Int,
+      wand: Boolean = WandDefault): Iterator[LinkHit] = {
+    val buf = scala.collection.mutable.ArrayBuffer.empty[Scoring.Side]
+    val idfMap = new java.util.HashMap[String, java.lang.Double]()
+    blobs.foreach { case (tag, bytes) =>
+      if (tag == 1) IdfBlob.unpackInto(bytes, idfMap)
+      else DocBlob.unpackSides(bytes, buf)
+    }
+    if (buf.isEmpty) Iterator.empty
+    else {
+      // Stamp AFTER the full pass: idf chunks interleave arbitrarily with
+      // doc blobs in the cell's iterator.
+      var i = 0
+      while (i < buf.length) { Scoring.stampSideIdfs(buf(i), idfMap); i += 1 }
+      scoreCellBlocked(queries.map(DocAnalyser.stampIdf(_, idfMap)),
+        buf.toArray, topN, wand = wand)
+    }
+  }
+
+  /** Merge per-cell partial top-k lists into each query's final top-k (one
+    * queryId-keyed shuffle). Exact: `TopK` is order-independent. */
+  private[link] def mergeTopK(partial: Dataset[LinkHit],
+      topN: Int): Dataset[LinkHit] = {
+    import partial.sparkSession.implicits._
+    partial.groupByKey(_.queryId).flatMapGroups { (qid, hits) =>
       val heap = new TopK(topN)
       hits.foreach(h => heap.offer(h.docId, h.similarity))
       heap.toHits(qid)
@@ -631,8 +648,8 @@ object Linker {
       // Per-partKey compiled queries + inverted index over QUERY term hashes
       // (the mirror of scoreCellBlocked's doc postings): each streamed doc
       // only scores the queries it shares ≥1 term text with — exact, see
-      // `candidatesOf`'s argument. `masses` parallels `postings` with each
-      // entry's maxQtfidf² (WAND): pass 1 over a doc's hashes
+      // `candidatesAndBounds`' argument. `masses` parallels `postings` with
+      // each entry's maxQtfidf² (WAND): pass 1 over a doc's hashes
       // accumulates a per-query bound mass, pass 2 scores only queries
       // whose bound can still beat their heap's kth key — the same
       // admissible, bit-identical skip as the shuffle cells. The RoadNum
@@ -730,12 +747,7 @@ object Linker {
       }
       heaps.iterator.flatMap { case (qid, heap) => heap.toHits(qid) }
     }
-    // Final reduce: combine partial top-k per query.
-    partial.groupByKey(_.queryId).flatMapGroups { (qid, hits) =>
-      val heap = new TopK(topN)
-      hits.foreach(h => heap.offer(h.docId, h.similarity))
-      heap.toHits(qid)
-    }
+    mergeTopK(partial, topN)
   }
 
   /** A link hit with its per-term scoring explanation (the reference's
@@ -815,20 +827,16 @@ object Linker {
     * contract (`Query.addSimiDoc` `Query.java:62`), so skipping non-candidates
     * cannot change the result. Hash collisions only ADD candidates (scoring
     * verifies text equality). Term vectors carry no Province/City/District
-    * terms (partKey handles those), so no term is exempt. */
-  private def candidatesOf(q: Scoring.QuerySide,
-      postings: scala.collection.mutable.LongMap[IntVec],
-      nDocs: Int): java.util.BitSet =
-    candidatesAndBounds(q, postings, nDocs, null)
-
-  /** candidatesOf + WAND bound mass in one postings pass: `ub(d)` (when
+    * terms (partKey handles those), so no term is exempt.
+    *
+    * The WAND bound mass rides the same postings pass: `ub(d)` (when
     * non-null) accumulates Σ maxQtfidf_i² over the query terms whose hash
     * posting contains d — a superset of the true matched set (hash ⊇ text
     * equality; duplicate postings only inflate), so the derived bound stays
     * admissible. The RoadNum fuzzy fallback can match WITHOUT the N term's
     * text (same-road, different number), so the N term's mass is ALSO
     * posted along the query's road-text hash — every doc that can reach
-    * the fallback shares that R text (see candidatesOf's exactness note). */
+    * the fallback shares that R text. */
   private def candidatesAndBounds(q: Scoring.QuerySide,
       postings: scala.collection.mutable.LongMap[IntVec],
       nDocs: Int, ub: Array[Float]): java.util.BitSet = {
@@ -869,7 +877,7 @@ object Linker {
   /** Cache-blocked cell scoring with inverted-index candidate pruning:
     *  - postings (term hash → doc indices) are built once per cell; each
     *    query only scores docs sharing ≥1 term text — exact (see
-    *    `candidatesOf`), and on address-shaped data it skips the large
+    *    `candidatesAndBounds`), and on address-shaped data it skips the large
     *    majority of pairs (the O(|q|·|d|) full scan was the kernel's pair
     *    bound; the candidate scan is output-sensitive);
     *  - DOC CHUNKS (sized to stay cache-resident) remain the outer loop with

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{CheckpointBlocks, SizedSession}
 
 /** Deduplication operators for training-data pipelines, Spark-first:
   *
@@ -117,7 +118,7 @@ object DedupOps {
       textCol: String = "text", w: Int = 3, n: Int = 8,
       tau: Double = 0.5, keyPrefixLen: Int = 64): DataFrame = {
     require(w > 0 && keyPrefixLen > 0)
-    // (Round 6 A/B'd a Par.scanSpread floor on this projection — a small
+    // (An A/B of a Par.scanSpread floor on this projection showed a small
     // measured LOSS: the rank input feeds repartitionByRange immediately, so
     // the added exchange only saves the range-sampler's one-task scan and
     // costs more than that. Kept unspread; the shingle-verify side below
@@ -334,7 +335,7 @@ object DedupOps {
     val nSpans = when(nw >= n, (nw - (n - 1)).cast("bigint")).otherwise(0L)
     val idxs = when(nw >= n, sequence(lit(1), nw - (n - 1)))
       .otherwise(array().cast("array<int>"))
-    // No scan-parallelism floor here (round 6, measured): word 8-gram spans
+    // No scan-parallelism floor here (measured): word 8-gram spans
     // expand far less than char shingles, and `spans` feeds two plan
     // branches — the added exchange cost more than the serial explode.
     val spans = docs.select(col(idCol).as("sid"),
@@ -580,29 +581,19 @@ object DedupOps {
         .where(col("u") =!= col("v"))
       viaNbr.union(mins.select(col("u"), col("m").as("v"))).distinct()
     }
-    // Round 6: size the round shuffles to the PAIR GRAPH, not the
-    // corpus-width session default, and switch AQE off for the loop — the
+    // Round shuffles are sized to the PAIR GRAPH with AQE off: the
     // alternating-star rounds are many tiny graph-sized exchanges whose
-    // per-stage task-launch + AQE re-planning overhead dominated (the
-    // q35/q40 GraphOps lesson applied here). Both settings restored in the
-    // finally; the output is a pure function of the pair set, so
-    // partitioning never reaches semantics. The final (id, group, size)
-    // table is eagerly checkpointed INSIDE the sized region so every
+    // per-stage task-launch + AQE re-planning overhead dominated. The final
+    // (id, group, size) table is checkpointed under that sizing so every
     // round's blocks (including the fixpoint's) are released
     // deterministically before return — the returned DataFrame rides only
     // its own node-count-sized blocks.
-    val spark = pairs.sparkSession
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
     var e: DataFrame = null
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      e = canon(pairs.select(col(aCol).cast("long").as("u"),
+    try SizedSession(pairs.sparkSession) { w =>
+      e = canon(w(pairs).select(col(aCol).cast("long").as("u"),
         col(bCol).cast("long").as("v"))).localCheckpoint(true)
       val nPairs = e.count() // cheap: counts the checkpointed blocks
-      val gp = math.max(1L, math.min(2 * nPairs / 50000L + 1,
-        4L * spark.sparkContext.defaultParallelism)).toInt
-      spark.conf.set("spark.sql.shuffle.partitions", gp.toString)
+      val gp = w.size(2 * nPairs)
       // Re-lay the pair table to the sized width before the loop: the
       // checkpoint above inherits the pair-GENERATION partitioning (a
       // session-width bucket-join output), and every round's large-star
@@ -612,7 +603,7 @@ object DedupOps {
       // the generation layout is already in the sized regime.
       if (e.rdd.getNumPartitions > 4 * gp) {
         val relaid = e.repartition(gp).localCheckpoint(true)
-        org.apache.spark.sql.graft.CheckpointBlocks.release(e)
+        CheckpointBlocks.release(e)
         e = relaid
       }
       var round = 0
@@ -626,7 +617,7 @@ object DedupOps {
         // next is materialized and the convergence check above was the last
         // reader of the old round — free its checkpoint blocks now instead
         // of waiting for the ContextCleaner's post-GC sweep.
-        org.apache.spark.sql.graft.CheckpointBlocks.release(e)
+        CheckpointBlocks.release(e)
         e = next
         round += 1
       }
@@ -635,12 +626,10 @@ object DedupOps {
       val members = e.select(col("u").as("id"), col("v").as("group_id"))
         .union(e.select(col("v").as("id"), col("v").as("group_id")).distinct())
       val sizes = members.groupBy("group_id").agg(count(lit(1)).as("group_size"))
-      members.join(sizes, "group_id").select("id", "group_id", "group_size")
-        .localCheckpoint(true)
+      w.checkpoint(
+        members.join(sizes, "group_id").select("id", "group_id", "group_size"))
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      if (e != null) org.apache.spark.sql.graft.CheckpointBlocks.release(e)
+      if (e != null) CheckpointBlocks.release(e)
       ()
     }
   }
@@ -651,7 +640,7 @@ object DedupOps {
     * top-k is for ANN search. */
   def embeddingNearDupExact(emb: DataFrame, threshold: Double,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    // Scan-parallelism floor (round 6): the O(N²) cosine loop otherwise runs
+    // Scan-parallelism floor: the O(N²) cosine loop otherwise runs
     // in ONE task when the scan is a single small file; no-op at scale.
     val spread = Par.scanSpread(emb.select(col(idCol), col(vecCol)))
     val l = spread.select(col(idCol).as("a"), col(vecCol).as("va"))
@@ -676,7 +665,7 @@ object DedupOps {
       AnnOps.lshBucket(col(vecCol), planes.slice(t * bits, (t + 1) * bits)) +
         lit(t.toLong << bits)
     }
-    // Scan-parallelism floor (round 6): ×tables bucket hashing + the bucket
+    // Scan-parallelism floor: ×tables bucket hashing + the bucket
     // self-join's cosines ran single-task on a one-file scan; no-op at scale.
     val keyed = Par.scanSpread(emb.select(col(idCol), col(vecCol)))
       .select(col(idCol).as("id"), col(vecCol).as("v"),

@@ -34,33 +34,13 @@ object Par {
   }
 
   /** Shuffle-partition count proportional to a COUNTED row volume (~50k rows
-    * per partition), capped at 4× cluster width — the same scale-adaptive
-    * sizing the iterative graph loops use (`GraphOps`), extracted for the
-    * derived KG analytics. At 100 TB the cap binds and the sizing is the
-    * cluster's; at query-batch scale it stops a 1k-row aggregation from
-    * paying session-width task-launch overhead on every exchange. */
+    * per partition), capped at 4× cluster width — the width
+    * `org.apache.spark.sql.graft.SizedSession.size` gives the iterative
+    * graph loops and the derived KG analytics. At 100 TB the cap binds and
+    * the sizing is the cluster's; at query-batch scale it stops a 1k-row
+    * aggregation from paying session-width task-launch overhead on every
+    * exchange. */
   def partitionsFor(spark: org.apache.spark.sql.SparkSession, rows: Long): Int =
     math.max(1L, math.min(rows / 50000L + 1,
       4L * spark.sparkContext.defaultParallelism)).toInt
-
-  /** Run `f` (which must MATERIALIZE its result — the conf only matters at
-    * action time) with shuffle partitions sized to `rows` and AQE's
-    * per-exchange re-planning off; both restored on exit. The GraphOps
-    * iterative-loop conf window, extracted for one-shot derived analytics
-    * whose inputs were just counted. Results are unchanged by construction:
-    * partitioning never reaches the semantics of hash aggregations, joins,
-    * or keyed windows. */
-  def sized[T](spark: org.apache.spark.sql.SparkSession, rows: Long)(f: => T): T = {
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.shuffle.partitions",
-        partitionsFor(spark, rows).toString)
-      f
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-    }
-  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
@@ -463,5 +464,113 @@ class KgPipelineSpec extends AnyFunSuite {
     back.zip(orig).foreach { case (b, o) =>
       assert(b.text == o.text && b.conv_id == o.conv_id && b.turn_idx == o.turn_idx)
     }
+  }
+
+  // --- sizing in a session clone ------------------------------------------
+
+  private val SizingKeys =
+    Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+
+  /** conv A links {1,2}; conv B links {1,2,3}; conv C links {2,3}. */
+  private def linkFixture(): (Dataset[graft.kg.MentionDoc], Dataset[LinkHit]) = {
+    val s = spark
+    import s.implicits._
+    val dummyAddr = graft.model.InterpretedAddress(0L, "", "", 0, 0, 0, 0, 0,
+      0, "", "", "", matched = true)
+    val dummyDoc = graft.model.DocVec(0L, "pk", "", Array.empty,
+      Array.empty, null, null, null, null, 0)
+    def m(qid: Long, conv: String) =
+      graft.kg.MentionDoc(qid, conv, 0, 0, dummyAddr, dummyDoc)
+    val mentions = s.createDataset(Seq(
+      m(10L, "A"), m(11L, "A"), m(20L, "B"), m(21L, "B"), m(22L, "B"),
+      m(30L, "C"), m(31L, "C")))
+    val hits = s.createDataset(Seq(
+      LinkHit(10L, 1L, 0.9, 1), LinkHit(11L, 2L, 0.9, 1),
+      LinkHit(20L, 1L, 0.9, 1), LinkHit(21L, 2L, 0.9, 1),
+      LinkHit(22L, 3L, 0.9, 1),
+      LinkHit(30L, 2L, 0.9, 1), LinkHit(31L, 3L, 0.9, 1)))
+    (mentions, hits)
+  }
+
+  /** Collect a checkpointed analytic, then free its blocks. */
+  private def collectAndRelease(df: org.apache.spark.sql.DataFrame) =
+    try df.collect().toSet
+    finally org.apache.spark.sql.graft.CheckpointBlocks.release(df)
+
+  test("sized analytics plan under the clone's width; the caller's conf is never written") {
+    val s = spark
+    val (mentions, hits) = linkFixture()
+    val initial = SizingKeys.map(s.conf.get)
+    // An optimizer rule runs on the planning thread: it records the
+    // caller's settings and the planning session's width at every plan.
+    val seen = java.util.concurrent.ConcurrentHashMap
+      .newKeySet[(Seq[String], Int)]()
+    val probe = new org.apache.spark.sql.catalyst.rules.Rule[
+        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
+      def apply(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) = {
+        seen.add((SizingKeys.map(s.conf.get),
+          org.apache.spark.sql.internal.SQLConf.get.numShufflePartitions))
+        p
+      }
+    }
+    val experimental =
+      org.apache.spark.sql.classic.ClassicConversions.castToImpl(s).experimental
+    experimental.extraOptimizations ++= Seq(probe)
+    try collectAndRelease(KgPipeline.coMentionEdges(s, mentions, hits))
+    finally experimental.extraOptimizations =
+      experimental.extraOptimizations.filterNot(_ eq probe)
+    val recorded = seen.asScala.toSeq
+    assert(recorded.nonEmpty)
+    assert(recorded.forall(_._1 == initial),
+      s"the caller's conf changed while the analytic planned: $recorded")
+    assert(recorded.exists(_._2 == 1), s"no plan ran at the sized width: $recorded")
+    assert(SizingKeys.map(s.conf.get) == initial)
+  }
+
+  test("co-mention and PMI edges come back bound to the caller's session") {
+    val s = spark
+    val (mentions, hits) = linkFixture()
+    val edges = KgPipeline.coMentionEdges(s, mentions, hits)
+    val pmi = KgPipeline.pmiEdges(s, mentions, hits)
+    try {
+      assert(edges.sparkSession eq s)
+      assert(pmi.sparkSession eq s)
+    } finally {
+      collectAndRelease(edges); collectAndRelease(pmi); ()
+    }
+  }
+
+  test("concurrent sized analytics on one session equal the serial outputs") {
+    val s = spark
+    import s.implicits._
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val (mentions, hits) = linkFixture()
+    val graph = Seq((1L, 2L, 2L), (1L, 3L, 1L), (2L, 3L, 1L), (4L, 5L, 3L))
+      .toDF("src", "dst", "weight")
+    def rank() = graft.kg.GraphOps.pageRank(graph, 5)(_.collect().toSet)
+    def edges() = (collectAndRelease(KgPipeline.coMentionEdges(s, mentions, hits)),
+      collectAndRelease(KgPipeline.pmiEdges(s, mentions, hits)))
+    val initial = SizingKeys.map(s.conf.get)
+    val serialRank = rank()
+    val serialEdges = edges()
+    // The caller's settings, sampled while the analytics run.
+    val observed = mutable.Set.empty[Seq[String]]
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try for (_ <- 1 to 4) {
+      val r = Future(rank())
+      val e = Future(edges())
+      while (!(r.isCompleted && e.isCompleted)) {
+        observed += SizingKeys.map(s.conf.get)
+        Thread.sleep(1)
+      }
+      assert(Await.result(r, 5.minutes) == serialRank)
+      assert(Await.result(e, 5.minutes) == serialEdges)
+    } finally pool.shutdown()
+    assert(observed == Set(initial),
+      s"the caller's session was resized while the analytics ran: $observed")
+    assert(SizingKeys.map(s.conf.get) == initial,
+      "concurrent sized analytics left the caller's session resized")
   }
 }

@@ -1151,4 +1151,25 @@ class OpsSpec extends AnyFunSuite {
       .collect().map(_.getAs[Long]("doc_id")).toSet
     assert(re == keptIds)
   }
+
+  test("sized operators plan in a session clone; the caller's conf is never written") {
+    val s = spark
+    import s.implicits._
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val initial = keys.map(s.conf.get)
+    val edges = Seq((1L, 2L, 2L), (2L, 3L, 1L)).toDF("src", "dst", "weight")
+    val (inside, sized, n) = graft.kg.GraphOps.pageRank(edges, 2) { pr =>
+      (keys.map(s.conf.get), keys.map(pr.sparkSession.conf.get), pr.count())
+    }
+    assert(n == 3L)
+    assert(inside == initial, "pageRank wrote the caller's session conf")
+    // The loan frame belongs to the sized clone: graph-sized width, AQE off.
+    assert(sized == Seq("1", "false"), sized)
+    val cc = DedupOps.connectedComponents(Seq((1L, 2L), (2L, 3L)).toDF("a", "b"))
+    try {
+      assert(cc.sparkSession eq s, "connectedComponents must return a caller-bound frame")
+      assert(cc.count() == 3L)
+    } finally org.apache.spark.sql.graft.CheckpointBlocks.release(cc)
+    assert(keys.map(s.conf.get) == initial)
+  }
 }
