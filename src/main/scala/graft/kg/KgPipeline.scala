@@ -160,21 +160,13 @@ object KgPipeline {
     * one hash shuffle on (src, dst). */
   def coMentionEdges(spark: SparkSession, mentions: Dataset[MentionDoc],
       hits: Dataset[LinkHit], topRank: Int = 1): DataFrame = {
-    import spark.implicits._
     import org.apache.spark.sql.functions._
     // The per-conversation link list is query-batch-sized: at sf0.1 the
     // session-width version paid 8 exchanges for a 1.2k-edge output. The
-    // links table is persisted for its two join branches and the count; the
     // result is eagerly checkpointed (one row per co-mentioned entity pair),
     // so the caller holds edge-sized blocks only — release them with
     // CheckpointBlocks.release when done.
-    val links = hits.filter(_.rank <= topRank).toDF()
-      .join(mentions.map(m => (m.queryId, m.convId)).toDF("queryId", "convId"),
-        "queryId")
-      .select("convId", "docId").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = links.count() // also materializes the upstream pipeline caches
+    withConvLinks(spark, mentions, hits, topRank) { (links, n) =>
       SizedSession(spark) { w =>
         w.size(n)
         val l = w(links)
@@ -183,7 +175,26 @@ object KgPipeline {
           .groupBy(col("l.docId").as("src"), col("r.docId").as("dst"))
           .agg(count(lit(1)).as("weight")))
       }
-    } finally { links.unpersist(); () }
+    }
+  }
+
+  /** Loan the linked-conversations table shared by the co-mention
+    * analytics: top-`topRank` hits ⋈ mention (queryId, convId) →
+    * DISTINCT (convId, docId). It is query-batch-sized, persisted for the
+    * callers' join branches and counted once (the count also materializes
+    * the upstream pipeline caches), so `use` can size its plan to the row
+    * count; released when `use` returns. */
+  private def withConvLinks[A](spark: SparkSession,
+      mentions: Dataset[MentionDoc], hits: Dataset[LinkHit], topRank: Int)(
+      use: (DataFrame, Long) => A): A = {
+    import spark.implicits._
+    val links = hits.filter(_.rank <= topRank).toDF()
+      .join(mentions.map(m => (m.queryId, m.convId)).toDF("queryId", "convId"),
+        "queryId")
+      .select("convId", "docId").distinct()
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try use(links, links.count())
+    finally { links.unpersist(); () }
   }
 
   /** Deterministic negative sampling for KG-embedding training (the
@@ -312,19 +323,11 @@ object KgPipeline {
     * hash agg and a broadcast 1-row scalar — nothing new shuffles. */
   def pmiEdges(spark: SparkSession, mentions: Dataset[MentionDoc],
       hits: Dataset[LinkHit], topRank: Int = 1): DataFrame = {
-    import spark.implicits._
     import org.apache.spark.sql.functions._
-    val links0 = hits.filter(_.rank <= topRank).toDF()
-      .join(mentions.map(m => (m.queryId, m.convId)).toDF("queryId", "convId"),
-        "queryId")
-      .select("convId", "docId").distinct()
-      .persist()
-    try {
-      // Count the (query-batch-sized) links once, then size the whole PMI
-      // derivation — two aggs, the pair self-join, two joins — to that
-      // count (at sf0.1 the session-width version was 19 jobs / 1090 tasks
-      // for a 1.2k-row output).
-      val n = links0.count()
+    // Size the whole PMI derivation — two aggs, the pair self-join, two
+    // joins — to the links count (at sf0.1 the session-width version was
+    // 19 jobs / 1090 tasks for a 1.2k-row output).
+    withConvLinks(spark, mentions, hits, topRank) { (links0, n) =>
       SizedSession(spark) { w =>
         w.size(n)
         val links = w(links0)
@@ -345,7 +348,7 @@ object KgPipeline {
         // Materialize before releasing the shared links table.
         w.checkpoint(out)
       }
-    } finally { links0.unpersist(); () }
+    }
   }
 
   /** Transcript-structure metadata triples — the agent-action facet of the
@@ -419,17 +422,11 @@ object KgPipeline {
       topRank: Int = 1): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    // The entity-conversation side is query-batch-sized: persist + count,
-    // then broadcast it into the tool join (the per-conv tool DISTINCT still
-    // shuffles, but sized to the counted links, as is the edge agg). Output
-    // checkpointed; callers release with CheckpointBlocks.release.
-    val entConv = hits.filter(_.rank <= topRank).toDF()
-      .join(mentions.map(m => (m.queryId, m.convId))
-        .toDF("queryId", "convId"), "queryId")
-      .select("convId", "docId").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = entConv.count() // also materializes the upstream pipeline caches
+    // The entity-conversation side is broadcast into the tool join (the
+    // per-conv tool DISTINCT still shuffles, but sized to the counted
+    // links, as is the edge agg). Output checkpointed; callers release
+    // with CheckpointBlocks.release.
+    withConvLinks(spark, mentions, hits, topRank) { (entConv, n) =>
       SizedSession(spark) { w =>
         w.size(n)
         val toolConv = w(turns.filter(t => t.tool != null && t.tool.nonEmpty)
@@ -438,7 +435,7 @@ object KgPipeline {
           .groupBy(col("tool"), col("docId").as("doc_id"))
           .agg(count(lit(1)).as("weight")))
       }
-    } finally { entConv.unpersist(); () }
+    }
   }
 
   /** N-Triples serialization of the materialized triple table — the

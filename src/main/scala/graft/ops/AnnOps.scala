@@ -14,9 +14,11 @@ import org.apache.spark.sql.functions._
   *    sign-bit bucket key; only same-bucket pairs are scored. The 100 TB
   *    path: the bucket join replaces the full crossproduct, turning O(N·Q)
   *    into O(N·Q/2^bits) expected.
-  *  - IVF-style coarse quantization sketch: same shape, bucket = argmin over
-  *    a broadcast centroid list (left for a later round; LSH covers the
-  *    scale path).
+  *  - IVF coarse quantization (`ivfTopK`): same shape, the bucket is the
+  *    nearest of a broadcast deterministic centroid list; queries probe
+  *    their `nProbe` nearest cells.
+  *  - product quantization (`pqTopK`): ADC scan over m-byte codes, exact
+  *    re-rank of the top candidates — the memory-scale path.
   */
 object AnnOps {
 
@@ -82,7 +84,7 @@ object AnnOps {
 
   /** LSH-bucketed ANN top-k: queries only score corpus vectors sharing a
     * bucket in at least one hash table. Recall < 1 by design; measured
-    * against `bruteForceTopK` by `recallVsBrute` (AnnSpec pins a floor).
+    * against `bruteForceTopK` by `recallVsBrute` (OpsSpec pins a floor).
     *
     * Recall levers (AND-OR amplification; Leskovec et al., MMDS ch. 3):
     *  - `tables`: L independent hyperplane tables — a pair is a candidate if

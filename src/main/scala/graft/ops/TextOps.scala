@@ -173,6 +173,12 @@ object TextOps {
       .withColumn("norm_hash",
         xxhash64(lower(regexp_replace(col(textCol), "\\s+", " "))))
 
+  /** `langIdGuess`'s stop words per language, in tie-break order; the q14
+    * oracle spells out the same terms. */
+  val LangStopWords: Seq[(String, Seq[String])] = Seq(
+    "en" -> Seq("the", "and", "of"), "de" -> Seq("der", "und", "die"),
+    "es" -> Seq("el", "los", "que"), "fr" -> Seq("le", "les", "et"))
+
   /** Language-ID heuristic over marker-token hit counts. SQL-expressible so
     * it stays oracle-checkable; real deployments swap in a fastText-style
     * model via the same projection shape. */
@@ -181,10 +187,7 @@ object TextOps {
     def hits(words: Seq[String]): Column = words.map { w =>
       (length(t) - length(replace(t, lit(" " + w + " "), lit("")))) / (w.length + 2)
     }.reduce(_ + _)
-    val en = hits(Seq("the", "and", "of"))
-    val de = hits(Seq("der", "und", "die"))
-    val es = hits(Seq("el", "los", "que"))
-    val fr = hits(Seq("le", "les", "et"))
+    val Seq(en, de, es, fr) = LangStopWords.map(l => hits(l._2))
     docs.withColumn("en_hits", en.cast("bigint"))
       .withColumn("de_hits", de.cast("bigint"))
       .withColumn("es_hits", es.cast("bigint"))

@@ -1,0 +1,468 @@
+package graft.queries
+
+import org.apache.spark.sql.functions._
+
+import graft.kg.KgPipeline
+import graft.link.Linker
+import QuerySupport._
+
+/** The transcript→KG pipeline and its link: triples, hits (planned,
+  * indexed, explained, hydrated), N-Triples, idf, corpus dedup and the
+  * accuracy regression. */
+object KgQueries {
+
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec.of("kg_triples", Oracle(kgTriplesOracleSql)) { (s, dir, name) =>
+      scoped(s, dir, 5, name)(r =>
+        r.triples.toDF().orderBy("subj", "pred", "obj"))
+    },
+    QuerySpec.of("kg_links", Oracle(kgLinksSql),
+        Some("88b87962f578cf28daa21f0248660ff0")) { (s, dir, name) =>
+      scoped(s, dir, 5, name)(r =>
+        r.hits.toDF().withColumn("similarity", round(col("similarity"), 9))
+          .orderBy("queryId", "rank"))
+    },
+    QuerySpec.of("kg_links_indexed", Oracle(kgLinksSql)) { (s, dir, name) =>
+      // The SAME link through the streaming static index (LinkIndex: corpus
+      // packed + partitioned once, queries stamped in-cell) instead of the
+      // per-call-planned auto path — shares kg_links' DuckDB oracle, so the
+      // oracle compare independently confirms indexed == planned, bit for
+      // bit.
+      import s.implicits._
+      val (corpus, turns) = kgInputs(s, dir)
+      val b = bdict(s)
+      val docs = Linker.buildDocs(s, Linker.dedupCorpus(s, corpus), b)
+        .persist()
+      val idf = Linker.buildIdf(s, docs).persist()
+      try {
+        val mentions = graft.kg.KgPipeline.detectMentions(s, turns, b)
+        val index = graft.link.LinkIndex.build(s, docs, idf)
+        try {
+          val hits = index.link(s, mentions.map(_.doc), 5)
+          stash(s, hits.toDF()
+            .withColumn("similarity", round(col("similarity"), 9))
+            .orderBy("queryId", "rank"), name)
+        } finally index.unpersist()
+      } finally { docs.unpersist(); idf.unpersist(); () }
+    },
+    QuerySpec.of("kg_links_explain", Oracle(kgLinksExplainSql)) { (s, dir, name) =>
+      // Per-term scoring explain over the final top-k hits (the reference's
+      // explain=true mode, `SimilarityComputer.java:500-535`: one
+      // `MatchedTerm` per resolved query term) FLATTENED to one row per
+      // (hit, matched term): all-scalar columns the oracle compare can sort
+      // (an array<struct> column crashes its pandas sort). `pos` is the
+      // matched ordinal in query-term order.
+      scoped(s, dir, 5, name) { r =>
+        import s.implicits._
+        // Bounded top-k is prefix-stable (pinned ties): rank<=3 of the
+        // topN=5 run IS the topN=3 run, so explain shares the run's hits.
+        val hits3 = r.hits.filter(_.rank <= 3)
+        // mentionsIdf: the on-demand stamped view (run() persists mentions
+        // unstamped — the link stamps in-cell).
+        Linker.explainHits(s, r.mentionsIdf.map(_.doc), r.docsIdf, hits3).toDF()
+          .select(col("queryId"), col("docId"), col("rank"),
+            round(col("similarity"), 9).as("similarity"),
+            posexplode(col("matched")).as(Seq("pos", "m")))
+          .select(col("queryId"), col("docId"), col("rank"), col("similarity"),
+            col("pos"),
+            col("m.termText").as("termText"),
+            col("m.termType").as("termType"),
+            round(col("m.boost"), 9).as("boost"),
+            round(col("m.tfidf"), 9).as("tfidf"),
+            round(col("m.density"), 9).as("density"),
+            round(col("m.coord"), 9).as("coord"))
+          .orderBy("queryId", "rank", "pos")
+      }
+    },
+    QuerySpec.of("kg_idf", Oracle(
+      s"""WITH df AS (
+           SELECT partKey, termKey, count(*) AS df FROM ${sp("termrows")}
+           GROUP BY partKey, termKey),
+         nd AS (SELECT partKey, count(*) AS nDocs FROM ${sp("docs")}
+                GROUP BY partKey)
+         SELECT df.partKey, df.termKey, df.df,
+           round(CASE WHEN regexp_matches(df.termKey, '^[0-9]+$$')
+                        OR regexp_matches(df.termKey, '^[A-Za-z]+$$') THEN 2.0
+                 ELSE greatest(0.0, ln(CAST(nd.nDocs AS DOUBLE) / (df.df + 1)))
+                 END, 9) AS idf
+         FROM df JOIN nd ON df.partKey = nd.partKey
+         ORDER BY df.partKey, df.termKey""")) { (s, dir, _) =>
+      val (corpus, _) = kgInputs(s, dir)
+      val docs = Linker.buildDocs(s, corpus, bdict(s))
+      Linker.buildIdf(s, docs).toDF()
+        .withColumn("idf", round(col("idf"), 9))
+        .orderBy("partKey", "termKey")
+    },
+    QuerySpec.of("kg_ntriples", Oracle(kgNTriplesOracleSql)) { (s, dir, name) =>
+      // N-Triples interchange export of the materialized KG — the KG-side
+      // analog of the .vt dump (q24); byte-for-byte oracled: DuckDB rebuilds
+      // every line (same escape chain) over its own triple recomputation.
+      scoped(s, dir, 5, name)(r =>
+        KgPipeline.toNTriples(r.triples).orderBy("line"))
+    },
+    QuerySpec.of("kg_links_hydrated", Oracle(
+      s"""SELECT h.queryId, h.docId, h.rank, h.similarity, c.docText
+         FROM ${sp("hits3")} h JOIN ${sp("corpus")} c ON h.docId = c.docId
+         ORDER BY h.queryId, h.rank""")) { (s, dir, name) =>
+      // D5 result hydration: link hits joined back to the corpus rows.
+      val (corpus, _) = kgInputs(s, dir)
+      scoped(s, dir, 3, name)(r =>
+        r.hits.toDF()
+          .join(corpus.toDF("docId", "docText"), "docId")
+          .withColumn("similarity", round(col("similarity"), 9))
+          .select("queryId", "docId", "rank", "similarity", "docText")
+          .orderBy("queryId", "rank"))
+    },
+    QuerySpec.of("kg_dedup_corpus", Oracle(
+      s"""SELECT min(id) AS id, rawText FROM ${sp("corpus_doubled")}
+         GROUP BY rawText ORDER BY id""")) { (s, dir, _) =>
+      // A14 exact ingest dedup: corpus doubled with offset ids → exactly the
+      // original rows survive with min ids.
+      import s.implicits._
+      val (corpus, _) = kgInputs(s, dir)
+      val doubled = corpus.union(corpus.map { case (id, t) => (id + 1000000L, t) })
+      Linker.dedupCorpus(s, doubled).toDF("id", "rawText").orderBy("id")
+    },
+    QuerySpec.of("kg_accuracy", Oracle(accuracySql)) { (s, dir, _) =>
+      // C5 end-to-end accuracy regression (0.85 buckets + rates). Rates are
+      // exact-count IEEE divisions — no rounding needed for the oracle.
+      val (n, _, nDistricts) = scaleOf(dir)
+      graft.kg.Accuracy.evaluate(s, bdict(s), n.toLong, nDistricts, seed = 77)
+    }
+  )
+
+  /** FULL link recompute: the entire linkTopK semantics — candidate
+    * generation (docs sharing ≥1 term text within the query's partKey;
+    * exact, the same argument as `Linker.candidatesAndBounds`), per-term
+    * lookup resolution, BOTH sides' boosts, the weighted-cosine
+    * accumulation of `Scoring.score` (`SimilarityComputer.java:456-550`),
+    * the s>0 keep rule, and bounded top-5 with the pinned (sim desc, docId
+    * asc) tie order — recomputed end-to-end in DuckDB from the explain_*
+    * stage tables: membership, ranks, AND similarities. kg_links_indexed
+    * must equal kg_links bit for bit, so both specs point here. */
+  private def kgLinksSql: String =
+    s"""WITH q AS (SELECT * FROM ${sp("explain_qterms")}),
+         qm AS (SELECT * FROM ${sp("explain_qmeta")}),
+         d AS (SELECT * FROM ${sp("explain_dterms")}),
+         dm AS (SELECT * FROM ${sp("explain_dmeta")}),
+         cand AS (
+           SELECT DISTINCT q.queryId, d.docId
+           FROM q JOIN d ON d.text = q.text
+           JOIN qm ON qm.queryId = q.queryId
+           JOIN dm ON dm.docId = d.docId AND dm.partKey = qm.partKey),
+         last_match AS (
+           SELECT c.queryId, c.docId, q.qi, max(d.di) AS di
+           FROM cand c JOIN q ON q.queryId = c.queryId
+           JOIN d ON d.docId = c.docId AND d.text = q.text
+           GROUP BY c.queryId, c.docId, q.qi),
+         xmatch AS (
+           SELECT c.queryId, c.docId, q.qi, min(d.di) AS xi
+           FROM cand c JOIN q ON q.queryId = c.queryId AND q.type = 'X'
+           JOIN d ON d.docId = c.docId AND d.text = q.text AND d.type = 'X'
+           GROUP BY c.queryId, c.docId, q.qi),
+         xstats AS (
+           SELECT queryId, docId, count(*) AS cnt, min(xi) AS mstart,
+             max(xi) AS mend
+           FROM xmatch GROUP BY queryId, docId),
+         resolved AS (
+           SELECT c.queryId, c.docId, q.qi, q.type AS qtype, q.idf AS qidf,
+             COALESCE(lm.di,
+               CASE WHEN q.type = 'N' AND dm.roadNum IS NOT NULL
+                      AND dm.road IS NOT NULL AND qm.road IS NOT NULL
+                      AND dm.road = qm.road AND dm.roadNumIdx >= 0
+                    THEN dm.roadNumIdx END) AS di
+           FROM cand c
+           JOIN q ON q.queryId = c.queryId
+           JOIN qm ON qm.queryId = c.queryId
+           JOIN dm ON dm.docId = c.docId
+           LEFT JOIN last_match lm ON lm.queryId = c.queryId
+             AND lm.docId = c.docId AND lm.qi = q.qi),
+         terms AS (
+           SELECT r.queryId, r.docId,
+             (CASE WHEN r.qtype IN ('1','2','3') THEN 0.0
+                   WHEN r.qtype = '4' THEN 1.0 ELSE r.qidf END)
+             * (CASE r.qtype
+                 WHEN '1' THEN 4.0 WHEN '2' THEN 4.0 WHEN '3' THEN 4.0
+                 WHEN '4' THEN 0.25 WHEN 'X' THEN 1.0
+                 WHEN 'T' THEN
+                   CASE WHEN qm.town IS NOT NULL AND dm.town IS NOT NULL
+                        THEN 2.0 ELSE 0.25 END
+                 WHEN 'V' THEN
+                   CASE WHEN qm.village IS NOT NULL AND dm.village IS NOT NULL
+                          AND qm.town IS NOT NULL THEN
+                       CASE WHEN qm.town = dm.town THEN
+                              CASE WHEN qm.village = dm.village
+                                   THEN 4.0 ELSE 2.0 END
+                            WHEN dm.town IS NOT NULL THEN 2.0
+                            ELSE 0.25 END
+                     ELSE 0.25 END
+                 WHEN 'R' THEN
+                   CASE WHEN (qm.town IS NULL OR qm.village IS NULL)
+                          AND qm.road IS NOT NULL AND dm.road IS NOT NULL
+                        THEN 2.0 ELSE 1.0 END
+                 WHEN 'N' THEN
+                   CASE WHEN (qm.town IS NULL OR qm.village IS NULL)
+                          AND qm.roadNumValue > 0 AND dm.roadNumValue > 0
+                          AND qm.road IS NOT NULL AND qm.road = dm.road
+                        THEN 3.0 ELSE 1.0 END
+                 ELSE 1.0 END) AS qtfidf,
+             CASE WHEN r.di IS NULL THEN 0.0 ELSE
+               (CASE WHEN dt.type IN ('1','2','3') THEN 0.0
+                     WHEN dt.type = '4' THEN 1.0 ELSE dt.idf END)
+               * (CASE dt.type
+                   WHEN '1' THEN 4.0 WHEN '2' THEN 4.0 WHEN '3' THEN 4.0
+                   WHEN '4' THEN 0.25 WHEN 'X' THEN 1.0
+                   WHEN 'T' THEN
+                     CASE WHEN qm.town IS NOT NULL AND dm.town IS NOT NULL
+                          THEN 2.0 ELSE 0.25 END
+                   WHEN 'V' THEN
+                     CASE WHEN qm.village IS NOT NULL
+                            AND dm.village IS NOT NULL
+                            AND qm.town IS NOT NULL THEN
+                         CASE WHEN qm.town = dm.town THEN
+                                CASE WHEN qm.village = dm.village
+                                     THEN 4.0 ELSE 2.0 END
+                              WHEN dm.town IS NOT NULL THEN 0.5
+                              ELSE 0.25 END
+                       ELSE 0.25 END
+                   WHEN 'R' THEN
+                     CASE WHEN (qm.town IS NULL OR qm.village IS NULL)
+                            AND qm.road IS NOT NULL AND dm.road IS NOT NULL
+                          THEN 2.0 ELSE 1.0 END
+                   WHEN 'N' THEN
+                     CASE WHEN (qm.town IS NULL OR qm.village IS NULL)
+                            AND qm.roadNumValue > 0 AND dm.roadNumValue > 0
+                            AND qm.road IS NOT NULL AND dm.road IS NOT NULL
+                            AND qm.road = dm.road
+                          THEN CASE WHEN qm.roadNumValue = dm.roadNumValue
+                                    THEN 3.0
+                               ELSE (1.0 / sqrt(sqrt(
+                                 abs(qm.roadNumValue - dm.roadNumValue)
+                                 + 1.0))) * 2.0 END
+                          ELSE 1.0 END
+                   ELSE 1.0 END)
+               * (CASE WHEN dt.type = 'X' THEN
+                    CASE WHEN qm.qXCount > 0
+                         THEN sqrt(COALESCE(xs.cnt, 0) * 1.0 / qm.qXCount)
+                              * 0.5 + 0.5
+                         ELSE 1.0 END
+                  ELSE 1.0 END)
+               * (CASE WHEN dt.type = 'X' THEN
+                    CASE WHEN qm.qXCount >= 2 AND COALESCE(xs.cnt, 0) >= 2
+                         THEN sqrt(xs.cnt * 1.0 / (xs.mend - xs.mstart + 1))
+                              * 0.5 + 0.5
+                         ELSE 1.0 END
+                  ELSE 1.0 END)
+             END AS dtfidf
+           FROM resolved r
+           JOIN qm ON qm.queryId = r.queryId
+           JOIN dm ON dm.docId = r.docId
+           LEFT JOIN d dt ON dt.docId = r.docId AND dt.di = r.di
+           LEFT JOIN xstats xs ON xs.queryId = r.queryId
+             AND xs.docId = r.docId),
+         sims AS (
+           SELECT queryId, docId,
+             sum(qtfidf * qtfidf) AS sumQQ,
+             sum(qtfidf * dtfidf) AS sumQD,
+             sum(dtfidf * dtfidf) AS sumDD
+           FROM terms GROUP BY queryId, docId),
+         topk AS (
+           SELECT queryId, docId, sumQD / sqrt(sumQQ * sumDD) AS sim
+           FROM sims WHERE sumQQ > 0 AND sumDD > 0 AND sumQD > 0)
+         SELECT queryId, docId,
+           round(sim, 9) AS similarity,
+           CAST(row_number() OVER (PARTITION BY queryId
+             ORDER BY round(sim, 6) DESC, docId) AS INT) AS rank
+         FROM topk
+         QUALIFY rank <= 5
+         ORDER BY queryId, rank"""
+
+  /** scoreExplain (`link/Scoring.scala` — exact port of
+    * `SimilarityComputer.java:500-541`) recomputed in DuckDB over the
+    * explain_* stage tables: per query term, lookup = LAST equal-text doc
+    * term (`Document.java:111-117` overwrite semantics → max(di)); the
+    * X-term pre-pass uses FIRST equal-text X doc term (→ min(di)); the
+    * RoadNum same-road fallback, getBoostValue's full case table
+    * (`SimilarityComputer.java:198-255`), the Term.getIdf type overrides,
+    * and the coord/density formulas are all spelled out below. */
+  private def kgLinksExplainSql: String =
+    s"""WITH h AS (SELECT queryId, docId, rank, similarity FROM ${sp("hits3")}),
+         q AS (SELECT * FROM ${sp("explain_qterms")}),
+         qm AS (SELECT * FROM ${sp("explain_qmeta")}),
+         d AS (SELECT * FROM ${sp("explain_dterms")}),
+         dm AS (SELECT * FROM ${sp("explain_dmeta")}),
+         last_match AS (
+           SELECT h.queryId, h.docId, q.qi, max(d.di) AS di
+           FROM h JOIN q ON q.queryId = h.queryId
+           JOIN d ON d.docId = h.docId AND d.text = q.text
+           GROUP BY h.queryId, h.docId, q.qi),
+         xmatch AS (
+           SELECT h.queryId, h.docId, q.qi, min(d.di) AS xi
+           FROM h JOIN q ON q.queryId = h.queryId AND q.type = 'X'
+           JOIN d ON d.docId = h.docId AND d.text = q.text AND d.type = 'X'
+           GROUP BY h.queryId, h.docId, q.qi),
+         xstats AS (
+           SELECT queryId, docId, count(*) AS cnt, min(xi) AS mstart,
+             max(xi) AS mend
+           FROM xmatch GROUP BY queryId, docId),
+         resolved AS (
+           SELECT h.queryId, h.docId, h.rank, h.similarity, q.qi,
+             COALESCE(lm.di,
+               CASE WHEN q.type = 'N' AND dm.roadNum IS NOT NULL
+                      AND dm.road IS NOT NULL AND qm.road IS NOT NULL
+                      AND dm.road = qm.road AND dm.roadNumIdx >= 0
+                    THEN dm.roadNumIdx END) AS di
+           FROM h
+           JOIN q ON q.queryId = h.queryId
+           JOIN qm ON qm.queryId = h.queryId
+           JOIN dm ON dm.docId = h.docId
+           LEFT JOIN last_match lm ON lm.queryId = h.queryId
+             AND lm.docId = h.docId AND lm.qi = q.qi),
+         scored AS (
+           SELECT r.queryId, r.docId, r.rank, r.similarity, r.qi,
+             d.text AS termText, d.type AS termType, d.idf,
+             CASE WHEN qm.qXCount > 0
+                  THEN sqrt(COALESCE(xs.cnt, 0) * 1.0 / qm.qXCount) * 0.5 + 0.5
+                  ELSE 1.0 END AS coordAll,
+             CASE WHEN qm.qXCount >= 2 AND COALESCE(xs.cnt, 0) >= 2
+                  THEN sqrt(xs.cnt * 1.0 / (xs.mend - xs.mstart + 1)) * 0.5 + 0.5
+                  ELSE 1.0 END AS densityAll,
+             CASE d.type
+               WHEN '1' THEN 4.0 WHEN '2' THEN 4.0 WHEN '3' THEN 4.0
+               WHEN '4' THEN 0.25
+               WHEN 'X' THEN 1.0
+               WHEN 'T' THEN
+                 CASE WHEN qm.town IS NOT NULL AND dm.town IS NOT NULL
+                      THEN 2.0 ELSE 0.25 END
+               WHEN 'V' THEN
+                 CASE WHEN qm.village IS NOT NULL AND dm.village IS NOT NULL
+                        AND qm.town IS NOT NULL THEN
+                     CASE WHEN qm.town = dm.town THEN
+                            CASE WHEN qm.village = dm.village
+                                 THEN 4.0 ELSE 2.0 END
+                          WHEN dm.town IS NOT NULL THEN 0.5
+                          ELSE 0.25 END
+                   ELSE 0.25 END
+               WHEN 'R' THEN
+                 CASE WHEN (qm.town IS NULL OR qm.village IS NULL)
+                        AND qm.road IS NOT NULL AND dm.road IS NOT NULL
+                      THEN 2.0 ELSE 1.0 END
+               WHEN 'N' THEN
+                 CASE WHEN (qm.town IS NULL OR qm.village IS NULL)
+                        AND qm.roadNumValue > 0 AND dm.roadNumValue > 0
+                        AND qm.road IS NOT NULL AND dm.road IS NOT NULL
+                        AND qm.road = dm.road
+                      THEN CASE WHEN qm.roadNumValue = dm.roadNumValue THEN 3.0
+                           ELSE (1.0 / sqrt(sqrt(
+                             abs(qm.roadNumValue - dm.roadNumValue) + 1.0)))
+                             * 2.0 END
+                      ELSE 1.0 END
+               ELSE 1.0 END AS dboost
+           FROM resolved r
+           JOIN d ON d.docId = r.docId AND d.di = r.di
+           JOIN qm ON qm.queryId = r.queryId
+           JOIN dm ON dm.docId = r.docId
+           LEFT JOIN xstats xs ON xs.queryId = r.queryId AND xs.docId = r.docId
+           WHERE r.di IS NOT NULL)
+         SELECT queryId, docId, rank, similarity,
+           CAST(row_number() OVER (PARTITION BY queryId, docId ORDER BY qi) - 1
+                AS INT) AS pos,
+           termText, termType,
+           round(dboost, 9) AS boost,
+           round((CASE WHEN termType IN ('1','2','3') THEN 0.0
+                       WHEN termType = '4' THEN 1.0 ELSE idf END)
+                 * dboost
+                 * (CASE WHEN termType = 'X' THEN coordAll ELSE 1.0 END)
+                 * (CASE WHEN termType = 'X' THEN densityAll ELSE 1.0 END), 9)
+             AS tfidf,
+           round(CASE WHEN termType = 'X' THEN densityAll ELSE -1.0 END, 9)
+             AS density,
+           round(CASE WHEN termType = 'X' THEN coordAll ELSE -1.0 END, 9)
+             AS coord
+         FROM scored
+         ORDER BY queryId, rank, pos"""
+
+
+  private def accuracySql: String =
+    s"""WITH c AS (SELECT count(*) AS n_queries,
+           CAST(sum(CASE WHEN NOT interpreted THEN 1 ELSE 0 END) AS BIGINT)
+             AS interpret_fail,
+           CAST(sum(CASE WHEN interpreted AND NOT linked THEN 1 ELSE 0 END) AS BIGINT)
+             AS no_candidates,
+           CAST(sum(CASE WHEN linked AND similarity >= 0.85 AND pred_grid = true_grid
+             THEN 1 ELSE 0 END) AS BIGINT) AS high_ok,
+           CAST(sum(CASE WHEN linked AND similarity >= 0.85 AND pred_grid <> true_grid
+             THEN 1 ELSE 0 END) AS BIGINT) AS high_bad,
+           CAST(sum(CASE WHEN linked AND similarity < 0.85 AND pred_grid = true_grid
+             THEN 1 ELSE 0 END) AS BIGINT) AS low_ok,
+           CAST(sum(CASE WHEN linked AND similarity < 0.85 AND pred_grid <> true_grid
+             THEN 1 ELSE 0 END) AS BIGINT) AS low_bad
+           FROM ${sp("acc_status")})
+         SELECT n_queries, interpret_fail, no_candidates, high_ok, high_bad,
+           low_ok, low_bad,
+           CASE WHEN n_queries - interpret_fail - no_candidates > 0
+             THEN CAST(high_ok AS DOUBLE) / (n_queries - interpret_fail - no_candidates)
+             ELSE 0.0 END AS match_rate,
+           CASE WHEN low_ok + low_bad > 0
+             THEN CAST(low_ok AS DOUBLE) / (low_ok + low_bad)
+             ELSE 0.0 END AS low_acc,
+           CASE WHEN high_ok + high_bad > 0
+             THEN CAST(high_ok AS DOUBLE) / (high_ok + high_bad)
+             ELSE 0.0 END AS high_acc
+         FROM c"""
+
+  /** Full triple-emission recompute from the mentions/hits stage tables —
+    * shared by kg_triples (batch) and q27_stream_link (streaming): the
+    * stream's materialized triples must equal the batch recomputation
+    * exactly, making stream==batch an independent-engine check. */
+  private[queries] def kgTriplesOracleSql: String =
+    s"""WITH m AS (SELECT * FROM ${sp("mentions")}),
+       h AS (SELECT * FROM ${sp("hits5")}),
+       t AS (
+         SELECT subj, 'hasProvince' AS pred,
+           'region:' || CAST(pid AS VARCHAR) AS obj, 0.0 AS score, partKey
+         FROM m WHERE pid > 0
+         UNION ALL SELECT subj, 'hasCity', 'region:' || CAST(cid AS VARCHAR),
+           0.0, partKey FROM m WHERE cid > 0
+         UNION ALL SELECT subj, 'hasDistrict', 'region:' || CAST(did AS VARCHAR),
+           0.0, partKey FROM m WHERE did > 0
+         UNION ALL SELECT subj, 'hasStreet', 'region:' || CAST(street_id AS VARCHAR),
+           0.0, partKey FROM m WHERE street_id > 0
+         UNION ALL SELECT subj, 'hasTown', 'region:' || CAST(town_id AS VARCHAR),
+           0.0, partKey FROM m WHERE town_id > 0
+         UNION ALL SELECT subj, 'hasVillage', 'region:' || CAST(village_id AS VARCHAR),
+           0.0, partKey FROM m WHERE village_id > 0
+         UNION ALL SELECT subj, 'hasRoad', road, 0.0, partKey
+           FROM m WHERE length(road) > 0
+         UNION ALL SELECT subj, 'hasRoadNum', road_num, 0.0, partKey
+           FROM m WHERE length(road_num) > 0
+         UNION ALL SELECT subj, 'hasBuildingNum', building_num, 0.0, partKey
+           FROM m WHERE length(building_num) > 0
+         UNION ALL SELECT subj, 'residualText', residual, 0.0, partKey
+           FROM m WHERE length(residual) > 0
+         UNION ALL SELECT m.subj, 'linkedTo',
+           'addr:' || CAST(h.docId AS VARCHAR), h.similarity, m.partKey
+         FROM h JOIN m ON h.queryId = m.queryId)
+       SELECT subj, pred, obj, score, partKey FROM t
+       ORDER BY subj, pred, obj"""
+
+  /** kg_ntriples: the SAME escape chain + IRI/literal concatenation over
+    * DuckDB's own triple recomputation (the kg_triples oracle as a derived
+    * table) — a byte-for-byte independent-engine check of the serialized
+    * lines. DuckDB regular strings do not process backslash escapes, so
+    * '\' is one backslash and '\\' two; control chars via chr(). */
+  private def kgNTriplesOracleSql: String = {
+    // NOTE: the s-interpolator processes escape sequences EVEN in
+    // triple-quoted strings, so every backslash below is doubled in source;
+    // DuckDB (which does not process backslash escapes in its string
+    // literals) receives exactly replace($x, '\', '\\') etc.
+    def esc(x: String): String =
+      s"""replace(replace(replace(replace(replace($x,
+         '\\', '\\\\'), '"', '\\"'), chr(10), '\\n'), chr(13), '\\r'),
+         chr(9), '\\t')"""
+    s"""WITH base AS ($kgTriplesOracleSql)
+       SELECT '<graft:turn/' || ${esc("subj")} || '> <graft:pred/' || pred
+         || '> "' || ${esc("obj")} || '" .' AS line
+       FROM base ORDER BY line"""
+  }
+}

@@ -6,6 +6,8 @@ Usage: python3 tools/compare_oracle.py <sfDir> <voutDir>
 For each oracle_sql.json entry: register every <sfDir>/*.parquet as a view,
 run the SQL in DuckDB, load the query's Spark parquet output, sort columns by
 name + sort rows, compare (floats to ~1e-9). Prints one line per query.
+An oracle entry with no output dir under <voutDir> (a query that failed or
+was not run) counts as bad. Exit status 1 if anything is bad.
 """
 import json, sys, glob, os
 import duckdb
@@ -87,6 +89,10 @@ def main(sf_dir: str, vout: str) -> int:
                 break
         if ok:
             print(f"{qname}: OK rows={len(a)}")
+    for qname in sorted(oracle):
+        if not os.path.isdir(os.path.join(vout, qname)):
+            print(f"{qname}: NO_OUTPUT_DIR")
+            bad += 1
     return bad
 
 if __name__ == "__main__":
