@@ -43,8 +43,9 @@ import graft.model.{DocVec, IdfRow, LinkHit}
   * partitioning cannot be carried ACROSS queries — the pair-RDD
   * `partitionBy` + same-partitioner `cogroup`/union contract is exactly the
   * cross-query reuse the streaming path needs. Scoring reuses the batch
-  * kernel (`Linker.scoreCellBlocked`, in-cell idf stamping, quantized TopK),
-  * so indexed output is bit-identical to `linkTopKAuto` (LinkIndexSpec).
+  * cells' `Linker.scoreCell` (in-cell idf stamping, one `LinkKernel` feed,
+  * quantized TopK), so indexed output is bit-identical to `linkTopKAuto`
+  * (LinkIndexSpec).
   *
   * Query buckets are fixed at g=1: micro-batch query sets are small, so
   * per-cell pair work `q·maxDocsPerCell` stays bounded by the batch size and

@@ -123,6 +123,8 @@ object Dict {
   *    in-cell idf stamping).
   *  - `linkTopKBroadcast`: alternative for hot partitions when the query
   *    side fits a broadcast — the doc side streams with NO shuffle.
+  *
+  * Every route scores with the one kernel, [[LinkKernel]].
   */
 object Linker {
 
@@ -300,6 +302,8 @@ object Linker {
   /** Top-k linking: blocked cross join of queries × candidate docs within
     * each partKey, with the DOC side shipped as packed binary blocks
     * (`DocBlob`) and the QUERY side split into `qBuckets` by queryId hash.
+    * `knobsByPk` is the only shape input: a district without an entry is
+    * one cell, `CellKnobs(1, 1)`.
     * Ties pinned (desc similarity, asc docId) — documented divergence from
     * the reference's scan-order tie-keep (`Query.java:73,89`; SURVEY.md
     * §7.4-3). Hits with similarity <= 0 are dropped (`Query.addSimiDoc`
@@ -331,17 +335,15 @@ object Linker {
     */
   def linkTopK(spark: SparkSession, queries: Dataset[DocVec],
       docs: Dataset[DocVec], topN: Int, idf: Dataset[IdfRow],
-      qBuckets: Int = 64, dBuckets: Int = 1, blobSize: Int = 256,
-      knobsByPk: Map[String, CellKnobs] = Map.empty,
-      wand: Boolean = WandDefault): Dataset[LinkHit] = {
+      blobSize: Int = 256,
+      knobsByPk: Map[String, CellKnobs] = Map.empty): Dataset[LinkHit] = {
     import spark.implicits._
-    val default = CellKnobs(math.max(1, qBuckets), math.max(1, dBuckets))
     val bknobs = spark.sparkContext.broadcast(knobsByPk)
     def gOf(knobs: Map[String, CellKnobs], pk: String): Int =
-      math.max(1, knobs.getOrElse(pk, default).qBuckets)
+      knobs.get(pk).fold(1)(k => math.max(1, k.qBuckets))
     def dbOf(knobs: Map[String, CellKnobs], pk: String): Int =
-      math.max(1, knobs.getOrElse(pk, default).dBuckets)
-    val anyDb = default.dBuckets > 1 || knobsByPk.valuesIterator.exists(_.dBuckets > 1)
+      knobs.get(pk).fold(1)(k => math.max(1, k.dBuckets))
+    val anyDb = knobsByPk.valuesIterator.exists(_.dBuckets > 1)
 
     // db(pk)==1: each query visits exactly one cell. db(pk)>1: queries
     // replicate across the doc buckets (partial top-k merged below).
@@ -393,7 +395,7 @@ object Linker {
     }
 
     val partial = qKeyed.cogroup(dKeyed) { (_, qIt, dIt) =>
-      scoreCell(dIt.map(d => (d._4, d._5)), qIt.map(_._2), topN, wand)
+      scoreCell(dIt.map(d => (d._4, d._5)), qIt.map(_._2), topN)
     }
     if (!anyDb) partial else mergeTopK(partial, topN)
   }
@@ -403,8 +405,7 @@ object Linker {
     * batch cells ([[linkTopK]]) and the persisted streaming cells
     * (`LinkIndex.link`) share it, so their scores are bit-identical. */
   private[link] def scoreCell(blobs: Iterator[(Int, Array[Byte])],
-      queries: Iterator[DocVec], topN: Int,
-      wand: Boolean = WandDefault): Iterator[LinkHit] = {
+      queries: Iterator[DocVec], topN: Int): Iterator[LinkHit] = {
     val buf = scala.collection.mutable.ArrayBuffer.empty[Scoring.Side]
     val idfMap = new java.util.HashMap[String, java.lang.Double]()
     blobs.foreach { case (tag, bytes) =>
@@ -418,7 +419,7 @@ object Linker {
       var i = 0
       while (i < buf.length) { Scoring.stampSideIdfs(buf(i), idfMap); i += 1 }
       scoreCellBlocked(queries.map(DocAnalyser.stampIdf(_, idfMap)),
-        buf.toArray, topN, wand = wand)
+        buf.toArray, topN)
     }
   }
 
@@ -570,8 +571,7 @@ object Linker {
       docs: Dataset[DocVec], topN: Int, idf: Dataset[IdfRow],
       targetPairsPerCell: Long = 1L << 22, maxDocsPerCell: Int = 1 << 16,
       maxQBuckets: Int = 256, bcastQMax: Long = 512,
-      bcastTotalMax: Long = 1L << 17,
-      wand: Boolean = WandDefault): Dataset[LinkHit] = {
+      bcastTotalMax: Long = 1L << 17): Dataset[LinkHit] = {
     val plan = planRoutes(countStats(spark, queries, docs),
       spark.sparkContext.defaultParallelism, targetPairsPerCell,
       maxDocsPerCell, maxQBuckets, bcastQMax, bcastTotalMax)
@@ -582,7 +582,7 @@ object Linker {
       queries.filter(q => bShuffle.value.contains(q.partKey)),
       docs.filter(d => bShuffle.value.contains(d.partKey)),
       topN, idf.filter(r => bShuffle.value.contains(r.partKey)),
-      qBuckets = 1, dBuckets = 1, knobsByPk = plan.knobs, wand = wand)
+      knobsByPk = plan.knobs)
 
     if (bcastPks.isEmpty) restHits
     else {
@@ -590,7 +590,7 @@ object Linker {
       val hitsB = linkTopKBroadcast(spark,
         queries.filter(q => bBcast.value.contains(q.partKey)).collect(),
         docs.filter(d => bBcast.value.contains(d.partKey)), topN,
-        idf.filter(r => bBcast.value.contains(r.partKey)), wand = wand)
+        idf.filter(r => bBcast.value.contains(r.partKey)))
       restHits.union(hitsB)
     }
   }
@@ -613,6 +613,12 @@ object Linker {
     * partKey. Emits per-partition partial top-k; final top-k is a tiny
     * shuffle of k*|queries| rows.
     *
+    * Scoring is the cells' kernel ([[LinkKernel]]): each task keeps one
+    * kernel per district it meets and feeds it that district's streamed,
+    * idf-stamped docs in batches of [[BroadcastBatch]], so heaps and WAND
+    * limits carry across batches and task memory stays bounded by the
+    * batch, not by the partition.
+    *
     * idf: the districts' idf tables are collected and broadcast next to the
     * queries. Queries are stamped driver-side and each streamed doc side
     * in-task, both from the same per-district map; a partKey absent from
@@ -621,8 +627,7 @@ object Linker {
     * which address-shaped vocabularies saturate — a broadcast-dimension-
     * sized collect, like the queries themselves. */
   def linkTopKBroadcast(spark: SparkSession, queries: Array[DocVec],
-      docs: Dataset[DocVec], topN: Int, idf: Dataset[IdfRow],
-      wand: Boolean = WandDefault): Dataset[LinkHit] = {
+      docs: Dataset[DocVec], topN: Int, idf: Dataset[IdfRow]): Dataset[LinkHit] = {
     import spark.implicits._
     val idfByPk = {
       val m = new scala.collection.mutable.HashMap[
@@ -640,112 +645,26 @@ object Linker {
       .groupBy(_.partKey)
     val bq = spark.sparkContext.broadcast(byPart)
     val partial = docs.mapPartitions { it =>
-      locally { // scoring-stage attribution, same hook as scoreCellBlocked
-        val tc = org.apache.spark.TaskContext.get()
-        if (tc != null) { ScoringStageIds.add(tc.stageId()); () }
+      final class District(val kernel: LinkKernel) {
+        val batch = scala.collection.mutable.ArrayBuffer.empty[Scoring.Side]
+        def flush(): Unit = { kernel.feed(batch.toArray); batch.clear() }
       }
-      val heaps = new scala.collection.mutable.HashMap[Long, TopK]()
-      // Per-partKey compiled queries + inverted index over QUERY term hashes
-      // (the mirror of scoreCellBlocked's doc postings): each streamed doc
-      // only scores the queries it shares ≥1 term text with — exact, see
-      // `candidatesAndBounds`' argument. `masses` parallels `postings` with
-      // each entry's maxQtfidf² (WAND): pass 1 over a doc's hashes
-      // accumulates a per-query bound mass, pass 2 scores only queries
-      // whose bound can still beat their heap's kth key — the same
-      // admissible, bit-identical skip as the shuffle cells. The RoadNum
-      // fuzzy fallback posts its mass (and candidacy — a superset: the
-      // fallback needs equal road TEXT, which is an R term on both sides,
-      // so no new nonzero pair appears) on the query's road-text hash.
-      final case class QIdx(qs: Array[Scoring.QuerySide],
-          postings: scala.collection.mutable.LongMap[IntVec],
-          masses: scala.collection.mutable.LongMap[FloatVec])
-      val byPk = new scala.collection.mutable.HashMap[String, QIdx]()
-      val qmap = bq.value
-      var stamp = 0
-      var stamps = new Array[Int](64)
-      var ubq = new Array[Float](64)
-      val cands = new IntVec
+      val byPk = new scala.collection.mutable.HashMap[String, District]()
       it.foreach { d =>
-        val qidx = byPk.getOrElseUpdate(d.partKey, {
-          val qs = qmap.getOrElse(d.partKey, Array.empty)
-            .map(new Scoring.QuerySide(_))
-          val postings = new scala.collection.mutable.LongMap[IntVec](qs.length * 8)
-          val masses = new scala.collection.mutable.LongMap[FloatVec](qs.length * 8)
-          def post(key: Long, qi: Int, m: Float): Unit = {
-            postings.getOrElseUpdate(key, new IntVec).add(qi)
-            masses.getOrElseUpdate(key, new FloatVec).add(m)
-          }
-          var qi = 0
-          while (qi < qs.length) {
-            val q = qs(qi)
-            val hs = q.hashes
-            var i = 0
-            while (i < hs.length) {
-              val m = q.maxSq(i).toFloat
-              post(hs(i).toLong, qi, m)
-              if (q.types.charAt(i) == 'N' && q.road != null)
-                post(q.road.hashCode.toLong, qi, m)
-              i += 1
-            }
-            qi += 1
-          }
-          QIdx(qs, postings, masses)
-        })
-        if (qidx.qs.nonEmpty) {
-          if (stamps.length < qidx.qs.length) {
-            stamps = new Array[Int](qidx.qs.length)
-            ubq = new Array[Float](qidx.qs.length)
-          }
-          stamp += 1
+        val district = byPk.getOrElseUpdate(d.partKey, new District(
+          new LinkKernel(bq.value.getOrElse(d.partKey, Array.empty).iterator, topN)))
+        if (!district.kernel.isEmpty) {
           val ds = new Scoring.Side(d)
           Scoring.stampSideIdfs(ds,
             idfByPk.value.getOrElse(d.partKey, EmptyIdfMap))
-          // Pass 1: candidates + bound mass for THIS doc.
-          cands.n = 0
-          val hs = ds.hashes
-          var i = 0
-          while (i < hs.length) {
-            val p = qidx.postings.getOrNull(hs(i).toLong)
-            if (p != null) {
-              val mv = qidx.masses.getOrNull(hs(i).toLong)
-              var j = 0
-              while (j < p.n) {
-                val qi = p.a(j)
-                if (stamps(qi) != stamp) {
-                  stamps(qi) = stamp; ubq(qi) = 0f; cands.add(qi)
-                }
-                ubq(qi) += mv.a(j)
-                j += 1
-              }
-            }
-            i += 1
-          }
-          // Pass 2: score candidates whose bound survives their threshold.
-          var ci = 0
-          while (ci < cands.n) {
-            val qi = cands.a(ci)
-            val q = qidx.qs(qi)
-            var skip = false
-            if (wand && q.minSumQQ > 0.0) {
-              val h = heaps.getOrElse(q.docId, null)
-              if (h != null) {
-                val kk = h.kthKey
-                if (kk > 0L) {
-                  val t = (kk - 0.5) / 1e6
-                  skip = ubq(qi) < t * t * q.minSumQQ / WandSafety
-                }
-              }
-            }
-            if (!skip) {
-              val s = Scoring.score(q, ds)
-              if (s > 0)
-                heaps.getOrElseUpdate(q.docId, new TopK(topN)).offer(d.docId, s)
-            }
-            ci += 1
-          }
+          district.batch += ds
+          if (district.batch.length == BroadcastBatch) district.flush()
         }
       }
-      heaps.iterator.flatMap { case (qid, heap) => heap.toHits(qid) }
+      byPk.valuesIterator.flatMap { district =>
+        district.flush()
+        district.kernel.hits
+      }
     }
     mergeTopK(partial, topN)
   }
@@ -777,127 +696,10 @@ object Linker {
 
   private val EmptyIdfMap = new java.util.HashMap[String, java.lang.Double]()
 
-  /** Minimal growable int array (postings lists; ArrayBuffer[Int] boxes). */
-  private final class IntVec {
-    var a = new Array[Int](4); var n = 0
-    def add(v: Int): Unit = {
-      if (n == a.length) {
-        val b = new Array[Int](n * 2); System.arraycopy(a, 0, b, 0, n); a = b
-      }
-      a(n) = v; n += 1
-    }
-  }
-
-  /** Float twin of IntVec (per-posting WAND bound masses). */
-  private final class FloatVec {
-    var a = new Array[Float](4); var n = 0
-    def add(v: Float): Unit = {
-      if (n == a.length) {
-        val b = new Array[Float](n * 2); System.arraycopy(a, 0, b, 0, n); a = b
-      }
-      a(n) = v; n += 1
-    }
-  }
-
-  /** Inverted-index postings for a cell's doc sides: term-text hash → doc
-    * indices (ascending; duplicates possible when a doc repeats a hash —
-    * the BitSet candidate mark dedups). */
-  private def buildPostings(dsides: Array[Scoring.Side])
-      : scala.collection.mutable.LongMap[IntVec] = {
-    val postings = new scala.collection.mutable.LongMap[IntVec](dsides.length * 8)
-    var di = 0
-    while (di < dsides.length) {
-      val hs = dsides(di).hashes
-      var i = 0
-      while (i < hs.length) {
-        postings.getOrElseUpdate(hs(i).toLong, new IntVec).add(di)
-        i += 1
-      }
-      di += 1
-    }
-    postings
-  }
-
-  /** Candidate docs for one query: union of its term hashes' postings, as a
-    * BitSet over doc indices. EXACT, not approximate: a doc sharing NO term
-    * text with the query scores 0 (every query-term lookup misses; the
-    * RoadNum same-road fallback also requires equal road TEXT, which is
-    * itself an R term on both sides — `DocAnalyser.analyse` only emits
-    * non-empty texts) and similarity-0 hits are dropped by the kernel
-    * contract (`Query.addSimiDoc` `Query.java:62`), so skipping non-candidates
-    * cannot change the result. Hash collisions only ADD candidates (scoring
-    * verifies text equality). Term vectors carry no Province/City/District
-    * terms (partKey handles those), so no term is exempt.
-    *
-    * The WAND bound mass rides the same postings pass: `ub(d)` (when
-    * non-null) accumulates Σ maxQtfidf_i² over the query terms whose hash
-    * posting contains d — a superset of the true matched set (hash ⊇ text
-    * equality; duplicate postings only inflate), so the derived bound stays
-    * admissible. The RoadNum fuzzy fallback can match WITHOUT the N term's
-    * text (same-road, different number), so the N term's mass is ALSO
-    * posted along the query's road-text hash — every doc that can reach
-    * the fallback shares that R text. */
-  private def candidatesAndBounds(q: Scoring.QuerySide,
-      postings: scala.collection.mutable.LongMap[IntVec],
-      nDocs: Int, ub: Array[Float]): java.util.BitSet = {
-    val cand = new java.util.BitSet(nDocs)
-    val hs = q.hashes
-    if (ub != null) {
-      var i = 0
-      while (i < hs.length) {
-        val m = q.maxSq(i).toFloat
-        val p = postings.getOrNull(hs(i).toLong)
-        if (p != null) {
-          var j = 0
-          while (j < p.n) { cand.set(p.a(j)); ub(p.a(j)) += m; j += 1 }
-        }
-        if (q.types.charAt(i) == 'N' && q.road != null) {
-          val pr = postings.getOrNull(q.road.hashCode.toLong)
-          if (pr != null) {
-            var j = 0
-            while (j < pr.n) { ub(pr.a(j)) += m; j += 1 }
-          }
-        }
-        i += 1
-      }
-      return cand
-    }
-    var i = 0
-    while (i < hs.length) {
-      val p = postings.getOrNull(hs(i).toLong)
-      if (p != null) {
-        var j = 0
-        while (j < p.n) { cand.set(p.a(j)); j += 1 }
-      }
-      i += 1
-    }
-    cand
-  }
-
-  /** Cache-blocked cell scoring with inverted-index candidate pruning:
-    *  - postings (term hash → doc indices) are built once per cell; each
-    *    query only scores docs sharing ≥1 term text — exact (see
-    *    `candidatesAndBounds`), and on address-shaped data it skips the large
-    *    majority of pairs (the O(|q|·|d|) full scan was the kernel's pair
-    *    bound; the candidate scan is output-sensitive);
-    *  - DOC CHUNKS (sized to stay cache-resident) remain the outer loop with
-    *    all queries inner — each doc byte is pulled from DRAM once per chunk
-    *    instead of once per query. At 32 cores the naive query-outer order
-    *    saturated memory bandwidth (~2x CPU inflation vs 8 cores on
-    *    >10k-doc cells). Candidate iteration (BitSet.nextSetBit) preserves
-    *    the exact ascending doc order of the full scan, so heap contents —
-    *    already order-independent via pinned ties — are bit-identical. */
-  private val DocChunk = 1024
-
-  /** WAND safety factor: the per-doc bound mass accumulates in FLOAT (4
-    * bytes × cell pairs, inside the task-memory valve); float summation of
-    * ≤ ~64 non-negative terms has relative error ≤ 63·2^-24 ≈ 3.8e-6, so
-    * inflating by 1e-4 provably restores admissibility. */
-  private val WandSafety = 1.0001
-  /** Kill switch for A/B measurement (GRAFT_WAND=0); results are
-    * bit-identical either way (WandSpec), only CPU changes. */
-  private[graft] val WandDefault: Boolean =
-    sys.env.get("GRAFT_WAND").forall(_ != "0")
+  /** Docs per kernel feed on the broadcast route: large enough that the
+    * per-feed postings and candidate passes amortize, small enough that a
+    * district's bound masses (4 bytes × queries × batch) stay a few MB. */
+  private[graft] val BroadcastBatch = 4096
 
   /** Stage ids (this JVM) whose tasks ran the scoring kernel — bench/test
     * instrumentation so the skew-stress report attributes task time to the
@@ -909,76 +711,16 @@ object Linker {
   val ScoringStageIds: java.util.Set[Integer] =
     java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
 
+  /** Score one cell's queries against its whole (idf-stamped) doc side in a
+    * single [[LinkKernel]] feed. `wandSkipped`, when given, counts the
+    * candidates the WAND bound skipped. */
   private[graft] def scoreCellBlocked(qs: Iterator[DocVec],
       dsides: Array[Scoring.Side], topN: Int,
-      wand: Boolean = WandDefault,
       wandSkipped: java.util.concurrent.atomic.LongAdder = null)
       : Iterator[LinkHit] = {
-    val tc = org.apache.spark.TaskContext.get()
-    if (tc != null) { ScoringStageIds.add(tc.stageId()); () }
-    val qsides = qs.map(new Scoring.QuerySide(_)).toArray
-    if (qsides.isEmpty) return Iterator.empty
-    val postings = buildPostings(dsides)
-    val cands = new Array[java.util.BitSet](qsides.length)
-    // Per-(query, doc) upper-bound mass Σ maxQtfidf_i² over hash-matched
-    // terms, filled in the same postings pass that marks candidates. A
-    // doc's bound is then sqrt(ub·safety / minSumQQ) ≥ its true sim
-    // (QuerySide.maxSq doc), which the scoring loop tests against the
-    // heap's quantized kth key — an admissible, bit-identical skip.
-    val ubs = if (wand) new Array[Array[Float]](qsides.length) else null
-    var i = 0
-    while (i < qsides.length) {
-      val ub = if (wand) new Array[Float](dsides.length) else null
-      cands(i) = candidatesAndBounds(qsides(i), postings, dsides.length, ub)
-      if (wand) ubs(i) = ub
-      i += 1
-    }
-    val heaps = Array.fill(qsides.length)(new TopK(topN))
-    // Per-query skip limit on the RAW ub mass (avoids sqrt per doc):
-    // skip ⟺ qz(bound) < kthKey ⟺ bound < (kthKey-0.5)/1e6
-    //      ⟺ ub < ((kthKey-0.5)/1e6)² · minSumQQ / safety.
-    // Recomputed only when the heap's kth key moves.
-    val limits = new Array[Double](qsides.length)
-    val lastKeys = new Array[Long](qsides.length)
-    java.util.Arrays.fill(limits, Double.NegativeInfinity)
-    java.util.Arrays.fill(lastKeys, Long.MinValue)
-    @inline def limitFor(q: Scoring.QuerySide, kk: Long): Double =
-      if (kk <= 0L || q.minSumQQ <= 0.0) Double.NegativeInfinity
-      else {
-        val t = (kk - 0.5) / 1e6
-        t * t * q.minSumQQ / WandSafety
-      }
-    var c = 0
-    while (c < dsides.length) {
-      val end = math.min(c + DocChunk, dsides.length)
-      var qi = 0
-      while (qi < qsides.length) {
-        val q = qsides(qi)
-        val heap = heaps(qi)
-        val ub = if (wand) ubs(qi) else null
-        var limit = limits(qi)
-        var lastKey = lastKeys(qi)
-        var di = cands(qi).nextSetBit(c)
-        while (di >= 0 && di < end) {
-          if (ub != null && ub(di) < limit) {
-            if (wandSkipped != null) wandSkipped.increment()
-          } else {
-            val s = Scoring.score(q, dsides(di))
-            if (s > 0) {
-              heap.offer(dsides(di).docId, s)
-              val kk = heap.kthKey
-              if (kk != lastKey) { lastKey = kk; limit = limitFor(q, kk) }
-            }
-          }
-          di = cands(qi).nextSetBit(di + 1)
-        }
-        limits(qi) = limit
-        lastKeys(qi) = lastKey
-        qi += 1
-      }
-      c = end
-    }
-    (0 until qsides.length).iterator.flatMap(i => heaps(i).toHits(qsides(i).docId))
+    val kernel = new LinkKernel(qs, topN, wandSkipped)
+    kernel.feed(dsides)
+    kernel.hits
   }
 
   /** Town/village discovery (canonicalization of new surface forms —

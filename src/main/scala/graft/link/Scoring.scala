@@ -342,7 +342,8 @@ object Scoring {
     score(new QuerySide(qdoc), new Side(ddoc))
 
   /** Stamp per-term idfs onto an unpacked doc side from a partition idf map
-    * — the in-cell idf stamp of `Linker.linkTopK` and `LinkIndex.link`.
+    * — the doc-side idf stamp of every link route (shuffle cells,
+    * broadcast, `LinkIndex.link`).
     * EXACTLY `DocAnalyser.stampIdf` on the compiled layout:
     * key = term text, except RoadNum's composite `"<roadText>-<num>"`
     * (`generateIDFCacheEntryKey` `SimilarityComputer.java:180-187`); misses

@@ -185,9 +185,10 @@ class KgPipelineSpec extends AnyFunSuite {
         java.lang.Double.doubleToLongBits(h.similarity))).toSet
     // Use corpus docs themselves as queries (self-link); one cell per
     // district is the base every knob setting must reproduce.
+    val pks = docs.collect().map(_.partKey).distinct.sorted
     def run(qb: Int, db: Int, blob: Int) =
-      key(Linker.linkTopK(s, docs, docs, 5, idf, qBuckets = qb, dBuckets = db,
-        blobSize = blob))
+      key(Linker.linkTopK(s, docs, docs, 5, idf, blobSize = blob,
+        knobsByPk = pks.map(_ -> Linker.CellKnobs(qb, db)).toMap))
     val base = run(1, 1, 1000000)
     assert(base.nonEmpty)
     assert(run(24, 1, 256) == base)
@@ -197,12 +198,11 @@ class KgPipelineSpec extends AnyFunSuite {
     assert(key(Linker.linkTopKBroadcast(s, docs.collect(), docs, 5, idf)) == base)
 
     // Per-partKey knob overrides agree (mixed g/db across districts).
-    val pks = docs.collect().map(_.partKey).distinct.sorted
     val mixed = pks.zipWithIndex.map { case (pk, i) =>
       pk -> Linker.CellKnobs(1 + (i % 5), 1 + (i % 3))
     }.toMap
-    assert(key(Linker.linkTopK(s, docs, docs, 5, idf, qBuckets = 2,
-      dBuckets = 1, blobSize = 64, knobsByPk = mixed)) == base)
+    assert(key(Linker.linkTopK(s, docs, docs, 5, idf, blobSize = 64,
+      knobsByPk = mixed)) == base)
 
     // Auto mode (counted stats → knobs + broadcast routing) agrees, with
     // thresholds forced low enough that BOTH the 2-D blocking and the

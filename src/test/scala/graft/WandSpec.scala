@@ -2,15 +2,18 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.analyse.DocAnalyser
 import graft.data.SynthCorpus
-import graft.link.{Linker, Scoring}
+import graft.link.{LinkKernel, Linker, Scoring}
+import graft.model.{DocVec, IdfRow, LinkHit}
 
 /** WAND-style admissible pruning (round 5): the scoring loop skips a
   * candidate doc when its Cauchy-Schwarz upper bound (Σ hash-matched
   * maxQtfidf² / minSumQQ, float mass inflated by the safety factor) cannot
   * beat the heap's quantized kth key. The skip is BIT-IDENTICAL by the
-  * TopK.offer contract — these tests pin that, the admissibility of the
-  * bound itself, and that pruning actually engages.
+  * TopK.offer contract — these tests pin that against a brute-force
+  * reference on every route, the admissibility of the bound itself, and
+  * that pruning actually engages.
   */
 class WandSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -23,7 +26,7 @@ class WandSpec extends AnyFunSuite {
     val docs = rows.flatMap { case (id, text) =>
       val a = interp.interpret(text, visitor)
       if (a == null || !a.division.hasCity || !a.division.hasDistrict) None
-      else Some(graft.analyse.DocAnalyser.analyse(id, "pk", a))
+      else Some(DocAnalyser.analyse(id, "pk", a))
     }
     // Stamp non-trivial idfs so bounds/sims are spread out.
     val idf = docs.flatMap(d => d.texts).groupBy(identity)
@@ -37,20 +40,50 @@ class WandSpec extends AnyFunSuite {
     docs
   }
 
+  private def bits(h: LinkHit) = (h.queryId, h.docId, h.rank,
+    java.lang.Double.doubleToLongBits(h.similarity))
+
+  /** Brute-force reference: every (query, doc) pair of a district through
+    * `Scoring.score` into a `TopK`; hits in query order. */
+  private def reference(queries: Seq[DocVec], docs: Seq[DocVec],
+      topN: Int): Vector[(Long, Long, Int, Long)] = {
+    val byPk = docs.groupBy(_.partKey).map { case (pk, ds) =>
+      pk -> ds.map(new Scoring.Side(_))
+    }
+    queries.toVector.flatMap { qd =>
+      val q = new Scoring.QuerySide(qd)
+      val heap = new Linker.TopK(topN)
+      byPk.getOrElse(qd.partKey, Nil).foreach { d =>
+        val s = Scoring.score(q, d)
+        if (s > 0) heap.offer(d.docId, s)
+      }
+      heap.toHits(qd.docId).map(bits)
+    }
+  }
+
+  /** Stamp rows from their district's idf table, as the link does in-cell. */
+  private def stamped(rows: Seq[DocVec], idf: Seq[IdfRow]): Seq[DocVec] = {
+    val maps = idf.groupBy(_.partKey).map { case (pk, rs) =>
+      val m = new java.util.HashMap[String, java.lang.Double]()
+      rs.foreach(r => m.put(r.termKey, r.idf))
+      pk -> m
+    }
+    val empty = new java.util.HashMap[String, java.lang.Double]()
+    rows.map(d => DocAnalyser.stampIdf(d, maps.getOrElse(d.partKey, empty)))
+  }
+
+  private def sorted(hits: Seq[(Long, Long, Int, Long)]) =
+    hits.sortBy(x => (x._1, x._3))
+
   test("pruned scoring is bit-identical to exhaustive scoring, and engages") {
     val docs = cellInputs(1200)
     val dsides = docs.map(new Scoring.Side(_)).toArray
     val queries = docs.take(150)
     val skipped = new java.util.concurrent.atomic.LongAdder
-    def run(wand: Boolean) =
-      Linker.scoreCellBlocked(queries.iterator, dsides, 5, wand = wand,
-          wandSkipped = if (wand) skipped else null)
-        .map(h => (h.queryId, h.docId, h.rank,
-          java.lang.Double.doubleToLongBits(h.similarity)))
-        .toVector
-    val pruned = run(wand = true)
-    val exhaustive = run(wand = false)
-    assert(pruned == exhaustive, "WAND pruning changed results")
+    val pruned = Linker.scoreCellBlocked(queries.iterator, dsides, 5,
+        wandSkipped = skipped).map(bits).toVector
+    assert(pruned.nonEmpty)
+    assert(pruned == reference(queries, docs, 5), "WAND pruning changed results")
     assert(skipped.sum > 0, "pruning never engaged on a 150x1200 cell")
   }
 
@@ -74,26 +107,54 @@ class WandSpec extends AnyFunSuite {
     }
   }
 
-  test("broadcast route is bit-identical with pruning on vs off") {
+  test("broadcast route is bit-identical to the brute-force reference") {
     val s = spark
     import s.implicits._
     val docs = cellInputs(1500)
     val queries = docs.take(120).toArray
     val ds = s.createDataset(docs).repartition(4)
     val idf = Linker.buildIdf(s, ds).persist()
-    def run(wand: Boolean) =
-      Linker.linkTopKBroadcast(s, queries, ds, 5, idf, wand = wand)
-        .collect()
-        .map(h => (h.queryId, h.docId, h.rank,
-          java.lang.Double.doubleToLongBits(h.similarity)))
-        .sortBy(x => (x._1, x._3))
-    val on = run(wand = true)
-    val off = run(wand = false)
-    assert(on.nonEmpty && on.sameElements(off))
-    idf.unpersist(); ()
+    try {
+      val got = Linker.linkTopKBroadcast(s, queries, ds, 5, idf)
+        .collect().map(bits).toSeq
+      val idfRows = idf.collect().toSeq
+      val exp = reference(stamped(queries.toSeq, idfRows),
+        stamped(docs, idfRows), 5)
+      assert(got.nonEmpty && sorted(got) == sorted(exp))
+    } finally { idf.unpersist(); () }
   }
 
-  test("full-pipeline link is bit-identical with pruning on vs off") {
+  test("broadcast route carries heaps across kernel batches") {
+    val s = spark
+    import s.implicits._
+    val docs = cellInputs(2 * Linker.BroadcastBatch + 1000)
+    assert(docs.size > 2 * Linker.BroadcastBatch,
+      s"need > two batches of one district in one partition, got ${docs.size}")
+    val queries = docs.take(120)
+    val exp = reference(queries, docs, 5)
+    assert(exp.nonEmpty)
+
+    // The kernel fed batch by batch keeps one heap per query: no merge.
+    val kernel = new LinkKernel(queries.iterator, 5)
+    docs.grouped(Linker.BroadcastBatch)
+      .foreach(b => kernel.feed(b.map(new Scoring.Side(_)).toArray))
+    assert(kernel.hits.map(bits).toVector == exp)
+
+    // One partition holds every doc of the district, so its task feeds
+    // its kernel three batches.
+    val ds = s.createDataset(docs).repartition(1)
+    val idf = Linker.buildIdf(s, ds).persist()
+    try {
+      val got = Linker.linkTopKBroadcast(s, queries.toArray, ds, 5, idf)
+        .collect().map(bits).toSeq
+      val idfRows = idf.collect().toSeq
+      val expStamped = reference(stamped(queries, idfRows),
+        stamped(docs, idfRows), 5)
+      assert(got.nonEmpty && sorted(got) == sorted(expStamped))
+    } finally { idf.unpersist(); () }
+  }
+
+  test("full-pipeline link is bit-identical to the brute-force reference") {
     val s = spark
     import s.implicits._
     val b = s.sparkContext.broadcast(d0)
@@ -103,15 +164,12 @@ class WandSpec extends AnyFunSuite {
     val idf = Linker.buildIdf(s, docs).persist()
     val mentions = graft.kg.KgPipeline.detectMentions(s, turns, b).persist()
     try {
-      def hits(wand: Boolean) =
-        Linker.linkTopKAuto(s, mentions.map(_.doc), docs, 5, idf, wand = wand)
-          .collect()
-          .map(h => (h.queryId, h.docId, h.rank,
-            java.lang.Double.doubleToLongBits(h.similarity)))
-          .sortBy(x => (x._1, x._3))
-      val on = hits(wand = true)
-      val off = hits(wand = false)
-      assert(on.nonEmpty && on.sameElements(off))
+      val got = Linker.linkTopKAuto(s, mentions.map(_.doc), docs, 5, idf)
+        .collect().map(bits).toSeq
+      val idfRows = idf.collect().toSeq
+      val exp = reference(stamped(mentions.map(_.doc).collect().toSeq, idfRows),
+        stamped(docs.collect().toSeq, idfRows), 5)
+      assert(got.nonEmpty && sorted(got) == sorted(exp))
     } finally { mentions.unpersist(); idf.unpersist(); docs.unpersist(); () }
   }
 }

@@ -8,11 +8,17 @@ run the SQL in DuckDB, load the query's Spark parquet output, sort columns by
 name + sort rows, compare (floats to ~1e-9). Prints one line per query.
 An oracle entry with no output dir under <voutDir> (a query that failed or
 was not run) counts as bad. Exit status 1 if anything is bad.
+
+DuckDB runs under a fixed memory cap (MEMORY_LIMIT) rather than its default
+of 80% of host RAM: an oracle that outgrows the cap reports
+ORACLE_SQL_ERROR and the remaining entries still run.
 """
 import json, sys, glob, os
 import duckdb
 import pandas as pd
 import numpy as np
+
+MEMORY_LIMIT = "2GB"
 
 def norm(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)
@@ -21,7 +27,7 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
 
 def main(sf_dir: str, vout: str) -> int:
     oracle = json.load(open(os.path.join(vout, "oracle_sql.json")))
-    con = duckdb.connect()
+    con = duckdb.connect(config={"memory_limit": MEMORY_LIMIT})
     for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
         name = os.path.basename(p)[:-len(".parquet")]
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
