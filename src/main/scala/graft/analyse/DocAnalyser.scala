@@ -55,20 +55,21 @@ object DocAnalyser {
       new Array[Double](texts.length), town, village, road, roadNum, roadNumValue)
   }
 
-  /** IDF-table key: RoadNum uses the composite `"<roadText>-<num>"`
-    * (`generateIDFCacheEntryKey` `SimilarityComputer.java:180-187`). */
+  /** IDF-table key of one term of type `t`: its text, except RoadNum's
+    * composite `"<roadText>-<num>"` (`generateIDFCacheEntryKey`
+    * `SimilarityComputer.java:180-187`). The one key rule of the idf table
+    * (`Linker.buildIdf`) and of every idf stamp. */
+  def termKey(t: Char, text: String, road: String): String =
+    if (t == 'N')
+      (if (road == null) "" else road) + "-" + Segmenter.translateRoadNum(text)
+    else text
+
   def idfKey(t: TermRow): String =
-    if (t.t == "N") {
-      val num = Segmenter.translateRoadNum(t.text)
-      (if (t.ref == null) "" else t.ref) + "-" + num
-    } else t.text
+    termKey(if (t.t == "N") 'N' else ' ', t.text, t.ref)
 
   /** Positional variant over the flat DocVec layout. */
   def idfKeyAt(doc: DocVec, i: Int): String =
-    if (doc.termType(i) == 'N') {
-      val num = Segmenter.translateRoadNum(doc.texts(i))
-      (if (doc.road == null) "" else doc.road) + "-" + num
-    } else doc.texts(i)
+    termKey(doc.termType(i), doc.texts(i), doc.road)
 
   /** Return a copy with idf stamped per term from the partition IDF map;
     * missing keys get `MissingIdf` (`SimilarityComputer.java:146-154`). */

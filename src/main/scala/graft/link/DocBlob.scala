@@ -1,6 +1,6 @@
 package graft.link
 
-import java.io.{ByteArrayOutputStream, DataOutputStream}
+import java.io.DataOutputStream
 
 import graft.model.DocVec
 
@@ -26,35 +26,10 @@ import graft.model.DocVec
 object DocBlob {
 
   /** Group a partition's docs by partKey and pack into blobs of at most
-    * `maxPerBlob` docs. Emits (partKey, blobBytes). */
+    * `maxPerBlob` docs (`Cells.pack`'s framing). Emits (partKey, blobBytes). */
   def packGroups(it: Iterator[DocVec],
-      maxPerBlob: Int): Iterator[(String, Array[Byte])] = {
-    val open = new scala.collection.mutable.HashMap[String, (ByteArrayOutputStream, DataOutputStream, Array[Int])]()
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Byte])]
-    def flush(pk: String): Unit = {
-      open.remove(pk).foreach { case (bas, dos, cnt) =>
-        dos.flush()
-        val body = bas.toByteArray
-        val full = new ByteArrayOutputStream(body.length + 4)
-        val h = new DataOutputStream(full)
-        h.writeInt(cnt(0))
-        h.write(body)
-        h.flush()
-        out += ((pk, full.toByteArray))
-      }
-    }
-    it.foreach { d =>
-      val (_, dos, cnt) = open.getOrElseUpdate(d.partKey, {
-        val b = new ByteArrayOutputStream(16 * 1024)
-        (b, new DataOutputStream(b), Array(0))
-      })
-      writeDoc(dos, d)
-      cnt(0) += 1
-      if (cnt(0) >= maxPerBlob) flush(d.partKey)
-    }
-    open.keys.toSeq.foreach(flush)
-    out.iterator
-  }
+      maxPerBlob: Int): Iterator[(String, Array[Byte])] =
+    Cells.pack(it, maxPerBlob, 16 * 1024)(_.partKey)(writeDoc)
 
   private def writeStr(dos: DataOutputStream, s: String): Unit = {
     if (s == null) dos.writeShort(0xffff)
@@ -131,35 +106,12 @@ object DocBlob {
 object IdfBlob {
 
   def packGroups(it: Iterator[graft.model.IdfRow],
-      maxPerBlob: Int = 8192): Iterator[(String, Array[Byte])] = {
-    val open = new scala.collection.mutable.HashMap[String, (ByteArrayOutputStream, DataOutputStream, Array[Int])]()
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Byte])]
-    def flush(pk: String): Unit = {
-      open.remove(pk).foreach { case (bas, dos, cnt) =>
-        dos.flush()
-        val body = bas.toByteArray
-        val full = new ByteArrayOutputStream(body.length + 4)
-        val h = new DataOutputStream(full)
-        h.writeInt(cnt(0))
-        h.write(body)
-        h.flush()
-        out += ((pk, full.toByteArray))
-      }
-    }
-    it.foreach { r =>
-      val (_, dos, cnt) = open.getOrElseUpdate(r.partKey, {
-        val b = new ByteArrayOutputStream(8 * 1024)
-        (b, new DataOutputStream(b), Array(0))
-      })
+      maxPerBlob: Int = 8192): Iterator[(String, Array[Byte])] =
+    Cells.pack(it, maxPerBlob, 8 * 1024)(_.partKey) { (dos, r) =>
       dos.writeShort(r.termKey.length)
       dos.writeChars(r.termKey)
       dos.writeDouble(r.idf)
-      cnt(0) += 1
-      if (cnt(0) >= maxPerBlob) flush(r.partKey)
     }
-    open.keys.toSeq.foreach(flush)
-    out.iterator
-  }
 
   def unpackInto(blob: Array[Byte],
       m: java.util.HashMap[String, java.lang.Double]): Unit = {

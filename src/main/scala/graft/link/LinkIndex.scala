@@ -1,6 +1,6 @@
 package graft.link
 
-import org.apache.spark.HashPartitioner
+import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
@@ -13,14 +13,16 @@ import graft.model.{DocVec, IdfRow, LinkHit}
   * `linkTopKAuto` re-plans per call: it counts both sides, packs the doc
   * blobs, and shuffles them into scoring cells. In a stream that repeats the
   * full static-corpus pass EVERY micro-batch — at 100 TB the stream would
-  * re-shuffle 100 TB per trigger. This index does that work ONCE:
+  * re-shuffle 100 TB per trigger. This index is `linkTopK`'s cells with
+  * qBuckets = 1, persisted — the same `Cells` layout — and does that work
+  * ONCE:
   *
-  *  - doc-bucket count per district is a pure function of the STATIC side
-  *    (`db = ⌈d / maxDocsPerCell⌉`, the same task-memory valve the batch
+  *  - a district's knobs are `CellKnobs(1, db)` with db a pure function of
+  *    the STATIC side (`Cells.valve`, the same task-memory valve the batch
   *    planner applies), so cell membership never depends on the batch;
   *  - doc blobs and the district idf blobs are packed and hash-partitioned
-  *    by cell key `(partKey, dbk)` once, then persisted partitioner-aware —
-  *    idf cells SEPARATELY from doc cells;
+  *    by cell key once, then persisted partitioner-aware — idf cells
+  *    SEPARATELY from doc cells;
   *  - each micro-batch replicates its (tiny) QUERY side ×db and cogroups
   *    against the persisted cells **with the index's own partitioner** — a
   *    narrow dependency on the static side: only the queries shuffle, and
@@ -45,7 +47,8 @@ import graft.model.{DocVec, IdfRow, LinkHit}
   * cross-query reuse the streaming path needs. Scoring reuses the batch
   * cells' `Linker.scoreCell` (in-cell idf stamping, one `LinkKernel` feed,
   * quantized TopK), so indexed output is bit-identical to `linkTopKAuto`
-  * (LinkIndexSpec).
+  * (LinkIndexSpec). Queries of a district the index does not hold are
+  * dropped before the shuffle: they have no candidates.
   *
   * Query buckets are fixed at g=1: micro-batch query sets are small, so
   * per-cell pair work `q·maxDocsPerCell` stays bounded by the batch size and
@@ -53,16 +56,19 @@ import graft.model.{DocVec, IdfRow, LinkHit}
   * that assumption belongs on the batch path.
   */
 final class LinkIndex private (
-    val dbByPk: Map[String, Int],
+    knobs: Map[String, Linker.CellKnobs],
     val docCountByPk: Map[String, Long],
     val maxDocsPerCell: Int,
-    private val docCells: RDD[((String, Int), (Int, Array[Byte]))],
-    private val idfCells: RDD[((String, Int), (Int, Array[Byte]))],
+    private val docCells: RDD[(Cells.Key, Cells.Blob)],
+    private val idfCells: RDD[(Cells.Key, Cells.Blob)],
     // Every RDD this generation chain has persisted — the cells themselves
     // plus any parents contributed by earlier generations. `appended` builds
     // a (never-persisted) union RDD, so unpersisting `docCells` alone would
     // free NOTHING for a derived generation; unpersist() walks this list.
     private val owned: Seq[RDD[_]]) extends Serializable {
+
+  /** Doc buckets per district. */
+  val dbByPk: Map[String, Int] = knobs.map { case (pk, k) => pk -> k.dBuckets }
 
   private def partitioner = docCells.partitioner.get
 
@@ -74,9 +80,7 @@ final class LinkIndex private (
     * compaction (full re-build for just those districts). */
   def compactionDue: Set[String] =
     docCountByPk.iterator.collect {
-      case (pk, d)
-          if (d + maxDocsPerCell - 1) / maxDocsPerCell > dbByPk(pk) =>
-        pk
+      case (pk, d) if Cells.valve(d, maxDocsPerCell) > dbByPk(pk) => pk
     }.toSet
 
   /** Link one (micro-)batch of queries against the indexed corpus. Only the
@@ -86,25 +90,21 @@ final class LinkIndex private (
   def link(spark: SparkSession, queries: Dataset[DocVec],
       topN: Int): Dataset[LinkHit] = {
     import spark.implicits._
-    val bdb = spark.sparkContext.broadcast(dbByPk)
-    val qPairs: RDD[((String, Int), DocVec)] = queries.rdd.flatMap { q =>
-      (0 until bdb.value.getOrElse(q.partKey, 0))
-        .map(dbk => ((q.partKey, dbk), q))
-    }
+    val bknobs = spark.sparkContext.broadcast(knobs)
+    val qCells = queries.rdd.mapPartitions(it => Cells.queryCells(
+      it.filter(q => bknobs.value.contains(q.partKey)), bknobs.value))
     // Partitioner-aware union of the doc and idf cells: both sides carry
     // the SAME partitioner, so the union is narrow and so is the cogroup's
     // static leg.
     val cells = docCells.union(idfCells)
     assert(cells.partitioner.contains(partitioner),
       "cell union lost its partitioner — static side would re-shuffle")
-    val partial: RDD[LinkHit] = cells.cogroup(qPairs, partitioner)
+    val partial: RDD[LinkHit] = cells.cogroup(qCells, partitioner)
       .flatMap { case (_, (cellIt, qIt)) =>
         if (qIt.isEmpty) Iterator.empty
         else Linker.scoreCell(cellIt.iterator, qIt.iterator, topN)
       }
-    val hits = spark.createDataset(partial)
-    if (!dbByPk.valuesIterator.exists(_ > 1)) hits
-    else Linker.mergeTopK(hits, topN)
+    Cells.topK(spark.createDataset(partial), knobs, topN)
   }
 
   /** The pre-collapse call shape of [[link]], kept only because the frozen
@@ -126,41 +126,26 @@ final class LinkIndex private (
     * Pair with [[withIdf]] for the recomputed table; check
     * [[compactionDue]] periodically. The returned index SHARES this index's
     * persisted cells — unpersist only the final generation. */
-  def appended(spark: SparkSession, delta: Dataset[DocVec],
-      blobSize: Int = 256): LinkIndex = {
-    val deltaCounts = delta.rdd.map(d => (d.partKey, 1L))
-      .reduceByKey(_ + _).collect()
-    val mdc = maxDocsPerCell
-    val newDb = dbByPk ++ deltaCounts.iterator.collect {
-      case (pk, d) if !dbByPk.contains(pk) =>
-        pk -> math.max(1L, (d + mdc - 1) / mdc).toInt
-    }
+  def appended(spark: SparkSession, delta: Dataset[DocVec]): LinkIndex = {
+    val deltaCounts = LinkIndex.docCounts(delta)
+    val newKnobs = knobs ++
+      LinkIndex.knobsFor(deltaCounts -- knobs.keys, maxDocsPerCell)
     val newCounts = docCountByPk ++ deltaCounts.iterator.map { case (pk, d) =>
       pk -> (docCountByPk.getOrElse(pk, 0L) + d)
     }
-    val bdb = spark.sparkContext.broadcast(newDb)
-    val deltaCells = delta.rdd.mapPartitions { it =>
-      var blobIdx = 0
-      DocBlob.packGroups(it, blobSize).map {
-        case (pk, bytes) =>
-          blobIdx += 1
-          ((pk, blobIdx % bdb.value.getOrElse(pk, 1)), (0, bytes))
-      }
-    }.partitionBy(partitioner).persist(StorageLevel.MEMORY_AND_DISK)
-    deltaCells.count()
-    new LinkIndex(newDb, newCounts, mdc, docCells.union(deltaCells),
-      idfCells, owned :+ deltaCells)
+    val deltaCells = LinkIndex.persisted(spark, delta, newKnobs,
+      partitioner)(Cells.docCells)
+    new LinkIndex(newKnobs, newCounts, maxDocsPerCell,
+      docCells.union(deltaCells), idfCells, owned :+ deltaCells)
   }
 
   /** Swap the idf cells for a recomputed table (after [[appended]] deltas
     * shift document frequencies): re-ships only the per-district DISTINCT
     * -term dictionaries — the doc payload, which dwarfs them, stays put. */
   def withIdf(spark: SparkSession, idf: Dataset[IdfRow]): LinkIndex = {
-    val bdb = spark.sparkContext.broadcast(dbByPk)
-    val cells = LinkIndex.packIdfCells(idf, bdb)
-      .partitionBy(partitioner).persist(StorageLevel.MEMORY_AND_DISK)
-    cells.count()
-    new LinkIndex(dbByPk, docCountByPk, maxDocsPerCell, docCells,
+    val cells = LinkIndex.persisted(spark, idf, knobs, partitioner)(
+      Cells.idfCells)
+    new LinkIndex(knobs, docCountByPk, maxDocsPerCell, docCells,
       cells, owned :+ cells)
   }
 
@@ -176,46 +161,46 @@ final class LinkIndex private (
 
 object LinkIndex {
 
-  private[link] def packIdfCells(idf: Dataset[IdfRow],
-      bdb: org.apache.spark.broadcast.Broadcast[Map[String, Int]])
-      : RDD[((String, Int), (Int, Array[Byte]))] =
-    idf.rdd.mapPartitions(it => IdfBlob.packGroups(it))
-      .flatMap { case (pk, bytes) =>
-        (0 until bdb.value.getOrElse(pk, 1)).map(dbk => ((pk, dbk), (1, bytes)))
-      }
+  private def docCounts(docs: Dataset[DocVec]): Map[String, Long] =
+    Cells.countByPk(docs).map { case (pk, n) => pk -> n(0) }
+
+  /** `CellKnobs(1, db)` per district, db from the memory valve. */
+  private def knobsFor(counts: Map[String, Long],
+      maxDocsPerCell: Int): Map[String, Linker.CellKnobs] =
+    counts.map { case (pk, d) =>
+      pk -> Linker.CellKnobs(1, Cells.valve(d, maxDocsPerCell))
+    }
+
+  /** One cell family of `rows`, partitioned, persisted and EAGERLY
+    * materialized. */
+  private def persisted[T](spark: SparkSession, rows: Dataset[T],
+      knobs: Map[String, Linker.CellKnobs], partitioner: Partitioner)(
+      cells: (Iterator[T], Map[String, Linker.CellKnobs]) => Iterator[(Cells.Key, Cells.Blob)])
+      : RDD[(Cells.Key, Cells.Blob)] = {
+    val bknobs = spark.sparkContext.broadcast(knobs)
+    val p = rows.rdd.mapPartitions(cells(_, bknobs.value))
+      .partitionBy(partitioner).persist(StorageLevel.MEMORY_AND_DISK)
+    p.count()
+    p
+  }
 
   /** Build (and EAGERLY materialize) the index: one pass over the static
     * docs to count, one pack + partition shuffle per cell family (docs,
-    * idf), persisted. The doc blobs carry no idfs; the district idf tables
-    * ride as tag-1 blobs into every cell of their district — the same wire
-    * format as the batch path. */
+    * idf), persisted — the one-time cost the stream amortizes. The doc
+    * blobs carry no idfs; the district idf tables ride as tag-1 blobs into
+    * every cell of their district — the same `Cells` layout as the batch
+    * path. */
   def build(spark: SparkSession, docs: Dataset[DocVec], idf: Dataset[IdfRow],
-      maxDocsPerCell: Int = 1 << 16, blobSize: Int = 256): LinkIndex = {
-    val counts = docs.rdd.map(d => (d.partKey, 1L)).reduceByKey(_ + _)
-      .collect()
-    val docCountByPk: Map[String, Long] = counts.toMap
-    val dbByPk: Map[String, Int] = counts.iterator.map { case (pk, d) =>
-      pk -> math.max(1L, (d + maxDocsPerCell - 1) / maxDocsPerCell).toInt
-    }.toMap
-    val bdb = spark.sparkContext.broadcast(dbByPk)
-    val totalCells = dbByPk.valuesIterator.map(_.toLong).sum
-    val numParts = math.max(spark.sparkContext.defaultParallelism.toLong,
-      math.min(totalCells, 4L * spark.sparkContext.defaultParallelism))
-      .toInt
-    val partitioner = new HashPartitioner(math.max(1, numParts))
-    val docCells = docs.rdd.mapPartitions { it =>
-      var blobIdx = 0
-      DocBlob.packGroups(it, blobSize).map {
-        case (pk, bytes) =>
-          blobIdx += 1
-          ((pk, blobIdx % bdb.value.getOrElse(pk, 1)), (0, bytes))
-      }
-    }.partitionBy(partitioner).persist(StorageLevel.MEMORY_AND_DISK)
-    docCells.count() // materialize NOW: the one-time cost the stream amortizes
-    val idfCells = packIdfCells(idf, bdb)
-      .partitionBy(partitioner).persist(StorageLevel.MEMORY_AND_DISK)
-    idfCells.count()
-    new LinkIndex(dbByPk, docCountByPk, maxDocsPerCell, docCells, idfCells,
+      maxDocsPerCell: Int = Cells.MaxDocsPerCell): LinkIndex = {
+    val docCountByPk = docCounts(docs)
+    val knobs = knobsFor(docCountByPk, maxDocsPerCell)
+    val totalCells = knobs.valuesIterator.map(_.dBuckets.toLong).sum
+    val para = spark.sparkContext.defaultParallelism.toLong
+    val partitioner = new HashPartitioner(
+      math.max(1, math.max(para, math.min(totalCells, 4L * para)).toInt))
+    val docCells = persisted(spark, docs, knobs, partitioner)(Cells.docCells)
+    val idfCells = persisted(spark, idf, knobs, partitioner)(Cells.idfCells)
+    new LinkIndex(knobs, docCountByPk, maxDocsPerCell, docCells, idfCells,
       Seq(docCells, idfCells))
   }
 

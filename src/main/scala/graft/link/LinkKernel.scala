@@ -6,7 +6,7 @@ import Linker.TopK
 
 /** The link's one scoring kernel: one district's queries, their top-k heaps
   * and their WAND limits, fed doc sides one array at a time. The shuffle
-  * cells and `LinkIndex` feed a whole cell once (`Linker.scoreCellBlocked`);
+  * cells and `LinkIndex` feed a whole cell once (`Linker.scoreCell`);
   * the broadcast route feeds each streamed batch of a district's docs, and
   * heaps and limits carry over from one array to the next. `TopK` is
   * order-independent and the skip is admissible, so the hits do not depend

@@ -272,10 +272,8 @@ object Linker {
     // Codegen for the common case (round 6, guide §4): every non-'N' term's
     // idf key IS its text — only the RoadNum composite needs the Scala
     // `translateRoadNum` UDF, and 'N' terms are a handful per doc. The
-    // branch is the same rule as `DocAnalyser.idfKey`, value-identical.
-    val f = udf((text: String, ref: String) =>
-      (if (ref == null) "" else ref) + "-" +
-        graft.analyse.Segmenter.translateRoadNum(text))
+    // branch is `DocAnalyser.termKey`, value-identical.
+    val f = udf((text: String, ref: String) => DocAnalyser.termKey('N', text, ref))
     when(col("t") === "N", f(col("text"), col("road")))
       .otherwise(col("text"))
   }
@@ -300,8 +298,8 @@ object Linker {
   final case class CellKnobs(qBuckets: Int, dBuckets: Int)
 
   /** Top-k linking: blocked cross join of queries × candidate docs within
-    * each partKey, with the DOC side shipped as packed binary blocks
-    * (`DocBlob`) and the QUERY side split into `qBuckets` by queryId hash.
+    * each partKey, laid out by `Cells`: the DOC side ships as packed binary
+    * blocks (`DocBlob`), the QUERY side splits into qBuckets by queryId.
     * `knobsByPk` is the only shape input: a district without an entry is
     * one cell, `CellKnobs(1, 1)`.
     * Ties pinned (desc similarity, asc docId) — documented divergence from
@@ -313,14 +311,14 @@ object Linker {
     *  - partKey is the district key: power-law skewed, low cardinality. A
     *    plain partKey cogroup caps parallelism at #districts and the hot
     *    district serializes the O(|q|·|d|) pair scoring.
-    *  - queries are NOT replicated: each goes to one (partKey, qBucket)
-    *    cell and sees the full candidate set there → a single pass emits
-    *    final top-k, no merge step.
-    *  - docs ARE replicated ×qBuckets, but as ~`blobSize`-doc binary blocks:
-    *    per-row encoder deserialization (nested arrays, per-term Strings)
-    *    was ~half the stage CPU; blocks amortize it ~256× and unpack
-    *    directly into the kernel's compiled Side layout.
-    *  - `dBuckets` optionally splits the doc side too (cells then hold
+    *  - with db = 1 queries are NOT replicated: each goes to one
+    *    (partKey, qBucket) cell and sees the full candidate set there → a
+    *    single pass emits final top-k, no merge step.
+    *  - docs ARE replicated ×qBuckets, but as `Cells.BlobDocs`-doc binary
+    *    blocks: per-row encoder deserialization (nested arrays, per-term
+    *    Strings) was ~half the stage CPU; blocks amortize it ~256× and
+    *    unpack directly into the kernel's compiled Side layout.
+    *  - dBuckets optionally splits the doc side too (cells then hold
     *    1/dBuckets of a district's docs and partial top-k heaps merge in a
     *    tiny final reduce) — the memory valve for districts whose full doc
     *    set would not fit a task; results are bit-identical for any knobs.
@@ -335,19 +333,9 @@ object Linker {
     */
   def linkTopK(spark: SparkSession, queries: Dataset[DocVec],
       docs: Dataset[DocVec], topN: Int, idf: Dataset[IdfRow],
-      blobSize: Int = 256,
       knobsByPk: Map[String, CellKnobs] = Map.empty): Dataset[LinkHit] = {
     import spark.implicits._
     val bknobs = spark.sparkContext.broadcast(knobsByPk)
-    def gOf(knobs: Map[String, CellKnobs], pk: String): Int =
-      knobs.get(pk).fold(1)(k => math.max(1, k.qBuckets))
-    def dbOf(knobs: Map[String, CellKnobs], pk: String): Int =
-      knobs.get(pk).fold(1)(k => math.max(1, k.dBuckets))
-    val anyDb = knobsByPk.valuesIterator.exists(_.dBuckets > 1)
-
-    // db(pk)==1: each query visits exactly one cell. db(pk)>1: queries
-    // replicate across the doc buckets (partial top-k merged below).
-    //
     // The query side may arrive CLUSTERED by partKey (one partition per
     // district after any partKey-keyed stage), so without a rebalance the
     // ×dBuckets replication flatMap and its shuffle write for a hot district
@@ -359,51 +347,27 @@ object Linker {
     // stage embarrassingly parallel. Bit-identical results: the cell cogroup
     // re-keys every row anyway, and per-query top-k is order-independent.
     val qSpread =
-      if (!anyDb) queries // no ×db replication ⇒ nothing to spread
+      if (!Cells.splitsDocs(knobsByPk)) queries // no ×db replication
       else queries.repartition(
         math.max(spark.sparkContext.defaultParallelism,
           spark.sessionState.conf.numShufflePartitions),
         org.apache.spark.sql.functions.col("docId"))
-    val qKeyed = qSpread
-      .flatMap(q => (0 until dbOf(bknobs.value, q.partKey)).map(dbk => (dbk, q)))
-      .groupByKey { case (dbk, q) =>
-        (q.partKey,
-          java.lang.Long.remainderUnsigned(q.docId, gOf(bknobs.value, q.partKey)).toInt,
-          dbk)
-      }
-    // Pack per input partition, assign doc-buckets round-robin per blob,
-    // replicate each blob to every query bucket of its partKey. Tag 0 =
-    // doc blob, tag 1 = idf blob (replicated to every cell of its partKey).
-    val blobs = docs.mapPartitions { it =>
-      var blobIdx = 0
-      DocBlob.packGroups(it, blobSize).map { case (pk, bytes) =>
-        blobIdx += 1
-        (pk, blobIdx % dbOf(bknobs.value, pk), bytes)
-      }
-    }
-    val dTagged = blobs.flatMap { case (pk, dbk, bytes) =>
-      (0 until gOf(bknobs.value, pk)).map(qb => (pk, qb, dbk, 0, bytes))
-    }
-    val idfTagged = idf.mapPartitions(it => IdfBlob.packGroups(it))
-      .flatMap { case (pk, bytes) =>
-        val knobs = bknobs.value
-        for { qb <- 0 until gOf(knobs, pk); dbk <- 0 until dbOf(knobs, pk) }
-          yield (pk, qb, dbk, 1, bytes)
-      }
-    val dKeyed = dTagged.union(idfTagged).groupByKey { case (pk, qb, dbk, _, _) =>
-      (pk, qb, if (dbOf(bknobs.value, pk) == 1) 0 else dbk)
-    }
-
+    val qKeyed = qSpread.mapPartitions(Cells.queryCells(_, bknobs.value))
+      .groupByKey(_._1)
+    val dKeyed = docs.mapPartitions(Cells.docCells(_, bknobs.value))
+      .union(idf.mapPartitions(Cells.idfCells(_, bknobs.value)))
+      .groupByKey(_._1)
     val partial = qKeyed.cogroup(dKeyed) { (_, qIt, dIt) =>
-      scoreCell(dIt.map(d => (d._4, d._5)), qIt.map(_._2), topN)
+      scoreCell(dIt.map(_._2), qIt.map(_._2), topN)
     }
-    if (!anyDb) partial else mergeTopK(partial, topN)
+    Cells.topK(partial, knobsByPk, topN)
   }
 
   /** Score one link cell: unpack its tag-0 doc blobs and tag-1 idf blobs,
-    * stamp both sides from the cell's idfs, and run the blocked kernel. The
-    * batch cells ([[linkTopK]]) and the persisted streaming cells
-    * (`LinkIndex.link`) share it, so their scores are bit-identical. */
+    * stamp both sides from the cell's idfs, and feed the whole cell to one
+    * [[LinkKernel]]. The batch cells ([[linkTopK]]) and the persisted
+    * streaming cells (`LinkIndex.link`) share it, so their scores are
+    * bit-identical. */
   private[link] def scoreCell(blobs: Iterator[(Int, Array[Byte])],
       queries: Iterator[DocVec], topN: Int): Iterator[LinkHit] = {
     val buf = scala.collection.mutable.ArrayBuffer.empty[Scoring.Side]
@@ -418,8 +382,9 @@ object Linker {
       // doc blobs in the cell's iterator.
       var i = 0
       while (i < buf.length) { Scoring.stampSideIdfs(buf(i), idfMap); i += 1 }
-      scoreCellBlocked(queries.map(DocAnalyser.stampIdf(_, idfMap)),
-        buf.toArray, topN)
+      val kernel = new LinkKernel(queries.map(DocAnalyser.stampIdf(_, idfMap)), topN)
+      kernel.feed(buf.toArray)
+      kernel.hits
     }
   }
 
@@ -437,31 +402,11 @@ object Linker {
 
   /** Both sides' per-partKey (query, doc) counts in ONE job (fixed per-job
     * overhead is the measured scaling bound on this box — don't pay it
-    * twice). Driver-sized result: one row per district. */
+    * twice; `Cells.countByPk`). Driver-sized result: one row per district. */
   def countStats(spark: SparkSession, queries: Dataset[DocVec],
-      docs: Dataset[DocVec]): Array[(String, Long, Long)] = {
-    import spark.implicits._
-    // Per-partition local maps merged on the driver (round 6): district
-    // cardinality is bounded (~10³ nationally), so the partial maps are
-    // tiny — no exchange at all, one narrow stage per side instead of a
-    // map + shuffle + reduce (the OrderedScan per-partition-totals idiom).
-    def partials(ds: Dataset[DocVec], qSide: Boolean) = ds.mapPartitions { it =>
-      val m = new java.util.HashMap[String, Long]()
-      it.foreach(d => m.merge(d.partKey, 1L, (a, b) => a + b))
-      import scala.jdk.CollectionConverters._
-      m.entrySet().iterator().asScala.map(e =>
-        if (qSide) (e.getKey, e.getValue.longValue(), 0L)
-        else (e.getKey, 0L, e.getValue.longValue()))
-    }
-    val merged = new scala.collection.mutable.HashMap[String, (Long, Long)]()
-    partials(queries, qSide = true).union(partials(docs, qSide = false))
-      .collect()
-      .foreach { case (pk, q, d) =>
-        val (q0, d0) = merged.getOrElse(pk, (0L, 0L))
-        merged(pk) = (q0 + q, d0 + d)
-      }
-    merged.iterator.map { case (pk, (q, d)) => (pk, q, d) }.toArray
-  }
+      docs: Dataset[DocVec]): Array[(String, Long, Long)] =
+    Cells.countByPk(queries, docs).iterator
+      .map { case (pk, n) => (pk, n(0), n(1)) }.toArray
 
   /** The auto-router's decision, exposed for inspection (the skew-stress
     * bench reports routes and cell counts from the SAME planner the link
@@ -479,9 +424,9 @@ object Linker {
   /** Pure route planning from counted stats — extracted from `linkTopKAuto`
     * so the decision is inspectable; the link path calls exactly this. */
   def planRoutes(stats: Array[(String, Long, Long)], parallelism: Int,
-      targetPairsPerCell: Long = 1L << 22, maxDocsPerCell: Int = 1 << 16,
-      maxQBuckets: Int = 256, bcastQMax: Long = 512,
-      bcastTotalMax: Long = 1L << 17): RoutePlan = {
+      targetPairsPerCell: Long = 1L << 22,
+      maxDocsPerCell: Int = Cells.MaxDocsPerCell, maxQBuckets: Int = 256,
+      bcastQMax: Long = 512, bcastTotalMax: Long = 1L << 17): RoutePlan = {
     val qCounts = stats.iterator.filter(_._2 > 0).map(s => s._1 -> s._2).toMap
     val dCounts = stats.iterator.map(s => s._1 -> s._3).toMap
 
@@ -521,7 +466,7 @@ object Linker {
         val g = math.max(1L, math.min(math.min(q, maxQBuckets.toLong),
           math.round(math.sqrt(cells.toDouble * q / d)))).toInt
         val dbWork = (cells + g - 1) / g
-        val dbMem = (d + maxDocsPerCell - 1) / maxDocsPerCell
+        val dbMem = Cells.valve(d, maxDocsPerCell)
         val db = math.max(dbWork, dbMem)
         // Round 6: a db>1 split has costs the replicated-bytes minimum
         // (g/db ≈ q/d) does not see — the query side is replicated ×db
@@ -548,35 +493,36 @@ object Linker {
     RoutePlan(qCounts, dCounts, bcastPks, shufflePks, knobs)
   }
 
-  /** Self-tuning linkTopK (the 100×-survival path): derives per-partKey cell
-    * knobs from COUNTED stats instead of a human-set global, then routes
-    * extreme partitions to the broadcast variant. Output is bit-identical to
-    * any manual knob setting (KgPipelineSpec).
-    *
-    * Plan, per partKey with q queries and d candidate docs:
+  /** Self-tuning linkTopK (the 100×-survival path): counts both sides per
+    * district (`countStats`), plans the routes from the counts with the
+    * default thresholds (`planRoutes`) and links along that plan
+    * ([[linkPlanned]]). Output is bit-identical to any manual knob setting
+    * (KgPipelineSpec). */
+  def linkTopKAuto(spark: SparkSession, queries: Dataset[DocVec],
+      docs: Dataset[DocVec], topN: Int, idf: Dataset[IdfRow]): Dataset[LinkHit] =
+    linkPlanned(spark, planRoutes(countStats(spark, queries, docs),
+      spark.sparkContext.defaultParallelism), queries, docs, topN, idf)
+
+  /** Link along a route plan. Per partKey with q queries and d candidate
+    * docs (`planRoutes`):
     *  - docs in districts with NO queries never enter the shuffle (broadcast
     *    membership filter) — with a small query batch against a 100 TB
     *    corpus this prunes the dominant cost;
     *  - hot-but-narrow partitions (q ≤ bcastQMax, d ≥ maxDocsPerCell) go to
     *    `linkTopKBroadcast`: their docs stream with NO shuffle at all;
-    *  - the rest 2-D block: cells C = ⌈q·d / targetPairsPerCell⌉ bounds the
-    *    per-task pair work; qBuckets ∝ √(C·q/d) and dBuckets = ⌈C/g⌉ split
-    *    replication evenly (replicated bytes ≈ db·|q| + g·|d| is minimized
-    *    at g/db ≈ q/d), with dBuckets also forced up until a cell's doc set
-    *    fits the `maxDocsPerCell` task-memory valve. The old failure modes —
-    *    docs replicated ×64 regardless of query count, and one whole hot
-    *    district's blobs buffered in a single task — cannot occur by
+    *  - the rest 2-D block ([[linkTopK]] with the plan's knobs): cells
+    *    C = ⌈q·d / targetPairsPerCell⌉ bound the per-task pair work;
+    *    qBuckets ∝ √(C·q/d) and dBuckets = ⌈C/g⌉ split replication evenly
+    *    (replicated bytes ≈ db·|q| + g·|d| is minimized at g/db ≈ q/d), with
+    *    dBuckets also forced up until a cell's doc set fits the
+    *    `maxDocsPerCell` task-memory valve (`Cells.valve`). The old failure
+    *    modes — docs replicated ×64 regardless of query count, and one whole
+    *    hot district's blobs buffered in a single task — cannot occur by
     *    construction. */
-  def linkTopKAuto(spark: SparkSession, queries: Dataset[DocVec],
-      docs: Dataset[DocVec], topN: Int, idf: Dataset[IdfRow],
-      targetPairsPerCell: Long = 1L << 22, maxDocsPerCell: Int = 1 << 16,
-      maxQBuckets: Int = 256, bcastQMax: Long = 512,
-      bcastTotalMax: Long = 1L << 17): Dataset[LinkHit] = {
-    val plan = planRoutes(countStats(spark, queries, docs),
-      spark.sparkContext.defaultParallelism, targetPairsPerCell,
-      maxDocsPerCell, maxQBuckets, bcastQMax, bcastTotalMax)
+  def linkPlanned(spark: SparkSession, plan: RoutePlan,
+      queries: Dataset[DocVec], docs: Dataset[DocVec], topN: Int,
+      idf: Dataset[IdfRow]): Dataset[LinkHit] = {
     val bcastPks = plan.bcastPks
-
     val bShuffle = spark.sparkContext.broadcast(plan.shufflePks)
     val restHits = linkTopK(spark,
       queries.filter(q => bShuffle.value.contains(q.partKey)),
@@ -710,18 +656,6 @@ object Linker {
     * Callers (Bench.skewStress) clear it right before the timed window. */
   val ScoringStageIds: java.util.Set[Integer] =
     java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
-
-  /** Score one cell's queries against its whole (idf-stamped) doc side in a
-    * single [[LinkKernel]] feed. `wandSkipped`, when given, counts the
-    * candidates the WAND bound skipped. */
-  private[graft] def scoreCellBlocked(qs: Iterator[DocVec],
-      dsides: Array[Scoring.Side], topN: Int,
-      wandSkipped: java.util.concurrent.atomic.LongAdder = null)
-      : Iterator[LinkHit] = {
-    val kernel = new LinkKernel(qs, topN, wandSkipped)
-    kernel.feed(dsides)
-    kernel.hits
-  }
 
   /** Town/village discovery (canonicalization of new surface forms —
     * `AddressInterpreter.extractTownVillage` + `acceptTown` SURVEY.md §2

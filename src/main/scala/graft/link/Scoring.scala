@@ -1,6 +1,6 @@
 package graft.link
 
-import graft.model.{DocVec, TermRow}
+import graft.model.DocVec
 
 /** The custom weighted TF-IDF cosine kernel — exact port of
   * `SimilarityComputer.computeDocSimilarity` (`SimilarityComputer.java:456-550`)
@@ -25,12 +25,6 @@ object Scoring {
 
   /** Type-overridden idf (`similarity/Term.getIdf` `Term.java:52-67`):
     * Province/City/District→0, Street→1, others as stored. */
-  def effIdf(t: TermRow): Double = t.t match {
-    case "1" | "2" | "3" => 0.0
-    case "4"             => 1.0
-    case _               => t.idf
-  }
-
   private def effIdfC(t: Char, idf: Double): Double = t match {
     case '1' | '2' | '3' => 0.0
     case '4'             => 1.0
@@ -268,9 +262,16 @@ object Scoring {
   }
 
   /** Weighted cosine similarity (`computeDocSimilarity` `:456-550`).
-    * Single lookup pass fills q.dIdx; the pre-pass and the accumulation both
-    * read it. Returns 0 when either norm is 0. */
-  def score(q: QuerySide, d: Side): Double = {
+    * Returns 0 when either norm is 0. */
+  def score(q: QuerySide, d: Side): Double = accumulate(q, d, null)
+
+  /** Both passes of `computeDocSimilarity`. A single lookup pass fills
+    * q.dIdx; the pre-pass and the accumulation both read it. When
+    * `matched` is given, it collects one row per resolved query term
+    * (explain); the similarity is the same either way. */
+  private def accumulate(q: QuerySide, d: Side,
+      matched: scala.collection.mutable.Builder[MatchedTermRow, Seq[MatchedTermRow]])
+      : Double = {
     val n = q.n
     // Pass 1: resolve each query term against the doc; coord/density stats.
     var dTextTermMatchCount = 0
@@ -328,6 +329,9 @@ object Scoring {
       val density = if (isX) textTermDensity else 1.0
       val dIdf = if (di >= 0) effIdfC(dt, d.idfs(di)) else q.effIdfs(i)
       val dtfidf = dIdf * dboost * coord * density
+      if (matched != null && di >= 0)
+        matched += MatchedTermRow(d.textAt(di), dt.toString, dboost, dtfidf,
+          if (isX) density else -1.0, if (isX) coord else -1.0)
       sumQQ += qtfidf * qtfidf
       sumQD += qtfidf * dtfidf
       sumDD += dtfidf * dtfidf
@@ -353,12 +357,8 @@ object Scoring {
       m: java.util.HashMap[String, java.lang.Double]): Unit = {
     var i = 0
     while (i < s.n) {
-      val key =
-        if (s.types.charAt(i) == 'N') {
-          val num = graft.analyse.Segmenter.translateRoadNum(s.textAt(i))
-          (if (s.road == null) "" else s.road) + "-" + num
-        } else s.textAt(i)
-      val v = m.get(key)
+      val v = m.get(graft.analyse.DocAnalyser.termKey(s.types.charAt(i),
+        s.textAt(i), s.road))
       s.idfs(i) = if (v == null) graft.analyse.DocAnalyser.MissingIdf
                   else v.doubleValue()
       i += 1
@@ -378,66 +378,8 @@ object Scoring {
     * MatchedTermRow per query term that resolved to a doc term. Cold path:
     * runs only over the FINAL top-k pairs, never inside the link kernel. */
   def scoreExplain(q: QuerySide, d: Side): (Double, Seq[MatchedTermRow]) = {
-    val n = q.n
-    var dTextTermMatchCount = 0
-    var matchStart = -1
-    var matchEnd = -1
-    var i = 0
-    while (i < n) {
-      val qt = q.types.charAt(i)
-      if (qt == 'X') {
-        val xi = d.lookupFirstX(q.hashes(i), q, i)
-        if (xi >= 0) {
-          dTextTermMatchCount += 1
-          if (matchStart == -1) { matchStart = xi; matchEnd = xi }
-          else if (xi > matchEnd) matchEnd = xi
-          else if (xi < matchStart) matchStart = xi
-        }
-      }
-      var di = d.lookupLast(q.hashes(i), q, i)
-      if (di < 0 && qt == 'N') {
-        val qref = q.road
-        if (d.roadNum != null && d.road != null && qref != null &&
-            d.road == qref)
-          di = d.roadNumIdx
-      }
-      q.dIdx(i) = di
-      i += 1
-    }
-    var textTermDensity = 1.0
-    var textTermCoord = 1.0
-    if (q.qTextTermCount > 0)
-      textTermCoord =
-        math.sqrt(dTextTermMatchCount * 1.0 / q.qTextTermCount) * 0.5 + 0.5
-    if (q.qTextTermCount >= 2 && dTextTermMatchCount >= 2)
-      textTermDensity =
-        math.sqrt(dTextTermMatchCount * 1.0 / (matchEnd - matchStart + 1)) * 0.5 + 0.5
-
     val matched = Seq.newBuilder[MatchedTermRow]
-    var sumQD = 0.0; var sumQQ = 0.0; var sumDD = 0.0
-    i = 0
-    while (i < n) {
-      val qboost = boostC(forDoc = false, q, q.types.charAt(i), d, ' ')
-      val qtfidf = q.effIdfs(i) * qboost
-      val di = q.dIdx(i)
-      val dt = if (di >= 0) d.types.charAt(di) else ' '
-      val dboost =
-        if (di < 0) 0.0 else boostC(forDoc = true, q, q.types.charAt(i), d, dt)
-      val isX = dt == 'X'
-      val coord = if (isX) textTermCoord else 1.0
-      val density = if (isX) textTermDensity else 1.0
-      val dIdf = if (di >= 0) effIdfC(dt, d.idfs(di)) else q.effIdfs(i)
-      val dtfidf = dIdf * dboost * coord * density
-      if (di >= 0)
-        matched += MatchedTermRow(d.textAt(di), dt.toString, dboost, dtfidf,
-          if (isX) density else -1.0, if (isX) coord else -1.0)
-      sumQQ += qtfidf * qtfidf
-      sumQD += qtfidf * dtfidf
-      sumDD += dtfidf * dtfidf
-      i += 1
-    }
-    val sim = if (sumDD == 0 || sumQQ == 0) 0.0
-      else sumQD / math.sqrt(sumQQ * sumDD)
+    val sim = accumulate(q, d, matched)
     (sim, matched.result())
   }
 }

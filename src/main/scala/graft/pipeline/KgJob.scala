@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.kg.KgPipeline
-import graft.link.{Dict, Linker}
+import graft.link.Dict
 import graft.model._
 
 /** The checkpointed end-to-end transcript→KG job (north rule shape):
@@ -27,21 +27,5 @@ object KgJob {
     val r = KgPipeline.run(spark, turns.repartition(parallelism, col("conv_id")),
       corpus, dict, topN, runner)
     runner.stage[Triple]("triples")(r.triples)
-  }
-
-  /** On-demand idf-stamped docs stage for explain/stage consumers
-    * (`Linker.explainHits`, the Verify stage materializer). Not part of the
-    * `run` DAG: the link stamps idfs in-cell, so this cogroup only runs when
-    * a consumer asks for the table — and then checkpoints/resumes like any
-    * other stage. */
-  def docsIdfStage(spark: SparkSession, root: String, runId: String)
-      : Dataset[DocVec] = {
-    import spark.implicits._
-    val runner = StageRunner(spark, root, runId)
-    runner.stage[DocVec]("docs_idf") {
-      Linker.attachIdf(spark,
-        spark.read.parquet(s"$root/docs").as[DocVec],
-        spark.read.parquet(s"$root/idf").as[IdfRow])
-    }
   }
 }

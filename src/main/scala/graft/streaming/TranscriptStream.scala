@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.kg.{KgPipeline, MentionDoc}
+import graft.kg.KgPipeline
 import graft.link.Dict
 import graft.model.Turn
 
@@ -18,12 +18,6 @@ import graft.model.Turn
   * this is the engine-native idiom the north rule requires.
   */
 object TranscriptStream {
-
-  /** Stateless mention detection over a streaming Dataset[Turn] — identical
-    * code path to the batch stage, so batch/stream parity is structural. */
-  def mentions(spark: SparkSession, turns: Dataset[Turn],
-      dict: Broadcast[Dict]): Dataset[MentionDoc] =
-    KgPipeline.detectMentions(spark, turns, dict)
 
   /** Watermarked tumbling-window counts of turns per role (10 min windows,
     * 30 min lateness tolerance). */
@@ -55,7 +49,7 @@ object TranscriptStream {
           } else {
             var s = state.getOption.getOrElse(ConvState(0, 0, 0L))
             // Cheap mention signal for the running counter: full detection
-            // happens in the stateless `mentions` stream; here we only need
+            // happens in the stateless mention stream; here we only need
             // per-conv activity stats.
             rows.foreach { t =>
               val hasMention = t.text != null && t.text.length >= 8
@@ -172,7 +166,9 @@ object TranscriptStream {
     import spark.implicits._
     val schema = org.apache.spark.sql.Encoders.product[Turn].schema
     val turns = spark.readStream.schema(schema).parquet(inputDir).as[Turn]
-    mentions(spark, turns, dict).writeStream
+    // Stateless mention detection: the batch stage itself, so batch/stream
+    // parity is structural.
+    KgPipeline.detectMentions(spark, turns, dict).writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)

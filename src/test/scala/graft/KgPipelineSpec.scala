@@ -186,13 +186,13 @@ class KgPipelineSpec extends AnyFunSuite {
     // Use corpus docs themselves as queries (self-link); one cell per
     // district is the base every knob setting must reproduce.
     val pks = docs.collect().map(_.partKey).distinct.sorted
-    def run(qb: Int, db: Int, blob: Int) =
-      key(Linker.linkTopK(s, docs, docs, 5, idf, blobSize = blob,
+    def run(qb: Int, db: Int) =
+      key(Linker.linkTopK(s, docs, docs, 5, idf,
         knobsByPk = pks.map(_ -> Linker.CellKnobs(qb, db)).toMap))
-    val base = run(1, 1, 1000000)
+    val base = run(1, 1)
     assert(base.nonEmpty)
-    assert(run(24, 1, 256) == base)
-    assert(run(7, 3, 16) == base)
+    assert(run(24, 1) == base)
+    assert(run(7, 3) == base)
 
     // Broadcast-query variant (hot-partition escape hatch) agrees too.
     assert(key(Linker.linkTopKBroadcast(s, docs.collect(), docs, 5, idf)) == base)
@@ -201,16 +201,19 @@ class KgPipelineSpec extends AnyFunSuite {
     val mixed = pks.zipWithIndex.map { case (pk, i) =>
       pk -> Linker.CellKnobs(1 + (i % 5), 1 + (i % 3))
     }.toMap
-    assert(key(Linker.linkTopK(s, docs, docs, 5, idf, blobSize = 64,
+    assert(key(Linker.linkTopK(s, docs, docs, 5, idf,
       knobsByPk = mixed)) == base)
 
     // Auto mode (counted stats → knobs + broadcast routing) agrees, with
     // thresholds forced low enough that BOTH the 2-D blocking and the
     // broadcast route actually exercise on this small input.
-    assert(key(Linker.linkTopKAuto(s, docs, docs, 5, idf,
-      targetPairsPerCell = 64, maxDocsPerCell = 32, bcastQMax = 0)) == base)
-    assert(key(Linker.linkTopKAuto(s, docs, docs, 5, idf,
-      targetPairsPerCell = 64, maxDocsPerCell = 32, bcastQMax = 1000000)) == base)
+    def auto(bcastQMax: Long) = key(Linker.linkPlanned(s,
+      Linker.planRoutes(Linker.countStats(s, docs, docs),
+        s.sparkContext.defaultParallelism, targetPairsPerCell = 64,
+        maxDocsPerCell = 32, bcastQMax = bcastQMax),
+      docs, docs, 5, idf))
+    assert(auto(bcastQMax = 0) == base)
+    assert(auto(bcastQMax = 1000000) == base)
   }
 
   test("co-mention adjacency: edge weights count distinct conversations") {

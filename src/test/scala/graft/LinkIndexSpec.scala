@@ -33,7 +33,7 @@ class LinkIndexSpec extends AnyFunSuite {
 
     // Valve forced low so every district splits into multiple doc buckets
     // and the partial-topk merge actually runs.
-    val index = LinkIndex.build(s, docs0, idf, maxDocsPerCell = 8, blobSize = 4)
+    val index = LinkIndex.build(s, docs0, idf, maxDocsPerCell = 8)
     assert(index.dbByPk.valuesIterator.exists(_ > 1))
     assert(hitsKey(index.link(s, docs0, 5).collect()) == base)
     // Second batch against the SAME index: identical again (reuse path).

@@ -86,18 +86,10 @@ class CheckpointSpec extends AnyFunSuite {
 
     assert(resumed == clean, "resumed run diverged from clean run")
 
-    // docs_idf is OUT of the run DAG (fused link stamps idfs in-cell) but
-    // still available on demand for explain/stage consumers — and its rows
-    // must carry the idfs the fused path stamps (non-zero for real terms).
-    assert(!runner.isComplete("docs_idf"), "run() must not materialize docs_idf")
-    val docsIdf = KgJob.docsIdfStage(s, root2, "run-b2").collect()
-    assert(docsIdf.nonEmpty && docsIdf.exists(_.idfs.exists(_ > 0)))
-    assert(StageRunner(s, root2, "x").isComplete("docs_idf"))
-
     // Per-partition lineage/metrics exist for every stage, both runIds.
     val m = StageRunner(s, root2, "x").metrics().collect()
     val stages = m.map(_.stage).toSet
-    assert(Set("docs", "idf", "docs_idf", "mentions", "hits", "triples")
+    assert(Set("docs", "idf", "mentions", "hits", "triples")
       .subsetOf(stages), s"stages missing in metrics: $stages")
     assert(m.exists(_.runId == "run-b1") && m.exists(_.runId == "run-b2"))
     assert(m.forall(_.rowsOut >= 0) && m.exists(_.rowsOut > 0))
@@ -240,8 +232,8 @@ class StreamingSpec extends AnyFunSuite {
     val bdict = s.sparkContext.broadcast(d0)
 
     val input = MemoryStream[Turn]
-    val q = graft.streaming.TranscriptStream
-      .mentions(s, input.toDS(), bdict)
+    val q = KgPipeline
+      .detectMentions(s, input.toDS(), bdict)
       .writeStream.format("memory").queryName("m_out")
       .outputMode("append").start()
     try {

@@ -80,8 +80,9 @@ class WandSpec extends AnyFunSuite {
     val dsides = docs.map(new Scoring.Side(_)).toArray
     val queries = docs.take(150)
     val skipped = new java.util.concurrent.atomic.LongAdder
-    val pruned = Linker.scoreCellBlocked(queries.iterator, dsides, 5,
-        wandSkipped = skipped).map(bits).toVector
+    val kernel = new LinkKernel(queries.iterator, 5, wandSkipped = skipped)
+    kernel.feed(dsides)
+    val pruned = kernel.hits.map(bits).toVector
     assert(pruned.nonEmpty)
     assert(pruned == reference(queries, docs, 5), "WAND pruning changed results")
     assert(skipped.sum > 0, "pruning never engaged on a 150x1200 cell")
