@@ -2,17 +2,17 @@ package graft.link
 
 import java.io.{ByteArrayOutputStream, DataOutputStream}
 
-import scala.jdk.CollectionConverters._
-
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
 
 import graft.model.{DocVec, IdfRow, LinkHit}
 
-import Linker.CellKnobs
+import Linker.{CellKnobs, TopK}
 
-/** The link's one cell layout, shared by the shuffled batch cells
-  * (`Linker.linkTopK`, Dataset cogroup) and the persisted streaming cells
-  * (`LinkIndex`, RDD cogroup; `CellKnobs(1, db)` per district). A cell is
+/** The link's one cell layout and its one cell engine, shared by the
+  * shuffled batch cells (`Linker.linkTopK`) and the persisted streaming
+  * cells (`LinkIndex`; `CellKnobs(1, db)` per district). A cell is
   * `(partKey, qBucket, dBucket)`; a district's knobs `CellKnobs(g, db)` give
   * it g·db cells, and a district without an entry is one cell.
   *
@@ -22,12 +22,16 @@ import Linker.CellKnobs
   *  - a district's idf table packs into blobs that go to all g·db cells;
   *  - a query goes to qBucket `docId mod g` and is replicated to all db
   *    dBuckets, so when any db > 1 a query's partial top-k lists merge
-  *    ([[topK]]).
+  *    ([[mergeHits]]).
   *
-  * Cell rows are `(key, (tag, blob))`, tag 0 a doc blob and tag 1 an idf
-  * blob: what `Linker.scoreCell` reads. The per-partition functions are
-  * plain iterator maps, so both paths (and the layout test) run the same
-  * code. */
+  * Cell rows are pair-RDD rows `(key, (tag, blob))`, tag 0 a doc blob and
+  * tag 1 an idf blob: what `Linker.scoreCell` reads. The per-partition
+  * functions are plain iterator maps, so both paths (and the layout test)
+  * run the same code, and [[score]] is the one cogroup that scores cells.
+  * Everything here runs on pair RDDs rather than Datasets: the link's rows
+  * are opaque blobs and object rows, so Catalyst has nothing to optimise,
+  * and every Dataset operator would add generated classes that Spark's
+  * bounded codegen cache evicts from one pipeline run to the next. */
 private[graft] object Cells {
 
   type Key = (String, Int, Int)
@@ -82,24 +86,41 @@ private[graft] object Cells {
       (0 until dbOf(knobs, q.partKey)).iterator.map(dbk => ((q.partKey, qb, dbk), q))
     }
 
-  /** Each query's final top-k from its cells' partial lists: one merge
-    * shuffle when some district splits its docs, none otherwise. */
-  def topK(partial: Dataset[LinkHit], knobs: Map[String, CellKnobs],
-      topN: Int): Dataset[LinkHit] =
-    if (splitsDocs(knobs)) Linker.mergeTopK(partial, topN) else partial
+  /** The one cell engine: cogroup the cell rows (doc and idf blobs) with
+    * the query cells under `partitioner` and score each cell that has
+    * queries with `Linker.scoreCell`. Returns each cell's partial top-k;
+    * they are final only when no district splits its docs. A side already
+    * partitioned by `partitioner` (the persisted index cells) is read in
+    * place: only the other side shuffles. */
+  def score(cells: RDD[(Key, Blob)], queries: RDD[(Key, DocVec)],
+      partitioner: Partitioner, topN: Int): RDD[LinkHit] =
+    cells.cogroup(queries, partitioner).flatMap { case (_, (cellIt, qIt)) =>
+      if (qIt.isEmpty) Iterator.empty
+      else Linker.scoreCell(cellIt.iterator, qIt.iterator, topN)
+    }
+
+  /** Each query's final top-k from its partial lists: one queryId-keyed
+    * `TopK` reduce over `partitions` partitions, combined map-side. Exact:
+    * `TopK` is order-independent. */
+  def mergeHits(partial: RDD[LinkHit], topN: Int,
+      partitions: Int): RDD[LinkHit] =
+    partial.map(h => (h.queryId, h)).combineByKey(
+      (h: LinkHit) => new TopK(topN).add(h),
+      (t: TopK, h: LinkHit) => t.add(h),
+      (a: TopK, b: TopK) => a.merge(b),
+      new HashPartitioner(partitions))
+      .flatMap { case (qid, t) => t.toHits(qid) }
 
   /** Per-partKey row counts of each side, in ONE job: per-partition local
     * maps merged on the driver. District cardinality is bounded (~10³
     * nationally), so the partial maps are tiny and no exchange runs.
     * `counts(pk)(i)` is side i's count (0 where the side lacks pk). */
   def countByPk(sides: Dataset[DocVec]*): Map[String, Array[Long]] = {
-    val spark = sides.head.sparkSession
-    import spark.implicits._
     val partials = sides.zipWithIndex.map { case (ds, side) =>
-      ds.mapPartitions { it =>
-        val m = new java.util.HashMap[String, Long]()
-        it.foreach(d => m.merge(d.partKey, 1L, (a, b) => a + b))
-        m.entrySet().iterator().asScala.map(e => (e.getKey, side, e.getValue.longValue()))
+      ds.rdd.mapPartitions { it =>
+        val m = new scala.collection.mutable.HashMap[String, Long]()
+        it.foreach(d => m(d.partKey) = m.getOrElse(d.partKey, 0L) + 1L)
+        m.iterator.map { case (pk, n) => (pk, side, n) }
       }
     }
     val merged = new scala.collection.mutable.HashMap[String, Array[Long]]()

@@ -33,22 +33,22 @@ import graft.model.{DocVec, IdfRow, LinkHit}
   * reference's import loop grows its corpus batch by batch):
   *
   *  - [[appended]] packs only the delta docs into the existing cell space
-  *    (partitioner-aware union — still narrow at link time);
-  *  - [[withIdf]] swaps ONLY the tag-1 idf cells for a recomputed table —
-  *    the corpus-wide idf drift a delta causes re-ships the per-district
-  *    term dictionaries, never the doc payload;
+  *    (partitioner-aware union — still narrow at link time) and, in the same
+  *    call, swaps ONLY the tag-1 idf cells for the recomputed table — the
+  *    corpus-wide idf drift a delta causes re-ships the per-district term
+  *    dictionaries, never the doc payload, and no generation can pair new
+  *    docs with a stale idf table;
   *  - [[compactionDue]] reports districts whose accumulated mass has
   *    outgrown the task-memory valve (the LSM-style rebuild trigger).
   *
-  * This is the one place the engine drops to the RDD layer deliberately:
-  * a `Dataset` cogroup re-plans its exchange on every action, so persisted
-  * partitioning cannot be carried ACROSS queries — the pair-RDD
-  * `partitionBy` + same-partitioner `cogroup`/union contract is exactly the
-  * cross-query reuse the streaming path needs. Scoring reuses the batch
-  * cells' `Linker.scoreCell` (in-cell idf stamping, one `LinkKernel` feed,
-  * quantized TopK), so indexed output is bit-identical to `linkTopKAuto`
-  * (LinkIndexSpec). Queries of a district the index does not hold are
-  * dropped before the shuffle: they have no candidates.
+  * The cells are the batch link's pair-RDD cells, persisted: the
+  * `partitionBy` + same-partitioner `cogroup`/union contract carries the
+  * partitioning ACROSS queries, which is the reuse the streaming path needs.
+  * Scoring is the batch cells' one engine, `Cells.score` (in-cell idf
+  * stamping, one `LinkKernel` feed, quantized TopK), run with the index's
+  * persisted partitioner, so indexed output is bit-identical to
+  * `linkTopKAuto` (LinkIndexSpec). Queries of a district the index does not
+  * hold are dropped before the shuffle: they have no candidates.
   *
   * Query buckets are fixed at g=1: micro-batch query sets are small, so
   * per-cell pair work `q·maxDocsPerCell` stays bounded by the batch size and
@@ -99,12 +99,10 @@ final class LinkIndex private (
     val cells = docCells.union(idfCells)
     assert(cells.partitioner.contains(partitioner),
       "cell union lost its partitioner — static side would re-shuffle")
-    val partial: RDD[LinkHit] = cells.cogroup(qCells, partitioner)
-      .flatMap { case (_, (cellIt, qIt)) =>
-        if (qIt.isEmpty) Iterator.empty
-        else Linker.scoreCell(cellIt.iterator, qIt.iterator, topN)
-      }
-    Cells.topK(spark.createDataset(partial), knobs, topN)
+    val partial = Cells.score(cells, qCells, partitioner, topN)
+    spark.createDataset(
+      if (Cells.splitsDocs(knobs)) Cells.mergeHits(partial, topN, numPartitions)
+      else partial)
   }
 
   /** The pre-collapse call shape of [[link]], kept only because the frozen
@@ -118,15 +116,18 @@ final class LinkIndex private (
     link(spark, queries, topN)
   }
 
-  /** Incremental corpus growth: pack ONLY the delta docs into the existing
-    * cell space (new districts get fresh buckets; existing districts keep
-    * their frozen bucket count) and union partitioner-aware — the existing
-    * corpus bytes are never repacked or re-shuffled — possible because doc
-    * blobs carry no idfs, which a growing corpus would invalidate wholesale.
-    * Pair with [[withIdf]] for the recomputed table; check
-    * [[compactionDue]] periodically. The returned index SHARES this index's
-    * persisted cells — unpersist only the final generation. */
-  def appended(spark: SparkSession, delta: Dataset[DocVec]): LinkIndex = {
+  /** Incremental corpus growth, one call: pack ONLY the delta docs into
+    * the existing cell space (new districts get fresh buckets; existing
+    * districts keep their frozen bucket count), union partitioner-aware —
+    * the existing corpus bytes are never repacked or re-shuffled — and swap
+    * the idf cells for `idf`, the table recomputed over the grown corpus.
+    * Possible because doc blobs carry no idfs, which a growing corpus would
+    * invalidate wholesale; only the per-district DISTINCT-term dictionaries
+    * re-ship. Check [[compactionDue]] periodically. The returned index
+    * SHARES this index's persisted doc cells — unpersist only the final
+    * generation. */
+  def appended(spark: SparkSession, delta: Dataset[DocVec],
+      idf: Dataset[IdfRow]): LinkIndex = {
     val deltaCounts = LinkIndex.docCounts(delta)
     val newKnobs = knobs ++
       LinkIndex.knobsFor(deltaCounts -- knobs.keys, maxDocsPerCell)
@@ -135,23 +136,15 @@ final class LinkIndex private (
     }
     val deltaCells = LinkIndex.persisted(spark, delta, newKnobs,
       partitioner)(Cells.docCells)
-    new LinkIndex(newKnobs, newCounts, maxDocsPerCell,
-      docCells.union(deltaCells), idfCells, owned :+ deltaCells)
-  }
-
-  /** Swap the idf cells for a recomputed table (after [[appended]] deltas
-    * shift document frequencies): re-ships only the per-district DISTINCT
-    * -term dictionaries — the doc payload, which dwarfs them, stays put. */
-  def withIdf(spark: SparkSession, idf: Dataset[IdfRow]): LinkIndex = {
-    val cells = LinkIndex.persisted(spark, idf, knobs, partitioner)(
+    val newIdfCells = LinkIndex.persisted(spark, idf, newKnobs, partitioner)(
       Cells.idfCells)
-    new LinkIndex(knobs, docCountByPk, maxDocsPerCell, docCells,
-      cells, owned :+ cells)
+    new LinkIndex(newKnobs, newCounts, maxDocsPerCell,
+      docCells.union(deltaCells), newIdfCells, owned :+ deltaCells :+ newIdfCells)
   }
 
   /** Unpersist EVERY cell RDD this generation chain has persisted —
     * including parents shared with indexes this one was derived from via
-    * [[appended]]/[[withIdf]], so call only once no generation of the chain
+    * [[appended]], so call only once no generation of the chain
     * is in use (normally: on the last generation). */
   def unpersist(): Unit = {
     owned.foreach(_.unpersist())

@@ -1,6 +1,8 @@
 package graft.link
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.analyse.DocAnalyser
@@ -110,9 +112,9 @@ object Dict {
   *  - `buildDocs`: corpus text → interpret (broadcast trie inside
   *    `mapPartitions`, one visitor per partition) → term vectors. Narrow, no
   *    shuffle; scales linearly with input splits.
-  *  - `buildIdf`: one partial+final hash aggregation over exploded term keys
-  *    (`SimilarityComputer.statInverseDocRefers` + idf rule `:580-599` as a
-  *    DataFrame job). Shuffles once on (partKey, termKey).
+  *  - `buildIdf`: one map-side-combined count over (partKey, termKey)
+  *    (`SimilarityComputer.statInverseDocRefers` + idf rule `:580-599`).
+  *    Shuffles once, partitioned by partKey.
   *  - `attachIdf`: cogroup on partKey — the reference's per-district IDF
   *    stamp as a cold-path view (explain, stage dumps); the link itself
   *    stamps idfs inside its scoring cells.
@@ -124,7 +126,9 @@ object Dict {
   *  - `linkTopKBroadcast`: alternative for hot partitions when the query
   *    side fits a broadcast — the doc side streams with NO shuffle.
   *
-  * Every route scores with the one kernel, [[LinkKernel]].
+  * Every route scores with the one kernel, [[LinkKernel]], and runs on pair
+  * RDDs (`Cells`); a route converts to a `Dataset[LinkHit]` once, at its
+  * end.
   */
 object Linker {
 
@@ -245,21 +249,50 @@ object Linker {
 
   /** Per-partition IDF table: df = docs-containing-term (terms are pre-deduped
     * per doc at analyse), idf = ln(nDocs/(df+1)) clamped >= 0, with the
-    * numeric/ASCII fixed idf=2 rule (`SimilarityComputer.java:586-596`). */
+    * numeric/ASCII fixed idf=2 rule (`SimilarityComputer.java:586-596`).
+    *
+    * One `reduceByKey` over `(partKey, termKey)`, combined map-side, under a
+    * partitioner on partKey alone: a district's terms all reach one reducer,
+    * together with its doc count, which rides as the `(partKey, null)` key.
+    * So the table is one shuffle and one job, with no join and no separate
+    * doc-count pass. Values equal the SQL rule
+    * `greatest(0, log(nDocs / (df + 1)))` bit for bit (Spark's `log` is
+    * `StrictMath.log`). */
   def buildIdf(spark: SparkSession, docs: Dataset[DocVec]): Dataset[IdfRow] = {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val termKeys = termKeyRows(spark, docs)
-    val df = termKeys.groupBy($"partKey", $"termKey").agg(count(lit(1)).as("df"))
-    val nDocs = docs.groupBy($"partKey").agg(count(lit(1)).as("nDocs"))
-    // One row per district (bounded ~10³ nationally) — broadcast, so the
-    // term-df side streams out of its aggregation without a join exchange.
-    df.join(broadcast(nDocs), "partKey")
-      .select($"partKey", $"termKey", $"df",
-        when(($"termKey".rlike("^[0-9]+$")) || ($"termKey".rlike("^[A-Za-z]+$")), lit(2.0))
-          .otherwise(greatest(lit(0.0), log($"nDocs".cast("double") / ($"df" + 1))))
-          .as("idf"))
-      .as[IdfRow]
+    val byPk = new PartKeyPartitioner(spark.sessionState.conf.numShufflePartitions)
+    val counts = docs.rdd.flatMap { d =>
+      Iterator.single(((d.partKey, null: String), 1L)) ++
+        Iterator.tabulate(d.nTerms)(i => ((d.partKey, DocAnalyser.idfKeyAt(d, i)), 1L))
+    }.reduceByKey(byPk, _ + _)
+    spark.createDataset(counts.mapPartitions { it =>
+      val rows = it.toArray
+      val nDocs = rows.iterator.collect { case ((pk, null), n) => pk -> n }.toMap
+      rows.iterator.collect { case ((pk, t), df) if t != null =>
+        IdfRow(pk, t, df, idfOf(t, nDocs(pk), df))
+      }
+    })
+  }
+
+  private val NumericTerm = java.util.regex.Pattern.compile("^[0-9]+$")
+  private val AlphaTerm = java.util.regex.Pattern.compile("^[A-Za-z]+$")
+
+  /** The idf rule of one term key: 2.0 for numeric or ASCII-letter keys
+    * (regex `find`, as SQL `rlike`), else `max(0, ln(nDocs / (df + 1)))`. */
+  private def idfOf(termKey: String, nDocs: Long, df: Long): Double =
+    if (NumericTerm.matcher(termKey).find() || AlphaTerm.matcher(termKey).find()) 2.0
+    else math.max(0.0, StrictMath.log(nDocs.toDouble / (df + 1).toDouble))
+
+  /** Partitions `(partKey, _)` keys by partKey alone. */
+  private final class PartKeyPartitioner(n: Int) extends org.apache.spark.Partitioner {
+    def numPartitions: Int = n
+    def getPartition(key: Any): Int =
+      java.lang.Math.floorMod(key.asInstanceOf[(String, _)]._1.hashCode, n)
+    override def equals(o: Any): Boolean = o match {
+      case p: PartKeyPartitioner => p.numPartitions == n
+      case _ => false
+    }
+    override def hashCode: Int = n
   }
 
   import org.apache.spark.sql.functions._
@@ -315,13 +348,13 @@ object Linker {
     *    (partKey, qBucket) cell and sees the full candidate set there → a
     *    single pass emits final top-k, no merge step.
     *  - docs ARE replicated ×qBuckets, but as `Cells.BlobDocs`-doc binary
-    *    blocks: per-row encoder deserialization (nested arrays, per-term
-    *    Strings) was ~half the stage CPU; blocks amortize it ~256× and
-    *    unpack directly into the kernel's compiled Side layout.
+    *    blocks: per-row deserialization (nested arrays, per-term Strings)
+    *    was ~half the stage CPU; blocks amortize it ~256× and unpack
+    *    directly into the kernel's compiled Side layout.
     *  - dBuckets optionally splits the doc side too (cells then hold
     *    1/dBuckets of a district's docs and partial top-k heaps merge in a
-    *    tiny final reduce) — the memory valve for districts whose full doc
-    *    set would not fit a task; results are bit-identical for any knobs.
+    *    tiny final `TopK` reduce) — the memory valve for districts whose full
+    *    doc set would not fit a task; results are bit-identical for any knobs.
     *  - idfs are stamped INSIDE each cell: the per-district `idf` table
     *    ships into every cell of its district as chunked binary blocks, and
     *    both sides are stamped from it (`Scoring.stampSideIdfs` for docs,
@@ -330,11 +363,28 @@ object Linker {
     *    payload, and input idfs are ignored (stamping overwrites them). A
     *    district's distinct-term table is far smaller than its doc-term
     *    payload, so shipping it ×(g·db) is cheap.
+    *  - the cells are pair-RDD rows cogrouped by `Cells.score` under a
+    *    `HashPartitioner` of `spark.sql.shuffle.partitions` — the same
+    *    engine `LinkIndex` runs with its persisted partitioner.
     */
   def linkTopK(spark: SparkSession, queries: Dataset[DocVec],
       docs: Dataset[DocVec], topN: Int, idf: Dataset[IdfRow],
       knobsByPk: Map[String, CellKnobs] = Map.empty): Dataset[LinkHit] = {
     import spark.implicits._
+    val partial = cellHits(spark, queries.rdd, docs.rdd, idf.rdd, knobsByPk, topN)
+    spark.createDataset(
+      if (Cells.splitsDocs(knobsByPk)) Cells.mergeHits(partial, topN, shufflePartitions(spark))
+      else partial)
+  }
+
+  private def shufflePartitions(spark: SparkSession): Int =
+    spark.sessionState.conf.numShufflePartitions
+
+  /** [[linkTopK]]'s cells: each cell's partial top-k, final unless some
+    * district splits its docs. */
+  private def cellHits(spark: SparkSession, queries: RDD[DocVec],
+      docs: RDD[DocVec], idf: RDD[IdfRow], knobsByPk: Map[String, CellKnobs],
+      topN: Int): RDD[LinkHit] = {
     val bknobs = spark.sparkContext.broadcast(knobsByPk)
     // The query side may arrive CLUSTERED by partKey (one partition per
     // district after any partKey-keyed stage), so without a rebalance the
@@ -348,26 +398,21 @@ object Linker {
     // re-keys every row anyway, and per-query top-k is order-independent.
     val qSpread =
       if (!Cells.splitsDocs(knobsByPk)) queries // no ×db replication
-      else queries.repartition(
-        math.max(spark.sparkContext.defaultParallelism,
-          spark.sessionState.conf.numShufflePartitions),
-        org.apache.spark.sql.functions.col("docId"))
-    val qKeyed = qSpread.mapPartitions(Cells.queryCells(_, bknobs.value))
-      .groupByKey(_._1)
-    val dKeyed = docs.mapPartitions(Cells.docCells(_, bknobs.value))
-      .union(idf.mapPartitions(Cells.idfCells(_, bknobs.value)))
-      .groupByKey(_._1)
-    val partial = qKeyed.cogroup(dKeyed) { (_, qIt, dIt) =>
-      scoreCell(dIt.map(_._2), qIt.map(_._2), topN)
-    }
-    Cells.topK(partial, knobsByPk, topN)
+      else queries.keyBy(_.docId).partitionBy(new HashPartitioner(
+        math.max(spark.sparkContext.defaultParallelism, shufflePartitions(spark))))
+        .values
+    Cells.score(
+      docs.mapPartitions(Cells.docCells(_, bknobs.value))
+        .union(idf.mapPartitions(Cells.idfCells(_, bknobs.value))),
+      qSpread.mapPartitions(Cells.queryCells(_, bknobs.value)),
+      new HashPartitioner(shufflePartitions(spark)), topN)
   }
 
   /** Score one link cell: unpack its tag-0 doc blobs and tag-1 idf blobs,
     * stamp both sides from the cell's idfs, and feed the whole cell to one
-    * [[LinkKernel]]. The batch cells ([[linkTopK]]) and the persisted
-    * streaming cells (`LinkIndex.link`) share it, so their scores are
-    * bit-identical. */
+    * [[LinkKernel]]. Called only by the one cell engine, `Cells.score`, so
+    * the batch cells and the persisted streaming cells (`LinkIndex`) score
+    * bit-identically. */
   private[link] def scoreCell(blobs: Iterator[(Int, Array[Byte])],
       queries: Iterator[DocVec], topN: Int): Iterator[LinkHit] = {
     val buf = scala.collection.mutable.ArrayBuffer.empty[Scoring.Side]
@@ -385,18 +430,6 @@ object Linker {
       val kernel = new LinkKernel(queries.map(DocAnalyser.stampIdf(_, idfMap)), topN)
       kernel.feed(buf.toArray)
       kernel.hits
-    }
-  }
-
-  /** Merge per-cell partial top-k lists into each query's final top-k (one
-    * queryId-keyed shuffle). Exact: `TopK` is order-independent. */
-  private[link] def mergeTopK(partial: Dataset[LinkHit],
-      topN: Int): Dataset[LinkHit] = {
-    import partial.sparkSession.implicits._
-    partial.groupByKey(_.queryId).flatMapGroups { (qid, hits) =>
-      val heap = new TopK(topN)
-      hits.foreach(h => heap.offer(h.docId, h.similarity))
-      heap.toHits(qid)
     }
   }
 
@@ -522,23 +555,27 @@ object Linker {
   def linkPlanned(spark: SparkSession, plan: RoutePlan,
       queries: Dataset[DocVec], docs: Dataset[DocVec], topN: Int,
       idf: Dataset[IdfRow]): Dataset[LinkHit] = {
-    val bcastPks = plan.bcastPks
+    import spark.implicits._
+    val (qs, ds, is) = (queries.rdd, docs.rdd, idf.rdd)
     val bShuffle = spark.sparkContext.broadcast(plan.shufflePks)
-    val restHits = linkTopK(spark,
-      queries.filter(q => bShuffle.value.contains(q.partKey)),
-      docs.filter(d => bShuffle.value.contains(d.partKey)),
-      topN, idf.filter(r => bShuffle.value.contains(r.partKey)),
-      knobsByPk = plan.knobs)
-
-    if (bcastPks.isEmpty) restHits
-    else {
-      val bBcast = spark.sparkContext.broadcast(bcastPks)
-      val hitsB = linkTopKBroadcast(spark,
-        queries.filter(q => bBcast.value.contains(q.partKey)).collect(),
-        docs.filter(d => bBcast.value.contains(d.partKey)), topN,
-        idf.filter(r => bBcast.value.contains(r.partKey)))
-      restHits.union(hitsB)
-    }
+    val cells = cellHits(spark,
+      qs.filter(q => bShuffle.value.contains(q.partKey)),
+      ds.filter(d => bShuffle.value.contains(d.partKey)),
+      is.filter(r => bShuffle.value.contains(r.partKey)), plan.knobs, topN)
+    val partial =
+      if (plan.bcastPks.isEmpty) cells
+      else {
+        val bBcast = spark.sparkContext.broadcast(plan.bcastPks)
+        cells.union(broadcastHits(spark,
+          qs.filter(q => bBcast.value.contains(q.partKey)).collect(),
+          ds.filter(d => bBcast.value.contains(d.partKey)),
+          is.filter(r => bBcast.value.contains(r.partKey)), topN))
+      }
+    // One merge for both routes: the broadcast route's lists are always
+    // partial, the cells' only when a district splits its docs.
+    spark.createDataset(
+      if (plan.bcastPks.isEmpty && !Cells.splitsDocs(plan.knobs)) partial
+      else Cells.mergeHits(partial, topN, shufflePartitions(spark)))
   }
 
   /** The pre-collapse call shape of [[linkTopKAuto]], kept only because the
@@ -557,7 +594,7 @@ object Linker {
   /** Broadcast-query variant for hot partitions / huge doc side: the docs side
     * streams with NO shuffle; queries (small) are broadcast grouped by
     * partKey. Emits per-partition partial top-k; final top-k is a tiny
-    * shuffle of k*|queries| rows.
+    * `TopK` reduce of k·|queries| rows (`Cells.mergeHits`).
     *
     * Scoring is the cells' kernel ([[LinkKernel]]): each task keeps one
     * kernel per district it meets and feeds it that district's streamed,
@@ -575,6 +612,14 @@ object Linker {
   def linkTopKBroadcast(spark: SparkSession, queries: Array[DocVec],
       docs: Dataset[DocVec], topN: Int, idf: Dataset[IdfRow]): Dataset[LinkHit] = {
     import spark.implicits._
+    spark.createDataset(Cells.mergeHits(
+      broadcastHits(spark, queries, docs.rdd, idf.rdd, topN), topN,
+      shufflePartitions(spark)))
+  }
+
+  /** [[linkTopKBroadcast]]'s per-partition partial top-k lists. */
+  private def broadcastHits(spark: SparkSession, queries: Array[DocVec],
+      docs: RDD[DocVec], idf: RDD[IdfRow], topN: Int): RDD[LinkHit] = {
     val idfByPk = {
       val m = new scala.collection.mutable.HashMap[
         String, java.util.HashMap[String, java.lang.Double]]()
@@ -590,7 +635,7 @@ object Linker {
         idfByPk.value.getOrElse(q.partKey, EmptyIdfMap)))
       .groupBy(_.partKey)
     val bq = spark.sparkContext.broadcast(byPart)
-    val partial = docs.mapPartitions { it =>
+    docs.mapPartitions { it =>
       final class District(val kernel: LinkKernel) {
         val batch = scala.collection.mutable.ArrayBuffer.empty[Scoring.Side]
         def flush(): Unit = { kernel.feed(batch.toArray); batch.clear() }
@@ -612,7 +657,6 @@ object Linker {
         district.kernel.hits
       }
     }
-    mergeTopK(partial, topN)
   }
 
   /** A link hit with its per-term scoring explanation (the reference's
@@ -742,7 +786,7 @@ object Linker {
     * ranks, and sims — from the stage tables. Within a 1e-6 band the
     * reference makes no meaningful ordering guarantee. Emitted sims stay
     * full precision. */
-  final class TopK(k: Int) {
+  final class TopK(k: Int) extends Serializable {
     private val sims = new Array[Double](k)
     private val keys = new Array[Long](k)
     private val ids = new Array[Long](k)
@@ -764,6 +808,12 @@ object Linker {
       }
       sims(i) = sim; keys(i) = key; ids(i) = docId
       size += 1
+    }
+    def add(h: LinkHit): TopK = { offer(h.docId, h.similarity); this }
+    def merge(o: TopK): TopK = {
+      var i = 0
+      while (i < o.size) { offer(o.ids(i), o.sims(i)); i += 1 }
+      this
     }
     def toHits(queryId: Long): Iterator[LinkHit] = {
       val s = size

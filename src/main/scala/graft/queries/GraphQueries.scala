@@ -135,15 +135,18 @@ object GraphQueries {
     * must agree exactly. */
   private def q40OracleSql: String = {
     val iters = 4
+    // AS MATERIALIZED is load-bearing, as in q50: each half-step reads its
+    // predecessor twice, so DuckDB's default CTE inlining expands the chain
+    // 2^(2·iters) times (out of memory); materialization keeps it linear.
     val head =
       s"""WITH $comentionEdgeCtes,
-         ud AS (SELECT src, dst, w FROM e
+         ud AS MATERIALIZED (SELECT src, dst, w FROM e
                 UNION ALL SELECT dst, src, w FROM e),
-         l0 AS (SELECT DISTINCT src AS id, src AS label FROM ud)"""
+         l0 AS MATERIALIZED (SELECT DISTINCT src AS id, src AS label FROM ud)"""
     val halves = (1 to 2 * iters).map { i =>
       val p = (i + 1) % 2 // half-steps alternate parity 0, 1, 0, 1, ...
       s""",
-         l$i AS (
+         l$i AS MATERIALIZED (
            SELECT id, label FROM l${i - 1} WHERE id % 2 <> $p
            UNION ALL
            SELECT id, label FROM (

@@ -113,9 +113,8 @@ object TranscriptStream {
   /** [[linkStream]] against a CALLER-OWNED [[graft.link.LinkIndex]] — the
     * production shape of the continuous loop: one index serves many stream
     * incarnations, and between them the caller GROWS it in place
-    * (`index.appended` for an imported corpus delta, `index.withIdf` for
-    * the refreshed term statistics) without ever repacking the historical
-    * bytes. The caller keeps lifecycle responsibility: stop the query, then
+    * (`index.appended` with an imported corpus delta and the refreshed term
+    * statistics) without ever repacking the historical bytes. The caller keeps lifecycle responsibility: stop the query, then
     * `index.unpersist()` once the LAST generation retires (StreamingSpec
     * pins the full grow-then-stream round trip against the batch link). */
   def linkStreamWith(spark: SparkSession, turns: Dataset[Turn],

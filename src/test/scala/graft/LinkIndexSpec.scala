@@ -61,13 +61,13 @@ class LinkIndexSpec extends AnyFunSuite {
     assert(base.nonEmpty)
 
     // Grow-in-place: index the first 300 docs with their own idf, append
-    // the 100-doc delta (existing corpus bytes untouched), then swap in the
+    // the 100-doc delta (existing corpus bytes untouched) together with the
     // full-corpus idf table. Must equal an index built from scratch on the
     // full corpus AND the batch auto link, bit for bit.
     val persistedBefore = s.sparkContext.getPersistentRDDs.keySet
     val idf300 = Linker.buildIdf(s, docsOf(first))
     val gen0 = LinkIndex.build(s, docsOf(first), idf300)
-    val gen1 = gen0.appended(s, docsOf(delta)).withIdf(s, idfAll)
+    val gen1 = gen0.appended(s, docsOf(delta), idfAll)
     assert(hitsKey(gen1.link(s, queries, 5).collect()) == base)
 
     val rebuilt = LinkIndex.build(s, docsAll0, idfAll)

@@ -424,8 +424,8 @@ class StreamingSpec extends AnyFunSuite {
     val epoch1 = runEpoch(gen0, t1)
     assert(epoch1 == batchRef(t1, first))
 
-    val gen1 = gen0.appended(s, docsOf(delta))
-      .withIdf(s, graft.link.Linker.buildIdf(s, docsOf(corpusRows)))
+    val gen1 = gen0.appended(s, docsOf(delta),
+      graft.link.Linker.buildIdf(s, docsOf(corpusRows)))
     val epoch2 = runEpoch(gen1, t2)
     assert(epoch2 == batchRef(t2, corpusRows))
     assert(epoch2.exists(_._2 == "linkedTo"))
