@@ -3,13 +3,14 @@ package graft.analyse
 import scala.collection.mutable.ArrayBuffer
 
 import graft.interpret.MutableAddress
-import graft.model.{DocVec, TermRow}
+import graft.model.DocVec
 
 /** Document (term-vector) assembly — `SimilarityComputer.analyse`
   * (`SimilarityComputer.java:110-159`): ordered terms Town, Village, Road,
   * RoadNum (with Road backref + numeric value), then Text tokens deduped
-  * against all existing term texts (`addTerm` `:692-701`). IDF attachment is a
-  * separate join stage (build-time job, see `graft.link.Linker`) — unlike the
+  * against all existing term texts (`addTerm` `:692-701`). Docs leave here
+  * unstamped: idfs come from the per-district table (`Linker.buildIdf`) and
+  * are stamped with [[stampIdf]] inside the link's cells — unlike the
   * reference's query-time lazy memoization, a semantics-preserving move since
   * IDF depends only on the partition's doc set (SURVEY.md §3.3).
   */
@@ -64,10 +65,8 @@ object DocAnalyser {
       (if (road == null) "" else road) + "-" + Segmenter.translateRoadNum(text)
     else text
 
-  def idfKey(t: TermRow): String =
-    termKey(if (t.t == "N") 'N' else ' ', t.text, t.ref)
-
-  /** Positional variant over the flat DocVec layout. */
+  /** The idf-table key of a doc's i-th term ([[termKey]] over the flat
+    * DocVec layout). */
   def idfKeyAt(doc: DocVec, i: Int): String =
     termKey(doc.termType(i), doc.texts(i), doc.road)
 

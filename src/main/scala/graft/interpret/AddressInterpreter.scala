@@ -5,7 +5,7 @@ import java.util.regex.Pattern
 import scala.collection.mutable
 
 import graft.dict.{Regions, TermIndex}
-import graft.model.{InterpretedAddress, Region, RegionTypes, TermTypes}
+import graft.model.{InterpretedAddress, Region, TermTypes}
 import graft.util.Str
 
 /** Mutable working row for one address during interpretation
@@ -409,9 +409,6 @@ final class AddressInterpreter(val regions: Regions, val termIndex: TermIndex)
     if (regions.hasChildren(d.city.id)) sb.append('-').append(d.district.id)
     sb.toString
   }
-
-  def partKeyOf(pid: Long, cid: Long, did: Long): String =
-    if (regions.hasChildren(cid)) s"$pid-$cid-$did" else s"$pid-$cid"
 }
 
 object AddressInterpreter {

@@ -48,7 +48,7 @@ object Accuracy {
     // Interpret only — the link stamps query idfs in-cell; the
     // interpreted-flag consumer below reads ids only.
     val qdocs = Linker.buildDocs(spark, queries, dict)
-      .persist(StorageLevel.MEMORY_AND_DISK) // interpreted-flag + linkTopK
+      .persist(StorageLevel.MEMORY_AND_DISK) // interpreted-flag + link
 
     val hits = Linker.linkTopKAuto(spark, qdocs, docs, topN = 1, idf)
 

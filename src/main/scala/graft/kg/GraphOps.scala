@@ -186,7 +186,7 @@ object GraphOps {
           .union(e.select(col("dst").as("src"), col("src").as("dst"),
             col("weight").cast("long").as("w")))
         ud = sym.repartition(gp).persist(StorageLevel.MEMORY_AND_DISK)
-        val m = ud.count() // materialize once; rounds re-read the blocks
+        ud.count() // materialize once; rounds re-read the blocks
         // Every node in an edge list has ≥1 incident edge, so the dst-side
         // aggregation reaches ALL parity-p nodes each half-step — no
         // dangling-node join.

@@ -99,19 +99,6 @@ object KgPipeline {
     }
   }
 
-  /** Stamp corpus IDF onto mention query docs; terms missing from the
-    * partition IDF table get MISSING_IDF=4 (`SimilarityComputer.java:146-154`). */
-  def stampQueryIdf(spark: SparkSession, mentions: Dataset[MentionDoc],
-      idf: Dataset[IdfRow]): Dataset[MentionDoc] = {
-    import spark.implicits._
-    mentions.groupByKey(_.doc.partKey).cogroup(idf.groupByKey(_.partKey)) {
-      (_, mIt, idfIt) =>
-        val idfMap = new java.util.HashMap[String, java.lang.Double]()
-        idfIt.foreach(r => idfMap.put(r.termKey, r.idf))
-        mIt.map(m => m.copy(doc = DocAnalyser.stampIdf(m.doc, idfMap)))
-    }
-  }
-
   /** Division/road/building triples from detected mentions. */
   def mentionTriples(spark: SparkSession, mentions: Dataset[MentionDoc],
       dict: Broadcast[Dict]): Dataset[Triple] = {
@@ -483,16 +470,16 @@ object KgPipeline {
     * long-lived session (Verify, Bench, a service) leaks them — measured 30
     * persistent RDDs after 7 driver queries in round 2. Callers materialize
     * what they need from the outputs, then call `unpersistAll()`. The
-    * intermediate `docsIdf`/`idf` stages are exposed for consumers that
-    * extend the run (per-term explain, stage materialization) without
-    * re-deriving them. */
+    * intermediate `docs`/`idf` stages are exposed for consumers that extend
+    * the run without re-deriving them; a consumer that needs idf-stamped
+    * vectors (per-term explain, stage materialization) stamps them with
+    * `Linker.attachIdf`. */
   final case class KgRun(
       mentions: Dataset[MentionDoc],
       triples: Dataset[Triple],
       hits: Dataset[LinkHit],
       idf: Dataset[graft.model.IdfRow],
-      docsIdf: Dataset[DocVec],
-      mentionsIdf: Dataset[MentionDoc],
+      docs: Dataset[DocVec],
       private val stages: Stages) {
     def unpersistAll(): Unit = stages.release()
   }
@@ -518,8 +505,10 @@ object KgPipeline {
     spark.sparkContext.broadcast(Dict.withDiscoveredTowns(dict.value, discovered))
   }
 
-  /** End-to-end: turns + historical corpus → KgRun(mentions, triples, hits).
-    * topN per the reference query default.
+  /** End-to-end: turns + historical corpus → KgRun(mentions, triples, hits,
+    * plus the docs and idf stages). topN per the reference query default.
+    * `run` builds only what it runs: no idf-stamped view of docs or
+    * mentions, which the link never reads (it stamps in-cell).
     *
     * docs, idf, mentions and hits each feed two or more consumers, so each
     * goes through `stages` and computes exactly once per job DAG (the Spark
@@ -540,19 +529,15 @@ object KgPipeline {
     }
     val idf = stages.stage[IdfRow]("idf")(Linker.buildIdf(spark, docs))
     // Mentions stay unstamped: the link stamps both sides in-cell, and every
-    // other consumer reads identity/addr fields only.
+    // other consumer reads identity/addr fields only or stamps its own view.
     val mentions = stages.stage[MentionDoc]("mentions") {
       detectMentions(spark, turns, dict)
     }
     val hits = stages.stage[LinkHit]("hits") {
       Linker.linkTopKAuto(spark, mentions.map(_.doc), docs, topN, idf)
     }
-    // Cold-path views for consumers that need idf-stamped vectors (per-term
-    // explain, stage materialization): derived on demand, never persisted.
-    val docsIdf = Linker.attachIdf(spark, docs, idf)
-    val mentionsIdf = stampQueryIdf(spark, mentions, idf)
     val triples = mentionTriples(spark, mentions, dict)
       .union(linkTriples(spark, mentions, hits))
-    KgRun(mentions, triples, hits, idf, docsIdf, mentionsIdf, stages)
+    KgRun(mentions, triples, hits, idf, docs, stages)
   }
 }

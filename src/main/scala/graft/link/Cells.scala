@@ -11,7 +11,7 @@ import graft.model.{DocVec, IdfRow, LinkHit}
 import Linker.{CellKnobs, TopK}
 
 /** The link's one cell layout and its one cell engine, shared by the
-  * shuffled batch cells (`Linker.linkTopK`) and the persisted streaming
+  * shuffled batch cells (`Linker.linkPlanned`) and the persisted streaming
   * cells (`LinkIndex`; `CellKnobs(1, db)` per district). A cell is
   * `(partKey, qBucket, dBucket)`; a district's knobs `CellKnobs(g, db)` give
   * it g·db cells, and a district without an entry is one cell.

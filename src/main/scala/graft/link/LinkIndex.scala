@@ -13,9 +13,9 @@ import graft.model.{DocVec, IdfRow, LinkHit}
   * `linkTopKAuto` re-plans per call: it counts both sides, packs the doc
   * blobs, and shuffles them into scoring cells. In a stream that repeats the
   * full static-corpus pass EVERY micro-batch — at 100 TB the stream would
-  * re-shuffle 100 TB per trigger. This index is `linkTopK`'s cells with
-  * qBuckets = 1, persisted — the same `Cells` layout — and does that work
-  * ONCE:
+  * re-shuffle 100 TB per trigger. This index is the batch link's shuffled
+  * cells with qBuckets = 1, persisted — the same `Cells` layout — and does
+  * that work ONCE:
   *
   *  - a district's knobs are `CellKnobs(1, db)` with db a pure function of
   *    the STATIC side (`Cells.valve`, the same task-memory valve the batch

@@ -118,13 +118,14 @@ object Dict {
   *  - `attachIdf`: cogroup on partKey — the reference's per-district IDF
   *    stamp as a cold-path view (explain, stage dumps); the link itself
   *    stamps idfs inside its scoring cells.
-  *  - `linkTopK`: the reference's partition-pruned candidate retrieval (D1)
-  *    + weighted-cosine scoring (D2/D3) + bounded top-k (E1/E2) as a
-  *    skew-safe blocked cross join — see the method doc for the shuffle
-  *    design (binary doc blocks, query bucketing, optional doc bucketing,
-  *    in-cell idf stamping).
-  *  - `linkTopKBroadcast`: alternative for hot partitions when the query
-  *    side fits a broadcast — the doc side streams with NO shuffle.
+  *  - `linkPlanned`: the reference's partition-pruned candidate retrieval
+  *    (D1) + weighted-cosine scoring (D2/D3) + bounded top-k (E1/E2) along a
+  *    `RoutePlan`: shuffled districts as a skew-safe blocked cross join
+  *    (binary doc blocks, query bucketing, optional doc bucketing, in-cell
+  *    idf stamping — see `cellHits`), hot-but-narrow districts with the
+  *    query side broadcast and the doc side streaming with NO shuffle (see
+  *    `broadcastHits`). `linkTopKAuto` plans the routes from counted stats
+  *    (`planRoutes`) and links along them.
   *
   * Every route scores with the one kernel, [[LinkKernel]], and runs on pair
   * RDDs (`Cells`); a route converts to a `Dataset[LinkHit]` once, at its
@@ -233,18 +234,14 @@ object Linker {
 
   /** Exploded (partKey, docId, termKey) rows — the IDF table's pre-aggregation
     * input, shared with the KG stage materializer so the DuckDB oracle
-    * recomputes idf from the exact same rows. */
+    * recomputes idf from the exact same rows. Keys follow the one idf-key
+    * rule, `DocAnalyser.idfKeyAt`, as `buildIdf` does. */
   def termKeyRows(spark: SparkSession,
       docs: Dataset[DocVec]): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{expr, posexplode}
-    docs
-      .select($"partKey", $"docId", $"tTypes", $"road",
-        posexplode($"texts").as(Seq("pos", "text")))
-      .select($"partKey", $"docId",
-        expr("substring(tTypes, pos + 1, 1)").as("t"), $"text", $"road")
-      .withColumn("termKey", termKeyCol)
-      .select($"partKey", $"docId", $"termKey")
+    docs.flatMap(d => Iterator.tabulate(d.nTerms)(i =>
+      (d.partKey, d.docId, DocAnalyser.idfKeyAt(d, i))))
+      .toDF("partKey", "docId", "termKey")
   }
 
   /** Per-partition IDF table: df = docs-containing-term (terms are pre-deduped
@@ -296,20 +293,6 @@ object Linker {
   }
 
   import org.apache.spark.sql.functions._
-  import org.apache.spark.sql.Column
-
-  /** IDF-table key column: the RoadNum composite `road-num` needs the exact
-    * `translateRoadNum` semantics, so it stays a Scala function (invoked only
-    * for 'N' terms — a handful per doc). */
-  private def termKeyCol: Column = {
-    // Codegen for the common case (round 6, guide §4): every non-'N' term's
-    // idf key IS its text — only the RoadNum composite needs the Scala
-    // `translateRoadNum` UDF, and 'N' terms are a handful per doc. The
-    // branch is `DocAnalyser.termKey`, value-identical.
-    val f = udf((text: String, ref: String) => DocAnalyser.termKey('N', text, ref))
-    when(col("t") === "N", f(col("text"), col("road")))
-      .otherwise(col("text"))
-  }
 
   /** Stamp per-partition idf onto every doc term (reference: `:601-611`).
     * Cogroup on partKey: one shuffle per side, no per-row join explosion. */
@@ -330,15 +313,15 @@ object Linker {
   /** Per-partKey cell-split knobs (query buckets × doc buckets). */
   final case class CellKnobs(qBuckets: Int, dBuckets: Int)
 
-  /** Top-k linking: blocked cross join of queries × candidate docs within
-    * each partKey, laid out by `Cells`: the DOC side ships as packed binary
-    * blocks (`DocBlob`), the QUERY side splits into qBuckets by queryId.
-    * `knobsByPk` is the only shape input: a district without an entry is
-    * one cell, `CellKnobs(1, 1)`.
-    * Ties pinned (desc similarity, asc docId) — documented divergence from
-    * the reference's scan-order tie-keep (`Query.java:73,89`; SURVEY.md
-    * §7.4-3). Hits with similarity <= 0 are dropped (`Query.addSimiDoc`
-    * `Query.java:62`).
+  private def shufflePartitions(spark: SparkSession): Int =
+    spark.sessionState.conf.numShufflePartitions
+
+  /** The shuffled route's cells: a blocked cross join of queries ×
+    * candidate docs within each partKey, laid out by `Cells`: the DOC side
+    * ships as packed binary blocks (`DocBlob`), the QUERY side splits into
+    * qBuckets by queryId. `knobsByPk` is the only shape input: a district
+    * without an entry is one cell, `CellKnobs(1, 1)`. Returns each cell's
+    * partial top-k, final unless some district splits its docs.
     *
     * Skew + shuffle design (measured on this box, see git history):
     *  - partKey is the district key: power-law skewed, low cardinality. A
@@ -367,21 +350,6 @@ object Linker {
     *    `HashPartitioner` of `spark.sql.shuffle.partitions` — the same
     *    engine `LinkIndex` runs with its persisted partitioner.
     */
-  def linkTopK(spark: SparkSession, queries: Dataset[DocVec],
-      docs: Dataset[DocVec], topN: Int, idf: Dataset[IdfRow],
-      knobsByPk: Map[String, CellKnobs] = Map.empty): Dataset[LinkHit] = {
-    import spark.implicits._
-    val partial = cellHits(spark, queries.rdd, docs.rdd, idf.rdd, knobsByPk, topN)
-    spark.createDataset(
-      if (Cells.splitsDocs(knobsByPk)) Cells.mergeHits(partial, topN, shufflePartitions(spark))
-      else partial)
-  }
-
-  private def shufflePartitions(spark: SparkSession): Int =
-    spark.sessionState.conf.numShufflePartitions
-
-  /** [[linkTopK]]'s cells: each cell's partial top-k, final unless some
-    * district splits its docs. */
   private def cellHits(spark: SparkSession, queries: RDD[DocVec],
       docs: RDD[DocVec], idf: RDD[IdfRow], knobsByPk: Map[String, CellKnobs],
       topN: Int): RDD[LinkHit] = {
@@ -526,7 +494,7 @@ object Linker {
     RoutePlan(qCounts, dCounts, bcastPks, shufflePks, knobs)
   }
 
-  /** Self-tuning linkTopK (the 100×-survival path): counts both sides per
+  /** Self-tuning link (the 100×-survival path): counts both sides per
     * district (`countStats`), plans the routes from the counts with the
     * default thresholds (`planRoutes`) and links along that plan
     * ([[linkPlanned]]). Output is bit-identical to any manual knob setting
@@ -536,14 +504,21 @@ object Linker {
     linkPlanned(spark, planRoutes(countStats(spark, queries, docs),
       spark.sparkContext.defaultParallelism), queries, docs, topN, idf)
 
-  /** Link along a route plan. Per partKey with q queries and d candidate
-    * docs (`planRoutes`):
+  /** Top-k linking along a route plan, the one explicit-route link: a
+    * hand-built `RoutePlan` pins the routes and knobs, `linkTopKAuto` passes
+    * `planRoutes`' plan. Ties pinned (desc similarity, asc docId) —
+    * documented divergence from the reference's scan-order tie-keep
+    * (`Query.java:73,89`; SURVEY.md §7.4-3). Hits with similarity <= 0 are
+    * dropped (`Query.addSimiDoc` `Query.java:62`).
+    *
+    * Per partKey with q queries and d candidate docs (`planRoutes`):
     *  - docs in districts with NO queries never enter the shuffle (broadcast
     *    membership filter) — with a small query batch against a 100 TB
     *    corpus this prunes the dominant cost;
-    *  - hot-but-narrow partitions (q ≤ bcastQMax, d ≥ maxDocsPerCell) go to
-    *    `linkTopKBroadcast`: their docs stream with NO shuffle at all;
-    *  - the rest 2-D block ([[linkTopK]] with the plan's knobs): cells
+    *  - hot-but-narrow partitions (q ≤ bcastQMax, d ≥ maxDocsPerCell) take
+    *    the broadcast route (`broadcastHits`): their docs stream with NO
+    *    shuffle at all;
+    *  - the rest 2-D block (`cellHits` with the plan's knobs): cells
     *    C = ⌈q·d / targetPairsPerCell⌉ bound the per-task pair work;
     *    qBuckets ∝ √(C·q/d) and dBuckets = ⌈C/g⌉ split replication evenly
     *    (replicated bytes ≈ db·|q| + g·|d| is minimized at g/db ≈ q/d), with
@@ -551,7 +526,9 @@ object Linker {
     *    `maxDocsPerCell` task-memory valve (`Cells.valve`). The old failure
     *    modes — docs replicated ×64 regardless of query count, and one whole
     *    hot district's blobs buffered in a single task — cannot occur by
-    *    construction. */
+    *    construction.
+    *
+    * Output is bit-identical for any plan (KgPipelineSpec). */
   def linkPlanned(spark: SparkSession, plan: RoutePlan,
       queries: Dataset[DocVec], docs: Dataset[DocVec], topN: Int,
       idf: Dataset[IdfRow]): Dataset[LinkHit] = {
@@ -591,7 +568,7 @@ object Linker {
     linkTopKAuto(spark, queries, docs, topN, idf.get)
   }
 
-  /** Broadcast-query variant for hot partitions / huge doc side: the docs side
+  /** The broadcast route, for hot partitions / huge doc side: the docs side
     * streams with NO shuffle; queries (small) are broadcast grouped by
     * partKey. Emits per-partition partial top-k; final top-k is a tiny
     * `TopK` reduce of k·|queries| rows (`Cells.mergeHits`).
@@ -609,15 +586,6 @@ object Linker {
     * memory is bounded by those districts' DISTINCT-term dictionaries,
     * which address-shaped vocabularies saturate — a broadcast-dimension-
     * sized collect, like the queries themselves. */
-  def linkTopKBroadcast(spark: SparkSession, queries: Array[DocVec],
-      docs: Dataset[DocVec], topN: Int, idf: Dataset[IdfRow]): Dataset[LinkHit] = {
-    import spark.implicits._
-    spark.createDataset(Cells.mergeHits(
-      broadcastHits(spark, queries, docs.rdd, idf.rdd, topN), topN,
-      shufflePartitions(spark)))
-  }
-
-  /** [[linkTopKBroadcast]]'s per-partition partial top-k lists. */
   private def broadcastHits(spark: SparkSession, queries: Array[DocVec],
       docs: RDD[DocVec], idf: RDD[IdfRow], topN: Int): RDD[LinkHit] = {
     val idfByPk = {

@@ -5,10 +5,11 @@ package graft.model
   * Shapes derive from the reference (liuzhibin-cn/address-semantic-search):
   *  - Region mirrors `persist/RegionEntity.java:37-47` (id/parentId adjacency tree,
   *    ";"-separated alias list, int-coded type per `persist/RegionType.java:9-57`).
-  *  - Term/TermType mirror `similarity/Term.java:9-14` and `TermType.java:14-55`
-  *    (char codes kept for cache-format golden tests).
-  *  - DocVec mirrors `similarity/Document.java:11-19` recast as a columnar row
-  *    (`terms array<struct>` + pinned town/village/road/roadNum slots).
+  *  - TermTypes mirror `TermType.java:14-55` (char codes kept for
+  *    cache-format golden tests).
+  *  - DocVec mirrors `similarity/Document.java:11-19` recast as a columnar row:
+  *    a term (`similarity/Term.java:9-14`) is one position of its parallel
+  *    type/text/idf arrays, plus pinned town/village/road/roadNum slots.
   */
 object RegionTypes {
   val Undefined = 0
@@ -77,10 +78,6 @@ final case class Region(
   override def hashCode(): Int = java.lang.Long.hashCode(id)
 }
 
-/** One typed term of a document vector (`similarity/Term.java`).
-  * `refText` replaces the object backref RoadNum→Road (`Term.java:73-78`). */
-final case class TermRow(t: String, text: String, idf: Double, ref: String)
-
 /** Interpreted address / detected mention — the flat Dataset-friendly result of
   * the interpret stage (`persist/AddressEntity.java:34-49` recast immutable;
   * rawText is the round-trip invariant column). */
@@ -124,11 +121,6 @@ final case class DocVec(
 ) {
   def nTerms: Int = tTypes.length
   def termType(i: Int): Char = tTypes.charAt(i)
-  /** View as TermRows (tests / oracle / IDF-key derivation). */
-  def terms: IndexedSeq[TermRow] = (0 until nTerms).map { i =>
-    TermRow(tTypes.charAt(i).toString, texts(i), idfs(i),
-      if (tTypes.charAt(i) == 'N') road else null)
-  }
 }
 
 /** A transcript turn — the primary pipeline input shape (BASELINE.json input_hint). */

@@ -521,9 +521,6 @@ object DedupOps {
     sums.select(col("sid"), fp.as("simhash"))
   }
 
-  /** Hamming distance between two 64-bit fingerprints. */
-  def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
-
   /** Connected components of the near-dup PAIR graph → dedup GROUPS — the
     * step every production dedup pipeline ends with: near-dup similarity is
     * not transitive, so the pair emitters above (Jaccard, MinHash-LSH,
@@ -695,20 +692,10 @@ object DedupOps {
     *
     * State is keyed on the FULL text for exactness: a 64-bit hash key
     * collides with near-certainty at the 10^10-doc design point (birthday
-    * bound), silently dropping distinct documents. For bounded state on
-    * unbounded streams use `exactStreamBounded`. */
+    * bound), silently dropping distinct documents. The state grows with
+    * the distinct texts seen. */
   def exactStream(docs: DataFrame, textCol: String = "text"): DataFrame =
     docs.dropDuplicates(textCol)
-
-  /** Watermark-bounded streaming dedup: state for a text is dropped once
-    * the watermark passes its event time, capping state size for unbounded
-    * streams — dedup is then exact only within the lateness horizon (the
-    * standard trade for infinite ingest; re-dedup exactly in a batch
-    * compaction pass downstream, which `exact` provides). */
-  def exactStreamBounded(docs: DataFrame, tsCol: String, lateness: String,
-      textCol: String = "text"): DataFrame =
-    docs.withWatermark(tsCol, lateness)
-      .dropDuplicatesWithinWatermark(textCol)
 
   /** Streaming embedding near-dup against a STATIC reference corpus — the
     * continuous-ingest "is this arriving item a near-duplicate of anything

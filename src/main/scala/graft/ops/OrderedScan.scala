@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions._
 
 /** The distributed two-pass exclusive prefix sum over a total order — the
   * shared scaffolding under [[TextOps.epochShards]] (token offsets) and

@@ -57,9 +57,10 @@ object KgQueries {
         // Bounded top-k is prefix-stable (pinned ties): rank<=3 of the
         // topN=5 run IS the topN=3 run, so explain shares the run's hits.
         val hits3 = r.hits.filter(_.rank <= 3)
-        // mentionsIdf: the on-demand stamped view (run() persists mentions
-        // unstamped — the link stamps in-cell).
-        Linker.explainHits(s, r.mentionsIdf.map(_.doc), r.docsIdf, hits3).toDF()
+        // Stamp both sides for the explain (run() persists them unstamped —
+        // the link stamps in-cell).
+        Linker.explainHits(s, Linker.attachIdf(s, r.mentions.map(_.doc), r.idf),
+          Linker.attachIdf(s, r.docs, r.idf), hits3).toDF()
           .select(col("queryId"), col("docId"), col("rank"),
             round(col("similarity"), 9).as("similarity"),
             posexplode(col("matched")).as(Seq("pos", "m")))
@@ -131,7 +132,7 @@ object KgQueries {
     }
   )
 
-  /** FULL link recompute: the entire linkTopK semantics — candidate
+  /** FULL link recompute: the entire link semantics — candidate
     * generation (docs sharing ≥1 term text within the query's partKey;
     * exact, the same argument as `Linker.candidatesAndBounds`), per-term
     * lookup resolution, BOTH sides' boosts, the weighted-cosine

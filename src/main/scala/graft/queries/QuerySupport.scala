@@ -235,10 +235,11 @@ private[graft] object QuerySupport {
 
     // Per-term explain stage tables: the kg_links_explain oracle recomputes
     // scoreExplain (lookups, boosts, coord/density, tfidf) in DuckDB from
-    // these. Query side = the stamped mention docs (the on-demand
-    // mentionsIdf view — run() keeps mentions unstamped); doc
-    // side = docsIdf — both straight from the run the hit tables came from.
-    val qdocs = r.mentionsIdf.map(_.doc)
+    // these. Both sides are stamped here with the run's own idf (run()
+    // keeps them unstamped; the link stamps in-cell), straight from the run
+    // the hit tables came from.
+    val qdocs = Linker.attachIdf(s, r.mentions.map(_.doc), r.idf)
+    val ddocs = Linker.attachIdf(s, r.docs, r.idf)
     w(qdocs.flatMap(d => d.texts.indices.map(i =>
         (d.docId, i, d.texts(i), d.tTypes.charAt(i).toString, d.idfs(i))))
       .toDF("queryId", "qi", "text", "type", "idf"), "explain_qterms")
@@ -246,10 +247,10 @@ private[graft] object QuerySupport {
         d.roadNumValue, d.tTypes.count(_ == 'X')))
       .toDF("queryId", "partKey", "town", "village", "road", "roadNumValue",
         "qXCount"), "explain_qmeta")
-    w(r.docsIdf.flatMap(d => d.texts.indices.map(i =>
+    w(ddocs.flatMap(d => d.texts.indices.map(i =>
         (d.docId, i, d.texts(i), d.tTypes.charAt(i).toString, d.idfs(i))))
       .toDF("docId", "di", "text", "type", "idf"), "explain_dterms")
-    w(r.docsIdf.map(d => (d.docId, d.partKey, d.town, d.village, d.road,
+    w(ddocs.map(d => (d.docId, d.partKey, d.town, d.village, d.road,
         d.roadNum, d.roadNumValue, d.tTypes.indexOf('N')))
       .toDF("docId", "partKey", "town", "village", "road", "roadNum",
         "roadNumValue", "roadNumIdx"), "explain_dmeta")

@@ -3,18 +3,18 @@ package graft.streaming
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.kg.KgPipeline
 import graft.link.Dict
 import graft.model.Turn
 
 /** Structured-Streaming ingest for continuous transcript arrival (SURVEY.md
-  * §2-H): `readStream` → the SAME stateless mention-detection stage as batch
-  * (`mapPartitions` over the broadcast trie) → `writeStream` with a
-  * checkpointLocation. Watermarked tumbling windows + a
-  * `flatMapGroupsWithState` conversation sessionizer cover the stateful
-  * shapes. The reference has no streaming (batch import + request/response);
+  * §2-H): `readStream` → the SAME stateless mention-detection stage and link
+  * as batch (`mapPartitions` over the broadcast trie, then the persisted
+  * [[graft.link.LinkIndex]]) → a `foreachBatch` sink with a
+  * checkpointLocation. Watermarked tumbling windows cover the stateful
+  * shape. The reference has no streaming (batch import + request/response);
   * this is the engine-native idiom the north rule requires.
   */
 object TranscriptStream {
@@ -26,43 +26,6 @@ object TranscriptStream {
       .withWatermark("ts", "30 minutes")
       .groupBy(window(col("ts"), "10 minutes"), col("role"))
       .agg(count(lit(1)).as("n_turns"))
-
-  final case class ConvState(nTurns: Long, nMentions: Long, lastTsMs: Long)
-  final case class ConvSession(conv_id: String, nTurns: Long, nMentions: Long,
-      lastTsMs: Long, closed: Boolean)
-
-  /** Conversation sessionization with custom state: accumulate per-conv turn
-    * and mention counts; emit a closed session after `gapMs` idle (processing
-    * -time timeout keeps the example runnable without event-time timers). */
-  def sessionize(spark: SparkSession, turns: Dataset[Turn],
-      dict: Broadcast[Dict], gapMs: Long): Dataset[ConvSession] = {
-    import spark.implicits._
-    turns.groupByKey(_.conv_id)
-      .flatMapGroupsWithState[ConvState, ConvSession](
-        OutputMode.Append(), GroupStateTimeout.ProcessingTimeTimeout()) {
-        (convId: String, rows: Iterator[Turn], state: GroupState[ConvState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(ConvSession(convId, s.nTurns, s.nMentions, s.lastTsMs,
-              closed = true))
-          } else {
-            var s = state.getOption.getOrElse(ConvState(0, 0, 0L))
-            // Cheap mention signal for the running counter: full detection
-            // happens in the stateless mention stream; here we only need
-            // per-conv activity stats.
-            rows.foreach { t =>
-              val hasMention = t.text != null && t.text.length >= 8
-              s = ConvState(s.nTurns + 1,
-                s.nMentions + (if (hasMention) 1 else 0),
-                math.max(s.lastTsMs, t.ts.getTime))
-            }
-            state.update(s)
-            state.setTimeoutDuration(gapMs)
-            Iterator.empty
-          }
-      }
-  }
 
   /** Continuous entity LINKING: arriving turns → mentions → bounded top-k
     * link against a STATIC historical corpus → triples, per micro-batch.
@@ -97,7 +60,6 @@ object TranscriptStream {
       idf: Dataset[graft.model.IdfRow], topN: Int, checkpointDir: String)(
       sink: (Dataset[graft.model.Triple], Long) => Unit)
       : LinkStreamHandle = {
-    import spark.implicits._
     // The static side is packed, hash-partitioned by scoring cell, and
     // persisted ONCE before the first trigger; each micro-batch cogroups
     // its (tiny) query side against it with the index's own partitioner —
@@ -155,23 +117,5 @@ object TranscriptStream {
       if (query.isActive) query.stop()
       index.unpersist()
     }
-  }
-
-  /** Wire a parquet-directory stream end-to-end: detected mentions appended
-    * to `outDir`, exactly-once via `checkpointDir`. Returns the query. */
-  def runMentionIngest(spark: SparkSession, inputDir: String, outDir: String,
-      checkpointDir: String, dict: Broadcast[Dict])
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    import spark.implicits._
-    val schema = org.apache.spark.sql.Encoders.product[Turn].schema
-    val turns = spark.readStream.schema(schema).parquet(inputDir).as[Turn]
-    // Stateless mention detection: the batch stage itself, so batch/stream
-    // parity is structural.
-    KgPipeline.detectMentions(spark, turns, dict).writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .start()
   }
 }

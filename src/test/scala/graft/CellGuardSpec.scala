@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The link has one cell layout and one cell engine: only `Cells` packs doc
   * and idf blobs, and only `Cells.score` cogroups and scores cells, so the
-  * shuffled cells (`Linker.linkTopK`) and the persisted cells (`LinkIndex`)
+  * shuffled cells (`Linker.linkPlanned`) and the persisted cells (`LinkIndex`)
   * cannot drift apart on which cell a blob goes to or how a cell is
   * scored. */
 class CellGuardSpec extends AnyFunSuite {

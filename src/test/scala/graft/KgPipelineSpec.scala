@@ -50,8 +50,8 @@ class KgPipelineSpec extends AnyFunSuite {
   private def oracleIdf(docs: Seq[DocVec]): Map[String, Map[String, Double]] = {
     docs.groupBy(_.partKey).map { case (pk, ds) =>
       val df = mutable.Map.empty[String, Int]
-      ds.foreach(_.terms.foreach { t =>
-        val k = DocAnalyser.idfKey(t)
+      ds.foreach(d => (0 until d.nTerms).foreach { i =>
+        val k = DocAnalyser.idfKeyAt(d, i)
         df(k) = df.getOrElse(k, 0) + 1
       })
       val n = ds.size.toDouble
@@ -186,23 +186,33 @@ class KgPipelineSpec extends AnyFunSuite {
     // Use corpus docs themselves as queries (self-link); one cell per
     // district is the base every knob setting must reproduce.
     val pks = docs.collect().map(_.partKey).distinct.sorted
+    // A hand-built plan: `bcast` districts take the broadcast route, the
+    // rest the shuffled cells with `knobs` (one cell where absent).
+    def routed(bcast: Set[String], knobs: Map[String, Linker.CellKnobs]) =
+      key(Linker.linkPlanned(s, Linker.RoutePlan(Map.empty, Map.empty, bcast,
+        pks.toSet -- bcast, knobs), docs, docs, 5, idf))
     def run(qb: Int, db: Int) =
-      key(Linker.linkTopK(s, docs, docs, 5, idf,
-        knobsByPk = pks.map(_ -> Linker.CellKnobs(qb, db)).toMap))
+      routed(Set.empty, pks.map(_ -> Linker.CellKnobs(qb, db)).toMap)
     val base = run(1, 1)
     assert(base.nonEmpty)
     assert(run(24, 1) == base)
     assert(run(7, 3) == base)
 
     // Broadcast-query variant (hot-partition escape hatch) agrees too.
-    assert(key(Linker.linkTopKBroadcast(s, docs.collect(), docs, 5, idf)) == base)
+    assert(routed(pks.toSet, Map.empty) == base)
 
     // Per-partKey knob overrides agree (mixed g/db across districts).
     val mixed = pks.zipWithIndex.map { case (pk, i) =>
       pk -> Linker.CellKnobs(1 + (i % 5), 1 + (i % 3))
     }.toMap
-    assert(key(Linker.linkTopK(s, docs, docs, 5, idf,
-      knobsByPk = mixed)) == base)
+    assert(routed(Set.empty, mixed) == base)
+
+    // Mixed routes agree: half the districts broadcast, the rest split
+    // their docs (db > 1), so both routes' partial lists share one merge.
+    val (bcastHalf, cellHalf) = pks.splitAt(pks.length / 2)
+    assert(bcastHalf.nonEmpty && cellHalf.nonEmpty)
+    assert(routed(bcastHalf.toSet,
+      cellHalf.map(_ -> Linker.CellKnobs(3, 2)).toMap) == base)
 
     // Auto mode (counted stats → knobs + broadcast routing) agrees, with
     // thresholds forced low enough that BOTH the 2-D blocking and the

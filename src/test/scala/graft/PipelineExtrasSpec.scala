@@ -137,8 +137,17 @@ class CheckpointSpec extends AnyFunSuite {
         bdict)
     }
     val idf = runner.stage[IdfRow]("idf")(graft.link.Linker.buildIdf(s, docs))
+    // Stamp the old way, outside the link: each mention's doc from its
+    // district's idf table (absent terms get MISSING_IDF).
+    val idfByPk = idf.collect().groupBy(_.partKey).map { case (pk, rs) =>
+      val m = new java.util.HashMap[String, java.lang.Double]()
+      rs.foreach(r => m.put(r.termKey, r.idf))
+      pk -> m
+    }
     val mentions = runner.stage[graft.kg.MentionDoc]("mentions") {
-      KgPipeline.stampQueryIdf(s, KgPipeline.detectMentions(s, turns, bdict), idf)
+      KgPipeline.detectMentions(s, turns, bdict).map(m => m.copy(doc =
+        graft.analyse.DocAnalyser.stampIdf(m.doc, idfByPk.getOrElse(
+          m.doc.partKey, new java.util.HashMap[String, java.lang.Double]()))))
     }
     assert(mentions.collect().exists(_.doc.idfs.exists(_ > 0)))
     val resumed = tripleBits(

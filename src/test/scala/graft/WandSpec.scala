@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analyse.DocAnalyser
@@ -75,6 +76,16 @@ class WandSpec extends AnyFunSuite {
   private def sorted(hits: Seq[(Long, Long, Int, Long)]) =
     hits.sortBy(x => (x._1, x._3))
 
+  /** Link every query's district along the broadcast route alone. */
+  private def broadcastRoute(queries: Seq[DocVec], docs: Dataset[DocVec],
+      idf: Dataset[IdfRow]) = {
+    val s = spark
+    import s.implicits._
+    Linker.linkPlanned(s, Linker.RoutePlan(Map.empty, Map.empty,
+      queries.map(_.partKey).toSet, Set.empty, Map.empty),
+      s.createDataset(queries), docs, 5, idf).collect().map(bits).toSeq
+  }
+
   test("pruned scoring is bit-identical to exhaustive scoring, and engages") {
     val docs = cellInputs(1200)
     val dsides = docs.map(new Scoring.Side(_)).toArray
@@ -116,8 +127,7 @@ class WandSpec extends AnyFunSuite {
     val ds = s.createDataset(docs).repartition(4)
     val idf = Linker.buildIdf(s, ds).persist()
     try {
-      val got = Linker.linkTopKBroadcast(s, queries, ds, 5, idf)
-        .collect().map(bits).toSeq
+      val got = broadcastRoute(queries.toSeq, ds, idf)
       val idfRows = idf.collect().toSeq
       val exp = reference(stamped(queries.toSeq, idfRows),
         stamped(docs, idfRows), 5)
@@ -146,8 +156,7 @@ class WandSpec extends AnyFunSuite {
     val ds = s.createDataset(docs).repartition(1)
     val idf = Linker.buildIdf(s, ds).persist()
     try {
-      val got = Linker.linkTopKBroadcast(s, queries.toArray, ds, 5, idf)
-        .collect().map(bits).toSeq
+      val got = broadcastRoute(queries, ds, idf)
       val idfRows = idf.collect().toSeq
       val expStamped = reference(stamped(queries, idfRows),
         stamped(docs, idfRows), 5)
