@@ -2,9 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointBlocks.release
 import org.apache.spark.sql.graft.SizedSession
-import org.apache.spark.storage.StorageLevel
 
 /** Analytics over the MATERIALIZED knowledge graph (north rule: "graph
   * materialize" is a first-class output, so the engine should also be able
@@ -16,6 +14,13 @@ import org.apache.spark.storage.StorageLevel
   * The reference has no graph analytics (its graph is the static region
   * tree); this operator is engine-native capability on top of the
   * reference-semantics KG tables.
+  *
+  * Every operator here is loan-style and sized: it runs in a
+  * [[org.apache.spark.sql.graft.SizedSession]] scope, the caller
+  * materializes the result inside `use` (write, collect, stash), and the
+  * scope frees every cache and checkpoint the operator made when `use`
+  * returns or throws. A plain DataFrame return would strand the last
+  * iteration's blocks in the block manager (the LinkIndex lesson).
   */
 object GraphOps {
 
@@ -38,47 +43,31 @@ object GraphOps {
     * does NOT do this (cache substitution happens at physical planning
     * only; measured: the analyzed tree re-embeds the full upstream edge
     * lineage per iteration until AQE's plan-string logging alone took
-    * minutes at sf0.1). Checkpoint blocks are freed DETERMINISTICALLY via
-    * [[org.apache.spark.sql.graft.CheckpointBlocks]] (Dataset.unpersist
-    * cannot release them). Hot entities (power-law hubs — the co-mention
-    * graph's defining skew) cost rows spread across tasks in the dst
-    * aggregation, never a per-key array.
+    * minutes at sf0.1). Each iteration drops the previous one's blocks.
+    * Hot entities (power-law hubs — the co-mention graph's defining skew)
+    * cost rows spread across tasks in the dst aggregation, never a per-key
+    * array.
     *
     * Output: (doc_id, pagerank) with pagerank rounded to 9 decimals — sums
     * of doubles are accumulation-order-dependent at ~1e-16, and the rounded
     * contract is what lets an independent engine (the DuckDB oracle's
     * chained-CTE recomputation) reproduce the values exactly, the same
-    * quantization argument as `Linker.TopK`.
-    *
-    * Loan-pattern API: the result rides on iteration-materialized
-    * checkpoint blocks, so the caller materializes it inside `use` (write,
-    * collect, stash) and EVERYTHING — edge cache, transition table, node
-    * list, final ranks — is released on return. A plain DataFrame return
-    * would strand the last iteration's blocks in the block manager (the
-    * LinkIndex lesson). */
+    * quantization argument as `Linker.TopK`. */
   def pageRank[T](edges: DataFrame, iters: Int, damping: Double = 0.85)
-      (use: DataFrame => T): T = {
-    // The edge list often arrives with an expensive lineage (the co-mention
-    // self-join over the full pipeline); it is read twice below (node list,
-    // transition table) — cache it for the duration. Everything after this
-    // persist runs inside the try: a mid-iteration failure must still
-    // release every cache/checkpoint (the leak class the loan pattern exists
-    // to prevent).
-    val e0 = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    var nodes: DataFrame = null
-    var trans: DataFrame = null
-    var ranks: DataFrame = null
+      (use: DataFrame => T): T =
     // AQE off for the iteration loop: per-stage re-planning latency is pure
     // overhead on graph-sized exchanges (it dominated the round jobs at
     // sf0.1).
-    try SizedSession(edges.sparkSession) { w =>
-      val e = w(e0)
+    SizedSession(edges.sparkSession) { w =>
+      // The edge list often arrives with an expensive lineage (the co-mention
+      // self-join over the full pipeline); it is read twice below (node list,
+      // transition table) — cache it for the duration.
+      val e = w(w.persist(edges))
       val ud = e.select(col("src"), col("dst"),
           col("weight").cast("double").as("w"))
         .union(e.select(col("dst").as("src"), col("src").as("dst"),
           col("weight").cast("double").as("w")))
-      nodes = ud.select(col("src").as("id")).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val nodes = w.persist(ud.select(col("src").as("id")).distinct())
       val n = nodes.count() // bounded: distinct entity ids, one action
       if (n == 0)
         // No edges (e.g. a scale where no rank-1 co-mentions exist): empty
@@ -87,9 +76,8 @@ object GraphOps {
           lit(0.0).as("pagerank")).where(lit(false)))
       else {
         val outW = ud.groupBy("src").agg(sum("w").as("out_w"))
-        trans = ud.join(outW, "src")
-          .select(col("src"), col("dst"), (col("w") / col("out_w")).as("p"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val trans = w.persist(ud.join(outW, "src")
+          .select(col("src"), col("dst"), (col("w") / col("out_w")).as("p")))
         val m = trans.count() // materialize once; iterations re-read the blocks
         // Size the ITERATION shuffles to the graph, not the corpus-width
         // session default (measured: ~6s/iteration on a 6.6k-node graph at
@@ -98,34 +86,27 @@ object GraphOps {
         // at sf0.1.
         w.size(math.max(n, m))
         val base = (1.0 - damping) / n
-        ranks = nodes.select(col("id"), lit(1.0 / n).as("rank"))
-          .localCheckpoint(true)
+        var ranks = w.localCheckpoint(
+          nodes.select(col("id"), lit(1.0 / n).as("rank")))
         var it = 0
         while (it < iters) {
-          val next = trans.join(ranks, trans("src") === ranks("id"))
-            .groupBy(trans("dst").as("nid"))
-            .agg(sum(col("p") * col("rank")).as("inflow"))
-            .join(nodes, nodes("id") === col("nid"), "right")
-            .select(col("id"),
-              (lit(base) + lit(damping) * coalesce(col("inflow"), lit(0.0)))
-                .as("rank"))
-            .localCheckpoint(true) // eager: materialized before old blocks go
-          release(ranks)
+          // eager: materialized before the old blocks go
+          val next = w.localCheckpoint(
+            trans.join(ranks, trans("src") === ranks("id"))
+              .groupBy(trans("dst").as("nid"))
+              .agg(sum(col("p") * col("rank")).as("inflow"))
+              .join(nodes, nodes("id") === col("nid"), "right")
+              .select(col("id"),
+                (lit(base) + lit(damping) * coalesce(col("inflow"), lit(0.0)))
+                  .as("rank")))
+          w.drop(ranks)
           ranks = next
           it += 1
         }
         use(ranks.select(col("id").as("doc_id"),
           round(col("rank"), 9).as("pagerank")))
       }
-    } finally {
-      e0.unpersist()
-      if (nodes != null) { nodes.unpersist(); () }
-      if (trans != null) { trans.unpersist(); () }
-      // the final iteration's checkpoint blocks
-      if (ranks != null) release(ranks)
-      ()
     }
-  }
 
   /** Weighted label propagation (community detection; Raghavan et al.
     * 2007) on the same UNDIRECTED weighted edge list as [[pageRank]]
@@ -154,21 +135,14 @@ object GraphOps {
     * array); hub nodes cost rows spread across tasks; the non-updating
     * parity rides a narrow filter-union. Eager `localCheckpoint` per
     * half-step collapses the analyzed plan (the pageRank lesson: plain
-    * persist leaves the full lineage in every AQE re-plan), blocks freed
-    * deterministically via [[org.apache.spark.sql.graft.CheckpointBlocks]].
-    *
-    * Loan-pattern API like [[pageRank]]: materialize inside `use`; all
-    * caches and checkpoint blocks are released on return. */
+    * persist leaves the full lineage in every AQE re-plan). */
   def labelPropagation[T](edges: DataFrame, iters: Int)
-      (use: DataFrame => T): T = {
-    val e0 = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    var ud: DataFrame = null
-    var labels: DataFrame = null
+      (use: DataFrame => T): T =
     // AQE's per-stage re-planning adds scheduling latency to every exchange
     // of every round job — pure overhead once the shuffles are graph-sized
     // (measured: it dominated the 13k-edge rounds at sf0.1).
-    try SizedSession(edges.sparkSession) { w =>
-      val e = w(e0)
+    SizedSession(edges.sparkSession) { w =>
+      val e = w(w.persist(edges))
       val eCnt = e.count()
       if (eCnt == 0)
         use(e.select(col("src").as("doc_id"),
@@ -185,13 +159,13 @@ object GraphOps {
             col("weight").cast("long").as("w"))
           .union(e.select(col("dst").as("src"), col("src").as("dst"),
             col("weight").cast("long").as("w")))
-        ud = sym.repartition(gp).persist(StorageLevel.MEMORY_AND_DISK)
+        val ud = w.persist(sym.repartition(gp))
         ud.count() // materialize once; rounds re-read the blocks
         // Every node in an edge list has ≥1 incident edge, so the dst-side
         // aggregation reaches ALL parity-p nodes each half-step — no
         // dangling-node join.
-        labels = ud.select(col("src").as("id"), col("src").as("label"))
-          .distinct().localCheckpoint(true)
+        var labels = w.localCheckpoint(
+          ud.select(col("src").as("id"), col("src").as("label")).distinct())
         def halfStep(prev: DataFrame, p: Int): DataFrame = {
           val upd = ud.join(prev, ud("src") === prev("id"))
             .where(pmod(ud("dst"), lit(2)) === p)
@@ -211,20 +185,14 @@ object GraphOps {
           // half-step composes lazily over the even one — the round's plan
           // stays constant-size over the checkpointed leaf, and the job count
           // halves (job-launch overhead dominated the 6.6k-node graph).
-          val next = halfStep(halfStep(labels, 0), 1).localCheckpoint(true)
-          release(labels)
+          val next = w.localCheckpoint(halfStep(halfStep(labels, 0), 1))
+          w.drop(labels)
           labels = next
           it += 1
         }
         use(labels.select(col("id").as("doc_id"), col("label").as("community")))
       }
-    } finally {
-      e0.unpersist()
-      if (ud != null) { ud.unpersist(); () }
-      if (labels != null) release(labels)
-      ()
     }
-  }
 
   /** Per-node triangle count + local clustering coefficient on the
     * canonical (src < dst) undirected edge list — the KG-quality signals a
@@ -252,39 +220,32 @@ object GraphOps {
     * sf0.1). The shared tables (edges, degrees, oriented) are therefore
     * eagerly `localCheckpoint`ed — each is computed ONCE and every branch
     * reads its blocks — and the shuffles are sized to the graph, with AQE
-    * off, like [[pageRank]]. Loan-pattern API
-    * like [[pageRank]]: materialize inside `use`; all checkpoint blocks
-    * are released on return.
+    * off, like [[pageRank]].
     *
     * Output: (doc_id, degree, triangles, clustering) — clustering =
     * 2·T/(deg·(deg−1)) rounded to 9 (the one division; counts are exact
     * BIGINTs), 0 for degree-1 nodes. */
-  def triangleStats[T](edges: DataFrame)(use: DataFrame => T): T = {
-    var e: DataFrame = null
-    var deg: DataFrame = null
-    var oriented: DataFrame = null
+  def triangleStats[T](edges: DataFrame)(use: DataFrame => T): T =
     // AQE off for the whole operator: its many graph-sized exchanges
     // (degrees, orientation joins, wedge join, corner agg) each paid AQE's
     // per-stage re-planning latency.
-    try SizedSession(edges.sparkSession) { w =>
-      e = w(edges).select(col("src"), col("dst")).localCheckpoint(true)
+    SizedSession(edges.sparkSession) { w =>
+      val e = w.localCheckpoint(w(edges).select(col("src"), col("dst")))
       w.size(e.count()) // cheap: counts the checkpointed blocks
-      deg = e.select(col("src").as("id"))
+      val deg = w.localCheckpoint(e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id")))
-        .groupBy("id").agg(count(lit(1)).as("deg"))
-        .localCheckpoint(true)
+        .groupBy("id").agg(count(lit(1)).as("deg")))
       // Orient by (deg, id): lo = the smaller endpoint under that order.
       val withDeg = e
         .join(deg.withColumnRenamed("id", "src").withColumnRenamed("deg", "sdeg"), "src")
         .join(deg.withColumnRenamed("id", "dst").withColumnRenamed("deg", "ddeg"), "dst")
-      oriented = withDeg.select(
+      val oriented = w.localCheckpoint(withDeg.select(
         when(struct(col("sdeg"), col("src")) < struct(col("ddeg"), col("dst")),
           struct(col("src").as("lo"), col("dst").as("hi")))
           .otherwise(struct(col("dst").as("lo"), col("src").as("hi")))
           .as("o"))
         .select(col("o.lo").as("lo"), col("o.hi").as("hi"))
-        .join(deg.withColumnRenamed("id", "hi").withColumnRenamed("deg", "hdeg"), "hi")
-        .localCheckpoint(true)
+        .join(deg.withColumnRenamed("id", "hi").withColumnRenamed("deg", "hdeg"), "hi"))
       // Wedges at the lowest-ranked corner: out-neighbor pairs ordered by
       // (deg, id) so each triangle closes exactly once.
       val w1 = oriented.select(col("lo").as("a"), col("hi").as("b"),
@@ -308,13 +269,7 @@ object GraphOps {
               lit(2.0) * coalesce(col("triangles"), lit(0L)) /
                 (col("deg") * (col("deg") - lit(1L))), 9))
             .as("clustering")))
-    } finally {
-      if (e != null) release(e)
-      if (deg != null) release(deg)
-      if (oriented != null) release(oriented)
-      ()
     }
-  }
 
   /** k-core peeling (Seidman 1983) — dense-subgraph extraction over the
     * materialized graph: repeatedly remove nodes with fewer than `k` alive
@@ -331,33 +286,28 @@ object GraphOps {
     * edges — hubs cost rows spread across tasks, never per-key arrays.
     * Returns one row per input node: (doc_id, removed_round = 1-based peel
     * round or 0 if in-core, core_deg = alive-degree at exit, in_core,
-    * converged). Loan pattern: shared checkpoints released on return. */
+    * converged). */
   def kCore[T](edges: DataFrame, k: Int, rounds: Int = 6)
       (use: DataFrame => T): T = {
     require(k >= 1 && rounds >= 1)
-    val ep0 = edges.select(col("src"), col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var sym: DataFrame = null
-    val aliveTables = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // Sized and AQE off like pageRank. The symmetrized table is
     // REPARTITIONED down before the eager checkpoint so each round's two
     // alive-joins scan gp graph-sized blocks, not one tiny block per
     // upstream corpus-width partition.
-    try SizedSession(edges.sparkSession) { w =>
-      val ep = w(ep0)
+    SizedSession(edges.sparkSession) { w =>
+      val ep = w(w.persist(edges.select(col("src"), col("dst"))))
       val eCnt = ep.count() // materializes the edge cache; one bounded action
       val gp = w.size(2 * eCnt)
-      sym = ep.select(col("src").as("id"), col("dst").as("nbr"))
-        .union(ep.select(col("dst").as("id"), col("src").as("nbr")))
-        .repartition(gp)
-        .localCheckpoint(true)
+      val sym = w.localCheckpoint(
+        ep.select(col("src").as("id"), col("dst").as("nbr"))
+          .union(ep.select(col("dst").as("id"), col("src").as("nbr")))
+          .repartition(gp))
       val nodes = sym.select("id").distinct()
       // alive: the ids still in the graph. Only round 0's table is its own
       // checkpoint; later rounds derive alive as a NARROW filter over that
       // round's checkpointed `stamped` leaf (re-scanning gp small blocks is
       // cheaper than a second eager checkpoint job per round).
-      var alive = nodes.localCheckpoint(true)
-      aliveTables += alive
+      var alive = w.localCheckpoint(nodes)
       val removed = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       var lastDeg: DataFrame = null
       var converged = false
@@ -368,11 +318,9 @@ object GraphOps {
           .join(alive.select(col("id").as("nbr")), "nbr")
           .groupBy("id").agg(count(lit(1)).as("core_deg"))
         // Nodes with zero alive neighbors have no deg row: left join + 0.
-        val stamped = alive.join(deg, Seq("id"), "left")
+        val stamped = w.localCheckpoint(alive.join(deg, Seq("id"), "left")
           .select(col("id"),
-            coalesce(col("core_deg"), lit(0L)).as("core_deg"))
-          .localCheckpoint(true)
-        aliveTables += stamped
+            coalesce(col("core_deg"), lit(0L)).as("core_deg")))
         val peeled = stamped.where(col("core_deg") < k)
           .select(col("id"), lit(r.toLong).as("removed_round"),
             col("core_deg"))
@@ -392,11 +340,6 @@ object GraphOps {
           (col("removed_round") === 0L).as("in_core"),
           lit(converged).as("converged"))
       use(out)
-    } finally {
-      ep0.unpersist()
-      if (sym != null) release(sym)
-      aliveTables.foreach(release)
-      ()
     }
   }
 
@@ -420,20 +363,17 @@ object GraphOps {
     * round(…,6) contract. The declared q49 entry (`q49_adamic_adar`) runs
     * with `maxHubDeg` = ∞ and its DuckDB oracle replays every wedge, so a
     * hub-capped entry changes the declared output. Sized and AQE off like
-    * [[pageRank]]. Loan pattern: the result is materialized inside `use`
-    * and the shared checkpoints are released on return. */
+    * [[pageRank]]. */
   def adamicAdar[T](edges: DataFrame, minCommon: Int = 2,
-      maxHubDeg: Long = Long.MaxValue)(use: DataFrame => T): T = {
-    var e: DataFrame = null
-    var nbr: DataFrame = null
-    try SizedSession(edges.sparkSession) { w =>
-      e = w(edges).select(col("src"), col("dst")).localCheckpoint(true)
+      maxHubDeg: Long = Long.MaxValue)(use: DataFrame => T): T =
+    SizedSession(edges.sparkSession) { w =>
+      val e = w.localCheckpoint(w(edges).select(col("src"), col("dst")))
       w.size(2 * e.count()) // cheap: counts the checkpointed blocks
       val sym = e.select(col("src").as("c"), col("dst").as("n"))
         .union(e.select(col("dst").as("c"), col("src").as("n")))
       val deg = sym.groupBy("c").agg(count(lit(1)).as("cdeg"))
-      nbr = sym.join(deg.where(col("cdeg") <= maxHubDeg), "c")
-        .localCheckpoint(true)
+      val nbr = w.localCheckpoint(
+        sym.join(deg.where(col("cdeg") <= maxHubDeg), "c"))
       val pairs = nbr.select(col("c"), col("n").as("a"), col("cdeg"))
         .join(nbr.select(col("c"), col("n").as("b")), "c")
         .where(col("a") < col("b"))
@@ -446,10 +386,5 @@ object GraphOps {
           Seq("a", "b"), "left_anti")
         .where(col("n_common") >= minCommon)
       use(out)
-    } finally {
-      if (e != null) release(e)
-      if (nbr != null) release(nbr)
-      ()
     }
-  }
 }

@@ -144,45 +144,51 @@ object KgPipeline {
     * "adjacency tables" alongside the region backbone). Scale shape: the
     * per-conversation link list is tiny (mentions per conv ≈ turns/3), so
     * the conv-keyed self-join is bounded per key; the edge aggregation is
-    * one hash shuffle on (src, dst). */
+    * one hash shuffle on (src, dst). Sized to the links (at sf0.1 the
+    * session-width version paid 8 exchanges for a 1.2k-edge output); the
+    * result leaves its [[SizedSession]] scope as a checkpoint. */
   def coMentionEdges(spark: SparkSession, mentions: Dataset[MentionDoc],
-      hits: Dataset[LinkHit], topRank: Int = 1): DataFrame = {
-    import org.apache.spark.sql.functions._
-    // The per-conversation link list is query-batch-sized: at sf0.1 the
-    // session-width version paid 8 exchanges for a 1.2k-edge output. The
-    // result is eagerly checkpointed (one row per co-mentioned entity pair),
-    // so the caller holds edge-sized blocks only — release them with
-    // CheckpointBlocks.release when done.
-    withConvLinks(spark, mentions, hits, topRank) { (links, n) =>
-      SizedSession(spark) { w =>
-        w.size(n)
-        val l = w(links)
-        w.checkpoint(l.as("l").join(l.as("r"),
-            col("l.convId") === col("r.convId") && col("l.docId") < col("r.docId"))
-          .groupBy(col("l.docId").as("src"), col("r.docId").as("dst"))
-          .agg(count(lit(1)).as("weight")))
-      }
+      hits: Dataset[LinkHit], topRank: Int = 1): DataFrame =
+    sizedTo(convLinks(spark, mentions, hits, topRank)) { (w, links, _) =>
+      w.checkpoint(pairCounts(links, "weight"))
     }
-  }
 
-  /** Loan the linked-conversations table shared by the co-mention
-    * analytics: top-`topRank` hits ⋈ mention (queryId, convId) →
-    * DISTINCT (convId, docId). It is query-batch-sized, persisted for the
-    * callers' join branches and counted once (the count also materializes
-    * the upstream pipeline caches), so `use` can size its plan to the row
-    * count; released when `use` returns. */
-  private def withConvLinks[A](spark: SparkSession,
-      mentions: Dataset[MentionDoc], hits: Dataset[LinkHit], topRank: Int)(
-      use: (DataFrame, Long) => A): A = {
+  /** The linked-conversations table shared by the co-mention analytics:
+    * top-`topRank` hits ⋈ mention (queryId, convId) → DISTINCT
+    * (convId, docId). */
+  private def convLinks(spark: SparkSession, mentions: Dataset[MentionDoc],
+      hits: Dataset[LinkHit], topRank: Int): DataFrame = {
     import spark.implicits._
-    val links = hits.filter(_.rank <= topRank).toDF()
+    hits.filter(_.rank <= topRank).toDF()
       .join(mentions.map(m => (m.queryId, m.convId)).toDF("queryId", "convId"),
         "queryId")
       .select("convId", "docId").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try use(links, links.count())
-    finally { links.unpersist(); () }
   }
+
+  /** Co-linked entity pairs (src < dst) of a links table, each with the
+    * number of conversations linking both, as `weight`: the conv-keyed
+    * self-join and count shared by [[coMentionEdges]] and [[pmiEdges]]. */
+  private def pairCounts(links: DataFrame, weight: String): DataFrame = {
+    import org.apache.spark.sql.functions._
+    links.as("l").join(links.as("r"),
+        col("l.convId") === col("r.convId") && col("l.docId") < col("r.docId"))
+      .groupBy(col("l.docId").as("src"), col("r.docId").as("dst"))
+      .agg(count(lit(1)).as(weight))
+  }
+
+  /** Run `f` in a [[SizedSession]] scope sized to `table`, a
+    * query-batch-sized input read by several branches of `f`'s plan.
+    * `table` is persisted through the scope and counted under its own
+    * (caller's) session: the count also materializes the upstream pipeline
+    * caches, which the AQE-off clone would re-plan. `f` gets the scope, the
+    * clone-bound table and the sized width. */
+  private def sizedTo[A](table: DataFrame)(
+      f: (SizedSession, DataFrame, Int) => A): A =
+    SizedSession(table.sparkSession) { w =>
+      val held = w.persist(table)
+      val width = w.size(held.count())
+      f(w, w(held), width)
+    }
 
   /** Deterministic negative sampling for KG-embedding training (the
     * TransE-family corruption step, Bordes et al. 2013) — the bridge from
@@ -204,54 +210,47 @@ object KgPipeline {
     * pool-sized build side) + one anti-join against the positives; every
     * operand is an exact BIGINT, so the DuckDB oracle replays pool
     * indexing, hash picks, and the filter exactly. Returns
-    * (query_id, pos_doc_id, slot, neg_doc_id). */
+    * (query_id, pos_doc_id, slot, neg_doc_id).
+    *
+    * The positives are query-batch-sized (the session-width version was 15
+    * jobs / 674 tasks at sf0.1 for a 5.8k-row output), so the pool
+    * prefix-sum, the pick join and the filter anti-join are sized to their
+    * count; the result (≤ |pos|·k rows) leaves the [[SizedSession]] scope as
+    * a checkpoint. */
   def negativeSamples(spark: SparkSession, hits: Dataset[LinkHit],
       k: Int = 4, topRank: Int = 1): DataFrame = {
     import org.apache.spark.sql.functions._
     val p = graft.ops.DedupOps.HashP
     val params = graft.ops.DedupOps.minHashParams(k)
-    // Positives are query-batch-sized (the session-width version was 15
-    // jobs / 674 tasks at sf0.1 for a 5.8k-row output): persist + count
-    // once, then derive the pool prefix-sum, the pick join and the filter
-    // anti-join sized to that count. Result eagerly checkpointed (≤ |pos|·k
-    // rows — the same query-batch bound as the hits themselves) so the
-    // shared pos table can be released here; callers free the blocks with
-    // CheckpointBlocks.release after materializing.
-    val pos0 = hits.filter(_.rank <= topRank).toDF()
-      .select(col("queryId"), col("docId")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nPos = pos0.count() // also materializes the upstream pipeline caches
-      SizedSession(spark) { w =>
-        val width = w.size(nPos)
-        val pos = w(pos0)
-        val pool = graft.ops.OrderedScan.exclusivePrefixSum(
-          pos.select(col("docId").as("pool_doc")).distinct(),
-          Seq(col("pool_doc")), lit(1L), "pool_idx", numPartitions = width)
-        val nPool = pool.agg(count(lit(1)).as("n_pool"))
-        val seed = pmod(
-          pmod(col("queryId"), lit(p)) * 31L + pmod(col("docId"), lit(p)),
-          lit(p))
-        val slots = params.zipWithIndex.map { case ((a, b), i) =>
-          struct(lit(i.toLong).as("slot"),
-            pmod(col("seed") * lit(a) + lit(b), lit(p)).as("h"))
-        }
-        val picks = pos.crossJoin(broadcast(nPool))
-          .withColumn("seed", seed)
-          .select(col("queryId"), col("docId"),
-            explode(array(slots: _*)).as("s"), col("n_pool"))
-          .select(col("queryId"), col("docId"), col("s.slot").as("slot"),
-            pmod(col("s.h"), col("n_pool")).as("pool_idx"))
-          .join(pool, "pool_idx")
-        // Filtered setting: a corruption that equals the positive's own
-        // entity or ANY true link of the same query is dropped.
-        w.checkpoint(picks
-          .join(pos.toDF("queryId", "pool_doc"), Seq("queryId", "pool_doc"),
-            "left_anti")
-          .select(col("queryId").as("query_id"), col("docId").as("pos_doc_id"),
-            col("slot"), col("pool_doc").as("neg_doc_id")))
+    sizedTo(hits.filter(_.rank <= topRank).toDF()
+        .select(col("queryId"), col("docId")).distinct()) { (w, pos, width) =>
+      val pool = graft.ops.OrderedScan.exclusivePrefixSum(
+        pos.select(col("docId").as("pool_doc")).distinct(),
+        Seq(col("pool_doc")), lit(1L), "pool_idx", numPartitions = width,
+        checkpoint = w.localCheckpoint)
+      val nPool = pool.agg(count(lit(1)).as("n_pool"))
+      val seed = pmod(
+        pmod(col("queryId"), lit(p)) * 31L + pmod(col("docId"), lit(p)),
+        lit(p))
+      val slots = params.zipWithIndex.map { case ((a, b), i) =>
+        struct(lit(i.toLong).as("slot"),
+          pmod(col("seed") * lit(a) + lit(b), lit(p)).as("h"))
       }
-    } finally { pos0.unpersist(); () }
+      val picks = pos.crossJoin(broadcast(nPool))
+        .withColumn("seed", seed)
+        .select(col("queryId"), col("docId"),
+          explode(array(slots: _*)).as("s"), col("n_pool"))
+        .select(col("queryId"), col("docId"), col("s.slot").as("slot"),
+          pmod(col("s.h"), col("n_pool")).as("pool_idx"))
+        .join(pool, "pool_idx")
+      // Filtered setting: a corruption that equals the positive's own
+      // entity or ANY true link of the same query is dropped.
+      w.checkpoint(picks
+        .join(pos.toDF("queryId", "pool_doc"), Seq("queryId", "pool_doc"),
+          "left_anti")
+        .select(col("queryId").as("query_id"), col("docId").as("pos_doc_id"),
+          col("slot"), col("pool_doc").as("neg_doc_id")))
+    }
   }
 
   /** TF-IDF keyphrase extraction per conversation — the document-TAGGING
@@ -307,34 +306,24 @@ object KgPipeline {
     * exact doubles), so the DuckDB oracle replays the whole thing with the
     * single ln under the round(…,6) contract. Scale shape: the same
     * conv-keyed bounded self-join as [[coMentionEdges]] plus one per-entity
-    * hash agg and a broadcast 1-row scalar — nothing new shuffles. */
+    * hash agg and a broadcast 1-row scalar — nothing new shuffles. The
+    * whole derivation — two aggs, the pair self-join, two joins — is sized
+    * to the links count (at sf0.1 the session-width version was 19 jobs /
+    * 1090 tasks for a 1.2k-row output). */
   def pmiEdges(spark: SparkSession, mentions: Dataset[MentionDoc],
       hits: Dataset[LinkHit], topRank: Int = 1): DataFrame = {
     import org.apache.spark.sql.functions._
-    // Size the whole PMI derivation — two aggs, the pair self-join, two
-    // joins — to the links count (at sf0.1 the session-width version was
-    // 19 jobs / 1090 tasks for a 1.2k-row output).
-    withConvLinks(spark, mentions, hits, topRank) { (links0, n) =>
-      SizedSession(spark) { w =>
-        w.size(n)
-        val links = w(links0)
-        val tot = links.agg(count_distinct(col("convId")).as("n_convs"))
-        val ent = links.groupBy(col("docId")).agg(count(lit(1)).as("w_ent"))
-        val pairs = links.as("l").join(links.as("r"),
-            col("l.convId") === col("r.convId") && col("l.docId") < col("r.docId"))
-          .groupBy(col("l.docId").as("src"), col("r.docId").as("dst"))
-          .agg(count(lit(1)).as("w_pair"))
-        val out = pairs
-          .join(ent.toDF("src", "w_src"), "src")
-          .join(ent.toDF("dst", "w_dst"), "dst")
-          .crossJoin(broadcast(tot))
-          .select(col("src"), col("dst"), col("w_pair"), col("w_src"),
-            col("w_dst"), col("n_convs"),
-            round(log(col("w_pair").cast("double") * col("n_convs") /
-              (col("w_src").cast("double") * col("w_dst"))), 6).as("pmi"))
-        // Materialize before releasing the shared links table.
-        w.checkpoint(out)
-      }
+    sizedTo(convLinks(spark, mentions, hits, topRank)) { (w, links, _) =>
+      val tot = links.agg(count_distinct(col("convId")).as("n_convs"))
+      val ent = links.groupBy(col("docId")).agg(count(lit(1)).as("w_ent"))
+      w.checkpoint(pairCounts(links, "w_pair")
+        .join(ent.toDF("src", "w_src"), "src")
+        .join(ent.toDF("dst", "w_dst"), "dst")
+        .crossJoin(broadcast(tot))
+        .select(col("src"), col("dst"), col("w_pair"), col("w_src"),
+          col("w_dst"), col("n_convs"),
+          round(log(col("w_pair").cast("double") * col("n_convs") /
+            (col("w_src").cast("double") * col("w_dst"))), 6).as("pmi")))
     }
   }
 
@@ -363,36 +352,29 @@ object KgPipeline {
     * distinct-conversation count, over the top-`topRank` link hits. The KG
     * consumer's "entity activity timeline" — which canonical entities are
     * live, emerging, or stale. One hash aggregation keyed by entity;
-    * the hits←mentions←turns joins are all on the tiny mention-side keys. */
+    * the hits←mentions←turns joins are all on the tiny mention-side keys.
+    * The links side is query-batch-sized: it is broadcast into the turns
+    * join so the turns side never shuffles, and the entity agg is sized to
+    * its count. The result leaves its [[SizedSession]] scope as a
+    * checkpoint. */
   def entityTimeline(spark: SparkSession, mentions: Dataset[MentionDoc],
       hits: Dataset[LinkHit], turns: Dataset[Turn],
       topRank: Int = 1): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    // The links side is query-batch-sized: persist + count it, then
-    // broadcast it into the turns join so the turns side never shuffles, and
-    // size the final entity agg to the counted links. Output checkpointed
-    // (one row per linked entity); callers release with
-    // CheckpointBlocks.release.
-    val links = hits.filter(_.rank <= topRank).toDF()
-      .join(mentions.map(m =>
-          (m.queryId, s"${m.convId}#${m.turnIdx}", m.convId))
-        .toDF("queryId", "subj", "convId"), "queryId")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = links.count() // also materializes the upstream pipeline caches
-      SizedSession(spark) { w =>
-        w.size(n)
-        val tdf = w(turns
-          .map(t => (s"${t.conv_id}#${t.turn_idx}", t.ts.getTime))
-          .toDF("subj", "ts_ms"))
-        w.checkpoint(broadcast(w(links)).join(tdf, "subj")
-          .groupBy(col("docId").as("doc_id"))
-          .agg(min("ts_ms").as("first_ms"), max("ts_ms").as("last_ms"),
-            count(lit(1)).as("n_mentions"),
-            countDistinct("convId").as("n_convs")))
-      }
-    } finally { links.unpersist(); () }
+    sizedTo(hits.filter(_.rank <= topRank).toDF()
+        .join(mentions.map(m =>
+            (m.queryId, s"${m.convId}#${m.turnIdx}", m.convId))
+          .toDF("queryId", "subj", "convId"), "queryId")) { (w, links, _) =>
+      val tdf = w(turns
+        .map(t => (s"${t.conv_id}#${t.turn_idx}", t.ts.getTime))
+        .toDF("subj", "ts_ms"))
+      w.checkpoint(broadcast(links).join(tdf, "subj")
+        .groupBy(col("docId").as("doc_id"))
+        .agg(min("ts_ms").as("first_ms"), max("ts_ms").as("last_ms"),
+          count(lit(1)).as("n_mentions"),
+          countDistinct("convId").as("n_convs")))
+    }
   }
 
   /** Tool→entity adjacency: an edge (tool, docId, weight) whenever a
@@ -403,25 +385,21 @@ object KgPipeline {
     * asks for. Scale shape: both sides are per-conversation DISTINCT lists
     * (tools per conv and linked entities per conv are tiny), so the
     * conv-keyed join is bounded per key; the edge aggregation is one hash
-    * shuffle on (tool, docId). */
+    * shuffle on (tool, docId). The entity-conversation side is broadcast
+    * into the tool join; the per-conv tool DISTINCT still shuffles, sized
+    * to the counted links, as is the edge agg. The result leaves its
+    * [[SizedSession]] scope as a checkpoint. */
   def toolEntityEdges(spark: SparkSession, mentions: Dataset[MentionDoc],
       hits: Dataset[LinkHit], turns: Dataset[Turn],
       topRank: Int = 1): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    // The entity-conversation side is broadcast into the tool join (the
-    // per-conv tool DISTINCT still shuffles, but sized to the counted
-    // links, as is the edge agg). Output checkpointed; callers release
-    // with CheckpointBlocks.release.
-    withConvLinks(spark, mentions, hits, topRank) { (entConv, n) =>
-      SizedSession(spark) { w =>
-        w.size(n)
-        val toolConv = w(turns.filter(t => t.tool != null && t.tool.nonEmpty)
-          .map(t => (t.conv_id, t.tool)).toDF("convId", "tool")).distinct()
-        w.checkpoint(broadcast(w(entConv)).join(toolConv, "convId")
-          .groupBy(col("tool"), col("docId").as("doc_id"))
-          .agg(count(lit(1)).as("weight")))
-      }
+    sizedTo(convLinks(spark, mentions, hits, topRank)) { (w, entConv, _) =>
+      val toolConv = w(turns.filter(t => t.tool != null && t.tool.nonEmpty)
+        .map(t => (t.conv_id, t.tool)).toDF("convId", "tool")).distinct()
+      w.checkpoint(broadcast(entConv).join(toolConv, "convId")
+        .groupBy(col("tool"), col("docId").as("doc_id"))
+        .agg(count(lit(1)).as("weight")))
     }
   }
 

@@ -24,38 +24,45 @@ object Dict {
   }
 
   /** Close the reference's dictionary-growth loop (SURVEY.md §3.3 footnote):
-    * merge discovered town/village surface forms into the region tree and
-    * rebuild the trie, so the NEXT interpret pass resolves them as real
-    * Town/Village regions — the Spark-side analog of `ExtractTown.main` →
+    * merge the [[discoveredTowns]] regions into the region tree and rebuild
+    * the trie, so the NEXT interpret pass resolves them as real Town/Village
+    * regions — the Spark-side analog of `ExtractTown.main` →
     * `AddressPersister.importRegionTowns` inserting `bas_region` rows
     * (`persist/AddressPersister.java:168-208`) that the next
     * `TermIndexBuilder.indexRegions` picks up
-    * (`index/TermIndexBuilder.java:33-74`).
+    * (`index/TermIndexBuilder.java:33-74`). */
+  def withDiscoveredTowns(base: Dict,
+      discovered: Seq[(Long, String)]): Dict = {
+    val merged = new Regions(base.regions.all ++ discoveredTowns(base.regions, discovered))
+    new Dict(merged, new TermIndex(merged, Regions.IgnoreList))
+  }
+
+  /** The new Town/Village regions that discovered (district, name) surface
+    * forms add to `regions`, with their ids: the one id assigner behind
+    * [[withDiscoveredTowns]] and `Linker.discoverTowns` (and mirrored by the
+    * kg_towns DuckDB oracle), so the merged dictionary and the emitted towns
+    * table cannot disagree on an id.
     *
-    * Id assignment is [[Dict.townIdBase]] + rank — ONE scheme shared with
-    * `Linker.discoverTowns` (and mirrored by the kg_towns DuckDB oracle), so
-    * the merged dictionary and the emitted towns table can never silently
-    * disagree on an id: start past any EXISTING child already in the
-    * `districtId*10000` block (reference `initializeRegionId` — on a base
-    * dictionary the block is empty and the base is exactly
-    * `districtId*10000`), then number ALL distinct candidate names in sorted
-    * order (the same determinism divergence from the reference's
-    * Map-iteration-order ids that `discoverTowns` documents). A candidate
-    * whose name does not end in 镇/乡/村 still CONSUMES its rank's id but
-    * produces no region — matching `discoverTowns`' rank-before-filter
-    * window and the oracle SQL (documented divergence from the reference's
-    * `else continue`, which skips the id too; vacuous in practice because
-    * `acceptTown`'s patterns only emit suffixed names). Districts unknown to
-    * the base tree are dropped (reference `parent==null` skip).
+    * Ids are [[townIdBase]] + rank: start past any EXISTING child already in
+    * the `districtId*10000` block (reference `initializeRegionId` — on a
+    * base dictionary the block is empty and the base is exactly
+    * `districtId*10000`), then number ALL distinct candidate names in
+    * code-point order (a determinism divergence from the reference's
+    * Map-iteration-order ids). A candidate whose name does not end in
+    * 镇/乡/村 still CONSUMES its rank's id but produces no region — matching
+    * the oracle SQL's rank-before-filter window (documented divergence from
+    * the reference's `else continue`, which skips the id too; vacuous in
+    * practice because `acceptTown`'s patterns only emit suffixed names).
+    * Districts unknown to the tree are dropped (reference `parent==null`
+    * skip).
     *
     * Driver-side by design: `discovered` is the distinct (district, name)
     * vocabulary — bounded by real-world place names (~10^5-10^6 entries at
     * any corpus scale), the same order as the 47.7k-region base dictionary
     * this bundle already broadcasts. */
-  def withDiscoveredTowns(base: Dict,
-      discovered: Seq[(Long, String)]): Dict = {
-    val regions = base.regions
-    val newRegions = discovered
+  def discoveredTowns(regions: Regions,
+      discovered: Seq[(Long, String)]): Seq[graft.model.Region] =
+    discovered
       .filter { case (_, n) => n != null && n.nonEmpty }
       .groupBy(_._1).toSeq.sortBy(_._1)
       .flatMap { case (did, rows) =>
@@ -74,17 +81,15 @@ object Dict {
           }
         }
       }
-    val merged = new Regions(regions.all ++ newRegions)
-    new Dict(merged, new TermIndex(merged, Regions.IgnoreList))
-  }
 
-  /** CODE-POINT string order — the collation `discoverTowns`' Spark
-    * `orderBy(name)` actually uses (UTF8String compares UTF-8 bytes, which
-    * preserves code-point order). Scala's default `String` ordering is
-    * UTF-16 code-UNIT order, which DISAGREES for supplementary-plane
-    * characters (a CJK Extension-B surrogate pair 0xD840… sorts below
-    * U+E000–U+FFFF there but above in code-point order) — sorting the merge
-    * with it would silently hand out swapped ids versus the towns table. */
+  /** CODE-POINT string order — the collation the kg_towns oracle's
+    * `ORDER BY name` uses (DuckDB's binary collation, like Spark's
+    * UTF8String, compares UTF-8 bytes, which preserves code-point order).
+    * Scala's default `String` ordering is UTF-16 code-UNIT order, which
+    * DISAGREES for supplementary-plane characters (a CJK Extension-B
+    * surrogate pair 0xD840… sorts below U+E000–U+FFFF there but above in
+    * code-point order) — sorting with it would silently hand out ids the
+    * oracle does not reproduce. */
   private def codePointLess(a: String, b: String): Boolean = {
     var i = 0; var j = 0
     while (i < a.length && j < b.length) {
@@ -98,9 +103,8 @@ object Dict {
   /** First free id in a district's discovered-town block (reference
     * `initializeRegionId`): `districtId*10000`, bumped past any existing
     * child already in the block (i.e. towns merged by an EARLIER
-    * [[withDiscoveredTowns]] pass). The single source of the id-scheme
-    * origin, shared by [[withDiscoveredTowns]] and `Linker.discoverTowns`. */
-  def townIdBase(regions: Regions, did: Long): Long = {
+    * [[withDiscoveredTowns]] pass). */
+  private def townIdBase(regions: Regions, did: Long): Long = {
     var id = did * 10000L
     regions.children(did).foreach(c => if (c.id >= id) id = c.id + 1)
     id
@@ -291,8 +295,6 @@ object Linker {
     }
     override def hashCode: Int = n
   }
-
-  import org.apache.spark.sql.functions._
 
   /** Stamp per-partition idf onto every doc term (reference: `:601-611`).
     * Cogroup on partKey: one shuffle per side, no per-row join explosion. */
@@ -671,58 +673,21 @@ object Linker {
 
   /** Town/village discovery (canonicalization of new surface forms —
     * `AddressInterpreter.extractTownVillage` + `acceptTown` SURVEY.md §2
-    * A19/C3, then A20 id assignment): per-partition local accumulation
-    * (map-side combine for free), global distinct, deterministic new-region
-    * ids `districtId*10000 + rank(name)` via a per-district window
-    * (`AddressPersister.importRegionTowns/initializeRegionId`
-    * `AddressPersister.java:168-208` — ordering pinned by name, a documented
-    * divergence from the reference's insertion-order ids). */
+    * A19/C3, then A20 id assignment): the distinct [[townCandidates]],
+    * collected (bounded, see `Dict.discoveredTowns`) and numbered by
+    * `Dict.discoveredTowns` — the same assigner the dictionary merge uses,
+    * without rebuilding the trie (`AddressPersister.importRegionTowns/
+    * initializeRegionId` `AddressPersister.java:168-208`). Returns
+    * (district_id, name, new_region_id, region_type). */
   def discoverTowns(spark: SparkSession, corpus: Dataset[(Long, String)],
       dict: Broadcast[Dict]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val candidates = townCandidates(spark, corpus, dict)
-    // Same id origin as Dict.withDiscoveredTowns (Dict.townIdBase): on a
-    // BASE dictionary every district's block is empty, so base ==
-    // district_id*10000 and the kg_towns DuckDB oracle's literal
-    // `district_id*10000 + row_number - 1` recomputation stays exact; on a
-    // GROWN dictionary (iterated canonicalization loop) the base skips past
-    // already-merged towns, keeping the two id assigners in lockstep
-    // instead of silently diverging.
-    val grownBases: Map[Long, Long] = {
-      val regions = dict.value.regions
-      regions.all.iterator
-        .filter(r => r.regionType == RegionTypesTown ||
-          r.regionType == RegionTypesVillage)
-        .map(_.parentId).toSet.iterator
-        .map((did: Long) => did -> Dict.townIdBase(regions, did))
-        .filter { case (did, base) => base != did * 10000L }
-        .toMap
-    }
-    val w = Window.partitionBy(col("district_id")).orderBy(col("name"))
-    val withBase =
-      if (grownBases.isEmpty) // base dict: identical plan to round 4
-        candidates.withColumn("id_base", col("district_id") * 10000)
-      else {
-        import spark.implicits._
-        val overrides = grownBases.toSeq.toDF("district_id", "base_override")
-        candidates.join(broadcast(overrides), Seq("district_id"), "left")
-          .withColumn("id_base",
-            coalesce(col("base_override"), col("district_id") * 10000))
-          .drop("base_override")
-      }
-    withBase
-      .withColumn("new_region_id",
-        col("id_base") + row_number().over(w) - 1)
-      .drop("id_base")
-      .withColumn("region_type",
-        when(substring(col("name"), -1, 1).isin("镇", "乡"), lit(RegionTypesTown))
-          .when(substring(col("name"), -1, 1) === "村", lit(RegionTypesVillage))
-          .otherwise(lit(0)))
-      .where(col("region_type") > 0)
+    import spark.implicits._
+    val candidates = townCandidates(spark, corpus, dict).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    Dict.discoveredTowns(dict.value.regions, candidates)
+      .map(r => (r.parentId, r.name, r.id, r.regionType))
+      .toDF("district_id", "name", "new_region_id", "region_type")
   }
-
-  private val RegionTypesTown = graft.model.RegionTypes.Town
-  private val RegionTypesVillage = graft.model.RegionTypes.Village
 
   /** Distinct (district_id, name) town/village candidates — discoverTowns'
     * pre-ranking input, shared with the KG stage materializer (the DuckDB

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{CheckpointBlocks, SizedSession}
+import org.apache.spark.sql.graft.SizedSession
 
 /** Deduplication operators for training-data pipelines, Spark-first:
   *
@@ -539,12 +539,9 @@ object DedupOps {
     * otherwise re-analyzes a plan tree that doubles each round (on a
     * multi-executor cluster use `spark.sparkContext.setCheckpointDir` +
     * `.checkpoint()` for lineage that survives executor loss). Each round
-    * frees the PREVIOUS round's checkpoint blocks deterministically
-    * (`CheckpointBlocks.release`), and the fixpoint's blocks are freed too
-    * once the final (id, group, size) table — node-count-sized, the only
-    * blocks backing the returned DataFrame — is materialized; callers in a
-    * long-lived session can free that last table with
-    * `CheckpointBlocks.release` once written.
+    * drops the PREVIOUS round's checkpoint blocks; the final
+    * (id, group, size) table, node-count-sized, leaves the `SizedSession`
+    * scope as a checkpoint, and the scope frees the rest.
     *
     * Convergence is detected EXACTLY (set equality via anti-join on the
     * canonically-oriented edge set), not via a hash checksum — a false
@@ -580,15 +577,10 @@ object DedupOps {
     }
     // Round shuffles are sized to the PAIR GRAPH with AQE off: the
     // alternating-star rounds are many tiny graph-sized exchanges whose
-    // per-stage task-launch + AQE re-planning overhead dominated. The final
-    // (id, group, size) table is checkpointed under that sizing so every
-    // round's blocks (including the fixpoint's) are released
-    // deterministically before return — the returned DataFrame rides only
-    // its own node-count-sized blocks.
-    var e: DataFrame = null
-    try SizedSession(pairs.sparkSession) { w =>
-      e = canon(w(pairs).select(col(aCol).cast("long").as("u"),
-        col(bCol).cast("long").as("v"))).localCheckpoint(true)
+    // per-stage task-launch + AQE re-planning overhead dominated.
+    SizedSession(pairs.sparkSession) { w =>
+      var e = w.localCheckpoint(canon(w(pairs).select(
+        col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))))
       val nPairs = e.count() // cheap: counts the checkpointed blocks
       val gp = w.size(2 * nPairs)
       // Re-lay the pair table to the sized width before the loop: the
@@ -599,14 +591,14 @@ object DedupOps {
       // here; round outputs already come out at gp partitions. No-op when
       // the generation layout is already in the sized regime.
       if (e.rdd.getNumPartitions > 4 * gp) {
-        val relaid = e.repartition(gp).localCheckpoint(true)
-        CheckpointBlocks.release(e)
+        val relaid = w.localCheckpoint(e.repartition(gp))
+        w.drop(e)
         e = relaid
       }
       var round = 0
       var done = nPairs == 0L
       while (!done && round < maxRounds) {
-        val next = smallStar(largeStar(e)).localCheckpoint(true)
+        val next = w.localCheckpoint(smallStar(largeStar(e)))
         // Both sides distinct + canonical ⇒ equal counts ∧ empty difference
         // ⇔ identical sets.
         done = next.count() == e.count() &&
@@ -614,7 +606,7 @@ object DedupOps {
         // next is materialized and the convergence check above was the last
         // reader of the old round — free its checkpoint blocks now instead
         // of waiting for the ContextCleaner's post-GC sweep.
-        CheckpointBlocks.release(e)
+        w.drop(e)
         e = next
         round += 1
       }
@@ -625,9 +617,6 @@ object DedupOps {
       val sizes = members.groupBy("group_id").agg(count(lit(1)).as("group_size"))
       w.checkpoint(
         members.join(sizes, "group_id").select("id", "group_id", "group_size"))
-    } finally {
-      if (e != null) CheckpointBlocks.release(e)
-      ()
     }
   }
 

@@ -17,14 +17,18 @@ object OrderedScan {
 
   /** Returns `df`'s columns plus `outCol` = the exclusive running sum of
     * `weight` over the total order `order`. The result is eagerly
-    * materialized (localCheckpoint) before the internal two-pass parent is
-    * unpersisted. `numPartitions` ≤ 0 (default) ranges into cluster-width
+    * materialized by `checkpoint` before the internal two-pass parent is
+    * unpersisted: by default a `localCheckpoint` whose blocks the caller
+    * frees with `CheckpointBlocks.release`; a sized operator passes its
+    * `SizedSession` scope's `localCheckpoint`, so the scope frees them.
+    * `numPartitions` ≤ 0 (default) ranges into cluster-width
     * partitions; callers that have already COUNTED the input can pass a
     * data-proportional count (round 6 — the stamped values are a pure
     * function of the total order, so the partition count never reaches the
     * output; pinned by OpsSpec's partitioning-invariance tests). */
   def exclusivePrefixSum(df: DataFrame, order: Seq[Column], weight: Column,
-      outCol: String, numPartitions: Int = 0): DataFrame = {
+      outCol: String, numPartitions: Int = 0,
+      checkpoint: DataFrame => DataFrame = _.localCheckpoint(true)): DataFrame = {
     val spark = df.sparkSession
     val np =
       if (numPartitions > 0) numPartitions
@@ -47,9 +51,9 @@ object OrderedScan {
           val out = Row.fromSeq(r.toSeq :+ cum); cum += r.getLong(wIdx); out
         }
       }
-      return spark.createDataFrame(stamped, arranged0.schema.add(outCol, "long"))
-        .drop("__w")
-        .localCheckpoint(true)
+      return checkpoint(
+        spark.createDataFrame(stamped, arranged0.schema.add(outCol, "long"))
+          .drop("__w"))
     }
     val arranged = arranged0.persist()
     try {
@@ -65,10 +69,9 @@ object OrderedScan {
           val out = Row.fromSeq(r.toSeq :+ cum); cum += r.getLong(wIdx); out
         }
       }
-      spark.createDataFrame(stamped, arranged.schema.add(outCol, "long"))
-        .drop("__w")
-        // Materialize before unpersisting the two-pass parent.
-        .localCheckpoint(true)
+      // Materialize before unpersisting the two-pass parent.
+      checkpoint(spark.createDataFrame(stamped, arranged.schema.add(outCol, "long"))
+        .drop("__w"))
     } finally { arranged.unpersist(); () }
   }
 }

@@ -96,7 +96,7 @@ object DedupQueries {
           dim = 64, bits = 6, tables = 16)
         .orderBy("a", "b")
     },
-    QuerySpec.of("q28_dedup_groups", Oracle(q28OracleSql)) { (s, dir, _) =>
+    QuerySpec.of("q28_dedup_groups", Oracle(q28OracleSql)) { (s, dir, name) =>
       // Pair graph → dedup groups: q9's MinHash-LSH candidate pairs closed
       // into connected components (alternating star), one canonical keeper
       // (= min id) per group. The DuckDB oracle re-derives the SAME pairs
@@ -104,8 +104,9 @@ object DedupQueries {
       // — two entirely different CC algorithms must agree exactly.
       val sig = DedupOps.minHashSignature(t(s, dir, "documents"),
         "doc_id", "text", n = 5, k = 32)
-      DedupOps.connectedComponents(DedupOps.lshCandidates(sig, k = 32, bands = 8))
-        .orderBy("id")
+      stashCk(s, name,
+        DedupOps.connectedComponents(DedupOps.lshCandidates(sig, k = 32, bands = 8)))(
+        _.orderBy("id"))
     },
     QuerySpec.of("q43_decontaminate_fuzzy", Oracle(q43OracleSql)) { (s, dir, _) =>
       // Fuzzy (MinHash-banded + exact-Jaccard-verified) decontamination:
@@ -138,17 +139,16 @@ object DedupQueries {
           tau = 0.5)
         .orderBy("a", "b")
     },
-    QuerySpec.of("q46_decontaminate_bloom", Oracle(q30OracleSql)) { (s, dir, _) =>
+    QuerySpec.of("q46_decontaminate_bloom", Oracle(q30OracleSql)) { (s, dir, name) =>
       // The same decontamination behind a 2^20-bit Bloom prefilter (the
       // broadcast-sketch join-pruning pattern for eval sets too big to
       // broadcast as strings). One-sided membership + the exact verify join
       // pin the output identical to q30 — it shares q30's DuckDB oracle, so
       // the oracle compare independently confirms prefiltered == exact.
       val docs = t(s, dir, "documents")
-      DedupOps.decontaminateBloom(
+      stashCk(s, name, DedupOps.decontaminateBloom(
           docs.where(col("doc_id") % 50 =!= 7),
-          docs.where(col("doc_id") % 50 === 7), n = 16)
-        .orderBy("doc_id")
+          docs.where(col("doc_id") % 50 === 7), n = 16))(_.orderBy("doc_id"))
     },
     QuerySpec.of("q33_boilerplate", Oracle(
       """WITH w AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws

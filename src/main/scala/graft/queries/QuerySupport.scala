@@ -109,22 +109,25 @@ private[graft] object QuerySupport {
     finally r.unpersistAll()
   }
 
-  /** `scoped` for derived analytics that return EAGERLY CHECKPOINTED results
-    * (the sized ops — coMentionEdges/pmiEdges/negativeSamples/
-    * entityTimeline/toolEntityEdges): stash the finished table, then free
-    * the derivation's checkpoint blocks deterministically. `f` also
-    * receives the turns dataset for the ops that join transcript
-    * structure. */
+  /** Stash `finish(ck)` under `name`, then free `ck`'s blocks: how a query
+    * consumes an EAGERLY CHECKPOINTED op result (one that left its
+    * `SizedSession` scope through `checkpoint`). */
+  private[queries] def stashCk(s: SparkSession, name: String, ck: DataFrame)(
+      finish: DataFrame => DataFrame): DataFrame =
+    try stash(s, finish(ck), name)
+    finally org.apache.spark.sql.graft.CheckpointBlocks.release(ck)
+
+  /** `scoped` for the derived analytics that return checkpointed results
+    * (coMentionEdges/pmiEdges/negativeSamples/entityTimeline/
+    * toolEntityEdges), through [[stashCk]]. `f` also receives the turns
+    * dataset for the ops that join transcript structure. */
   private[queries] def scopedCk(s: SparkSession, dir: String, topN: Int, name: String)(
       f: (KgPipeline.KgRun, Dataset[Turn]) => DataFrame)(
       finish: DataFrame => DataFrame): DataFrame = {
     val (corpus, turns) = kgInputs(s, dir)
     val r = KgPipeline.run(s, turns, corpus, bdict(s), topN)
-    try {
-      val ck = f(r, turns)
-      try stash(s, finish(ck), name)
-      finally org.apache.spark.sql.graft.CheckpointBlocks.release(ck)
-    } finally r.unpersistAll()
+    try stashCk(s, name, f(r, turns))(finish)
+    finally r.unpersistAll()
   }
 
   /** Canonicalization loop, closed (reference `ExtractTown.main` →
@@ -142,7 +145,7 @@ private[graft] object QuerySupport {
     * Returns (loop rows, discovered-region table). The side table is
     * derived from the MERGED dictionary's new regions — the same rows
     * `Linker.discoverTowns` emits, because both assign ids through the one
-    * shared scheme (`Dict.townIdBase` + sorted rank) — so the whole bundle
+    * assigner (`Dict.discoveredTowns`) — so the whole bundle
     * costs ONE full-corpus candidate pass + one interpret pass. */
   private[queries] def townsLoopBundle(s: SparkSession, dir: String,
       name: String): (DataFrame, DataFrame) = {

@@ -2,12 +2,14 @@ package org.apache.spark.sql.graft
 
 import java.util.concurrent.ConcurrentLinkedDeque
 
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.storage.StorageLevel
 
 /** A private clone of a caller's session for plans sized to their data.
   *
@@ -21,6 +23,15 @@ import org.apache.spark.sql.internal.SQLConf
   * checkpoints and extensions, and copies the caller's conf. Partitioning
   * never reaches the semantics of hash aggregations, joins or keyed windows,
   * so the sizing changes plans, never results.
+  *
+  * Lifetime rule: the scope owns every frame its operator caches. `persist`
+  * and `localCheckpoint` register the frame, `drop` frees one early (an
+  * iteration loop's previous round), and whatever is still registered is
+  * freed, newest first, when `SizedSession.apply` returns or throws. So a
+  * loan-style operator, whose `use` runs inside the scope, leaves nothing
+  * behind. A result leaves the scope only through `checkpoint`; its blocks
+  * are then the caller's, freed with [[CheckpointBlocks.release]] once the
+  * result is materialized.
   *
   * Each session gets its own executor class loader, which fetches classes
   * from the driver on first use: a fresh clone's first query measured
@@ -36,6 +47,14 @@ import org.apache.spark.sql.internal.SQLConf
 final class SizedSession private (parent: classic.SparkSession,
     session: classic.SparkSession) {
 
+  /** Registered frames, oldest first, each with the call that frees it. */
+  private val held = ArrayBuffer.empty[(DataFrame, () => Unit)]
+
+  private def hold(df: DataFrame)(free: => Unit): DataFrame = {
+    held += ((df, () => free))
+    df
+  }
+
   /** `df` rebound into the clone: every plan built on it runs under the
     * clone's settings. */
   def apply(df: DataFrame): DataFrame =
@@ -49,6 +68,25 @@ final class SizedSession private (parent: classic.SparkSession,
     n
   }
 
+  /** `df` persisted (memory and disk) for the scope. `df` keeps its session:
+    * a caller-bound table is still planned and counted under the caller's
+    * settings. */
+  def persist(df: DataFrame): DataFrame =
+    hold(df.persist(StorageLevel.MEMORY_AND_DISK)) { df.unpersist(); () }
+
+  /** `df` eagerly `localCheckpoint`ed for the scope: its analyzed plan
+    * collapses to a `LogicalRDD` leaf, whose blocks the scope frees. */
+  def localCheckpoint(df: DataFrame): DataFrame = {
+    val ck = df.localCheckpoint(true)
+    hold(ck)(CheckpointBlocks.release(ck))
+  }
+
+  /** Free a registered frame now. */
+  def drop(df: DataFrame): Unit = {
+    val i = held.indexWhere(_._1 eq df)
+    if (i >= 0) held.remove(i)._2()
+  }
+
   /** `df` materialized under the clone's settings (eager `localCheckpoint`)
     * and rebound to the caller's session, whose settings plan everything
     * built on it later. The plan stays the checkpoint's `LogicalRDD` leaf, so
@@ -57,6 +95,9 @@ final class SizedSession private (parent: classic.SparkSession,
     val ck = castToImpl(df.localCheckpoint(true))
     classic.Dataset.ofRows(parent, ck.logicalPlan)
   }
+
+  private def releaseAll(): Unit =
+    while (held.nonEmpty) held.remove(held.length - 1)._2()
 }
 
 object SizedSession {
@@ -69,7 +110,8 @@ object SizedSession {
   /** Run `f` against a clone of `spark` with AQE off and the caller's
     * shuffle width until `f` calls `size`. `f` runs with the clone active, so
     * plans resolve their settings from it; frames enter through `apply` and
-    * leave through `checkpoint` (or are consumed inside `f`). */
+    * leave through `checkpoint` (or are consumed inside `f`). Frees every
+    * frame still registered when `f` returns or throws. */
   def apply[T](spark: SparkSession)(f: SizedSession => T): T = {
     val parent = castToImpl(spark)
     // Everything a clone copies that can reach a plan or observe a query.
@@ -82,10 +124,14 @@ object SizedSession {
     session.conf.set(SQLConf.ADAPTIVE_EXECUTION_ENABLED.key, "false")
     session.conf.set(SQLConf.SHUFFLE_PARTITIONS.key,
       parent.conf.get(SQLConf.SHUFFLE_PARTITIONS.key))
-    try session.withActive(f(new SizedSession(parent, session)))
+    val w = new SizedSession(parent, session)
+    try session.withActive(f(w))
     finally {
-      idle.offerLast((key, session))
-      while (idle.size > MaxIdle) idle.pollFirst()
+      try w.releaseAll()
+      finally {
+        idle.offerLast((key, session))
+        while (idle.size > MaxIdle) idle.pollFirst()
+      }
     }
   }
 }

@@ -49,11 +49,22 @@ class DriftPinSpec extends AnyFunSuite {
   test("kg queries leave no persistent RDDs behind (run-scoped caches)") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    SparkEntry.queries("kg_triples")(spark, "/root/testdata/sf0.001").count()
-    SparkEntry.queries("kg_accuracy")(spark, "/root/testdata/sf0.001").count()
-    SparkEntry.queries("kg_links_explain")(spark, "/root/testdata/sf0.001").count()
+    // The pipeline queries, then every query that runs a sized operator
+    // (its SizedSession scope owns what the operator persists and
+    // checkpoints; the query frees the checkpoint the operator returns).
+    val names = Seq("kg_triples", "kg_accuracy", "kg_links_explain",
+      "kg_comention", "kg_pmi", "kg_negatives", "kg_timeline",
+      "kg_tool_edges", "q35_pagerank", "q40_label_prop", "q41_triangles",
+      "q49_adamic_adar", "q50_kcore", "q28_dedup_groups",
+      "q46_decontaminate_bloom")
+    val leaks = names.flatMap { name =>
+      val seen = sc.getPersistentRDDs.keySet
+      SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()
+      val left = sc.getPersistentRDDs.keySet -- seen
+      if (left.isEmpty) None else Some(s"$name: ${left.size}")
+    }
     val leaked = sc.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty,
-      s"kg queries leaked ${leaked.size} persistent RDDs: $leaked")
+      s"kg queries leaked ${leaked.size} persistent RDDs (${leaks.mkString(", ")})")
   }
 }

@@ -657,6 +657,23 @@ class OpsSpec extends AnyFunSuite {
     assert(run(1) == out, "pagerank must be partitioning-invariant")
   }
 
+  test("pagerank frees every cache and checkpoint when use throws") {
+    val s = spark
+    import s.implicits._
+    val edges = Seq((1L, 2L, 2L), (2L, 3L, 1L), (1L, 3L, 1L))
+      .toDF("src", "dst", "weight")
+    val persistedBefore = s.sparkContext.getPersistentRDDs.keySet
+    val err = intercept[IllegalStateException] {
+      graft.kg.GraphOps.pageRank(edges, iters = 3) { pr =>
+        assert(pr.count() == 3L)
+        throw new IllegalStateException("use failed")
+      }
+    }
+    assert(err.getMessage == "use failed")
+    val leaked = s.sparkContext.getPersistentRDDs.keySet -- persistedBefore
+    assert(leaked.isEmpty, s"pageRank leaked persisted blocks: $leaked")
+  }
+
   test("label propagation matches a naive synchronous reference; partition-invariant") {
     val s = spark
     import s.implicits._
