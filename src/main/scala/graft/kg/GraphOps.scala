@@ -1,8 +1,11 @@
 package graft.kg
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.SizedSession
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Analytics over the MATERIALIZED knowledge graph (north rule: "graph
   * materialize" is a first-class output, so the engine should also be able
@@ -34,19 +37,22 @@ object GraphOps {
     * Every node in an edge list has ≥1 incident edge, so there is no
     * dangling mass and total rank stays 1 exactly.
     *
-    * Spark shape at 100 TB: the normalized-transition table is computed
-    * once (one agg + one join, hash-partitioned on src) and persisted; each
-    * iteration is ONE hash join on src (both sides partitioned by the join
-    * key, so AQE reuses the exchange) + ONE aggregation on dst with map-side
-    * partial combine, then an eager `localCheckpoint` that collapses the
-    * iteration's ANALYZED plan to a `LogicalRDD` leaf — plain `persist`
-    * does NOT do this (cache substitution happens at physical planning
-    * only; measured: the analyzed tree re-embeds the full upstream edge
-    * lineage per iteration until AQE's plan-string logging alone took
-    * minutes at sf0.1). Each iteration drops the previous one's blocks.
-    * Hot entities (power-law hubs — the co-mention graph's defining skew)
-    * cost rows spread across tasks in the dst aggregation, never a per-key
-    * array.
+    * Spark shape at 100 TB: pair RDDs under one `HashPartitioner` sized to
+    * the graph. The symmetrized edge list is persisted and counted once;
+    * each node's total incident weight is one `reduceByKey`, and one join
+    * against it gives the transition table (src, (dst, p)), persisted. The
+    * rank vector and the node set (the weight totals' keys) share that
+    * partitioner, so an iteration is a narrow join of the transition table
+    * with the ranks, ONE `reduceByKey` on dst with map-side combine, and a
+    * narrow `leftOuterJoin` back onto the node set. The iterations stay lazy:
+    * every rank vector is read once, by the next iteration, and the shuffle
+    * outputs are reused by every action `use` runs, so the whole loop costs
+    * the actions of `use` plus two counts. Only the output projection is a
+    * DataFrame, and the loop generates no code: the ingest cycle's generated
+    * classes stay inside Spark's codegen cache (`CodegenBudgetSpec`). A
+    * hot entity (a power-law hub — the co-mention graph's defining skew)
+    * is one spillable cogroup group in the rank join, and its inflow is
+    * combined map-side before the dst shuffle.
     *
     * Output: (doc_id, pagerank) with pagerank rounded to 9 decimals — sums
     * of doubles are accumulation-order-dependent at ~1e-16, and the rounded
@@ -55,58 +61,54 @@ object GraphOps {
     * quantization argument as `Linker.TopK`. */
   def pageRank[T](edges: DataFrame, iters: Int, damping: Double = 0.85)
       (use: DataFrame => T): T =
-    // AQE off for the iteration loop: per-stage re-planning latency is pure
-    // overhead on graph-sized exchanges (it dominated the round jobs at
-    // sf0.1).
     SizedSession(edges.sparkSession) { w =>
-      // The edge list often arrives with an expensive lineage (the co-mention
-      // self-join over the full pipeline); it is read twice below (node list,
-      // transition table) — cache it for the duration.
-      val e = w(w.persist(edges))
-      val ud = e.select(col("src"), col("dst"),
-          col("weight").cast("double").as("w"))
-        .union(e.select(col("dst").as("src"), col("src").as("dst"),
-          col("weight").cast("double").as("w")))
-      val nodes = w.persist(ud.select(col("src").as("id")).distinct())
-      val n = nodes.count() // bounded: distinct entity ids, one action
-      if (n == 0)
+      // Both directions of every edge: (from, (to, weight)). The edge list
+      // often arrives with an expensive lineage (the co-mention count over
+      // the full pipeline); the persist reads it once. It is read as it is,
+      // with no projection, so the class that scans it is the one any other
+      // reader of the same frame compiles.
+      val Seq(si, di, wi) =
+        Seq("src", "dst", "weight").map(edges.schema.fieldIndex)
+      val ud = w.persist(edges.rdd.flatMap { r =>
+        def num(i: Int) = r.get(i).asInstanceOf[Number]
+        val (a, b, x) =
+          (num(si).longValue, num(di).longValue, num(wi).doubleValue)
+        Iterator((a, (b, x)), (b, (a, x)))
+      })
+      val m = ud.count()
+      if (m == 0)
         // No edges (e.g. a scale where no rank-1 co-mentions exist): empty
         // result with the right schema — the oracle likewise returns 0 rows.
-        use(e.select(col("src").as("doc_id"),
+        use(w(edges).select(col("src").as("doc_id"),
           lit(0.0).as("pagerank")).where(lit(false)))
       else {
-        val outW = ud.groupBy("src").agg(sum("w").as("out_w"))
-        val trans = w.persist(ud.join(outW, "src")
-          .select(col("src"), col("dst"), (col("w") / col("out_w")).as("p")))
-        val m = trans.count() // materialize once; iterations re-read the blocks
-        // Size the ITERATION shuffles to the graph, not the corpus-width
+        // Size the iteration shuffles to the graph, not the corpus-width
         // session default (measured: ~6s/iteration on a 6.6k-node graph at
-        // 64 partitions). Sized only after the counts: sizing before the
-        // nodes/trans builds costs an extra edge-lineage action, a net loss
-        // at sf0.1.
-        w.size(math.max(n, m))
+        // 64 partitions).
+        val part = new HashPartitioner(w.size(m))
+        val outW = w.persist(ud.mapValues(_._2).reduceByKey(part, _ + _))
+        val n = outW.count() // every node has an incident edge
+        val trans = w.persist(ud.join(outW, part)
+          .mapValues { case ((dst, x), out) => (dst, x / out) })
         val base = (1.0 - damping) / n
-        var ranks = w.localCheckpoint(
-          nodes.select(col("id"), lit(1.0 / n).as("rank")))
+        var ranks = outW.mapValues(_ => 1.0 / n)
         var it = 0
         while (it < iters) {
-          // eager: materialized before the old blocks go
-          val next = w.localCheckpoint(
-            trans.join(ranks, trans("src") === ranks("id"))
-              .groupBy(trans("dst").as("nid"))
-              .agg(sum(col("p") * col("rank")).as("inflow"))
-              .join(nodes, nodes("id") === col("nid"), "right")
-              .select(col("id"),
-                (lit(base) + lit(damping) * coalesce(col("inflow"), lit(0.0)))
-                  .as("rank")))
-          w.drop(ranks)
-          ranks = next
+          val inflow = trans.join(ranks, part)
+            .values.map { case ((dst, p), rank) => (dst, p * rank) }
+            .reduceByKey(part, _ + _)
+          ranks = outW.leftOuterJoin(inflow, part)
+            .mapValues { case (_, in) => base + damping * in.getOrElse(0.0) }
           it += 1
         }
-        use(ranks.select(col("id").as("doc_id"),
-          round(col("rank"), 9).as("pagerank")))
+        use(w.frame(ranks.map { case (id, rank) => InternalRow(id, rank) },
+            RankSchema)
+          .select(col("id").as("doc_id"), round(col("rank"), 9).as("pagerank")))
       }
     }
+
+  private val RankSchema = StructType(Seq(StructField("id", LongType, false),
+    StructField("rank", DoubleType, false)))
 
   /** Weighted label propagation (community detection; Raghavan et al.
     * 2007) on the same UNDIRECTED weighted edge list as [[pageRank]]

@@ -1,8 +1,12 @@
 package graft.kg
 
+import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graft.SizedSession
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.analyse.DocAnalyser
 import graft.interpret.{AddressInterpreter, MutableAddress, RegionVisitor}
@@ -125,12 +129,15 @@ object KgPipeline {
     }
   }
 
-  /** linkedTo triples from top-k link hits. */
+  /** linkedTo triples from top-k link hits. The mention side is untyped
+    * column selects, so no mention is deserialized. */
   def linkTriples(spark: SparkSession, mentions: Dataset[MentionDoc],
       hits: Dataset[LinkHit]): Dataset[Triple] = {
     import spark.implicits._
-    val ids = mentions.map(m => (m.queryId, s"${m.convId}#${m.turnIdx}", m.doc.partKey))
-      .toDF("queryId", "subj", "partKey")
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val ids = mentions.toDF().select(col("queryId"),
+      concat(col("convId"), lit("#"), col("turnIdx").cast("string")).as("subj"),
+      col("doc.partKey").as("partKey"))
     hits.toDF().join(ids, "queryId")
       .selectExpr("subj", "'linkedTo' as pred",
         "concat('addr:', docId) as obj", "similarity as score", "partKey")
@@ -141,40 +148,63 @@ object KgPipeline {
     * linked corpus entities whenever both are top-`topRank` linked from the
     * SAME conversation; weight = number of such conversations. The KG's
     * materialized adjacency-table output over actual links (north-star
-    * "adjacency tables" alongside the region backbone). Scale shape: the
-    * per-conversation link list is tiny (mentions per conv ≈ turns/3), so
-    * the conv-keyed self-join is bounded per key; the edge aggregation is
-    * one hash shuffle on (src, dst). Sized to the links (at sf0.1 the
-    * session-width version paid 8 exchanges for a 1.2k-edge output); the
-    * result leaves its [[SizedSession]] scope as a checkpoint. */
+    * "adjacency tables" alongside the region backbone).
+    *
+    * Spark shape: the links table (a query-batch-sized join of the hit and
+    * mention columns) is counted once and becomes a pair RDD grouped by
+    * conversation under a `HashPartitioner` sized to that count
+    * ([[sizedConvs]]); each conversation's entity list is tiny (mentions per
+    * conv ≈ turns/3), so its pairs come from the group itself and one
+    * `reduceByKey` on (src, dst), combined map-side, counts them
+    * ([[pairCounts]]). The grouping and counting generate no code, which
+    * keeps the ingest cycle inside Spark's codegen cache
+    * (`CodegenBudgetSpec`). The result leaves its [[SizedSession]] scope as
+    * a checkpoint. */
   def coMentionEdges(spark: SparkSession, mentions: Dataset[MentionDoc],
       hits: Dataset[LinkHit], topRank: Int = 1): DataFrame =
-    sizedTo(convLinks(spark, mentions, hits, topRank)) { (w, links, _) =>
-      w.checkpoint(pairCounts(links, "weight"))
+    sizedConvs(convLinks(mentions, hits, topRank)) { (w, convs, part) =>
+      w.checkpoint(w.frame(pairCounts(convs, part).map { case ((a, b), n) =>
+        InternalRow(a, b, n) }, longSchema("src", "dst", "weight")))
     }
 
-  /** The linked-conversations table shared by the co-mention analytics:
-    * top-`topRank` hits ⋈ mention (queryId, convId) → DISTINCT
-    * (convId, docId). */
-  private def convLinks(spark: SparkSession, mentions: Dataset[MentionDoc],
+  /** Top-`topRank` hits ⋈ mention (queryId, convId) → (convId, docId), one
+    * row per linking mention: the links table of the co-mention analytics.
+    * Untyped column selects, so neither side deserializes its records. */
+  private def convLinks(mentions: Dataset[MentionDoc],
       hits: Dataset[LinkHit], topRank: Int): DataFrame = {
-    import spark.implicits._
-    hits.filter(_.rank <= topRank).toDF()
-      .join(mentions.map(m => (m.queryId, m.convId)).toDF("queryId", "convId"),
-        "queryId")
-      .select("convId", "docId").distinct()
+    import org.apache.spark.sql.functions.col
+    hits.toDF().where(col("rank") <= topRank).select("queryId", "docId")
+      .join(mentions.toDF().select("queryId", "convId"), "queryId")
+      .select("convId", "docId")
   }
 
-  /** Co-linked entity pairs (src < dst) of a links table, each with the
-    * number of conversations linking both, as `weight`: the conv-keyed
-    * self-join and count shared by [[coMentionEdges]] and [[pmiEdges]]. */
-  private def pairCounts(links: DataFrame, weight: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    links.as("l").join(links.as("r"),
-        col("l.convId") === col("r.convId") && col("l.docId") < col("r.docId"))
-      .groupBy(col("l.docId").as("src"), col("r.docId").as("dst"))
-      .agg(count(lit(1)).as(weight))
-  }
+  /** Run `f` in a [[SizedSession]] scope over the conversations of a
+    * (convId, docId) links table: each conversation's DISTINCT linked
+    * entities, ascending, grouped under a `HashPartitioner` sized to the
+    * links. The links are persisted through the scope and counted under
+    * their own (caller's) session, as in [[sizedTo]]. */
+  private def sizedConvs[A](links: DataFrame)(
+      f: (SizedSession, RDD[Array[Long]], Partitioner) => A): A =
+    SizedSession(links.sparkSession) { w =>
+      val rows = w.persist(links.rdd.map(r => (r.getString(0), r.getLong(1))))
+      val part = new HashPartitioner(w.size(rows.count()))
+      f(w, rows.groupByKey(part).values.map(_.toArray.distinct.sorted), part)
+    }
+
+  /** Co-linked entity pairs (src < dst) of the grouped conversations, each
+    * with the number of conversations linking both: every pair of a
+    * conversation's ascending entities once, counted with one `reduceByKey`
+    * (map-side combine). Shared by [[coMentionEdges]] and [[pmiEdges]]. */
+  private def pairCounts(convs: RDD[Array[Long]],
+      part: Partitioner): RDD[((Long, Long), Long)] =
+    convs.flatMap { ds =>
+      Iterator.range(0, ds.length).flatMap(i =>
+        Iterator.range(i + 1, ds.length).map(j => ((ds(i), ds(j)), 1L)))
+    }.reduceByKey(part, _ + _)
+
+  /** A schema of non-null BIGINT columns. */
+  private def longSchema(names: String*): StructType =
+    StructType(names.map(StructField(_, LongType, nullable = false)))
 
   /** Run `f` in a [[SizedSession]] scope sized to `table`, a
     * query-batch-sized input read by several branches of `f`'s plan.
@@ -224,10 +254,9 @@ object KgPipeline {
     val params = graft.ops.DedupOps.minHashParams(k)
     sizedTo(hits.filter(_.rank <= topRank).toDF()
         .select(col("queryId"), col("docId")).distinct()) { (w, pos, width) =>
-      val pool = graft.ops.OrderedScan.exclusivePrefixSum(
+      val pool = w.localCheckpoint(graft.ops.OrderedScan.exclusivePrefixSum(
         pos.select(col("docId").as("pool_doc")).distinct(),
-        Seq(col("pool_doc")), lit(1L), "pool_idx", numPartitions = width,
-        checkpoint = w.localCheckpoint)
+        Seq(col("pool_doc")), lit(1L), "pool_idx", numPartitions = width))
       val nPool = pool.agg(count(lit(1)).as("n_pool"))
       val seed = pmod(
         pmod(col("queryId"), lit(p)) * 31L + pmod(col("docId"), lit(p)),
@@ -304,22 +333,29 @@ object KgPipeline {
     * an exact conversation count (the probabilities cancel to
     * ln(w_pair·N / (w_src·w_dst)), products of counts < 2^53 formed as
     * exact doubles), so the DuckDB oracle replays the whole thing with the
-    * single ln under the round(…,6) contract. Scale shape: the same
-    * conv-keyed bounded self-join as [[coMentionEdges]] plus one per-entity
-    * hash agg and a broadcast 1-row scalar — nothing new shuffles. The
-    * whole derivation — two aggs, the pair self-join, two joins — is sized
-    * to the links count (at sf0.1 the session-width version was 19 jobs /
-    * 1090 tasks for a 1.2k-row output). */
+    * single ln under the round(…,6) contract.
+    *
+    * Spark shape: the [[coMentionEdges]] pair RDDs. The grouped
+    * conversations are persisted and counted (n_convs is that count); the
+    * per-entity conversation counts are one `reduceByKey`, and the pair
+    * counts join them on src and then on dst under the same sized
+    * `HashPartitioner`. Only the final `round(log(…), 6)` projection is a
+    * DataFrame, so the formula is Spark SQL's own. The result leaves its
+    * [[SizedSession]] scope as a checkpoint. */
   def pmiEdges(spark: SparkSession, mentions: Dataset[MentionDoc],
       hits: Dataset[LinkHit], topRank: Int = 1): DataFrame = {
     import org.apache.spark.sql.functions._
-    sizedTo(convLinks(spark, mentions, hits, topRank)) { (w, links, _) =>
-      val tot = links.agg(count_distinct(col("convId")).as("n_convs"))
-      val ent = links.groupBy(col("docId")).agg(count(lit(1)).as("w_ent"))
-      w.checkpoint(pairCounts(links, "w_pair")
-        .join(ent.toDF("src", "w_src"), "src")
-        .join(ent.toDF("dst", "w_dst"), "dst")
-        .crossJoin(broadcast(tot))
+    sizedConvs(convLinks(mentions, hits, topRank)) { (w, grouped, part) =>
+      val convs = w.persist(grouped)
+      val nConvs = convs.count()
+      val ent = convs.flatMap(_.iterator.map(d => (d, 1L)))
+        .reduceByKey(part, _ + _)
+      val rows = pairCounts(convs, part)
+        .map { case ((a, b), n) => (a, (b, n)) }.join(ent, part)
+        .map { case (a, ((b, n), wa)) => (b, (a, n, wa)) }.join(ent, part)
+        .map { case (b, ((a, n, wa), wb)) => InternalRow(a, b, n, wa, wb, nConvs) }
+      w.checkpoint(w.frame(rows,
+          longSchema("src", "dst", "w_pair", "w_src", "w_dst", "n_convs"))
         .select(col("src"), col("dst"), col("w_pair"), col("w_src"),
           col("w_dst"), col("n_convs"),
           round(log(col("w_pair").cast("double") * col("n_convs") /
@@ -394,7 +430,7 @@ object KgPipeline {
       topRank: Int = 1): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    sizedTo(convLinks(spark, mentions, hits, topRank)) { (w, entConv, _) =>
+    sizedTo(convLinks(mentions, hits, topRank).distinct()) { (w, entConv, _) =>
       val toolConv = w(turns.filter(t => t.tool != null && t.tool.nonEmpty)
         .map(t => (t.conv_id, t.tool)).toDF("convId", "tool")).distinct()
       w.checkpoint(broadcast(entConv).join(toolConv, "convId")

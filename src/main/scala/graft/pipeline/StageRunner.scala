@@ -2,9 +2,11 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Dataset, Encoder, SaveMode, SparkSession}
 import org.apache.spark.storage.StorageLevel
-import org.apache.spark.util.CollectionAccumulator
 
 /** How a pipeline materializes the stages it reads more than once.
   * `KgPipeline.run` defines its DAG once against this; [[PersistStages]]
@@ -52,8 +54,8 @@ final case class StageMetric(
   *    protocol (`_SUCCESS` marks the atomic commit — partial writes from a
   *    killed run are invisible to the resume check and simply overwritten);
   *  - per-partition metrics appended to `<root>/_metrics` (stage, partition,
-  *    rows, wall, runId) — computed DURING the write by a partition-count
-  *    wrapper, not by a second pass;
+  *    rows, wall, runId) — rows from the committed files' parquet footers,
+  *    not from a second pass over the data;
   *  - a completed stage is NEVER recomputed: re-running the job skips to the
   *    first missing stage and reads the materialized table (downstream
   *    stages therefore read checkpointed data, not a recomputed lineage —
@@ -72,34 +74,37 @@ final class StageRunner(spark: SparkSession, root: String, runId: String)
     import spark.implicits._
     if (!isComplete(name)) {
       val t0 = System.currentTimeMillis()
-      val acc: CollectionAccumulator[(Int, Long)] =
-        spark.sparkContext.collectionAccumulator[(Int, Long)](s"graft.$name.partitions")
-      val counted = compute.mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        var n = 0L
-        val out = it.map { r => n += 1; r }
-        new Iterator[T] {
-          private var reported = false
-          def hasNext: Boolean = {
-            val h = out.hasNext
-            if (!h && !reported) { reported = true; acc.add((pid, n)) }
-            h
-          }
-          def next(): T = out.next()
-        }
-      }
-      counted.write.mode(SaveMode.Overwrite).parquet(dir(name))
+      compute.write.mode(SaveMode.Overwrite).parquet(dir(name))
       val wall = System.currentTimeMillis() - t0
       val now = System.currentTimeMillis()
-      val rows = new scala.collection.mutable.HashMap[Int, Long]()
-      acc.value.forEach { case (pid, n) => rows(pid) = rows.getOrElse(pid, 0L) + n }
-      val metrics = rows.toSeq.sortBy(_._1).map { case (pid, n) =>
+      val metrics = partitionRows(dir(name)).map { case (pid, n) =>
         StageMetric(name, pid, n, wall, runId, now)
       }
       spark.createDataset(metrics)
         .write.mode(SaveMode.Append).parquet(s"$root/_metrics")
     }
-    spark.read.parquet(dir(name)).as[T]
+    // The encoder's schema: inferring it from the footers would cost a job
+    // per read.
+    spark.read.schema(implicitly[Encoder[T]].schema).parquet(dir(name)).as[T]
+  }
+
+  /** Rows per written partition, from the footers of the committed files
+    * (a file's partition is the split number in its name, `part-00003-…`).
+    * Only committed files count, so the counts are exact under task retry
+    * and speculation; a partition that wrote no rows has no file, except
+    * the first. */
+  private def partitionRows(path: String): Seq[(Int, Long)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val Part = """part-(\d+)-.*\.parquet""".r
+    p.getFileSystem(conf).listStatus(p).toSeq.flatMap { st =>
+      st.getPath.getName match {
+        case Part(split) =>
+          val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+          try Some(split.toInt -> r.getRecordCount) finally r.close()
+        case _ => None
+      }
+    }.groupMapReduce(_._1)(_._2)(_ + _).toSeq.sortBy(_._1)
   }
 
   /** Stage tables live under `root`; nothing is cached in the session. */

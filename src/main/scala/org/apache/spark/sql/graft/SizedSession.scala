@@ -5,10 +5,13 @@ import java.util.concurrent.ConcurrentLinkedDeque
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 /** A private clone of a caller's session for plans sized to their data.
@@ -24,8 +27,8 @@ import org.apache.spark.storage.StorageLevel
   * never reaches the semantics of hash aggregations, joins or keyed windows,
   * so the sizing changes plans, never results.
   *
-  * Lifetime rule: the scope owns every frame its operator caches. `persist`
-  * and `localCheckpoint` register the frame, `drop` frees one early (an
+  * Lifetime rule: the scope owns every frame and RDD its operator caches.
+  * `persist` and `localCheckpoint` register it, `drop` frees one early (an
   * iteration loop's previous round), and whatever is still registered is
   * freed, newest first, when `SizedSession.apply` returns or throws. So a
   * loan-style operator, whose `use` runs inside the scope, leaves nothing
@@ -41,18 +44,20 @@ import org.apache.spark.storage.StorageLevel
   * re-plan analyzed frames with built-in functions, so nothing else a clone
   * copied (temp views, functions) reaches their plans.
   *
-  * Lives in this package because `cloneSession`, `withActive` and
-  * `Dataset.ofRows` are Spark-internal surface.
+  * Lives in this package because `cloneSession`, `withActive`,
+  * `Dataset.ofRows` and `internalCreateDataFrame` are Spark-internal
+  * surface.
   */
 final class SizedSession private (parent: classic.SparkSession,
     session: classic.SparkSession) {
 
-  /** Registered frames, oldest first, each with the call that frees it. */
-  private val held = ArrayBuffer.empty[(DataFrame, () => Unit)]
+  /** Registered frames and RDDs, oldest first, each with the call that
+    * frees it. */
+  private val held = ArrayBuffer.empty[(AnyRef, () => Unit)]
 
-  private def hold(df: DataFrame)(free: => Unit): DataFrame = {
-    held += ((df, () => free))
-    df
+  private def hold[A <: AnyRef](x: A)(free: => Unit): A = {
+    held += ((x, () => free))
+    x
   }
 
   /** `df` rebound into the clone: every plan built on it runs under the
@@ -73,6 +78,15 @@ final class SizedSession private (parent: classic.SparkSession,
     * settings. */
   def persist(df: DataFrame): DataFrame =
     hold(df.persist(StorageLevel.MEMORY_AND_DISK)) { df.unpersist(); () }
+
+  /** `rdd` persisted (memory and disk) for the scope. */
+  def persist[T](rdd: RDD[T]): RDD[T] =
+    hold(rdd.persist(StorageLevel.MEMORY_AND_DISK)) { rdd.unpersist(false); () }
+
+  /** `rows` as a clone-bound frame of `schema`. The rows are Catalyst's own,
+    * so no serializer is generated for them. */
+  def frame(rows: RDD[InternalRow], schema: StructType): DataFrame =
+    session.internalCreateDataFrame(rows, schema)
 
   /** `df` eagerly `localCheckpoint`ed for the scope: its analyzed plan
     * collapses to a `LogicalRDD` leaf, whose blocks the scope frees. */
@@ -119,8 +133,11 @@ object SizedSession {
       parent.experimental.extraStrategies,
       parent.experimental.extraOptimizations,
       parent.listenerManager.listListeners().toSeq)
-    val session = idle.iterator.asScala.find(_._1 == key).filter(idle.remove)
-      .fold(parent.cloneSession())(_._2)
+    // The newest match: its executor class loader holds what the last
+    // operator compiled, so back-to-back operators share one loader's
+    // entries in the codegen cache instead of rotating through the clones.
+    val session = idle.descendingIterator.asScala.find(_._1 == key)
+      .filter(idle.remove).fold(parent.cloneSession())(_._2)
     session.conf.set(SQLConf.ADAPTIVE_EXECUTION_ENABLED.key, "false")
     session.conf.set(SQLConf.SHUFFLE_PARTITIONS.key,
       parent.conf.get(SQLConf.SHUFFLE_PARTITIONS.key))

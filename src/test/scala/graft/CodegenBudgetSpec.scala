@@ -1,23 +1,37 @@
 package graft
 
+import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graft.CheckpointBlocks
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.data.SynthCorpus
-import graft.kg.KgPipeline
+import graft.kg.{GraphOps, KgPipeline, MentionDoc}
 import graft.link.Linker
+import graft.pipeline.KgJob
 
-/** The link DAG's codegen and job budget. Spark caches generated classes
-  * JVM-wide in an LRU of `spark.sql.codegen.cache.maxEntries` (default 100),
-  * a static conf owned by the caller's session. A pipeline whose operators
-  * generate more classes than that evicts its own classes and recompiles
-  * them on every run. So a warm run of docs → idf → mentions → link →
-  * triples, on a fixture that takes both link routes and the partial top-k
-  * merge, must compile no class at all, and must run no more jobs than the
-  * pair-RDD link needs. */
+/** The codegen and job budgets of the link DAG and of the ingest cycle.
+  *
+  * Spark caches generated classes JVM-wide in a Guava LRU of
+  * `spark.sql.codegen.cache.maxEntries` (default 100), a static conf owned by
+  * the caller's session. The cache is keyed by (context class loader, code):
+  * a whole-stage class is compiled once on the driver and once more under
+  * the executor's session loader, so it costs at least 2 entries, and a job
+  * started outside a SQL execution (a plain RDD action) runs under yet
+  * another loader. The 100 entries are 4 Guava segments of 25 that evict
+  * independently, and which segment an entry lands in hashes the loader, so
+  * it changes from JVM to JVM. A pipeline whose classes overflow a segment
+  * evicts its own classes and recompiles them on every run.
+  *
+  * So a warm run of docs → idf → mentions → link → triples, on a fixture
+  * that takes both link routes and the partial top-k merge, must compile no
+  * class at all, and must run no more jobs than the pair-RDD link needs. And
+  * the ingest cycle (`KgJob.run`, co-mention, PMI, PageRank, resume) must
+  * generate few enough classes that every segment holds its share with room
+  * to spare, and a warm cycle compiles nothing. */
 class CodegenBudgetSpec extends AnyFunSuite {
   import GoldenFixtures.{dict => d0}
 
@@ -27,6 +41,12 @@ class CodegenBudgetSpec extends AnyFunSuite {
     * query and idf collects, and the triples action, whose adaptive plan
     * runs its exchanges as jobs of their own. */
   private val MaxJobs = 7
+
+  /** Classes a cold ingest cycle may compile: 64 entries average 16 of a
+    * segment's 25. */
+  private val MaxCycleClasses = 64
+
+  private def compiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   test("a warm link pipeline run compiles no generated class and runs a bounded job count") {
     val s = spark
@@ -64,9 +84,9 @@ class CodegenBudgetSpec extends AnyFunSuite {
         jobs.incrementAndGet(); ()
       }
     }
-    val coldCompiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val coldCompiled0 = compiled()
     val (cold, coldPlan) = run()
-    info(s"cold run: ${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - coldCompiled0} classes compiled")
+    info(s"cold run: ${compiled() - coldCompiled0} classes compiled")
     assert(coldPlan.bcastPks.nonEmpty && coldPlan.shufflePks.nonEmpty,
       s"fixture must take both routes: $coldPlan")
     assert(coldPlan.knobs.valuesIterator.exists(_.dBuckets > 1), coldPlan.knobs)
@@ -74,17 +94,74 @@ class CodegenBudgetSpec extends AnyFunSuite {
 
     org.apache.spark.perfbench.ListenerDrain(s.sparkContext)
     s.sparkContext.addSparkListener(listener)
-    val compiled0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compiled0 = compiled()
     val (warm, _) =
       try run()
       finally {
         org.apache.spark.perfbench.ListenerDrain(s.sparkContext)
         s.sparkContext.removeSparkListener(listener)
       }
-    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled0
-    info(s"warm run: $compiled classes compiled, ${jobs.get} jobs")
+    val n = compiled() - compiled0
+    info(s"warm run: $n classes compiled, ${jobs.get} jobs")
     assert(warm == cold)
-    assert(compiled == 0, s"the warm run compiled $compiled generated classes")
+    assert(n == 0, s"the warm run compiled $n generated classes")
     assert(jobs.get <= MaxJobs, s"the warm run started ${jobs.get} jobs")
+  }
+
+  test("the ingest cycle fits the codegen cache: a warm cycle compiles no generated class") {
+    val s = spark
+    import s.implicits._
+    val bdict = s.sparkContext.broadcast(d0)
+    val dir = Files.createTempDirectory("graft-codegen-cycle")
+    try {
+      // Parquet inputs, read back as a checkpointed job reads them.
+      SynthCorpus.corpus(d0.regions, 400, 4, seed = 31).toDF("id", "rawText")
+        .write.parquet(s"$dir/corpus")
+      s.createDataset(SynthCorpus.transcripts(d0.regions, 160, 4, seed = 32))
+        .write.parquet(s"$dir/turns")
+      val parallelism = s.conf.get("spark.sql.shuffle.partitions").toInt
+
+      def job(root: String, runId: String): Set[graft.model.Triple] =
+        KgJob.run(s, s.read.parquet(s"$dir/turns").as[graft.model.Turn],
+          s.read.parquet(s"$dir/corpus").select("id", "rawText").as[(Long, String)],
+          bdict, 5, root, runId, parallelism).collect().toSet
+
+      // KgJob.run into a fresh root, the derived analytics over its stage
+      // tables, then the resume on the completed root.
+      def cycle(root: String) = {
+        val fresh = job(root, "fresh")
+        val mentions = s.read.parquet(s"$root/mentions").as[MentionDoc]
+        val hits = s.read.parquet(s"$root/hits").as[graft.model.LinkHit]
+        val edges = KgPipeline.coMentionEdges(s, mentions, hits)
+        val pmi = KgPipeline.pmiEdges(s, mentions, hits)
+        val rank = GraphOps.pageRank(edges, 3)(_.collect().toSet)
+        val analytics = (edges.collect().toSet, pmi.collect().toSet, rank)
+        CheckpointBlocks.release(edges)
+        CheckpointBlocks.release(pmi)
+        assert(job(root, "resume") == fresh, "resume must equal the fresh run")
+        (fresh, analytics)
+      }
+
+      val c0 = compiled()
+      val cold = cycle(s"$dir/cold")
+      val nCold = compiled() - c0
+      val c1 = compiled()
+      val warm = cycle(s"$dir/warm")
+      val nWarm = compiled() - c1
+      info(s"cold cycle: $nCold classes compiled; warm cycle: $nWarm")
+      assert(cold._1.exists(_.pred == "linkedTo"))
+      assert(cold._2._1.nonEmpty && cold._2._3.nonEmpty,
+        "the fixture must give co-mention edges to rank")
+      assert(warm == cold)
+      assert(nCold <= MaxCycleClasses,
+        s"the cold cycle compiled $nCold generated classes")
+      assert(nWarm == 0, s"the warm cycle compiled $nWarm generated classes")
+    } finally rm(dir.toFile)
+  }
+
+  private def rm(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rm))
+    f.delete()
+    ()
   }
 }

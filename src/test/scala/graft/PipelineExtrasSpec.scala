@@ -95,6 +95,25 @@ class CheckpointSpec extends AnyFunSuite {
     assert(m.forall(_.rowsOut >= 0) && m.exists(_.rowsOut > 0))
   }
 
+  test("stage metrics count exactly the committed rows of every partition") {
+    val s = spark
+    import s.implicits._
+    val bdict = s.sparkContext.broadcast(d0)
+    val root = Files.createTempDirectory("graft-ckpt-rows").toString
+    KgJob.run(s, s.createDataset(SynthCorpus.transcripts(d0.regions, 60, 4,
+        seed = 22)).repartition(5),
+      s.createDataset(SynthCorpus.corpus(d0.regions, 300, 4, seed = 21))
+        .repartition(5), bdict, 5, root, "rows", 5).count()
+    val m = StageRunner(s, root, "rows").metrics().collect()
+    for (stage <- Seq("docs", "idf", "mentions", "hits", "triples")) {
+      val rows = m.filter(_.stage == stage)
+      val parts = rows.map(_.partitionId)
+      assert(parts.distinct.length == parts.length, s"$stage: $parts")
+      assert(rows.map(_.rowsOut).sum == s.read.parquet(s"$root/$stage").count(),
+        s"$stage: ${rows.toSeq}")
+    }
+  }
+
   private def tripleBits(ts: Array[Triple]) = ts.map(t =>
     (t.subj, t.pred, t.obj, t.partKey,
       java.lang.Double.doubleToLongBits(t.score))).toSet
