@@ -3,7 +3,7 @@ package graft.kg
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graft.CacheScope
 
 import graft.data.SynthCorpus
 import graft.link.{Dict, Linker}
@@ -20,35 +20,35 @@ import graft.link.{Dict, Linker}
   * Split into `statusTable` (one row per labeled query with its outcome —
   * the DuckDB-oracle stage table) and `summarize` (one aggregation over it —
   * no driver collect). The expensive shared stages (pairs, docs, idf, qdocs)
-  * are persisted: each feeds 2-3 consumers and would otherwise recompute the
-  * full interpret per consumer.
+  * are cached while the status rows are used: each feeds 2-3 consumers and
+  * would otherwise recompute the full interpret per consumer.
   */
 object Accuracy {
   val HighSimThreshold = 0.85 // `RegressionTestRunTest.java:150`
 
-  /** Per-query outcome rows: (pair_id, interpreted, linked, similarity,
-    * pred_grid, true_grid). similarity/pred_grid are null when unlinked. */
-  def statusTable(spark: SparkSession, dict: Broadcast[Dict], n: Long,
-      nDistricts: Int, seed: Long): DataFrame = {
+  /** `use` of the per-query outcome rows: (pair_id, interpreted, linked,
+    * similarity, pred_grid, true_grid). similarity/pred_grid are null when
+    * unlinked. The shared stages behind the rows are cached in a
+    * [[CacheScope]] for the duration of `use`. */
+  def statusTable[T](spark: SparkSession, dict: Broadcast[Dict], n: Long,
+      nDistricts: Int, seed: Long)(use: DataFrame => T): T = CacheScope { cache =>
     import spark.implicits._
-    val pairs = spark.range(n).mapPartitions { it =>
+    // Corpus, queries and labels read the pairs.
+    val pairs = cache.persist(spark.range(n).mapPartitions { it =>
       val regions = dict.value.regions
       val anchors = SynthCorpus.pickAnchors(regions, nDistricts)
       it.map(i => SynthCorpus.labeledPair(regions, anchors, i, seed))
-    }.persist(StorageLevel.MEMORY_AND_DISK) // corpus + queries + labels read it
+    })
 
     val corpus = pairs.map(p => (p.id, p.corpusText))
-    val docs = Linker.buildDocs(spark, corpus, dict)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val idf = Linker.buildIdf(spark, docs)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val docs = cache.persist(Linker.buildDocs(spark, corpus, dict))
+    val idf = cache.persist(Linker.buildIdf(spark, docs))
 
     // Query ids offset so they never collide with corpus doc ids.
     val queries = pairs.map(p => (p.id + n, p.queryText))
-    // Interpret only — the link stamps query idfs in-cell; the
-    // interpreted-flag consumer below reads ids only.
-    val qdocs = Linker.buildDocs(spark, queries, dict)
-      .persist(StorageLevel.MEMORY_AND_DISK) // interpreted-flag + link
+    // Interpret only — the link stamps query idfs in-cell. Read by the
+    // interpreted flag below (ids only) and the link.
+    val qdocs = cache.persist(Linker.buildDocs(spark, queries, dict))
 
     val hits = Linker.linkTopKAuto(spark, qdocs, docs, topN = 1, idf)
 
@@ -61,20 +61,13 @@ object Accuracy {
       .select((col("queryId") - n).as("pair_id"),
         col("similarity"), col("pred_grid"))
 
-    val status = labels.select($"id".as("pair_id"), $"gridId".as("true_grid"))
+    use(labels.select($"id".as("pair_id"), $"gridId".as("true_grid"))
       .join(interpreted, Seq("pair_id"), "left")
       .join(predicted, Seq("pair_id"), "left")
       .select(col("pair_id"),
         coalesce(col("interpreted"), lit(false)).as("interpreted"),
         col("pred_grid").isNotNull.as("linked"),
-        col("similarity"), col("pred_grid"), col("true_grid"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Force the small status table, then release the heavy upstream caches —
-    // the shared-session test suite (and repeated Verify queries) would
-    // otherwise accumulate doc/idf/query vectors nothing reads again.
-    status.count()
-    Seq(pairs, docs, idf, qdocs).foreach(_.unpersist())
-    status
+        col("similarity"), col("pred_grid"), col("true_grid")))
   }
 
   /** One summary row from the status table. Rates are plain IEEE divisions of
@@ -109,15 +102,13 @@ object Accuracy {
   }
 
   /** Evaluate on a deterministic synthetic labeled set of `n` pairs.
-    * Returns one summary row, already materialized — the status cache (the
-    * one persist `statusTable` leaves alive) is released before returning,
-    * so repeated calls in a shared session hold zero storage. */
+    * Returns one summary row, already materialized, so repeated calls in a
+    * shared session hold zero storage. */
   def evaluate(spark: SparkSession, dict: Broadcast[Dict], n: Long,
-      nDistricts: Int, seed: Long): DataFrame = {
-    val status = statusTable(spark, dict, n, nDistricts, seed)
-    val summary = summarize(status)
-    val rows = summary.collect() // exactly one row
-    status.unpersist()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), summary.schema)
-  }
+      nDistricts: Int, seed: Long): DataFrame =
+    statusTable(spark, dict, n, nDistricts, seed) { status =>
+      val summary = summarize(status)
+      val rows = summary.collect() // exactly one row
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), summary.schema)
+    }
 }

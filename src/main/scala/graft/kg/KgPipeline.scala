@@ -483,7 +483,8 @@ object KgPipeline {
     * mentions, hits); without a release seam every invocation in a
     * long-lived session (Verify, Bench, a service) leaks them — measured 30
     * persistent RDDs after 7 driver queries in round 2. Callers materialize
-    * what they need from the outputs, then call `unpersistAll()`. The
+    * what they need from the outputs, then call `unpersistAll()` (or run
+    * inside `CacheScope.using(new PersistStages)`, which frees them). The
     * intermediate `docs`/`idf` stages are exposed for consumers that extend
     * the run without re-deriving them; a consumer that needs idf-stamped
     * vectors (per-term explain, stage materialization) stamps them with
@@ -519,6 +520,20 @@ object KgPipeline {
     spark.sparkContext.broadcast(Dict.withDiscoveredTowns(dict.value, discovered))
   }
 
+  /** The corpus side of [[run]]: the deduplicated corpus's docs and their
+    * idf table, each through `stages`. Exact ingest dedup comes first
+    * (`AddressPersister.isDuplicatedAddress`, `AddressPersister.java:214-243`
+    * — interpret is pure, so deduping the raw text before interpretation is
+    * equivalent and cheaper). */
+  def corpusSide(spark: SparkSession, corpus: Dataset[(Long, String)],
+      dict: Broadcast[Dict], stages: Stages): (Dataset[DocVec], Dataset[IdfRow]) = {
+    import spark.implicits._
+    val docs = stages.stage[DocVec]("docs") {
+      Linker.buildDocs(spark, Linker.dedupCorpus(spark, corpus), dict)
+    }
+    (docs, stages.stage[IdfRow]("idf")(Linker.buildIdf(spark, docs)))
+  }
+
   /** End-to-end: turns + historical corpus → KgRun(mentions, triples, hits,
     * plus the docs and idf stages). topN per the reference query default.
     * `run` builds only what it runs: no idf-stamped view of docs or
@@ -535,13 +550,7 @@ object KgPipeline {
       corpus: Dataset[(Long, String)], dict: Broadcast[Dict], topN: Int,
       stages: Stages = new PersistStages): KgRun = {
     import spark.implicits._
-    // Exact ingest dedup first (`AddressPersister.isDuplicatedAddress`
-    // `AddressPersister.java:214-243` — interpret is pure, so deduping the
-    // raw text before interpretation is equivalent and cheaper).
-    val docs = stages.stage[DocVec]("docs") {
-      Linker.buildDocs(spark, Linker.dedupCorpus(spark, corpus), dict)
-    }
-    val idf = stages.stage[IdfRow]("idf")(Linker.buildIdf(spark, docs))
+    val (docs, idf) = corpusSide(spark, corpus, dict, stages)
     // Mentions stay unstamped: the link stamps both sides in-cell, and every
     // other consumer reads identity/addr fields only or stamps its own view.
     val mentions = stages.stage[MentionDoc]("mentions") {

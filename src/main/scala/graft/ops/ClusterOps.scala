@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CacheScope
 
 /** Embedding-space clustering and the cluster-based semantic dedup built on
   * it (SemDedup, Abbas et al. 2023: cluster the corpus, then prune
@@ -90,9 +91,9 @@ object ClusterOps {
     *
     * Loan-pattern like [[graft.kg.GraphOps.pageRank]]: the clustered-vector
     * table feeds BOTH self-join sides and the output projection, so it is
-    * persisted for the duration and released after `use` materializes the
-    * result — otherwise each consumer would re-scan the corpus and re-run
-    * the k-cosine assignment projection.
+    * cached in a [[CacheScope]] for the duration of `use` — otherwise each
+    * consumer would re-scan the corpus and re-run the k-cosine assignment
+    * projection.
     *
     * Result columns: (idCol, cluster, dropped: boolean). */
   def semDedup[T](emb: DataFrame, k: Int, iters: Int, threshold: Double,
@@ -100,10 +101,9 @@ object ClusterOps {
       vecCol: String = "embedding")(use: DataFrame => T): T = {
     val (assigned, _) = kmeans(emb, k, iters, init, idCol, vecCol)
     val dv = col(vecCol).cast("array<double>")
-    val withVec = emb.select(col(idCol), dv.as("dv"))
-      .join(assigned.select(col(idCol), col("cluster")), Seq(idCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    CacheScope { cache =>
+      val withVec = cache.persist(emb.select(col(idCol), dv.as("dv"))
+        .join(assigned.select(col(idCol), col("cluster")), Seq(idCol)))
       val l = withVec.select(col(idCol).as("lid"), col("dv").as("lv"),
         col("cluster"))
       val r = withVec.select(col(idCol).as("rid"), col("dv").as("rv"),
@@ -115,6 +115,6 @@ object ClusterOps {
       use(withVec.select(col(idCol), col("cluster"))
         .join(droppedIds.withColumn("dropped", lit(true)), Seq(idCol), "left")
         .withColumn("dropped", coalesce(col("dropped"), lit(false))))
-    } finally { withVec.unpersist(); () }
+    }
   }
 }

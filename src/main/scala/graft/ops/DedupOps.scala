@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.SizedSession
+import org.apache.spark.sql.graft.{CacheScope, SizedSession}
 
 /** Deduplication operators for training-data pipelines, Spark-first:
   *
@@ -219,9 +219,9 @@ object DedupOps {
     }
     // ONE eval shingle scan serves both the filter build and the verify
     // join (the eval side is the one assumed large here).
-    val evalShingles = shingleRows(evalSet, idCol, textCol, n)
-      .select("shingle").distinct().persist()
-    try {
+    CacheScope { cache =>
+      val evalShingles = cache.persist(shingleRows(evalSet, idCol, textCol, n)
+        .select("shingle").distinct())
       val setPositions = evalShingles
         .withColumn("h", pmod(xxhash64(col("shingle")), lit(HashP)))
         .select(explode(array(posCols: _*)).as("pos"))
@@ -243,12 +243,11 @@ object DedupOps {
             }
           }
         }.toDF("sid", "shingle", "h")
-      survivors.join(evalShingles, Seq("shingle"))
+      // Materialized before the scope frees the shared eval-shingle table.
+      cache.checkpoint(survivors.join(evalShingles, Seq("shingle"))
         .groupBy(col("sid")).agg(count(lit(1)).as("n_hits"))
-        .select(col("sid").as(idCol), col("n_hits"))
-        // Materialize before releasing the shared eval-shingle table.
-        .localCheckpoint(true)
-    } finally { evalShingles.unpersist(); () }
+        .select(col("sid").as(idCol), col("n_hits")))
+    }
   }
 
   /** FUZZY benchmark decontamination: flag corpus documents whose

@@ -1,12 +1,12 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Paths}
+import java.io.IOException
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Dataset, Encoder, SaveMode, SparkSession}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graft.CacheScope
 
 /** How a pipeline materializes the stages it reads more than once.
   * `KgPipeline.run` defines its DAG once against this; [[PersistStages]]
@@ -20,17 +20,12 @@ trait Stages {
 }
 
 /** Persist each stage MEMORY_AND_DISK (partitions spill rather than
-  * recompute at scale) and remember it for [[release]]. */
-final class PersistStages extends Stages {
-  private val held = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
-
-  def stage[T: Encoder](name: String)(compute: => Dataset[T]): Dataset[T] = {
-    val ds = compute.persist(StorageLevel.MEMORY_AND_DISK)
-    held += ds
-    ds
-  }
-
-  def release(): Unit = { held.foreach(_.unpersist()); held.clear() }
+  * recompute at scale). The policy is a [[CacheScope]], which owns what it
+  * persists: `release` (or the end of a `CacheScope.using` block) frees the
+  * stages, newest first. */
+final class PersistStages extends CacheScope with Stages {
+  def stage[T: Encoder](name: String)(compute: => Dataset[T]): Dataset[T] =
+    persist(compute)
 }
 
 /** One row of per-partition lineage/metrics (north rule: every stage is
@@ -51,11 +46,14 @@ final case class StageMetric(
   *
   * Contract per stage:
   *  - output table at `<root>/<name>` written via Spark's committed job
-  *    protocol (`_SUCCESS` marks the atomic commit — partial writes from a
-  *    killed run are invisible to the resume check and simply overwritten);
-  *  - per-partition metrics appended to `<root>/_metrics` (stage, partition,
-  *    rows, wall, runId) — rows from the committed files' parquet footers,
-  *    not from a second pass over the data;
+  *    protocol — partial writes from a killed run are simply overwritten;
+  *  - once the data has committed, a manifest `<name>/_manifest` (runId,
+  *    wall, completion time), written to a temporary file and renamed with
+  *    the Hadoop `FileSystem` the footers are read with. It marks the stage
+  *    complete: one killed after its data commit has none and is recomputed;
+  *  - per-partition metrics (`metrics()`: stage, partition, rows, wall,
+  *    runId) come from the manifests and the committed files' parquet
+  *    footers, not from a second pass over the data;
   *  - a completed stage is NEVER recomputed: re-running the job skips to the
   *    first missing stage and reads the materialized table (downstream
   *    stages therefore read checkpointed data, not a recomputed lineage —
@@ -64,24 +62,26 @@ final case class StageMetric(
 final class StageRunner(spark: SparkSession, root: String, runId: String)
     extends Stages {
 
+  private val conf = spark.sparkContext.hadoopConfiguration
+  private val fs = new Path(root).getFileSystem(conf)
   private def dir(name: String) = s"$root/$name"
-  def isComplete(name: String): Boolean =
-    Files.exists(Paths.get(dir(name), "_SUCCESS"))
+  private def manifest(name: String) = new Path(dir(name), "_manifest")
 
-  /** Run (or resume) one stage. `compute` is only evaluated when the stage's
-    * committed output is absent. */
+  def isComplete(name: String): Boolean = fs.exists(manifest(name))
+
+  /** Run (or resume) one stage. `compute` is only evaluated when the stage
+    * has no manifest. */
   def stage[T: Encoder](name: String)(compute: => Dataset[T]): Dataset[T] = {
-    import spark.implicits._
     if (!isComplete(name)) {
       val t0 = System.currentTimeMillis()
       compute.write.mode(SaveMode.Overwrite).parquet(dir(name))
-      val wall = System.currentTimeMillis() - t0
       val now = System.currentTimeMillis()
-      val metrics = partitionRows(dir(name)).map { case (pid, n) =>
-        StageMetric(name, pid, n, wall, runId, now)
-      }
-      spark.createDataset(metrics)
-        .write.mode(SaveMode.Append).parquet(s"$root/_metrics")
+      val tmp = new Path(dir(name), "_manifest.tmp")
+      val out = fs.create(tmp, true)
+      try { out.writeUTF(runId); out.writeLong(now - t0); out.writeLong(now) }
+      finally out.close()
+      if (!fs.rename(tmp, manifest(name)))
+        throw new IOException(s"cannot commit the manifest of stage $name")
     }
     // The encoder's schema: inferring it from the footers would cost a job
     // per read.
@@ -94,10 +94,8 @@ final class StageRunner(spark: SparkSession, root: String, runId: String)
     * and speculation; a partition that wrote no rows has no file, except
     * the first. */
   private def partitionRows(path: String): Seq[(Int, Long)] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
     val Part = """part-(\d+)-.*\.parquet""".r
-    p.getFileSystem(conf).listStatus(p).toSeq.flatMap { st =>
+    fs.listStatus(new Path(path)).toSeq.flatMap { st =>
       st.getPath.getName match {
         case Part(split) =>
           val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
@@ -110,9 +108,19 @@ final class StageRunner(spark: SparkSession, root: String, runId: String)
   /** Stage tables live under `root`; nothing is cached in the session. */
   def release(): Unit = ()
 
+  /** One row per partition of every completed stage under `root`. */
   def metrics(): Dataset[StageMetric] = {
     import spark.implicits._
-    spark.read.parquet(s"$root/_metrics").as[StageMetric]
+    val stages = fs.listStatus(new Path(root)).map(_.getPath.getName)
+      .filter(isComplete).sorted.toSeq
+    spark.createDataset(stages.flatMap { name =>
+      val in = fs.open(manifest(name))
+      val (id, wall, at) = try (in.readUTF(), in.readLong(), in.readLong())
+        finally in.close()
+      partitionRows(dir(name)).map { case (pid, n) =>
+        StageMetric(name, pid, n, wall, id, at)
+      }
+    })
   }
 }
 

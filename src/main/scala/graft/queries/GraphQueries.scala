@@ -1,9 +1,10 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graft.CheckpointBlocks
+import org.apache.spark.sql.graft.{CacheScope, CheckpointBlocks}
 
 import graft.kg.{GraphOps, KgPipeline}
+import graft.pipeline.PersistStages
 import QuerySupport._
 
 /** Graph analytics over the engine's own materialized co-mention graph.
@@ -57,18 +58,16 @@ object GraphQueries {
 
   /** Run the pipeline, derive the top-1 co-mention edges and apply `op`.
     * Not `scoped`: the loan-pattern graph ops must stash INSIDE their `use`
-    * so their iteration checkpoints are freed on return; the eagerly
-    * checkpointed edges are released once `op` has returned. */
+    * so their iteration checkpoints are freed on return; the run's stages
+    * and the eagerly checkpointed edges are freed once `op` has returned. */
   private def onCoMentionGraph(s: SparkSession, dir: String)(
       op: DataFrame => DataFrame): DataFrame = {
-    val (corpus, turns) = kgInputs(s, dir)
-    val r = KgPipeline.run(s, turns, corpus, bdict(s), 5)
-    try {
-      val edges = KgPipeline.coMentionEdges(s, r.mentions, r.hits,
-        topRank = 1)
-      try op(edges)
-      finally CheckpointBlocks.release(edges)
-    } finally r.unpersistAll()
+    CacheScope.using(new PersistStages) { stages =>
+      val (corpus, turns) = kgInputs(s, dir)
+      val r = KgPipeline.run(s, turns, corpus, bdict(s), 5, stages)
+      op(stages.hold(KgPipeline.coMentionEdges(s, r.mentions, r.hits,
+        topRank = 1))(CheckpointBlocks.release))
+    }
   }
 
   /** q35 oracle: re-derive the co-mention edges from the hits/mentions

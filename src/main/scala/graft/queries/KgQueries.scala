@@ -1,9 +1,11 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CacheScope
 
 import graft.kg.KgPipeline
-import graft.link.Linker
+import graft.link.{LinkIndex, Linker}
+import graft.pipeline.PersistStages
 import QuerySupport._
 
 /** The transcript→KG pipeline and its link: triples, hits (planned,
@@ -29,21 +31,17 @@ object KgQueries {
       // oracle compare independently confirms indexed == planned, bit for
       // bit.
       import s.implicits._
-      val (corpus, turns) = kgInputs(s, dir)
-      val b = bdict(s)
-      val docs = Linker.buildDocs(s, Linker.dedupCorpus(s, corpus), b)
-        .persist()
-      val idf = Linker.buildIdf(s, docs).persist()
-      try {
-        val mentions = graft.kg.KgPipeline.detectMentions(s, turns, b)
-        val index = graft.link.LinkIndex.build(s, docs, idf)
-        try {
-          val hits = index.link(s, mentions.map(_.doc), 5)
-          stash(s, hits.toDF()
-            .withColumn("similarity", round(col("similarity"), 9))
-            .orderBy("queryId", "rank"), name)
-        } finally index.unpersist()
-      } finally { docs.unpersist(); idf.unpersist(); () }
+      CacheScope.using(new PersistStages) { stages =>
+        val (corpus, turns) = kgInputs(s, dir)
+        val b = bdict(s)
+        val (docs, idf) = KgPipeline.corpusSide(s, corpus, b, stages)
+        val mentions = KgPipeline.detectMentions(s, turns, b)
+        val index = stages.hold(LinkIndex.build(s, docs, idf))(_.unpersist())
+        val hits = index.link(s, mentions.map(_.doc), 5)
+        stash(s, hits.toDF()
+          .withColumn("similarity", round(col("similarity"), 9))
+          .orderBy("queryId", "rank"), name)
+      }
     },
     QuerySpec.of("kg_links_explain", Oracle(kgLinksExplainSql)) { (s, dir, name) =>
       // Per-term scoring explain over the final top-k hits (the reference's

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{CacheScope, CheckpointBlocks}
 
 import graft.SparkEntry
 import graft.data.SynthCorpus
@@ -10,6 +11,7 @@ import graft.kg.KgPipeline
 import graft.link.{Dict, Linker}
 import graft.model.Turn
 import graft.ops.{AnnOps, MultimodalOps}
+import graft.pipeline.PersistStages
 
 /** Plumbing shared by the query families: inputs, the shared dictionary,
   * result stashing, the stage tables the kg oracles read, and the
@@ -102,12 +104,11 @@ private[graft] object QuerySupport {
   /** Run the KG pipeline, materialize one derived result, release all run
     * caches. */
   private[graft] def scoped(s: SparkSession, dir: String, topN: Int, name: String)(
-      f: KgPipeline.KgRun => DataFrame): DataFrame = {
-    val (corpus, turns) = kgInputs(s, dir)
-    val r = KgPipeline.run(s, turns, corpus, bdict(s), topN)
-    try stash(s, f(r), name)
-    finally r.unpersistAll()
-  }
+      f: KgPipeline.KgRun => DataFrame): DataFrame =
+    CacheScope.using(new PersistStages) { stages =>
+      val (corpus, turns) = kgInputs(s, dir)
+      stash(s, f(KgPipeline.run(s, turns, corpus, bdict(s), topN, stages)), name)
+    }
 
   /** Stash `finish(ck)` under `name`, then free `ck`'s blocks: how a query
     * consumes an EAGERLY CHECKPOINTED op result (one that left its
@@ -115,20 +116,20 @@ private[graft] object QuerySupport {
   private[queries] def stashCk(s: SparkSession, name: String, ck: DataFrame)(
       finish: DataFrame => DataFrame): DataFrame =
     try stash(s, finish(ck), name)
-    finally org.apache.spark.sql.graft.CheckpointBlocks.release(ck)
+    finally CheckpointBlocks.release(ck)
 
   /** `scoped` for the derived analytics that return checkpointed results
-    * (coMentionEdges/pmiEdges/negativeSamples/entityTimeline/
-    * toolEntityEdges), through [[stashCk]]. `f` also receives the turns
-    * dataset for the ops that join transcript structure. */
+    * (coMentionEdges/pmiEdges/negativeSamples/entityTimeline/toolEntityEdges),
+    * whose blocks the scope frees before the run's caches. `f` also receives
+    * the turns dataset for the ops that join transcript structure. */
   private[queries] def scopedCk(s: SparkSession, dir: String, topN: Int, name: String)(
       f: (KgPipeline.KgRun, Dataset[Turn]) => DataFrame)(
-      finish: DataFrame => DataFrame): DataFrame = {
-    val (corpus, turns) = kgInputs(s, dir)
-    val r = KgPipeline.run(s, turns, corpus, bdict(s), topN)
-    try stashCk(s, name, f(r, turns))(finish)
-    finally r.unpersistAll()
-  }
+      finish: DataFrame => DataFrame): DataFrame =
+    CacheScope.using(new PersistStages) { stages =>
+      val (corpus, turns) = kgInputs(s, dir)
+      val r = KgPipeline.run(s, turns, corpus, bdict(s), topN, stages)
+      stash(s, finish(stages.hold(f(r, turns))(CheckpointBlocks.release)), name)
+    }
 
   /** Canonicalization loop, closed (reference `ExtractTown.main` →
     * `AddressPersister.importRegionTowns` → next trie build): discover
@@ -201,11 +202,11 @@ private[graft] object QuerySupport {
     w(corpus.union(corpus.map { case (id, t) => (id + 1000000L, t) })
       .toDF("id", "rawText"), "corpus_doubled")
 
-    val docs = Linker.buildDocs(s, corpus, b)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    w(docs.toDF().select(col("docId"), col("partKey")), "docs")
-    w(Linker.termKeyRows(s, docs), "termrows")
-    docs.unpersist()
+    CacheScope { cache =>
+      val docs = cache.persist(Linker.buildDocs(s, corpus, b))
+      w(docs.toDF().select(col("docId"), col("partKey")), "docs")
+      w(Linker.termKeyRows(s, docs), "termrows")
+    }
 
     w(Linker.townCandidates(s, corpus, b), "town_candidates")
     // Second-pass loop rows for the kg_towns_loop_check oracle: DuckDB
@@ -221,48 +222,48 @@ private[graft] object QuerySupport {
         Option(t.tool).getOrElse(""), t.ts.getTime))
       .toDF("subj", "text", "role", "tool", "ts_ms"), "turns")
 
-    val r = KgPipeline.run(s, turns, corpus, b, 5)
-    w(r.hits.toDF(), "hits5")
-    // Bounded top-k is prefix-stable: rank<=3 of a topN=5 run IS the topN=3
-    // run (pinned ties), so one pipeline pass serves both hit tables.
-    w(r.hits.toDF().where(col("rank") <= 3)
-      .withColumn("similarity", round(col("similarity"), 9)), "hits3")
-    w(r.mentions.map { m =>
-      val a = m.addr
-      (m.queryId, s"${m.convId}#${m.turnIdx}", m.doc.partKey, a.pid, a.cid,
-        a.did, a.streetId, a.townId, a.villageId, a.road, a.roadNum,
-        a.buildingNum, a.text)
-    }.toDF("queryId", "subj", "partKey", "pid", "cid", "did", "street_id",
-      "town_id", "village_id", "road", "road_num", "building_num", "residual"),
-      "mentions")
+    CacheScope.using(new PersistStages) { stages =>
+      val r = KgPipeline.run(s, turns, corpus, b, 5, stages)
+      w(r.hits.toDF(), "hits5")
+      // Bounded top-k is prefix-stable: rank<=3 of a topN=5 run IS the topN=3
+      // run (pinned ties), so one pipeline pass serves both hit tables.
+      w(r.hits.toDF().where(col("rank") <= 3)
+        .withColumn("similarity", round(col("similarity"), 9)), "hits3")
+      w(r.mentions.map { m =>
+        val a = m.addr
+        (m.queryId, s"${m.convId}#${m.turnIdx}", m.doc.partKey, a.pid, a.cid,
+          a.did, a.streetId, a.townId, a.villageId, a.road, a.roadNum,
+          a.buildingNum, a.text)
+      }.toDF("queryId", "subj", "partKey", "pid", "cid", "did", "street_id",
+        "town_id", "village_id", "road", "road_num", "building_num", "residual"),
+        "mentions")
 
-    // Per-term explain stage tables: the kg_links_explain oracle recomputes
-    // scoreExplain (lookups, boosts, coord/density, tfidf) in DuckDB from
-    // these. Both sides are stamped here with the run's own idf (run()
-    // keeps them unstamped; the link stamps in-cell), straight from the run
-    // the hit tables came from.
-    val qdocs = Linker.attachIdf(s, r.mentions.map(_.doc), r.idf)
-    val ddocs = Linker.attachIdf(s, r.docs, r.idf)
-    w(qdocs.flatMap(d => d.texts.indices.map(i =>
-        (d.docId, i, d.texts(i), d.tTypes.charAt(i).toString, d.idfs(i))))
-      .toDF("queryId", "qi", "text", "type", "idf"), "explain_qterms")
-    w(qdocs.map(d => (d.docId, d.partKey, d.town, d.village, d.road,
-        d.roadNumValue, d.tTypes.count(_ == 'X')))
-      .toDF("queryId", "partKey", "town", "village", "road", "roadNumValue",
-        "qXCount"), "explain_qmeta")
-    w(ddocs.flatMap(d => d.texts.indices.map(i =>
-        (d.docId, i, d.texts(i), d.tTypes.charAt(i).toString, d.idfs(i))))
-      .toDF("docId", "di", "text", "type", "idf"), "explain_dterms")
-    w(ddocs.map(d => (d.docId, d.partKey, d.town, d.village, d.road,
-        d.roadNum, d.roadNumValue, d.tTypes.indexOf('N')))
-      .toDF("docId", "partKey", "town", "village", "road", "roadNum",
-        "roadNumValue", "roadNumIdx"), "explain_dmeta")
-    r.unpersistAll()
+      // Per-term explain stage tables: the kg_links_explain oracle recomputes
+      // scoreExplain (lookups, boosts, coord/density, tfidf) in DuckDB from
+      // these. Both sides are stamped here with the run's own idf (run()
+      // keeps them unstamped; the link stamps in-cell), straight from the run
+      // the hit tables came from.
+      val qdocs = Linker.attachIdf(s, r.mentions.map(_.doc), r.idf)
+      val ddocs = Linker.attachIdf(s, r.docs, r.idf)
+      w(qdocs.flatMap(d => d.texts.indices.map(i =>
+          (d.docId, i, d.texts(i), d.tTypes.charAt(i).toString, d.idfs(i))))
+        .toDF("queryId", "qi", "text", "type", "idf"), "explain_qterms")
+      w(qdocs.map(d => (d.docId, d.partKey, d.town, d.village, d.road,
+          d.roadNumValue, d.tTypes.count(_ == 'X')))
+        .toDF("queryId", "partKey", "town", "village", "road", "roadNumValue",
+          "qXCount"), "explain_qmeta")
+      w(ddocs.flatMap(d => d.texts.indices.map(i =>
+          (d.docId, i, d.texts(i), d.tTypes.charAt(i).toString, d.idfs(i))))
+        .toDF("docId", "di", "text", "type", "idf"), "explain_dterms")
+      w(ddocs.map(d => (d.docId, d.partKey, d.town, d.village, d.road,
+          d.roadNum, d.roadNumValue, d.tTypes.indexOf('N')))
+        .toDF("docId", "partKey", "town", "village", "road", "roadNum",
+          "roadNumValue", "roadNumIdx"), "explain_dmeta")
+    }
 
     val (n, _, nDistricts) = scaleOf(dir)
-    val acc = graft.kg.Accuracy.statusTable(s, b, n.toLong, nDistricts, seed = 77)
-    w(acc, "acc_status")
-    acc.unpersist()
+    graft.kg.Accuracy.statusTable(s, b, n.toLong, nDistricts, seed = 77)(
+      w(_, "acc_status"))
 
     // Shared inputs the ANN/media oracles recompute from: the seeded
     // hyperplane table q16/q22 bucket with, the deterministic IVF centroid

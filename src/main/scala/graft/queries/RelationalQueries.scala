@@ -2,9 +2,12 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CacheScope
 
-import graft.link.Linker
+import graft.kg.KgPipeline
+import graft.link.{LinkIndex, Linker}
 import graft.ops.MultimodalOps
+import graft.pipeline.PersistStages
 import QuerySupport._
 
 /** Core dataflow on the relational tables (aggregates, joins, windows,
@@ -18,21 +21,18 @@ object RelationalQueries {
     QuerySpec.of("q27_stream_link", Oracle(KgQueries.kgTriplesOracleSql)) { (s, dir, name) =>
       // Streaming entity linking, oracle-checked: the sf turns as
       // a bounded FILE stream (3 parquet files, maxFilesPerTrigger=1 → 3
-      // micro-batches) through `TranscriptStream.linkStream` — readStream +
+      // micro-batches) through `TranscriptStream.linkStreamWith` — readStream +
       // checkpointed foreachBatch + an idempotent overwrite-by-batchId
       // parquet sink — then the materialized triples. The DuckDB oracle is
       // the SAME recomputation as kg_triples from the batch stage tables,
       // so CORRECTNESS checks stream == batch on an independent engine
-      // (bit-identity already pinned by PipelineExtrasSpec's linkStream
+      // (bit-identity already pinned by PipelineExtrasSpec's streaming link
       // test; this makes it part of the oracle-checked surface).
       import s.implicits._
-      import org.apache.spark.storage.StorageLevel
-      val (corpus, turns) = kgInputs(s, dir)
-      val b = bdict(s)
-      val docs = Linker.buildDocs(s, Linker.dedupCorpus(s, corpus), b)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val idf = Linker.buildIdf(s, docs).persist(StorageLevel.MEMORY_AND_DISK)
-      try {
+      CacheScope.using(new PersistStages) { stages =>
+        val (corpus, turns) = kgInputs(s, dir)
+        val b = bdict(s)
+        val (docs, idf) = KgPipeline.corpusSide(s, corpus, b, stages)
         // Fresh stream state per invocation (checkpoint offsets would
         // otherwise mark the files done and skip the sink on a re-run).
         val root = stashRoot.resolve(name).toFile
@@ -43,24 +43,23 @@ object RelationalQueries {
         val streamTurns = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(inDir)
           .as[graft.model.Turn]
-        val h = graft.streaming.TranscriptStream.linkStream(
-            s, streamTurns, b, docs, idf, topN = 5, s"$root/ckpt") {
+        // The scope stops the query, then frees the static-side index.
+        val index = stages.hold(LinkIndex.build(s, docs, idf))(_.unpersist())
+        val q = stages.hold(graft.streaming.TranscriptStream.linkStreamWith(
+            s, streamTurns, b, index, topN = 5, s"$root/ckpt") {
           (triples, batchId) =>
             // Idempotent sink: a replayed batch overwrites its own partition
             // (the at-least-once → effective exactly-once upgrade the
-            // linkStream contract documents).
+            // linkStreamWith contract documents).
             triples.toDF().write.mode("overwrite")
               .parquet(s"$outDir/batch_id=$batchId")
             ()
-        }
-        // close() releases the persisted static-side index too — without it
-        // each Verify/Bench pass in a long-lived session strands a packed
-        // corpus copy in the block manager.
-        try h.query.processAllAvailable() finally h.close()
+        })(_.stop())
+        q.processAllAvailable()
         s.read.parquet(outDir)
           .select("subj", "pred", "obj", "score", "partKey")
           .orderBy("subj", "pred", "obj")
-      } finally { docs.unpersist(); idf.unpersist(); () }
+      }
     },
     QuerySpec.of("q1_pricing_summary", Oracle(
       """SELECT l_returnflag, l_linestatus, round(sum(l_quantity),2) AS sum_qty,

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CacheScope
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.kg.KgPipeline
@@ -49,36 +50,14 @@ object TranscriptStream {
     * to effective exactly-once. Mention triples ride along so the sink
     * receives each turn's complete triple set atomically.
     *
-    * Returns a [[LinkStreamHandle]] carrying BOTH the query and the
-    * persisted index, because the index holds a packed copy of the full
-    * static corpus in the block manager: callers must `close()` the handle
-    * (or `index.unpersist()`) once the stream is done, or every invocation
-    * in a long-lived session strands another corpus-sized set of persisted
-    * cells. */
-  def linkStream(spark: SparkSession, turns: Dataset[Turn],
-      dict: Broadcast[Dict], docs: Dataset[graft.model.DocVec],
-      idf: Dataset[graft.model.IdfRow], topN: Int, checkpointDir: String)(
-      sink: (Dataset[graft.model.Triple], Long) => Unit)
-      : LinkStreamHandle = {
-    // The static side is packed, hash-partitioned by scoring cell, and
-    // persisted ONCE before the first trigger; each micro-batch cogroups
-    // its (tiny) query side against it with the index's own partitioner —
-    // narrow on the corpus, so per-batch cost no longer scales with corpus
-    // size. Output is bit-identical to the per-batch `linkTopKAuto` this
-    // replaces (LinkIndexSpec + StreamingSpec stream==batch).
-    val index = graft.link.LinkIndex.build(spark, docs, idf)
-    LinkStreamHandle(
-      linkStreamWith(spark, turns, dict, index, topN, checkpointDir)(sink),
-      index)
-  }
-
-  /** [[linkStream]] against a CALLER-OWNED [[graft.link.LinkIndex]] — the
-    * production shape of the continuous loop: one index serves many stream
-    * incarnations, and between them the caller GROWS it in place
-    * (`index.appended` with an imported corpus delta and the refreshed term
-    * statistics) without ever repacking the historical bytes. The caller keeps lifecycle responsibility: stop the query, then
-    * `index.unpersist()` once the LAST generation retires (StreamingSpec
-    * pins the full grow-then-stream round trip against the batch link). */
+    * The index is CALLER-OWNED: one index serves many stream incarnations,
+    * and between them the caller GROWS it in place (`index.appended` with an
+    * imported corpus delta and the refreshed term statistics) without ever
+    * repacking the historical bytes. The caller stops the query, then frees
+    * the index once the LAST generation retires, e.g. by holding both in one
+    * `CacheScope` (StreamingSpec pins stream == batch and the
+    * grow-then-stream round trip). Each micro-batch's mentions are cached
+    * for the batch in a scope of their own. */
   def linkStreamWith(spark: SparkSession, turns: Dataset[Turn],
       dict: Broadcast[Dict], index: graft.link.LinkIndex, topN: Int,
       checkpointDir: String)(
@@ -96,26 +75,13 @@ object TranscriptStream {
         // cost more than the ~0.3-0.6 s one-task detection it spread. A
         // production-rate trigger carries many splits and parallelizes at
         // the source; kept unspread.)
-        val mentions = KgPipeline.detectMentions(spark, batch, dict)
-          .persist()
-        try {
+        CacheScope { cache =>
+          val mentions = cache.persist(KgPipeline.detectMentions(spark, batch, dict))
           val hits = index.link(spark, mentions.map(_.doc), topN)
           sink(KgPipeline.mentionTriples(spark, mentions, dict)
             .union(KgPipeline.linkTriples(spark, mentions, hits)), batchId)
-        } finally { mentions.unpersist(); () }
+        }
       }
       .start()
-  }
-
-  /** A running [[linkStream]] plus the persisted static-side index backing
-    * it. The index's packed corpus cells live in the block manager for the
-    * stream's whole lifetime — `close()` stops the query and releases them. */
-  final case class LinkStreamHandle(
-      query: org.apache.spark.sql.streaming.StreamingQuery,
-      index: graft.link.LinkIndex) {
-    def close(): Unit = {
-      if (query.isActive) query.stop()
-      index.unpersist()
-    }
   }
 }

@@ -2,7 +2,6 @@ package org.apache.spark.sql.graft
 
 import java.util.concurrent.ConcurrentLinkedDeque
 
-import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
@@ -12,7 +11,6 @@ import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.storage.StorageLevel
 
 /** A private clone of a caller's session for plans sized to their data.
   *
@@ -27,14 +25,11 @@ import org.apache.spark.storage.StorageLevel
   * never reaches the semantics of hash aggregations, joins or keyed windows,
   * so the sizing changes plans, never results.
   *
-  * Lifetime rule: the scope owns every frame and RDD its operator caches.
-  * `persist` and `localCheckpoint` register it, `drop` frees one early (an
-  * iteration loop's previous round), and whatever is still registered is
-  * freed, newest first, when `SizedSession.apply` returns or throws. So a
-  * loan-style operator, whose `use` runs inside the scope, leaves nothing
-  * behind. A result leaves the scope only through `checkpoint`; its blocks
-  * are then the caller's, freed with [[CheckpointBlocks.release]] once the
-  * result is materialized.
+  * The scope is a [[CacheScope]]: it owns what its operator persists and
+  * checkpoints, and frees it when `SizedSession.apply` returns or throws
+  * (the lifetime rule is [[CacheScope]]'s). A persisted frame keeps its
+  * session, so a caller-bound table is still planned under the caller's
+  * settings; `checkpoint` rebinds the result that leaves to the caller's.
   *
   * Each session gets its own executor class loader, which fetches classes
   * from the driver on first use: a fresh clone's first query measured
@@ -49,16 +44,7 @@ import org.apache.spark.storage.StorageLevel
   * surface.
   */
 final class SizedSession private (parent: classic.SparkSession,
-    session: classic.SparkSession) {
-
-  /** Registered frames and RDDs, oldest first, each with the call that
-    * frees it. */
-  private val held = ArrayBuffer.empty[(AnyRef, () => Unit)]
-
-  private def hold[A <: AnyRef](x: A)(free: => Unit): A = {
-    held += ((x, () => free))
-    x
-  }
+    session: classic.SparkSession) extends CacheScope {
 
   /** `df` rebound into the clone: every plan built on it runs under the
     * clone's settings. */
@@ -73,45 +59,17 @@ final class SizedSession private (parent: classic.SparkSession,
     n
   }
 
-  /** `df` persisted (memory and disk) for the scope. `df` keeps its session:
-    * a caller-bound table is still planned and counted under the caller's
-    * settings. */
-  def persist(df: DataFrame): DataFrame =
-    hold(df.persist(StorageLevel.MEMORY_AND_DISK)) { df.unpersist(); () }
-
-  /** `rdd` persisted (memory and disk) for the scope. */
-  def persist[T](rdd: RDD[T]): RDD[T] =
-    hold(rdd.persist(StorageLevel.MEMORY_AND_DISK)) { rdd.unpersist(false); () }
-
   /** `rows` as a clone-bound frame of `schema`. The rows are Catalyst's own,
     * so no serializer is generated for them. */
   def frame(rows: RDD[InternalRow], schema: StructType): DataFrame =
     session.internalCreateDataFrame(rows, schema)
 
-  /** `df` eagerly `localCheckpoint`ed for the scope: its analyzed plan
-    * collapses to a `LogicalRDD` leaf, whose blocks the scope frees. */
-  def localCheckpoint(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint(true)
-    hold(ck)(CheckpointBlocks.release(ck))
-  }
-
-  /** Free a registered frame now. */
-  def drop(df: DataFrame): Unit = {
-    val i = held.indexWhere(_._1 eq df)
-    if (i >= 0) held.remove(i)._2()
-  }
-
   /** `df` materialized under the clone's settings (eager `localCheckpoint`)
     * and rebound to the caller's session, whose settings plan everything
     * built on it later. The plan stays the checkpoint's `LogicalRDD` leaf, so
     * [[CheckpointBlocks.release]] frees it. */
-  def checkpoint(df: DataFrame): DataFrame = {
-    val ck = castToImpl(df.localCheckpoint(true))
-    classic.Dataset.ofRows(parent, ck.logicalPlan)
-  }
-
-  private def releaseAll(): Unit =
-    while (held.nonEmpty) held.remove(held.length - 1)._2()
+  override def checkpoint(df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(parent, castToImpl(super.checkpoint(df)).logicalPlan)
 }
 
 object SizedSession {
@@ -141,14 +99,11 @@ object SizedSession {
     session.conf.set(SQLConf.ADAPTIVE_EXECUTION_ENABLED.key, "false")
     session.conf.set(SQLConf.SHUFFLE_PARTITIONS.key,
       parent.conf.get(SQLConf.SHUFFLE_PARTITIONS.key))
-    val w = new SizedSession(parent, session)
-    try session.withActive(f(w))
-    finally {
-      try w.releaseAll()
-      finally {
-        idle.offerLast((key, session))
-        while (idle.size > MaxIdle) idle.pollFirst()
-      }
+    try CacheScope.using(new SizedSession(parent, session)) { w =>
+      session.withActive(f(w))
+    } finally {
+      idle.offerLast((key, session))
+      while (idle.size > MaxIdle) idle.pollFirst()
     }
   }
 }

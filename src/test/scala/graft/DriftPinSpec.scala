@@ -52,12 +52,14 @@ class DriftPinSpec extends AnyFunSuite {
     // The pipeline queries, then every query that runs a sized operator
     // (its SizedSession scope owns what the operator persists and
     // checkpoints; the query frees the checkpoint the operator returns), then
-    // the two queries over the distributed prefix sum.
+    // the two queries over the distributed prefix sum, then the queries whose
+    // caches a CacheScope owns (the indexed and streaming links, SemDedup).
     val names = Seq("kg_triples", "kg_accuracy", "kg_links_explain",
       "kg_comention", "kg_pmi", "kg_negatives", "kg_timeline",
       "kg_tool_edges", "q35_pagerank", "q40_label_prop", "q41_triangles",
       "q49_adamic_adar", "q50_kcore", "q28_dedup_groups",
-      "q46_decontaminate_bloom", "q34_epoch_shards", "q47_sorted_neighborhood")
+      "q46_decontaminate_bloom", "q34_epoch_shards", "q47_sorted_neighborhood",
+      "kg_links_indexed", "q27_stream_link", "q39_semdedup")
     val leaks = names.flatMap { name =>
       val seen = sc.getPersistentRDDs.keySet
       SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()

@@ -674,6 +674,27 @@ class OpsSpec extends AnyFunSuite {
     assert(leaked.isEmpty, s"pageRank leaked persisted blocks: $leaked")
   }
 
+  test("a cache scope frees its frame, RDD and checkpoint when its block throws") {
+    val s = spark
+    import s.implicits._
+    val sc = s.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    var inside = scala.collection.Set.empty[Int]
+    val err = intercept[IllegalStateException] {
+      org.apache.spark.sql.graft.CacheScope { cache =>
+        assert(cache.persist(Seq(1, 2, 3).toDF("x")).count() == 3L)
+        assert(cache.persist(sc.parallelize(1 to 4)).count() == 4L)
+        assert(cache.localCheckpoint(Seq(5, 6).toDF("y")).count() == 2L)
+        inside = sc.getPersistentRDDs.keySet -- before
+        throw new IllegalStateException("block failed")
+      }
+    }
+    assert(err.getMessage == "block failed")
+    assert(inside.size == 3, s"expected a frame, an RDD and a checkpoint: $inside")
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"the scope leaked persisted blocks: $leaked")
+  }
+
   test("label propagation matches a naive synchronous reference; partition-invariant") {
     val s = spark
     import s.implicits._

@@ -114,6 +114,25 @@ class CheckpointSpec extends AnyFunSuite {
     }
   }
 
+  test("a stage committed without its metrics is recomputed, with metrics") {
+    // A run killed between a stage's data commit and its metrics: the
+    // docs table and its _SUCCESS exist, nothing records the stage's run.
+    val s = spark
+    val bdict = s.sparkContext.broadcast(d0)
+    val (turns, corpus) = kgInputs(s)
+    val root = Files.createTempDirectory("graft-ckpt-nometrics").toString
+    graft.link.Linker.buildDocs(s, graft.link.Linker.dedupCorpus(s, corpus),
+      bdict).write.parquet(s"$root/docs")
+    assert(Files.exists(java.nio.file.Paths.get(root, "docs", "_SUCCESS")))
+    val runner = StageRunner(s, root, "after-kill")
+    assert(!runner.isComplete("docs"))
+    KgJob.run(s, turns, corpus, bdict, 5, root, "after-kill", 5).count()
+    val docs = runner.metrics().collect().filter(_.stage == "docs")
+    assert(docs.nonEmpty && docs.forall(_.runId == "after-kill"),
+      s"docs metrics: ${docs.toSeq}")
+    assert(docs.map(_.rowsOut).sum == s.read.parquet(s"$root/docs").count())
+  }
+
   private def tripleBits(ts: Array[Triple]) = ts.map(t =>
     (t.subj, t.pred, t.obj, t.partKey,
       java.lang.Double.doubleToLongBits(t.score))).toSet
@@ -360,24 +379,25 @@ class StreamingSpec extends AnyFunSuite {
     // the stream and masquerade as an index leak below.
     docs.count(); idf.count()
     val persistedBefore = s.sparkContext.getPersistentRDDs.keySet
-    val h = graft.streaming.TranscriptStream.linkStream(
-        s, input.toDS(), bdict, docs, idf, topN = 3, ckpt) { (triples, _) =>
-      triples.collect().foreach(t => got.add(
-        (t.subj, t.pred, t.obj, t.partKey,
-          java.lang.Double.doubleToLongBits(t.score))))
-      ()
-    }
-    try {
+    org.apache.spark.sql.graft.CacheScope { cache =>
+      val index = cache.hold(graft.link.LinkIndex.build(s, docs, idf))(_.unpersist())
+      val q = cache.hold(graft.streaming.TranscriptStream.linkStreamWith(
+          s, input.toDS(), bdict, index, topN = 3, ckpt) { (triples, _) =>
+        triples.collect().foreach(t => got.add(
+          (t.subj, t.pred, t.obj, t.partKey,
+            java.lang.Double.doubleToLongBits(t.score))))
+        ()
+      })(_.stop())
       input.addData(turns.take(25))
-      h.query.processAllAvailable()
+      q.processAllAvailable()
       input.addData(turns.drop(25))
-      h.query.processAllAvailable()
-    } finally h.close()
-    // close() must release the persisted static-side index in full — a
-    // long-lived session would otherwise strand one packed corpus copy per
-    // stream invocation.
+      q.processAllAvailable()
+    }
+    // The scope must stop the stream and release the persisted static-side
+    // index in full — a long-lived session would otherwise strand one
+    // packed corpus copy per stream invocation.
     val leakedIdx = s.sparkContext.getPersistentRDDs.keySet -- persistedBefore
-    assert(leakedIdx.isEmpty, s"linkStream index leaked blocks: $leakedIdx")
+    assert(leakedIdx.isEmpty, s"streaming link index leaked blocks: $leakedIdx")
     import scala.jdk.CollectionConverters._
     val streamed = got.asScala.toSet
 

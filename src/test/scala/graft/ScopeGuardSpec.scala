@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * or checkpoint goes through their `SizedSession` scope (`w.persist`,
   * `w.localCheckpoint`), which frees it, so no operator keeps a nullable
   * holder, a hand-written `finally`, an `unpersist` or a
-  * `CheckpointBlocks.release`. */
+  * `CheckpointBlocks.release`. And the rest of the library caches only
+  * through a `CacheScope` (`cache.persist`, or a `hold` whose free the scope
+  * calls), so `src/main` has one cache registry. */
 class ScopeGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src", "main", "scala", "graft")
@@ -69,5 +71,29 @@ class ScopeGuardSpec extends AnyFunSuite {
     assert(sources.forall { case (_, _, ls) =>
       ls.exists(l => l.contains("w.persist(") || l.contains("w.localCheckpoint("))
     })
+  }
+
+  test("the library persists, checkpoints and unpersists only through a scope") {
+    // Bench.scala is frozen; a LinkIndex's cells live as long as the index,
+    // which frees them itself.
+    val exempt = Set("Bench.scala", "link/LinkIndex.scala")
+    val scopes = Set("w", "cache")
+    val call = """(\w*)\.(persist|localCheckpoint|unpersist)\(""".r
+    val walk = Files.walk(root)
+    val files = try walk.iterator.asScala.map(p => root.relativize(p).toString)
+      .filter(_.endsWith(".scala")).filterNot(exempt).toList.sorted
+    finally walk.close()
+    val found = for {
+      rel <- files
+      (l, i) <- lines(rel).zipWithIndex
+      code = l.trim
+      if !code.startsWith("*") && !code.startsWith("/**") &&
+        !code.startsWith("//")
+      // `hold(x)(_.unpersist())` hands the free to the scope.
+      if call.findAllMatchIn(code.replace("(_.unpersist())", ""))
+        .exists(m => !scopes(m.group(1)))
+    } yield s"$rel:${i + 1}: $code"
+    assert(found.isEmpty, found.mkString("\n"))
+    assert(files.length > 40, s"scanned only ${files.length} sources")
   }
 }
