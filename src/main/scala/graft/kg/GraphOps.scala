@@ -1,11 +1,17 @@
 package graft.kg
 
+import scala.annotation.tailrec
+
 import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.SizedSession
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.graft.{CacheScope, SessionRdd}
+import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StructField,
+  StructType}
+
+import graft.ops.Par
 
 /** Analytics over the MATERIALIZED knowledge graph (north rule: "graph
   * materialize" is a first-class output, so the engine should also be able
@@ -19,11 +25,16 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
   * reference-semantics KG tables.
   *
   * Every operator here is loan-style and sized: it runs in a
-  * [[org.apache.spark.sql.graft.SizedSession]] scope, the caller
-  * materializes the result inside `use` (write, collect, stash), and the
-  * scope frees every cache and checkpoint the operator made when `use`
-  * returns or throws. A plain DataFrame return would strand the last
-  * iteration's blocks in the block manager (the LinkIndex lesson).
+  * [[org.apache.spark.sql.graft.CacheScope]], the caller materializes the
+  * result inside `use` (write, collect, stash), and the scope frees every
+  * cache and checkpoint the operator made when `use` returns or throws. A
+  * plain DataFrame return would strand the last iteration's blocks in the
+  * block manager (the LinkIndex lesson). Each operator plans in its
+  * caller's session and counts its graph once; its width is
+  * `Par.partitionsFor` of that count, given explicitly: a `HashPartitioner`
+  * for the pair-RDD loops, `repartition(n, keys)` for the DataFrame
+  * operators. Spark does not coalesce either, and the planner reuses a
+  * repartition whose keys a later join or aggregation needs.
   */
 object GraphOps {
 
@@ -61,31 +72,20 @@ object GraphOps {
     * quantization argument as `Linker.TopK`. */
   def pageRank[T](edges: DataFrame, iters: Int, damping: Double = 0.85)
       (use: DataFrame => T): T =
-    SizedSession(edges.sparkSession) { w =>
-      // Both directions of every edge: (from, (to, weight)). The edge list
-      // often arrives with an expensive lineage (the co-mention count over
-      // the full pipeline); the persist reads it once. It is read as it is,
-      // with no projection, so the class that scans it is the one any other
-      // reader of the same frame compiles.
-      val Seq(si, di, wi) =
-        Seq("src", "dst", "weight").map(edges.schema.fieldIndex)
-      val ud = w.persist(edges.rdd.flatMap { r =>
-        def num(i: Int) = r.get(i).asInstanceOf[Number]
-        val (a, b, x) =
-          (num(si).longValue, num(di).longValue, num(wi).doubleValue)
-        Iterator((a, (b, x)), (b, (a, x)))
-      })
-      val m = ud.count()
+    CacheScope { w =>
+      val spark = edges.sparkSession
+      val ud = w.persist(bothWays(edges)(_.doubleValue))
+      val m = SessionRdd.action(spark)(ud.count())
       if (m == 0)
         // No edges (e.g. a scale where no rank-1 co-mentions exist): empty
         // result with the right schema — the oracle likewise returns 0 rows.
-        use(w(edges).select(col("src").as("doc_id"),
+        use(edges.select(col("src").as("doc_id"),
           lit(0.0).as("pagerank")).where(lit(false)))
       else {
         // Size the iteration shuffles to the graph, not the corpus-width
         // session default (measured: ~6s/iteration on a 6.6k-node graph at
         // 64 partitions).
-        val part = new HashPartitioner(w.size(m))
+        val part = new HashPartitioner(Par.partitionsFor(spark, m))
         val outW = w.persist(ud.mapValues(_._2).reduceByKey(part, _ + _))
         val n = outW.count() // every node has an incident edge
         val trans = w.persist(ud.join(outW, part)
@@ -101,11 +101,27 @@ object GraphOps {
             .mapValues { case (_, in) => base + damping * in.getOrElse(0.0) }
           it += 1
         }
-        use(w.frame(ranks.map { case (id, rank) => InternalRow(id, rank) },
-            RankSchema)
+        use(SessionRdd.frame(spark,
+            ranks.map { case (id, rank) => InternalRow(id, rank) }, RankSchema)
           .select(col("id").as("doc_id"), round(col("rank"), 9).as("pagerank")))
       }
     }
+
+  /** Both directions of every (src, dst, weight) edge: (from, (to,
+    * weight)). The edge list often arrives with an expensive lineage (the
+    * co-mention count over the full pipeline), so callers persist this and
+    * read it once. It is read as it is, with no projection, so the class
+    * that scans it is the one any other reader of the same frame compiles. */
+  private def bothWays[W](edges: DataFrame)(
+      weight: Number => W): RDD[(Long, (Long, W))] = {
+    val Seq(si, di, wi) =
+      Seq("src", "dst", "weight").map(edges.schema.fieldIndex)
+    edges.rdd.flatMap { r =>
+      def num(i: Int) = r.get(i).asInstanceOf[Number]
+      val (a, b, x) = (num(si).longValue, num(di).longValue, weight(num(wi)))
+      Iterator((a, (b, x)), (b, (a, x)))
+    }
+  }
 
   private val RankSchema = StructType(Seq(StructField("id", LongType, false),
     StructField("rank", DoubleType, false)))
@@ -130,69 +146,51 @@ object GraphOps {
     * any engine replaying the rule lands on identical labels (the DuckDB
     * oracle replays all half-steps as chained CTEs).
     *
-    * Spark shape at 100 TB: per half-step ONE src-keyed hash join against
-    * the persisted symmetrized edge list + ONE (dst, label) aggregation
-    * with map-side combine + ONE dst-keyed `max_by` aggregation (argmax-
-    * with-min-label via a single struct ordering — no window, no per-key
-    * array); hub nodes cost rows spread across tasks; the non-updating
-    * parity rides a narrow filter-union. Eager `localCheckpoint` per
-    * half-step collapses the analyzed plan (the pageRank lesson: plain
-    * persist leaves the full lineage in every AQE re-plan). */
+    * Spark shape at 100 TB: the [[pageRank]] shape. The symmetrized edge
+    * list is counted, then laid out and persisted under one
+    * `HashPartitioner` sized to it, as (src, (dst, w)). The label table
+    * shares that partitioner, so a half-step is a narrow join of the edges
+    * with the labels, ONE `reduceByKey` on (dst, label) with map-side
+    * combine, and ONE argmax `reduceByKey` on dst (ties to the smaller
+    * label); the non-updating parity rides a narrow filter-union that keeps
+    * the partitioner. A hub's incident edges are one cogroup group in the
+    * label join, and its inflow is combined map-side before the dst
+    * shuffles. Each half-step's labels are persisted, so the next one reads
+    * them instead of recomputing the chain; the loop stays lazy and costs
+    * the actions of `use` plus one count. */
   def labelPropagation[T](edges: DataFrame, iters: Int)
       (use: DataFrame => T): T =
-    // AQE's per-stage re-planning adds scheduling latency to every exchange
-    // of every round job — pure overhead once the shuffles are graph-sized
-    // (measured: it dominated the 13k-edge rounds at sf0.1).
-    SizedSession(edges.sparkSession) { w =>
-      val e = w(w.persist(edges))
-      val eCnt = e.count()
-      if (eCnt == 0)
-        use(e.select(col("src").as("doc_id"),
+    CacheScope { w =>
+      val spark = edges.sparkSession
+      val ud = w.persist(bothWays(edges)(_.longValue))
+      val m = SessionRdd.action(spark)(ud.count())
+      if (m == 0)
+        use(edges.select(col("src").as("doc_id"),
           col("src").as("community")).where(lit(false)))
       else {
-        // Size round shuffles AND the cached edge layout to the graph (see
-        // pageRank). The symmetrized table is REPARTITIONED down before
-        // persisting — each round scans it from two branches, and scanning
-        // hundreds of corpus-width cached partitions per round was the
-        // measured q40 cost at sf0.1 (a 13k-edge graph cached in 64
-        // partitions × 2 scans × 8 half-steps ≈ a thousand no-op tasks).
-        val gp = w.size(2 * eCnt)
-        val sym = e.select(col("src"), col("dst"),
-            col("weight").cast("long").as("w"))
-          .union(e.select(col("dst").as("src"), col("src").as("dst"),
-            col("weight").cast("long").as("w")))
-        val ud = w.persist(sym.repartition(gp))
-        ud.count() // materialize once; rounds re-read the blocks
+        val part = new HashPartitioner(Par.partitionsFor(spark, m))
+        val adj = w.persist(ud.partitionBy(part))
         // Every node in an edge list has ≥1 incident edge, so the dst-side
         // aggregation reaches ALL parity-p nodes each half-step — no
-        // dangling-node join.
-        var labels = w.localCheckpoint(
-          ud.select(col("src").as("id"), col("src").as("label")).distinct())
-        def halfStep(prev: DataFrame, p: Int): DataFrame = {
-          val upd = ud.join(prev, ud("src") === prev("id"))
-            .where(pmod(ud("dst"), lit(2)) === p)
-            .groupBy(ud("dst").as("nid"), col("label"))
-            .agg(sum(col("w")).as("wsum"))
-            // argmax(wsum) with ties to the SMALLEST label: one struct-ordered
-            // max_by — (wsum, -label) is unique per nid, so max_by is
-            // deterministic.
-            .groupBy(col("nid").as("id"))
-            .agg(max_by(col("label"),
-              struct(col("wsum"), (-col("label")).as("neg"))).as("label"))
-          prev.where(pmod(col("id"), lit(2)) =!= p).unionByName(upd)
+        // dangling-node join — and label_0 is every key of adj.
+        def halfStep(prev: RDD[(Long, Long)], p: Int): RDD[(Long, Long)] = {
+          val upd = adj.join(prev, part).values
+            .collect { case ((dst, x), label) if math.floorMod(dst, 2L) == p =>
+              ((dst, label), x) }
+            .reduceByKey(part, _ + _)
+            .map { case ((dst, label), x) => (dst, (x, label)) }
+            .reduceByKey(part, (a, b) =>
+              if (a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)) a else b)
+            .mapValues(_._2)
+          prev.filter(l => math.floorMod(l._1, 2L) != p).union(upd)
         }
-        var it = 0
-        while (it < iters) {
-          // ONE eager checkpoint per ROUND (not per half-step): the odd
-          // half-step composes lazily over the even one — the round's plan
-          // stays constant-size over the checkpointed leaf, and the job count
-          // halves (job-launch overhead dominated the 6.6k-node graph).
-          val next = w.localCheckpoint(halfStep(halfStep(labels, 0), 1))
-          w.drop(labels)
-          labels = next
-          it += 1
-        }
-        use(labels.select(col("id").as("doc_id"), col("label").as("community")))
+        var labels = adj.mapPartitions(_.map(_._1).distinct.map(v => (v, v)),
+          preservesPartitioning = true)
+        for (_ <- 0 until iters; p <- 0 to 1)
+          labels = w.persist(halfStep(labels, p))
+        use(SessionRdd.frame(spark,
+          labels.map { case (id, label) => InternalRow(id, label) },
+          SessionRdd.longSchema("doc_id", "community")))
       }
     }
 
@@ -221,19 +219,18 @@ object GraphOps {
     * co-mention aggregation (measured: ~30 re-executions, 230-480 s at
     * sf0.1). The shared tables (edges, degrees, oriented) are therefore
     * eagerly `localCheckpoint`ed — each is computed ONCE and every branch
-    * reads its blocks — and the shuffles are sized to the graph, with AQE
-    * off, like [[pageRank]].
+    * reads its blocks. The oriented table is laid out by `lo` at the
+    * graph's width before its checkpoint, so the wedge self-join on `lo`
+    * reuses that layout on both sides instead of shuffling them.
     *
     * Output: (doc_id, degree, triangles, clustering) — clustering =
     * 2·T/(deg·(deg−1)) rounded to 9 (the one division; counts are exact
     * BIGINTs), 0 for degree-1 nodes. */
   def triangleStats[T](edges: DataFrame)(use: DataFrame => T): T =
-    // AQE off for the whole operator: its many graph-sized exchanges
-    // (degrees, orientation joins, wedge join, corner agg) each paid AQE's
-    // per-stage re-planning latency.
-    SizedSession(edges.sparkSession) { w =>
-      val e = w.localCheckpoint(w(edges).select(col("src"), col("dst")))
-      w.size(e.count()) // cheap: counts the checkpointed blocks
+    CacheScope { w =>
+      val e = w.localCheckpoint(edges.select(col("src"), col("dst")))
+      // cheap: counts the checkpointed blocks
+      val width = Par.partitionsFor(edges.sparkSession, e.count())
       val deg = w.localCheckpoint(e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id")))
         .groupBy("id").agg(count(lit(1)).as("deg")))
@@ -247,7 +244,8 @@ object GraphOps {
           .otherwise(struct(col("dst").as("lo"), col("src").as("hi")))
           .as("o"))
         .select(col("o.lo").as("lo"), col("o.hi").as("hi"))
-        .join(deg.withColumnRenamed("id", "hi").withColumnRenamed("deg", "hdeg"), "hi"))
+        .join(deg.withColumnRenamed("id", "hi").withColumnRenamed("deg", "hdeg"), "hi")
+        .repartition(width, col("lo")))
       // Wedges at the lowest-ranked corner: out-neighbor pairs ordered by
       // (deg, id) so each triangle closes exactly once.
       val w1 = oriented.select(col("lo").as("a"), col("hi").as("b"),
@@ -283,65 +281,60 @@ object GraphOps {
     * contract — deterministic output, oracle-replayable as chained CTEs;
     * true k-core = the fixpoint, so the output carries `converged` = did
     * the last round remove nothing, making a non-converged run detectable
-    * rather than silently wrong). Per round: one alive-filtered degree
-    * aggregation (map-side combinable) over the persisted symmetrized
-    * edges — hubs cost rows spread across tasks, never per-key arrays.
-    * Returns one row per input node: (doc_id, removed_round = 1-based peel
-    * round or 0 if in-core, core_deg = alive-degree at exit, in_core,
-    * converged). */
+    * rather than silently wrong). Spark shape: the [[pageRank]] shape. The
+    * symmetrized edges are counted, then laid out and persisted as
+    * (id, nbr) under one `HashPartitioner` sized to them. A round is a
+    * narrow join with the alive ids, one shuffle that keeps the edges whose
+    * neighbor is alive, one degree `reduceByKey` (map-side combine), and a
+    * narrow `leftOuterJoin` that stamps every alive id with its degree; the
+    * stamped table is persisted, and one job per round checks it for
+    * peeled nodes. Returns one row per input node: (doc_id, removed_round =
+    * 1-based peel round or 0 if in-core, core_deg = alive-degree at exit,
+    * in_core, converged). */
   def kCore[T](edges: DataFrame, k: Int, rounds: Int = 6)
       (use: DataFrame => T): T = {
     require(k >= 1 && rounds >= 1)
-    // Sized and AQE off like pageRank. The symmetrized table is
-    // REPARTITIONED down before the eager checkpoint so each round's two
-    // alive-joins scan gp graph-sized blocks, not one tiny block per
-    // upstream corpus-width partition.
-    SizedSession(edges.sparkSession) { w =>
-      val ep = w(w.persist(edges.select(col("src"), col("dst"))))
-      val eCnt = ep.count() // materializes the edge cache; one bounded action
-      val gp = w.size(2 * eCnt)
-      val sym = w.localCheckpoint(
-        ep.select(col("src").as("id"), col("dst").as("nbr"))
-          .union(ep.select(col("dst").as("id"), col("src").as("nbr")))
-          .repartition(gp))
-      val nodes = sym.select("id").distinct()
-      // alive: the ids still in the graph. Only round 0's table is its own
-      // checkpoint; later rounds derive alive as a NARROW filter over that
-      // round's checkpointed `stamped` leaf (re-scanning gp small blocks is
-      // cheaper than a second eager checkpoint job per round).
-      var alive = w.localCheckpoint(nodes)
-      val removed = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      var lastDeg: DataFrame = null
-      var converged = false
-      var r = 1
-      while (r <= rounds && !converged) {
-        val deg = sym
-          .join(alive, "id")
-          .join(alive.select(col("id").as("nbr")), "nbr")
-          .groupBy("id").agg(count(lit(1)).as("core_deg"))
-        // Nodes with zero alive neighbors have no deg row: left join + 0.
-        val stamped = w.localCheckpoint(alive.join(deg, Seq("id"), "left")
-          .select(col("id"),
-            coalesce(col("core_deg"), lit(0L)).as("core_deg")))
-        val peeled = stamped.where(col("core_deg") < k)
-          .select(col("id"), lit(r.toLong).as("removed_round"),
-            col("core_deg"))
-        converged = peeled.isEmpty
-        if (!converged) {
-          removed += peeled
-          alive = stamped.where(col("core_deg") >= k).select("id")
-        }
-        lastDeg = stamped
-        r += 1
+    CacheScope { w =>
+      val spark = edges.sparkSession
+      val Seq(si, di) = Seq("src", "dst").map(edges.schema.fieldIndex)
+      val both = w.persist(edges.rdd.flatMap { r =>
+        def id(i: Int) = r.get(i).asInstanceOf[Number].longValue
+        Iterator((id(si), id(di)), (id(di), id(si)))
+      })
+      val part = new HashPartitioner(
+        Par.partitionsFor(spark, SessionRdd.action(spark)(both.count())))
+      val sym = w.persist(both.partitionBy(part))
+      // (id, alive-degree) of every alive id.
+      def stamp(alive: RDD[(Long, Unit)]): RDD[(Long, Long)] = {
+        val deg = sym.join(alive, part).map { case (id, (nbr, _)) => (nbr, id) }
+          .join(alive, part).map { case (_, (id, _)) => (id, 1L) }
+          .reduceByKey(part, _ + _)
+        w.persist(alive.leftOuterJoin(deg, part).mapValues(_._2.getOrElse(0L)))
       }
-      val survivors = lastDeg.where(col("core_deg") >= k)
-        .select(col("id"), lit(0L).as("removed_round"), col("core_deg"))
-      val out = (removed :+ survivors).reduce(_ union _)
-        .select(col("id").as("doc_id"), col("removed_round"),
-          col("core_deg"),
-          (col("removed_round") === 0L).as("in_core"),
-          lit(converged).as("converged"))
-      use(out)
+      // Round r: the last stamped table, the peeled (id, (round, degree))
+      // rows so far, and whether the round removed nothing.
+      @tailrec def peel(alive: RDD[(Long, Unit)], r: Int,
+          removed: List[RDD[(Long, (Long, Long))]])
+          : (RDD[(Long, Long)], List[RDD[(Long, (Long, Long))]], Boolean) = {
+        val stamped = stamp(alive)
+        val peeled = stamped.filter(_._2 < k)
+        if (peeled.isEmpty()) (stamped, removed, true)
+        else {
+          val out = peeled.mapValues(d => (r.toLong, d)) :: removed
+          if (r == rounds) (stamped, out, false)
+          else peel(stamped.filter(_._2 >= k).mapValues(_ => ()), r + 1, out)
+        }
+      }
+      val (last, removed, converged) = peel(sym.mapPartitions(
+        _.map(_._1).distinct.map(v => (v, ())), preservesPartitioning = true),
+        1, Nil)
+      val survivors = last.filter(_._2 >= k).mapValues(d => (0L, d))
+      val schema = StructType(
+        SessionRdd.longSchema("doc_id", "removed_round", "core_deg").fields ++
+          Seq("in_core", "converged").map(StructField(_, BooleanType, false)))
+      use(SessionRdd.frame(spark, (survivors :: removed).reduce(_ union _)
+          .map { case (id, (r, d)) => InternalRow(id, r, d, r == 0L, converged) },
+        schema))
     }
   }
 
@@ -364,18 +357,21 @@ object GraphOps {
     * are exact BIGINTs; the 1/ln terms and their sum sit under the
     * round(…,6) contract. The declared q49 entry (`q49_adamic_adar`) runs
     * with `maxHubDeg` = ∞ and its DuckDB oracle replays every wedge, so a
-    * hub-capped entry changes the declared output. Sized and AQE off like
-    * [[pageRank]]. */
+    * hub-capped entry changes the declared output. The neighbor table is
+    * laid out by `c` at the graph's width before its checkpoint, so the
+    * wedge self-join on `c` reuses that layout on both sides. */
   def adamicAdar[T](edges: DataFrame, minCommon: Int = 2,
       maxHubDeg: Long = Long.MaxValue)(use: DataFrame => T): T =
-    SizedSession(edges.sparkSession) { w =>
-      val e = w.localCheckpoint(w(edges).select(col("src"), col("dst")))
-      w.size(2 * e.count()) // cheap: counts the checkpointed blocks
+    CacheScope { w =>
+      val e = w.localCheckpoint(edges.select(col("src"), col("dst")))
+      // cheap: counts the checkpointed blocks
+      val width = Par.partitionsFor(edges.sparkSession, 2 * e.count())
       val sym = e.select(col("src").as("c"), col("dst").as("n"))
         .union(e.select(col("dst").as("c"), col("src").as("n")))
       val deg = sym.groupBy("c").agg(count(lit(1)).as("cdeg"))
-      val nbr = w.localCheckpoint(
-        sym.join(deg.where(col("cdeg") <= maxHubDeg), "c"))
+      val nbr = w.localCheckpoint(sym
+        .join(deg.where(col("cdeg") <= maxHubDeg), "c")
+        .repartition(width, col("c")))
       val pairs = nbr.select(col("c"), col("n").as("a"), col("cdeg"))
         .join(nbr.select(col("c"), col("n").as("b")), "c")
         .where(col("a") < col("b"))

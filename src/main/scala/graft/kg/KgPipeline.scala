@@ -5,13 +5,13 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.graft.SizedSession
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.graft.{CacheScope, SessionRdd}
 
 import graft.analyse.DocAnalyser
 import graft.interpret.{AddressInterpreter, MutableAddress, RegionVisitor}
 import graft.link.{Dict, Linker}
 import graft.model._
+import graft.ops.Par
 import graft.pipeline.{PersistStages, Stages}
 
 /** A detected mention inside one transcript turn: identity + interpretation +
@@ -158,13 +158,13 @@ object KgPipeline {
     * `reduceByKey` on (src, dst), combined map-side, counts them
     * ([[pairCounts]]). The grouping and counting generate no code, which
     * keeps the ingest cycle inside Spark's codegen cache
-    * (`CodegenBudgetSpec`). The result leaves its [[SizedSession]] scope as
-    * a checkpoint. */
+    * (`CodegenBudgetSpec`). The result leaves its scope as a checkpoint. */
   def coMentionEdges(spark: SparkSession, mentions: Dataset[MentionDoc],
       hits: Dataset[LinkHit], topRank: Int = 1): DataFrame =
     sizedConvs(convLinks(mentions, hits, topRank)) { (w, convs, part) =>
-      w.checkpoint(w.frame(pairCounts(convs, part).map { case ((a, b), n) =>
-        InternalRow(a, b, n) }, longSchema("src", "dst", "weight")))
+      w.checkpoint(SessionRdd.frame(spark,
+        pairCounts(convs, part).map { case ((a, b), n) => InternalRow(a, b, n) },
+        SessionRdd.longSchema("src", "dst", "weight")))
     }
 
   /** Top-`topRank` hits ⋈ mention (queryId, convId) → (convId, docId), one
@@ -178,16 +178,18 @@ object KgPipeline {
       .select("convId", "docId")
   }
 
-  /** Run `f` in a [[SizedSession]] scope over the conversations of a
+  /** Run `f` in a [[CacheScope]] over the conversations of a
     * (convId, docId) links table: each conversation's DISTINCT linked
     * entities, ascending, grouped under a `HashPartitioner` sized to the
-    * links. The links are persisted through the scope and counted under
-    * their own (caller's) session, as in [[sizedTo]]. */
+    * links (`Par.partitionsFor`). The links are persisted through the scope
+    * and counted once. */
   private def sizedConvs[A](links: DataFrame)(
-      f: (SizedSession, RDD[Array[Long]], Partitioner) => A): A =
-    SizedSession(links.sparkSession) { w =>
+      f: (CacheScope, RDD[Array[Long]], Partitioner) => A): A =
+    CacheScope { w =>
+      val spark = links.sparkSession
       val rows = w.persist(links.rdd.map(r => (r.getString(0), r.getLong(1))))
-      val part = new HashPartitioner(w.size(rows.count()))
+      val part = new HashPartitioner(
+        Par.partitionsFor(spark, SessionRdd.action(spark)(rows.count())))
       f(w, rows.groupByKey(part).values.map(_.toArray.distinct.sorted), part)
     }
 
@@ -202,22 +204,17 @@ object KgPipeline {
         Iterator.range(i + 1, ds.length).map(j => ((ds(i), ds(j)), 1L)))
     }.reduceByKey(part, _ + _)
 
-  /** A schema of non-null BIGINT columns. */
-  private def longSchema(names: String*): StructType =
-    StructType(names.map(StructField(_, LongType, nullable = false)))
-
-  /** Run `f` in a [[SizedSession]] scope sized to `table`, a
-    * query-batch-sized input read by several branches of `f`'s plan.
-    * `table` is persisted through the scope and counted under its own
-    * (caller's) session: the count also materializes the upstream pipeline
-    * caches, which the AQE-off clone would re-plan. `f` gets the scope, the
-    * clone-bound table and the sized width. */
+  /** Run `f` in a [[CacheScope]] sized to `table`, a query-batch-sized
+    * input read by several branches of `f`'s plan. `table` is persisted
+    * through the scope and counted once, which also materializes the
+    * upstream pipeline caches. `f` gets the scope, the persisted table and
+    * its width (`Par.partitionsFor` of the count), which it passes to its
+    * shuffles explicitly. */
   private def sizedTo[A](table: DataFrame)(
-      f: (SizedSession, DataFrame, Int) => A): A =
-    SizedSession(table.sparkSession) { w =>
+      f: (CacheScope, DataFrame, Int) => A): A =
+    CacheScope { w =>
       val held = w.persist(table)
-      val width = w.size(held.count())
-      f(w, w(held), width)
+      f(w, held, Par.partitionsFor(table.sparkSession, held.count()))
     }
 
   /** Deterministic negative sampling for KG-embedding training (the
@@ -244,9 +241,9 @@ object KgPipeline {
     *
     * The positives are query-batch-sized (the session-width version was 15
     * jobs / 674 tasks at sf0.1 for a 5.8k-row output), so the pool
-    * prefix-sum, the pick join and the filter anti-join are sized to their
-    * count; the result (≤ |pos|·k rows) leaves the [[SizedSession]] scope as
-    * a checkpoint. */
+    * prefix-sum runs at the width of their count; the pick join and the
+    * filter anti-join are planned by the caller's session. The result
+    * (≤ |pos|·k rows) leaves its scope as a checkpoint. */
   def negativeSamples(spark: SparkSession, hits: Dataset[LinkHit],
       k: Int = 4, topRank: Int = 1): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -341,7 +338,7 @@ object KgPipeline {
     * counts join them on src and then on dst under the same sized
     * `HashPartitioner`. Only the final `round(log(…), 6)` projection is a
     * DataFrame, so the formula is Spark SQL's own. The result leaves its
-    * [[SizedSession]] scope as a checkpoint. */
+    * scope as a checkpoint. */
   def pmiEdges(spark: SparkSession, mentions: Dataset[MentionDoc],
       hits: Dataset[LinkHit], topRank: Int = 1): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -354,8 +351,8 @@ object KgPipeline {
         .map { case ((a, b), n) => (a, (b, n)) }.join(ent, part)
         .map { case (a, ((b, n), wa)) => (b, (a, n, wa)) }.join(ent, part)
         .map { case (b, ((a, n, wa), wb)) => InternalRow(a, b, n, wa, wb, nConvs) }
-      w.checkpoint(w.frame(rows,
-          longSchema("src", "dst", "w_pair", "w_src", "w_dst", "n_convs"))
+      w.checkpoint(SessionRdd.frame(spark, rows,
+          SessionRdd.longSchema("src", "dst", "w_pair", "w_src", "w_dst", "n_convs"))
         .select(col("src"), col("dst"), col("w_pair"), col("w_src"),
           col("w_dst"), col("n_convs"),
           round(log(col("w_pair").cast("double") * col("n_convs") /
@@ -390,8 +387,8 @@ object KgPipeline {
     * live, emerging, or stale. One hash aggregation keyed by entity;
     * the hits←mentions←turns joins are all on the tiny mention-side keys.
     * The links side is query-batch-sized: it is broadcast into the turns
-    * join so the turns side never shuffles, and the entity agg is sized to
-    * its count. The result leaves its [[SizedSession]] scope as a
+    * join so the turns side never shuffles, and the entity agg is laid out
+    * by entity at the width of its count. The result leaves its scope as a
     * checkpoint. */
   def entityTimeline(spark: SparkSession, mentions: Dataset[MentionDoc],
       hits: Dataset[LinkHit], turns: Dataset[Turn],
@@ -401,11 +398,12 @@ object KgPipeline {
     sizedTo(hits.filter(_.rank <= topRank).toDF()
         .join(mentions.map(m =>
             (m.queryId, s"${m.convId}#${m.turnIdx}", m.convId))
-          .toDF("queryId", "subj", "convId"), "queryId")) { (w, links, _) =>
-      val tdf = w(turns
+          .toDF("queryId", "subj", "convId"), "queryId")) { (w, links, width) =>
+      val tdf = turns
         .map(t => (s"${t.conv_id}#${t.turn_idx}", t.ts.getTime))
-        .toDF("subj", "ts_ms"))
+        .toDF("subj", "ts_ms")
       w.checkpoint(broadcast(links).join(tdf, "subj")
+        .repartition(width, col("docId"))
         .groupBy(col("docId").as("doc_id"))
         .agg(min("ts_ms").as("first_ms"), max("ts_ms").as("last_ms"),
           count(lit(1)).as("n_mentions"),
@@ -422,18 +420,19 @@ object KgPipeline {
     * (tools per conv and linked entities per conv are tiny), so the
     * conv-keyed join is bounded per key; the edge aggregation is one hash
     * shuffle on (tool, docId). The entity-conversation side is broadcast
-    * into the tool join; the per-conv tool DISTINCT still shuffles, sized
-    * to the counted links, as is the edge agg. The result leaves its
-    * [[SizedSession]] scope as a checkpoint. */
+    * into the tool join; the edge agg is laid out by (tool, entity) at the
+    * width of the counted links. The result leaves its scope as a
+    * checkpoint. */
   def toolEntityEdges(spark: SparkSession, mentions: Dataset[MentionDoc],
       hits: Dataset[LinkHit], turns: Dataset[Turn],
       topRank: Int = 1): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    sizedTo(convLinks(mentions, hits, topRank).distinct()) { (w, entConv, _) =>
-      val toolConv = w(turns.filter(t => t.tool != null && t.tool.nonEmpty)
-        .map(t => (t.conv_id, t.tool)).toDF("convId", "tool")).distinct()
+    sizedTo(convLinks(mentions, hits, topRank).distinct()) { (w, entConv, width) =>
+      val toolConv = turns.filter(t => t.tool != null && t.tool.nonEmpty)
+        .map(t => (t.conv_id, t.tool)).toDF("convId", "tool").distinct()
       w.checkpoint(broadcast(entConv).join(toolConv, "convId")
+        .repartition(width, col("tool"), col("docId"))
         .groupBy(col("tool"), col("docId").as("doc_id"))
         .agg(count(lit(1)).as("weight")))
     }

@@ -4,6 +4,7 @@ import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.graft.SessionRdd
 
 import graft.analyse.DocAnalyser
 import graft.dict.{Regions, TermIndex}
@@ -405,10 +406,13 @@ object Linker {
 
   /** Both sides' per-partKey (query, doc) counts in ONE job (fixed per-job
     * overhead is the measured scaling bound on this box — don't pay it
-    * twice; `Cells.countByPk`). Driver-sized result: one row per district. */
+    * twice; `Cells.countByPk`). Driver-sized result: one row per district.
+    * The job runs under the session's executor class loader
+    * (`SessionRdd.action`), so its scans share the codegen-cache entries of
+    * the SQL executions that read the same stages. */
   def countStats(spark: SparkSession, queries: Dataset[DocVec],
       docs: Dataset[DocVec]): Array[(String, Long, Long)] =
-    Cells.countByPk(queries, docs).iterator
+    SessionRdd.action(spark)(Cells.countByPk(queries, docs)).iterator
       .map { case (pk, n) => (pk, n(0), n(1)) }.toArray
 
   /** The auto-router's decision, exposed for inspection (the skew-stress
@@ -545,8 +549,8 @@ object Linker {
       if (plan.bcastPks.isEmpty) cells
       else {
         val bBcast = spark.sparkContext.broadcast(plan.bcastPks)
-        cells.union(broadcastHits(spark,
-          qs.filter(q => bBcast.value.contains(q.partKey)).collect(),
+        cells.union(broadcastHits(spark, SessionRdd.action(spark)(
+          qs.filter(q => bBcast.value.contains(q.partKey)).collect()),
           ds.filter(d => bBcast.value.contains(d.partKey)),
           is.filter(r => bBcast.value.contains(r.partKey)), topN))
       }
@@ -593,7 +597,7 @@ object Linker {
     val idfByPk = {
       val m = new scala.collection.mutable.HashMap[
         String, java.util.HashMap[String, java.lang.Double]]()
-      idf.collect().foreach { r =>
+      SessionRdd.action(spark)(idf.collect()).foreach { r =>
         m.getOrElseUpdate(r.partKey,
           new java.util.HashMap[String, java.lang.Double]())
           .put(r.termKey, r.idf)

@@ -1,8 +1,11 @@
 package graft.ops
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.{CacheScope, SizedSession}
+import org.apache.spark.sql.graft.{CacheScope, SessionRdd}
 
 /** Deduplication operators for training-data pipelines, Spark-first:
   *
@@ -528,21 +531,23 @@ object DedupOps {
     *
     * Algorithm: alternating large-star / small-star (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond", SoCC'14) — converges in
-    * O(log² n) rounds to star edges (member → component-min). Each round is
-    * one hash aggregation (per-node min neighbor, map-side combinable) plus
-    * one equi-join — neighborhoods are never materialized as arrays, so a
-    * power-law hub node (the realistic shape of a near-dup graph: one viral
-    * document duplicated millions of times) costs rows proportional to its
-    * degree spread across tasks, never one giant `collect_list` task. Edges
-    * are re-`localCheckpoint`ed per round: an iterative DataFrame loop
-    * otherwise re-analyzes a plan tree that doubles each round (on a
-    * multi-executor cluster use `spark.sparkContext.setCheckpointDir` +
-    * `.checkpoint()` for lineage that survives executor loss). Each round
-    * drops the PREVIOUS round's checkpoint blocks; the final
-    * (id, group, size) table, node-count-sized, leaves the `SizedSession`
-    * scope as a checkpoint, and the scope frees the rest.
+    * O(log² n) rounds to star edges (member → component-min). Each star
+    * step is one per-node min-neighbor aggregation (map-side combinable)
+    * plus one equi-join with it.
     *
-    * Convergence is detected EXACTLY (set equality via anti-join on the
+    * Spark shape: pair RDDs under one `HashPartitioner` sized to the
+    * counted pairs (`Par.partitionsFor`). A star step lays its edges out by
+    * `u` once, so the min aggregation and the join with it are narrow; the
+    * step's output is deduplicated at the same width. A power-law hub (the
+    * realistic shape of a near-dup graph: one viral document duplicated
+    * millions of times) is one cogroup group in the star join, and its
+    * minimum is combined map-side. Each round's edges
+    * are persisted and counted, and the previous round's are dropped once
+    * the convergence check has read them. The final (id, group, size)
+    * table, node-count-sized, leaves the operator's scope as a checkpoint,
+    * and the scope frees the rest.
+    *
+    * Convergence is detected EXACTLY (set equality via `subtract` on the
     * canonically-oriented edge set), not via a hash checksum — a false
     * "converged" would silently emit a wrong grouping.
     *
@@ -550,74 +555,64 @@ object DedupOps {
     * (id, group_id = component min id — the canonical keeper, group_size).
     */
   def connectedComponents(pairs: DataFrame, aCol: String = "a",
-      bCol: String = "b", maxRounds: Int = 50): DataFrame = {
-    // Canonical orientation (u > v), self-loop-free, distinct.
-    def canon(e: DataFrame): DataFrame =
-      e.select(greatest(col("u"), col("v")).as("u"),
-          least(col("u"), col("v")).as("v"))
-        .where(col("u") =!= col("v")).distinct()
-    // Large-star: every neighbor v > u links to m = min(Γ(u) ∪ {u}).
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = sym.groupBy("u").agg(min("v").as("mv"))
-        .select(col("u"), least(col("u"), col("mv")).as("m"))
-      sym.join(mins, "u").where(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .where(col("u") =!= col("v")).distinct()
-    }
-    // Small-star on (u > v)-oriented edges: every smaller neighbor AND u
-    // itself link to m = min(Γ⁻(u) ∪ {u}) (= min(Γ⁻(u)), all smaller).
-    def smallStar(e: DataFrame): DataFrame = {
-      val mins = e.groupBy("u").agg(min("v").as("m"))
-      val viaNbr = e.join(mins, "u")
-        .select(col("v").as("u"), col("m").as("v"))
-        .where(col("u") =!= col("v"))
-      viaNbr.union(mins.select(col("u"), col("m").as("v"))).distinct()
-    }
-    // Round shuffles are sized to the PAIR GRAPH with AQE off: the
-    // alternating-star rounds are many tiny graph-sized exchanges whose
-    // per-stage task-launch + AQE re-planning overhead dominated.
-    SizedSession(pairs.sparkSession) { w =>
-      var e = w.localCheckpoint(canon(w(pairs).select(
-        col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))))
-      val nPairs = e.count() // cheap: counts the checkpointed blocks
-      val gp = w.size(2 * nPairs)
-      // Re-lay the pair table to the sized width before the loop: the
-      // checkpoint above inherits the pair-GENERATION partitioning (a
-      // session-width bucket-join output), and every round's large-star
-      // scans it from two union branches — measured 775 tasks in round 1 at
-      // sf0.1 vs ~19 per later (gp-sized) round. One tiny extra exchange
-      // here; round outputs already come out at gp partitions. No-op when
-      // the generation layout is already in the sized regime.
-      if (e.rdd.getNumPartitions > 4 * gp) {
-        val relaid = w.localCheckpoint(e.repartition(gp))
-        w.drop(e)
-        e = relaid
+      bCol: String = "b", maxRounds: Int = 50): DataFrame =
+    CacheScope { w =>
+      val spark = pairs.sparkSession
+      val Seq(ai, bi) = Seq(aCol, bCol).map(pairs.schema.fieldIndex)
+      // Canonical orientation (u > v), self-loop-free.
+      val canon = w.persist(pairs.rdd.flatMap { r =>
+        def id(i: Int) = r.get(i).asInstanceOf[Number].longValue
+        val (a, b) = (id(ai), id(bi))
+        if (a == b) None else Some((math.max(a, b), math.min(a, b)))
+      })
+      val part = new HashPartitioner(
+        Par.partitionsFor(spark, 2 * SessionRdd.action(spark)(canon.count())))
+      val width = part.numPartitions
+      // Large-star: every neighbor v > u links to m = min(Γ(u) ∪ {u}).
+      def largeStar(e: RDD[(Long, Long)]): RDD[(Long, Long)] = {
+        val sym = e.flatMap { case (u, v) => Iterator((u, v), (v, u)) }
+          .partitionBy(part)
+        sym.join(sym.reduceByKey(part, math.min(_, _)), part).flatMap {
+          case (u, (v, mv)) =>
+            if (v > u) Iterator((v, math.min(u, mv))) else Iterator.empty
+        }.distinct(width)
       }
+      // Small-star on (u > v)-oriented edges: every smaller neighbor AND u
+      // itself link to m = min(Γ⁻(u) ∪ {u}) (= min(Γ⁻(u)), all smaller).
+      def smallStar(e: RDD[(Long, Long)]): RDD[(Long, Long)] = {
+        val byU = e.partitionBy(part)
+        val mins = byU.reduceByKey(part, math.min(_, _))
+        byU.join(mins, part).values.filter { case (v, m) => v != m }
+          .union(mins).distinct(width)
+      }
+      var e = w.persist(canon.distinct(width))
+      var n = e.count()
+      w.drop(canon)
       var round = 0
-      var done = nPairs == 0L
+      var done = n == 0L
       while (!done && round < maxRounds) {
-        val next = w.localCheckpoint(smallStar(largeStar(e)))
+        val next = w.persist(smallStar(largeStar(e)))
+        val nNext = next.count()
         // Both sides distinct + canonical ⇒ equal counts ∧ empty difference
         // ⇔ identical sets.
-        done = next.count() == e.count() &&
-          next.join(e, Seq("u", "v"), "left_anti").isEmpty
+        done = nNext == n && next.subtract(e, part).isEmpty()
         // next is materialized and the convergence check above was the last
-        // reader of the old round — free its checkpoint blocks now instead
-        // of waiting for the ContextCleaner's post-GC sweep.
+        // reader of the old round — free its blocks now.
         w.drop(e)
         e = next
+        n = nNext
         round += 1
       }
       require(done, s"connectedComponents did not converge in $maxRounds rounds")
       // At the fixpoint every edge is (member, root); roots appear only as v.
-      val members = e.select(col("u").as("id"), col("v").as("group_id"))
-        .union(e.select(col("v").as("id"), col("v").as("group_id")).distinct())
-      val sizes = members.groupBy("group_id").agg(count(lit(1)).as("group_size"))
-      w.checkpoint(
-        members.join(sizes, "group_id").select("id", "group_id", "group_size"))
+      val members = e.flatMap { case (u, v) => Iterator((v, u), (v, v)) }
+        .distinct(width)
+      val sizes = members.mapValues(_ => 1L).reduceByKey(part, _ + _)
+      w.checkpoint(SessionRdd.frame(spark,
+        members.join(sizes, part).map { case (g, (id, size)) =>
+          InternalRow(id, g, size) },
+        SessionRdd.longSchema("id", "group_id", "group_size")))
     }
-  }
 
   /** Embedding-cosine near-duplicate pairs, exact: every (a < b) pair with
     * round(cos, 4) ≥ threshold. O(N²) — the correctness baseline and DuckDB

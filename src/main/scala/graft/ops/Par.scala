@@ -34,12 +34,12 @@ object Par {
   }
 
   /** Shuffle-partition count proportional to a COUNTED row volume (~50k rows
-    * per partition), capped at 4× cluster width — the width
-    * `org.apache.spark.sql.graft.SizedSession.size` gives the iterative
-    * graph loops and the derived KG analytics. At 100 TB the cap binds and
-    * the sizing is the cluster's; at query-batch scale it stops a 1k-row
-    * aggregation from paying session-width task-launch overhead on every
-    * exchange. */
+    * per partition), capped at 4× cluster width — the width the graph
+    * operators and the derived KG analytics give their shuffles explicitly,
+    * as a `HashPartitioner` or a `repartition(n, keys)`, in the caller's
+    * session. At 100 TB the cap binds and the sizing is the cluster's; at
+    * query-batch scale it stops a 1k-row aggregation from paying
+    * session-width task-launch overhead on every exchange. */
   def partitionsFor(spark: org.apache.spark.sql.SparkSession, rows: Long): Int =
     math.max(1L, math.min(rows / 50000L + 1,
       4L * spark.sparkContext.defaultParallelism)).toInt

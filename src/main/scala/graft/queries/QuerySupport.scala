@@ -112,7 +112,7 @@ private[graft] object QuerySupport {
 
   /** Stash `finish(ck)` under `name`, then free `ck`'s blocks: how a query
     * consumes an EAGERLY CHECKPOINTED op result (one that left its
-    * `SizedSession` scope through `checkpoint`). */
+    * `CacheScope` through `checkpoint`). */
   private[queries] def stashCk(s: SparkSession, name: String, ck: DataFrame)(
       finish: DataFrame => DataFrame): DataFrame =
     try stash(s, finish(ck), name)

@@ -18,9 +18,11 @@ import org.apache.spark.storage.StorageLevel
   * `checkpoint`; its blocks are then the caller's, freed with
   * [[CheckpointBlocks.release]] once the result is materialized.
   *
-  * `SizedSession` (a sized operator's scope) and `PersistStages`
-  * (`KgPipeline.run`'s default stage policy) are scopes. A `KgRun` that
-  * outlives the block it was made in frees its stages with `release`.
+  * A sized operator (`GraphOps`, `DedupOps.connectedComponents`, the
+  * derived `KgPipeline` analytics) runs in a plain `CacheScope { w => … }`,
+  * and `PersistStages` (`KgPipeline.run`'s default stage policy) is a
+  * scope. A `KgRun` that outlives the block it was made in frees its stages
+  * with `release`.
   */
 class CacheScope {
 

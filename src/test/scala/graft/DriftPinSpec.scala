@@ -50,7 +50,7 @@ class DriftPinSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     // The pipeline queries, then every query that runs a sized operator
-    // (its SizedSession scope owns what the operator persists and
+    // (its CacheScope owns what the operator persists and
     // checkpoints; the query frees the checkpoint the operator returns), then
     // the two queries over the distributed prefix sum, then the queries whose
     // caches a CacheScope owns (the indexed and streaming links, SemDedup).

@@ -479,7 +479,7 @@ class KgPipelineSpec extends AnyFunSuite {
     }
   }
 
-  // --- sizing in a session clone ------------------------------------------
+  // --- sizing in the caller's session -------------------------------------
 
   private val SizingKeys =
     Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
@@ -510,33 +510,38 @@ class KgPipelineSpec extends AnyFunSuite {
     try df.collect().toSet
     finally org.apache.spark.sql.graft.CheckpointBlocks.release(df)
 
-  test("sized analytics plan under the clone's width; the caller's conf is never written") {
+  test("sized analytics plan in the caller's session at the sized width, conf intact") {
     val s = spark
     val (mentions, hits) = linkFixture()
     val initial = SizingKeys.map(s.conf.get)
+    assert(initial.head == "8", "the caller's width must differ from the sized width")
     // An optimizer rule runs on the planning thread: it records the
-    // caller's settings and the planning session's width at every plan.
-    val seen = java.util.concurrent.ConcurrentHashMap
-      .newKeySet[(Seq[String], Int)]()
+    // caller's settings at every plan.
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Seq[String]]()
     val probe = new org.apache.spark.sql.catalyst.rules.Rule[
         org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
       def apply(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) = {
-        seen.add((SizingKeys.map(s.conf.get),
-          org.apache.spark.sql.internal.SQLConf.get.numShufflePartitions))
+        seen.add(SizingKeys.map(s.conf.get))
         p
       }
     }
     val experimental =
       org.apache.spark.sql.classic.ClassicConversions.castToImpl(s).experimental
     experimental.extraOptimizations ++= Seq(probe)
-    try collectAndRelease(KgPipeline.coMentionEdges(s, mentions, hits))
-    finally experimental.extraOptimizations =
-      experimental.extraOptimizations.filterNot(_ eq probe)
+    val edges =
+      try KgPipeline.coMentionEdges(s, mentions, hits)
+      finally experimental.extraOptimizations =
+        experimental.extraOptimizations.filterNot(_ eq probe)
+    val (bound, width) =
+      try (edges.sparkSession eq s, edges.rdd.getNumPartitions)
+      finally { collectAndRelease(edges); () }
     val recorded = seen.asScala.toSeq
     assert(recorded.nonEmpty)
-    assert(recorded.forall(_._1 == initial),
+    assert(recorded.forall(_ == initial),
       s"the caller's conf changed while the analytic planned: $recorded")
-    assert(recorded.exists(_._2 == 1), s"no plan ran at the sized width: $recorded")
+    // The result is the caller's, at the width sized to the 7 links.
+    assert(bound, "coMentionEdges must return a caller-bound frame")
+    assert(width == 1, s"coMentionEdges' result has $width partitions")
     assert(SizingKeys.map(s.conf.get) == initial)
   }
 

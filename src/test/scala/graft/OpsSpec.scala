@@ -1190,22 +1190,26 @@ class OpsSpec extends AnyFunSuite {
     assert(re == keptIds)
   }
 
-  test("sized operators plan in a session clone; the caller's conf is never written") {
+  test("sized operators plan in the caller's session at the sized width; conf unwritten") {
     val s = spark
     import s.implicits._
     val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
     val initial = keys.map(s.conf.get)
+    assert(initial.head == "8", "the caller's width must differ from the sized width")
     val edges = Seq((1L, 2L, 2L), (2L, 3L, 1L)).toDF("src", "dst", "weight")
-    val (inside, sized, n) = graft.kg.GraphOps.pageRank(edges, 2) { pr =>
-      (keys.map(s.conf.get), keys.map(pr.sparkSession.conf.get), pr.count())
+    val (inside, bound, width, n) = graft.kg.GraphOps.pageRank(edges, 2) { pr =>
+      (keys.map(s.conf.get), pr.sparkSession eq s, pr.rdd.getNumPartitions,
+        pr.count())
     }
     assert(n == 3L)
     assert(inside == initial, "pageRank wrote the caller's session conf")
-    // The loan frame belongs to the sized clone: graph-sized width, AQE off.
-    assert(sized == Seq("1", "false"), sized)
+    // The loan frame is the caller's, at the graph-sized width.
+    assert(bound, "pageRank must lend a caller-bound frame")
+    assert(width == 1, s"pageRank's frame has $width partitions")
     val cc = DedupOps.connectedComponents(Seq((1L, 2L), (2L, 3L)).toDF("a", "b"))
     try {
       assert(cc.sparkSession eq s, "connectedComponents must return a caller-bound frame")
+      assert(cc.rdd.getNumPartitions == 1)
       assert(cc.count() == 3L)
     } finally org.apache.spark.sql.graft.CheckpointBlocks.release(cc)
     assert(keys.map(s.conf.get) == initial)

@@ -1,7 +1,12 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.TaskKilled
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd,
+  SparkListenerTaskStart}
+import org.apache.spark.sql.graft.CheckpointBlocks
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.data.SynthCorpus
@@ -143,6 +148,62 @@ class CheckpointSpec extends AnyFunSuite {
       .repartition(5),
      s.createDataset(SynthCorpus.corpus(d0.regions, 300, 4, seed = 31))
       .repartition(5))
+  }
+
+  test("killed task attempts are retried: the ingest cycle equals a clean run") {
+    val s = spark
+    import s.implicits._
+    val sc = s.sparkContext
+    val bdict = sc.broadcast(d0)
+    val (turns, corpus) = kgInputs(s)
+    // KgJob.run, then co-mention, PMI and PageRank over its stage tables.
+    def cycle(root: String) = {
+      val triples = KgJob.run(s, turns, corpus, bdict, 5, root, "retry", 5)
+        .collect().toSet
+      val mentions = s.read.parquet(s"$root/mentions").as[graft.kg.MentionDoc]
+      val hits = s.read.parquet(s"$root/hits").as[LinkHit]
+      val edges = KgPipeline.coMentionEdges(s, mentions, hits)
+      val pmi = KgPipeline.pmiEdges(s, mentions, hits)
+      try (triples, edges.collect().toSet, pmi.collect().toSet,
+        graft.kg.GraphOps.pageRank(edges, 3)(_.collect().toSet))
+      finally {
+        CheckpointBlocks.release(edges)
+        CheckpointBlocks.release(pmi)
+      }
+    }
+    val clean = cycle(Files.createTempDirectory("graft-retry-clean").toString)
+
+    // Kill the first attempt of every third task; the scheduler reruns it.
+    val started = new AtomicInteger
+    val killed = new AtomicInteger
+    val killer = new SparkListener {
+      override def onTaskStart(ev: SparkListenerTaskStart): Unit =
+        if (ev.taskInfo.attemptNumber == 0 && started.incrementAndGet() % 3 == 0) {
+          sc.killTaskAttempt(ev.taskInfo.taskId, interruptThread = false,
+            "retry probe"); ()
+        }
+      override def onTaskEnd(ev: SparkListenerTaskEnd): Unit = ev.reason match {
+        case _: TaskKilled => killed.incrementAndGet(); ()
+        case _ => ()
+      }
+    }
+    val root = Files.createTempDirectory("graft-retry-killed").toString
+    sc.addSparkListener(killer)
+    val retried =
+      try cycle(root)
+      finally {
+        org.apache.spark.perfbench.ListenerDrain(sc)
+        sc.removeSparkListener(killer)
+      }
+    info(s"${killed.get} task attempts killed and rerun")
+    assert(killed.get > 0, "no task attempt was killed")
+    assert(clean._1.exists(_.pred == "linkedTo") && clean._2.nonEmpty &&
+      clean._4.nonEmpty, "the fixture must link, co-mention and rank")
+    assert(retried == clean, s"${killed.get} killed attempts changed the outputs")
+    val m = StageRunner(s, root, "x").metrics().collect()
+    for (stage <- Seq("docs", "idf", "mentions", "hits", "triples"))
+      assert(m.filter(_.stage == stage).map(_.rowsOut).sum ==
+        s.read.parquet(s"$root/$stage").count(), s"$stage metrics")
   }
 
   test("KgJob.run and KgPipeline.run produce bit-identical triples") {

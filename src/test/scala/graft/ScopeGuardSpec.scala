@@ -6,8 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The sized operators hold no cache of their own: every frame they persist
-  * or checkpoint goes through their `SizedSession` scope (`w.persist`,
+/** The sized operators hold no cache of their own: every frame and RDD they
+  * persist or checkpoint goes through their `CacheScope` (`w.persist`,
   * `w.localCheckpoint`), which frees it, so no operator keeps a nullable
   * holder, a hand-written `finally`, an `unpersist` or a
   * `CheckpointBlocks.release`. And the rest of the library caches only
