@@ -1,6 +1,6 @@
 package graft.dict
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
 
 import graft.model.{Region, RegionTypes, TermTypes}
 import graft.util.Str
@@ -24,144 +24,43 @@ trait IndexVisitor {
   * index (`index/TermIndexBuilder.java`), built driver-side and broadcast.
   *
   * Storage is FLATTENED into parallel arrays (child char/node ranges sorted
-  * for binary search, item ranges, key lengths) instead of a ~300k-node
-  * object graph with per-node HashMaps: trie traversal is the hot inner loop
-  * of interpretation AND of per-offset mention scanning, and pointer chasing
-  * through a ~100 MB object graph is memory-bound at high core counts. The
-  * flat form is also several times cheaper to broadcast (primitive arrays
-  * serialize without per-object overhead).
+  * for binary search, item ranges, key lengths): trie traversal is the hot
+  * inner loop of interpretation AND of per-offset mention scanning. The
+  * default dictionary indexes 132,172 keys (91,206 distinct strings) in
+  * 122,791 nodes.
   *
-  * Item insertion order per node matches the reference exactly (region-tree
-  * DFS in child-id order, names longest-first, auto-aliases after, ignore
-  * list last) because visitor arbitration is order-sensitive.
+  * The build writes the arrays straight from the key list, with no node
+  * objects: the keys are generated in the reference's insertion order
+  * (region-tree DFS in child-id order, names longest-first, auto-aliases
+  * after, ignore list last), sorted by (key, place), and each key's nodes
+  * are the characters past its common prefix with the previous key. So nodes are
+  * numbered in DFS preorder, children come out char-sorted, and the items
+  * of a node keep insertion order, which visitor arbitration depends on.
+  *
+  * Only primitive arrays (and the [[Regions]] columns) are serialized: an
+  * item travels as (term type, region row), and the `IndexItem` objects are
+  * a `@transient lazy` view each JVM builds on first use.
   */
-final class TermIndex(regions: Regions, ignoreList: Seq[String]) extends Serializable {
+final class TermIndex private (regions: Regions, flat: TermIndex.Flat)
+    extends Serializable {
 
-  // ---- mutable build form (discarded after flatten) -----------------------
-  private final class BNode {
-    var items: ArrayBuffer[IndexItem] = null
-    var children: java.util.TreeMap[Character, BNode] = null
-    var keyLen: Int = 0
-  }
+  def this(regions: Regions, ignoreList: Seq[String]) =
+    this(regions, TermIndex.build(regions, ignoreList))
 
-  // ---- flat form -----------------------------------------------------------
   // node i: children are childChar/childNode[childStart(i) until childStart(i+1)]
-  //         (sorted by char); items are itemArr[itemStart(i) until itemStart(i+1)].
-  private var childStart: Array[Int] = _
-  private var childChar: Array[Char] = _
-  private var childNode: Array[Int] = _
-  private var itemStart: Array[Int] = _
-  private var itemArr: Array[IndexItem] = _
-  private var keyLenArr: Array[Int] = _
-  private var rootId: Int = 0
+  //         (sorted by char); items are item*[itemStart(i) until itemStart(i+1)].
+  // Node 0 is the root.
+  private val childStart = flat.childStart
+  private val childChar = flat.childChar
+  private val childNode = flat.childNode
+  private val itemStart = flat.itemStart
+  private val itemType = flat.itemType
+  private val itemRow = flat.itemRow // -1: no region (ignore-list items)
+  private val keyLenArr = flat.keyLen
 
-  locally {
-    val root = new BNode
-    def buildIndex(node: BNode, text: String, pos: Int, item: IndexItem): Unit = {
-      if (text == null || text.isEmpty || pos < 0 || pos >= text.length) return
-      val c = text.charAt(pos)
-      if (node.children == null) node.children = new java.util.TreeMap[Character, BNode]
-      var entry = node.children.get(c)
-      if (entry == null) {
-        entry = new BNode
-        entry.keyLen = pos + 1
-        node.children.put(c, entry)
-      }
-      if (pos == text.length - 1) {
-        if (entry.items == null) entry.items = new ArrayBuffer[IndexItem](1)
-        entry.items += item
-      } else buildIndex(entry, text, pos + 1, item)
-    }
-
-    // `TermIndexBuilder.indexRegions` `TermIndexBuilder.java:33-74` including
-    // the 街道/镇/乡 auto-alias generation (`:41-68`).
-    def indexRegions(rs: Seq[Region]): Unit = rs.foreach { region =>
-      val tii = new IndexItem(convertRegionType(region), region)
-      region.orderedNameAndAlias.foreach(name => buildIndex(root, name, 0, tii))
-      var autoAlias = region.name.length <= 5 && region.alias.isEmpty &&
-        (region.isTown || region.name.endsWith("街道"))
-      if (autoAlias && region.name.length == 5) {
-        region.name.charAt(2) match {
-          case '路' | '街' | '门' | '镇' | '村' | '区' => autoAlias = false
-          case _ =>
-        }
-      }
-      if (autoAlias) {
-        val shortName =
-          if (region.isTown) Str.head(region.name, region.name.length - 1)
-          else Str.head(region.name, region.name.length - 2)
-        if (shortName.length >= 2) buildIndex(root, shortName, 0, tii)
-        if (region.name.endsWith("街道") || region.name.endsWith("镇"))
-          buildIndex(root, shortName + "乡", 0, tii)
-        if (region.name.endsWith("街道") || region.name.endsWith("乡"))
-          buildIndex(root, shortName + "镇", 0, tii)
-      }
-      indexRegions(regions.children(region.id))
-    }
-
-    indexRegions(regions.roots)
-    ignoreList.foreach(s => buildIndex(root, s, 0, new IndexItem(TermTypes.Ignore, null)))
-
-    // Flatten (BFS id assignment; children already char-sorted via TreeMap).
-    val nodes = new ArrayBuffer[BNode]()
-    val queue = new java.util.ArrayDeque[BNode]()
-    queue.add(root)
-    while (!queue.isEmpty) {
-      val n = queue.poll()
-      nodes += n
-      if (n.children != null) {
-        val it = n.children.values().iterator()
-        while (it.hasNext) queue.add(it.next())
-      }
-    }
-    val idOf = new java.util.IdentityHashMap[BNode, Integer]()
-    var i = 0
-    while (i < nodes.length) { idOf.put(nodes(i), i); i += 1 }
-
-    val nN = nodes.length
-    childStart = new Array[Int](nN + 1)
-    itemStart = new Array[Int](nN + 1)
-    keyLenArr = new Array[Int](nN)
-    val cChars = new ArrayBuffer[Char]()
-    val cNodes = new ArrayBuffer[Int]()
-    val itemsB = new ArrayBuffer[IndexItem]()
-    i = 0
-    while (i < nN) {
-      val n = nodes(i)
-      childStart(i) = cChars.length
-      itemStart(i) = itemsB.length
-      keyLenArr(i) = n.keyLen
-      if (n.children != null) {
-        val it = n.children.entrySet().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          cChars += e.getKey.charValue()
-          cNodes += idOf.get(e.getValue).intValue()
-        }
-      }
-      if (n.items != null) itemsB ++= n.items
-      i += 1
-    }
-    childStart(nN) = cChars.length
-    itemStart(nN) = itemsB.length
-    childChar = cChars.toArray
-    childNode = cNodes.toArray
-    itemArr = itemsB.toArray
-    rootId = idOf.get(root).intValue()
-  }
-
-  /** `TermIndexBuilder.convertRegionType` `TermIndexBuilder.java:86-105`. */
-  private def convertRegionType(region: Region): Char = region.regionType match {
-    case RegionTypes.Province | RegionTypes.ProvinceLevelCity1 => TermTypes.Province
-    case RegionTypes.City | RegionTypes.ProvinceLevelCity2     => TermTypes.City
-    case RegionTypes.District | RegionTypes.CityLevelDistrict  => TermTypes.District
-    case RegionTypes.PlatformL4                                => TermTypes.Street
-    case RegionTypes.Town                                      => TermTypes.Town
-    case RegionTypes.Village                                   => TermTypes.Village
-    case RegionTypes.Street =>
-      if (region.isTown) TermTypes.Town else TermTypes.Street
-    case _ => TermTypes.Undefined
-  }
+  @transient private lazy val itemArr: Array[IndexItem] =
+    Array.tabulate(itemType.length)(i =>
+      new IndexItem(itemType(i), if (itemRow(i) < 0) null else regions.row(itemRow(i))))
 
   // ---- flat accessors ------------------------------------------------------
   @inline private def child(node: Int, c: Char): Int = {
@@ -185,7 +84,7 @@ final class TermIndex(regions: Regions, ignoreList: Seq[String]) extends Seriali
     childStart(node) < childStart(node + 1)
 
   /** Fast pre-check for offset scans: no trie entry starts with this char. */
-  def rootHasChar(c: Char): Boolean = child(rootId, c) >= 0
+  def rootHasChar(c: Char): Boolean = child(0, c) >= 0
 
   /** Deep-most backtracking search (`TermIndexBuilder.java:107-131`): longest
     * -first DFS descent, visit payload nodes, recurse after accepted items —
@@ -197,7 +96,7 @@ final class TermIndex(regions: Regions, ignoreList: Seq[String]) extends Seriali
 
   def deepMostQuery(text: String, pos: Int, visitor: IndexVisitor): Unit = {
     visitor.startRound()
-    deepFirstQueryRound(text, pos, rootId, visitor)
+    deepFirstQueryRound(text, pos, 0, visitor)
     visitor.endRound()
   }
 
@@ -219,7 +118,7 @@ final class TermIndex(regions: Regions, ignoreList: Seq[String]) extends Seriali
   /** Exact whole-string lookup (`TermIndexBuilder.fullMatch` `:133-144`). */
   def fullMatch(text: String): Seq[IndexItem] = {
     if (text == null || text.isEmpty) return null
-    var node = rootId
+    var node = 0
     var pos = 0
     while (pos < text.length) {
       node = child(node, text.charAt(pos))
@@ -228,5 +127,178 @@ final class TermIndex(regions: Regions, ignoreList: Seq[String]) extends Seriali
     }
     if (!hasItem(node)) null
     else itemArr.slice(itemStart(node), itemStart(node + 1)).toSeq
+  }
+}
+
+object TermIndex {
+
+  private final class Flat(val childStart: Array[Int], val childChar: Array[Char],
+      val childNode: Array[Int], val itemStart: Array[Int], val itemType: Array[Char],
+      val itemRow: Array[Int], val keyLen: Array[Int])
+
+  /** An indexed key and its place in insertion order. The order is (text,
+    * place), so sorted keys keep insertion order within equal texts. */
+  private final class Key(val text: String, val seq: Int) extends Comparable[Key] {
+    def compareTo(o: Key): Int = {
+      val c = text.compareTo(o.text)
+      if (c != 0) c else Integer.compare(seq, o.seq)
+    }
+  }
+
+  /** The keys in insertion order, each with its item (term type, region row). */
+  private final class Keys {
+    val keys = new ArrayBuffer[Key]()
+    val types = new ArrayBuilder.ofChar
+    val rows = new ArrayBuilder.ofInt
+    def add(key: String, termType: Char, row: Int): Unit =
+      if (key != null && !key.isEmpty) {
+        keys += new Key(key, keys.length); types += termType; rows += row
+      }
+  }
+
+  private def build(regions: Regions, ignoreList: Seq[String]): Flat = {
+    val keys = new Keys
+    indexRegions(regions, regions.rootRows, keys)
+    ignoreList.foreach(keys.add(_, TermTypes.Ignore, -1))
+    flatten(sortKeys(keys.keys), keys.types.result(), keys.rows.result())
+  }
+
+  /** The keys in (text, place) order: a counting sort on the first char, then
+    * a comparison sort of each run of equal first chars. Most runs are a few
+    * dozen keys, so this makes a third of the comparisons of one sort. */
+  private def sortKeys(keys: ArrayBuffer[Key]): Array[Key] = {
+    val start = new Array[Int](Char.MaxValue + 2) // run of char c: [start(c), start(c + 1))
+    keys.foreach(k => start(k.text.charAt(0) + 1) += 1)
+    var c = 0
+    while (c <= Char.MaxValue) { start(c + 1) += start(c); c += 1 }
+    val sorted = new Array[Key](keys.length)
+    val fill = start.clone()
+    keys.foreach { k =>
+      val c0 = k.text.charAt(0)
+      sorted(fill(c0)) = k
+      fill(c0) += 1
+    }
+    c = 0
+    while (c <= Char.MaxValue) {
+      if (start(c + 1) - start(c) > 1)
+        java.util.Arrays.sort(sorted.asInstanceOf[Array[AnyRef]], start(c), start(c + 1))
+      c += 1
+    }
+    sorted
+  }
+
+  /** `TermIndexBuilder.indexRegions` `TermIndexBuilder.java:33-74` including
+    * the 街道/镇/乡 auto-alias generation (`:41-68`): a region's keys, then
+    * its children's, depth first. */
+  private def indexRegions(regions: Regions, rows: Array[Int], keys: Keys): Unit =
+    rows.foreach { row =>
+      val name = regions.name(row)
+      val alias = regions.alias(row)
+      val rType = regions.regionType(row)
+      val isTown = Region.isTown(rType, name)
+      val t = convertRegionType(rType, isTown)
+      Region.orderedNameAndAlias(name, alias).foreach(keys.add(_, t, row))
+      var autoAlias = name.length <= 5 && alias.isEmpty &&
+        (isTown || name.endsWith("街道"))
+      if (autoAlias && name.length == 5) {
+        name.charAt(2) match {
+          case '路' | '街' | '门' | '镇' | '村' | '区' => autoAlias = false
+          case _ =>
+        }
+      }
+      if (autoAlias) {
+        val shortName =
+          if (isTown) Str.head(name, name.length - 1)
+          else Str.head(name, name.length - 2)
+        if (shortName.length >= 2) keys.add(shortName, t, row)
+        if (name.endsWith("街道") || name.endsWith("镇")) keys.add(shortName + "乡", t, row)
+        if (name.endsWith("街道") || name.endsWith("乡")) keys.add(shortName + "镇", t, row)
+      }
+      indexRegions(regions, regions.childRows(regions.id(row)), keys)
+    }
+
+  /** `TermIndexBuilder.convertRegionType` `TermIndexBuilder.java:86-105`. */
+  private def convertRegionType(regionType: Int, isTown: Boolean): Char = regionType match {
+    case RegionTypes.Province | RegionTypes.ProvinceLevelCity1 => TermTypes.Province
+    case RegionTypes.City | RegionTypes.ProvinceLevelCity2     => TermTypes.City
+    case RegionTypes.District | RegionTypes.CityLevelDistrict  => TermTypes.District
+    case RegionTypes.PlatformL4                                => TermTypes.Street
+    case RegionTypes.Town                                      => TermTypes.Town
+    case RegionTypes.Village                                   => TermTypes.Village
+    case RegionTypes.Street => if (isTown) TermTypes.Town else TermTypes.Street
+    case _ => TermTypes.Undefined
+  }
+
+  /** The flat arrays from the sorted keys. A key equal to the one before it
+    * adds its item to that key's node; any other key adds one node per char
+    * past its common prefix with the key before it, numbering nodes in DFS
+    * preorder (a node's items are then contiguous and in insertion order). */
+  private def flatten(sorted: Array[Key], keyType: Array[Char], keyRow: Array[Int]): Flat = {
+    val nKeys = sorted.length
+    // lcp(i): chars key i shares with key i-1, or -1 when the two are equal.
+    val lcp = new Array[Int](nKeys)
+    var nNodes = 1
+    var maxLen = 0
+    var i = 0
+    while (i < nKeys) {
+      val s = sorted(i).text
+      if (i > 0) {
+        val p = sorted(i - 1).text
+        val n = math.min(p.length, s.length)
+        var l = 0
+        while (l < n && p.charAt(l) == s.charAt(l)) l += 1
+        lcp(i) = if (l == s.length && l == p.length) -1 else l
+      }
+      if (lcp(i) >= 0) nNodes += s.length - lcp(i)
+      maxLen = math.max(maxLen, s.length)
+      i += 1
+    }
+
+    val keyLen = new Array[Int](nNodes)
+    val itemStart = new Array[Int](nNodes + 1)
+    val itemType = new Array[Char](nKeys)
+    val itemRow = new Array[Int](nKeys)
+    val parent = new Array[Int](nNodes)
+    val edgeChar = new Array[Char](nNodes)
+    val path = new Array[Int](maxLen + 1) // path(d): node of the current key's d-char prefix
+    var next = 1
+    i = 0
+    while (i < nKeys) {
+      val s = sorted(i).text
+      var d = lcp(i) + 1
+      while (d > 0 && d <= s.length) {
+        keyLen(next) = d
+        itemStart(next) = i
+        parent(next) = path(d - 1)
+        edgeChar(next) = s.charAt(d - 1)
+        path(d) = next
+        next += 1
+        d += 1
+      }
+      itemType(i) = keyType(sorted(i).seq)
+      itemRow(i) = keyRow(sorted(i).seq)
+      i += 1
+    }
+    itemStart(nNodes) = nKeys
+
+    // Children grouped by parent: a parent's children were numbered in
+    // ascending char order, so a stable counting sort keeps them sorted.
+    val childStart = new Array[Int](nNodes + 1)
+    var n = 1
+    while (n < nNodes) { childStart(parent(n) + 1) += 1; n += 1 }
+    n = 0
+    while (n < nNodes) { childStart(n + 1) += childStart(n); n += 1 }
+    val childChar = new Array[Char](nNodes - 1)
+    val childNode = new Array[Int](nNodes - 1)
+    val fill = java.util.Arrays.copyOf(childStart, nNodes)
+    n = 1
+    while (n < nNodes) {
+      val at = fill(parent(n))
+      childChar(at) = edgeChar(n)
+      childNode(at) = n
+      fill(parent(n)) = at + 1
+      n += 1
+    }
+    new Flat(childStart, childChar, childNode, itemStart, itemType, itemRow, keyLen)
   }
 }

@@ -106,7 +106,9 @@ final class AddressInterpreter(val regions: Regions, val termIndex: TermIndex)
 
   /** `AddressInterpreter.removeRedundancy` `:342-389`: re-scan the residual
     * from every offset; a >=2-term (or >=1 full-name) match that agrees with
-    * already-found province+city is stripped, back-filling lower levels. */
+    * already-found province+city is stripped, back-filling lower levels. An
+    * offset whose char starts no trie key matches nothing (a round there
+    * leaves `resultMatchCount` at 0), so it is skipped without a round. */
   def removeRedundancy(addr: MutableAddress, visitor: RegionVisitor): Boolean = {
     if (addr.text.isEmpty || !addr.division.hasProvince || !addr.division.hasCity)
       return false
@@ -115,34 +117,37 @@ final class AddressInterpreter(val regions: Regions, val termIndex: TermIndex)
     var endIndex = addr.text.length - 2
     var i = 0
     while (i < endIndex) {
-      visitor.reset()
-      termIndex.deepMostQuery(addr.text, i, visitor)
-      val rd = visitor.resultDivision
-      if (visitor.resultMatchCount < 2 && visitor.resultFullMatchCount < 1) {
-        i += 1
-      } else if (!d.province.equals(rd.province) || !d.city.equals(rd.city)) {
-        i += 1
-      } else {
-        if (!d.hasDistrict && rd.hasDistrict && rd.district.parentId == d.city.id)
-          d.district = rd.district
-        if (d.hasDistrict && !d.hasStreet && rd.hasStreet &&
-            rd.street.parentId == d.district.id)
-          d.street = rd.street
-        if (d.hasDistrict && !d.hasTown && rd.hasTown &&
-            rd.town.parentId == d.district.id)
-          d.setTown(rd.town)
-        else if (d.hasDistrict && d.hasTown && d.town.equals(d.street) &&
-            rd.hasTown && !rd.town.equals(rd.street) &&
-            rd.town.parentId == d.district.id)
-          d.setTown(rd.town)
-        if (d.hasDistrict && !d.hasVillage && rd.hasVillage &&
-            rd.village.parentId == d.district.id)
-          d.village = rd.village
+      if (!termIndex.rootHasChar(addr.text.charAt(i))) i += 1
+      else {
+        visitor.reset()
+        termIndex.deepMostQuery(addr.text, i, visitor)
+        val rd = visitor.resultDivision
+        if (visitor.resultMatchCount < 2 && visitor.resultFullMatchCount < 1) {
+          i += 1
+        } else if (!d.province.equals(rd.province) || !d.city.equals(rd.city)) {
+          i += 1
+        } else {
+          if (!d.hasDistrict && rd.hasDistrict && rd.district.parentId == d.city.id)
+            d.district = rd.district
+          if (d.hasDistrict && !d.hasStreet && rd.hasStreet &&
+              rd.street.parentId == d.district.id)
+            d.street = rd.street
+          if (d.hasDistrict && !d.hasTown && rd.hasTown &&
+              rd.town.parentId == d.district.id)
+            d.setTown(rd.town)
+          else if (d.hasDistrict && d.hasTown && d.town.equals(d.street) &&
+              rd.hasTown && !rd.town.equals(rd.street) &&
+              rd.town.parentId == d.district.id)
+            d.setTown(rd.town)
+          if (d.hasDistrict && !d.hasVillage && rd.hasVillage &&
+              rd.village.parentId == d.district.id)
+            d.village = rd.village
 
-        addr.setText(Str.substring(addr.text, visitor.resultEndPosition + 1))
-        endIndex = addr.text.length
-        i = 0
-        removed = true
+          addr.setText(Str.substring(addr.text, visitor.resultEndPosition + 1))
+          endIndex = addr.text.length
+          i = 0
+          removed = true
+        }
       }
     }
     removed
@@ -193,13 +198,25 @@ final class AddressInterpreter(val regions: Regions, val termIndex: TermIndex)
   }
 
   /** `AddressInterpreter.extractBuildingNum` `:580-630` — 3 regex families +
-    * validator; splits text into (buildingNum, remainder). */
+    * validator; splits text into (buildingNum, remainder).
+    *
+    * The reference's `find()` loop over `P_BUILDING_NUM1` matches at every
+    * offset it tries, since the pattern can match empty: it moves on by one
+    * after an empty match and resumes at `end()` after a non-empty one that
+    * fails validation. This loop makes the same steps with `lookingAt` from
+    * each offset, and skips the offsets whose char cannot start a non-empty
+    * match (their match is empty). */
   def extractBuildingNum(addr: MutableAddress): Boolean = {
     if (addr.text.isEmpty) return false
     var found = false
     var matcher = P_BUILDING_NUM1.matcher(addr.text)
-    while (!found && matcher.find()) {
-      if (matcher.end() != matcher.start()) { // ignore null matches
+    val len = addr.text.length
+    var p = 0
+    while (!found && p < len) {
+      if (!canStartBuildingNum(addr.text.charAt(p))) p += 1
+      else if (!matcher.region(p, len).lookingAt() || matcher.end() == p) p += 1
+      else {
+        p = matcher.end()
         var building = Str.substring(addr.text, matcher.start(), matcher.end() - 1)
         var nonEmptyGroups = 0
         // NB: loop bound groupCount() excludes the last group — kept bug-for-bug
@@ -420,6 +437,11 @@ object AddressInterpreter {
 
   private val P_BUILDING_NUM1 = Pattern.compile(
     "((路|街|巷)[0-9]+号)?([0-9A-Z一二三四五六七八九十]+(栋|橦|幢|座|号楼|号|\\#楼?)){0,1}([一二三四五六七八九十东西南北甲乙丙0-9]+(单元|门|梯|层|座))?([0-9]+(室|房)?)?")
+  /** The chars a non-empty `P_BUILDING_NUM1` match can start with: those
+    * its four groups' first char classes admit. */
+  private def canStartBuildingNum(c: Char): Boolean =
+    (c >= '0' && c <= '9') || (c >= 'A' && c <= 'Z') ||
+      "路街巷一二三四五六七八九十东西南北甲乙丙".indexOf(c) >= 0
   private val P_BUILDING_NUM_V = Pattern.compile(
     "(栋|幢|橦|号楼|号|\\#|\\#楼|单元|室|房|门)+")
   private val P_BUILDING_NUM2 = Pattern.compile(

@@ -13,7 +13,9 @@ import graft.model.{DocVec, IdfRow, LinkHit}
 
 /** Broadcastable dictionary bundle: region tree + trie, built once on the
   * driver (cf. the reference's Spring singletons `TermIndexBuilder` +
-  * `AddressPersister`; SURVEY.md §2 A3/B1). */
+  * `AddressPersister`; SURVEY.md §2 A3/B1). It serializes as the two
+  * parts' primitive arrays only; the region and item objects and the
+  * interpreter are rebuilt from them on first use in each JVM. */
 final class Dict(val regions: Regions, val termIndex: TermIndex) extends Serializable {
   @transient lazy val interpreter = new AddressInterpreter(regions, termIndex)
 }
@@ -34,7 +36,7 @@ object Dict {
     * (`index/TermIndexBuilder.java:33-74`). */
   def withDiscoveredTowns(base: Dict,
       discovered: Seq[(Long, String)]): Dict = {
-    val merged = new Regions(base.regions.all ++ discoveredTowns(base.regions, discovered))
+    val merged = Regions(base.regions.all ++ discoveredTowns(base.regions, discovered))
     new Dict(merged, new TermIndex(merged, Regions.IgnoreList))
   }
 

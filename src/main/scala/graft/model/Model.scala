@@ -51,8 +51,22 @@ final case class Region(
     regionType: Int,
     zip: String
 ) {
+  def isTown: Boolean = Region.isTown(regionType, name)
+
+  def orderedNameAndAlias: Seq[String] = Region.orderedNameAndAlias(name, alias)
+
+  override def equals(obj: Any): Boolean = obj match {
+    case r: Region => r.id == id
+    case _         => false
+  }
+  override def hashCode(): Int = java.lang.Long.hashCode(id)
+}
+
+/** The row-level rules behind [[Region]]'s derived fields, so the trie build
+  * can apply them to the dictionary's columns without making `Region`s. */
+object Region {
   /** `RegionEntity.isTown()` `RegionEntity.java:49-59`. */
-  def isTown: Boolean = regionType match {
+  def isTown(regionType: Int, name: String): Boolean = regionType match {
     case RegionTypes.Town => true
     case RegionTypes.Street =>
       name != null && name.nonEmpty && name.length <= 4 &&
@@ -64,18 +78,12 @@ final case class Region(
     * `RegionEntity.buildOrderedNameAndAlias` `RegionEntity.java:130-159`.
     * Stable sort keeps name-before-alias on equal length, matching the
     * reference's bubble sort (stable). */
-  def orderedNameAndAlias: Seq[String] = {
-    val aliases =
-      if (alias == null || alias.trim.isEmpty) Seq.empty[String]
-      else alias.trim.split(";").iterator.map(_.trim).filter(_.nonEmpty).toSeq
-    (name +: aliases).sortBy(s => -s.length)
-  }
-
-  override def equals(obj: Any): Boolean = obj match {
-    case r: Region => r.id == id
-    case _         => false
-  }
-  override def hashCode(): Int = java.lang.Long.hashCode(id)
+  def orderedNameAndAlias(name: String, alias: String): Seq[String] =
+    if (alias == null || alias.trim.isEmpty) name :: Nil
+    else {
+      val aliases = alias.trim.split(";").iterator.map(_.trim).filter(_.nonEmpty).toSeq
+      (name +: aliases).sortBy(s => -s.length)
+    }
 }
 
 /** Interpreted address / detected mention — the flat Dataset-friendly result of

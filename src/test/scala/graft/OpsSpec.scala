@@ -1214,4 +1214,134 @@ class OpsSpec extends AnyFunSuite {
     } finally org.apache.spark.sql.graft.CheckpointBlocks.release(cc)
     assert(keys.map(s.conf.get) == initial)
   }
+
+  test("interpretation gates: building numbers and redundancy match the ungated loops") {
+    import GoldenFixtures.{interpreter => interp, regions}
+    import graft.data.SynthCorpus
+    import graft.interpret.MutableAddress
+    val handMade = Seq(
+      "", "没有数字的地址", "东门3号楼2单元501室", "12东门3号楼2单元", "一二三",
+      "路口12号院", "A座B座3栋2单元", "街道9号5栋1单元", "路8号3栋2单元1室",
+      "甲乙丙东西南北", "3号楼", "123", "a栋b单元", "十号楼十单元", "巷12号",
+      "东门外3号楼2单元501", "路88号A栋3单元502室", "西12层3号楼2单元8室",
+      "xx路12-3号", "5组12号", "A12#3单元")
+    val texts = handMade ++ GoldenFixtures.addresses ++
+      Seq(1L, 2L, 3L, 4L).flatMap { seed =>
+        SynthCorpus.corpus(regions, 1500, 30, seed).map(_._2) ++
+          SynthCorpus.transcripts(regions, 200, 30, seed).map(_.text)
+      }
+    def building(t: String, f: MutableAddress => Boolean) = {
+      val a = new MutableAddress(t)
+      (f(a), a.buildingNum, a.text)
+    }
+    texts.foreach { t =>
+      assert(building(t, interp.extractBuildingNum) == building(t, UngatedInterpret.extract),
+        s"extractBuildingNum differs on '$t'")
+    }
+    val visitor = interp.newVisitor()
+    def redundancy(t: String, f: MutableAddress => Boolean) = {
+      val a = new MutableAddress(t)
+      interp.extractRegion(a, visitor)
+      val d = a.division
+      (f(a), a.text, Seq(d.province, d.city, d.district, d.street, d.town, d.village))
+    }
+    texts.foreach { t =>
+      assert(redundancy(t, interp.removeRedundancy(_, visitor)) ==
+        redundancy(t, UngatedInterpret.removeRedundancy(_, visitor)),
+        s"removeRedundancy differs on '$t'")
+    }
+  }
+}
+
+/** The reference's loops without the interpretation gates, as oracles:
+  * `extractBuildingNum` (`AddressInterpreter.java:580-630`) as a `find()`
+  * loop over every offset, and `removeRedundancy` (`:342-389`) running a
+  * trie round at every offset. */
+private object UngatedInterpret {
+  import java.util.regex.Pattern
+  import graft.interpret.{MutableAddress, RegionVisitor}
+  import graft.util.Str
+
+  private val P1 = Pattern.compile(
+    "((路|街|巷)[0-9]+号)?([0-9A-Z一二三四五六七八九十]+(栋|橦|幢|座|号楼|号|\\#楼?)){0,1}([一二三四五六七八九十东西南北甲乙丙0-9]+(单元|门|梯|层|座))?([0-9]+(室|房)?)?")
+  private val PV = Pattern.compile("(栋|幢|橦|号楼|号|\\#|\\#楼|单元|室|房|门)+")
+  private val P2 = Pattern.compile("[A-Za-z0-9]+([\\#\\-一－/\\\\]+[A-Za-z0-9]+)+")
+  private val P3 = Pattern.compile("[0-9]+组[0-9\\-一]+号?")
+
+  def extract(addr: MutableAddress): Boolean = {
+    if (addr.text.isEmpty) return false
+    var found = false
+    var matcher = P1.matcher(addr.text)
+    while (!found && matcher.find()) {
+      if (matcher.end() != matcher.start()) {
+        var building = Str.substring(addr.text, matcher.start(), matcher.end() - 1)
+        var nonEmptyGroups = 0
+        var i = 0
+        while (i < matcher.groupCount()) {
+          if (matcher.group(i) != null) nonEmptyGroups += 1
+          i += 1
+        }
+        if (PV.matcher(building).find() && nonEmptyGroups > 3) {
+          var pos = matcher.start()
+          if (building.startsWith("路") || building.startsWith("街") ||
+              building.startsWith("巷")) {
+            pos += building.indexOf("号") + 1
+            building = Str.substring(addr.text, pos, matcher.end() - 1)
+          }
+          addr.buildingNum = building
+          addr.setText(Str.head(addr.text, pos))
+          found = true
+        }
+      }
+    }
+    Seq(P2, P3).foreach { p =>
+      if (!found) {
+        matcher = p.matcher(addr.text)
+        if (matcher.find()) {
+          addr.buildingNum = Str.substring(addr.text, matcher.start(), matcher.end() - 1)
+          addr.setText(Str.head(addr.text, matcher.start()))
+          found = true
+        }
+      }
+    }
+    found
+  }
+
+  def removeRedundancy(addr: MutableAddress, visitor: RegionVisitor): Boolean = {
+    if (addr.text.isEmpty || !addr.division.hasProvince || !addr.division.hasCity)
+      return false
+    val d = addr.division
+    var removed = false
+    var endIndex = addr.text.length - 2
+    var i = 0
+    while (i < endIndex) {
+      visitor.reset()
+      GoldenFixtures.termIndex.deepMostQuery(addr.text, i, visitor)
+      val rd = visitor.resultDivision
+      if (visitor.resultMatchCount < 2 && visitor.resultFullMatchCount < 1) i += 1
+      else if (!d.province.equals(rd.province) || !d.city.equals(rd.city)) i += 1
+      else {
+        if (!d.hasDistrict && rd.hasDistrict && rd.district.parentId == d.city.id)
+          d.district = rd.district
+        if (d.hasDistrict && !d.hasStreet && rd.hasStreet &&
+            rd.street.parentId == d.district.id)
+          d.street = rd.street
+        if (d.hasDistrict && !d.hasTown && rd.hasTown &&
+            rd.town.parentId == d.district.id)
+          d.setTown(rd.town)
+        else if (d.hasDistrict && d.hasTown && d.town.equals(d.street) &&
+            rd.hasTown && !rd.town.equals(rd.street) &&
+            rd.town.parentId == d.district.id)
+          d.setTown(rd.town)
+        if (d.hasDistrict && !d.hasVillage && rd.hasVillage &&
+            rd.village.parentId == d.district.id)
+          d.village = rd.village
+        addr.setText(Str.substring(addr.text, visitor.resultEndPosition + 1))
+        endIndex = addr.text.length
+        i = 0
+        removed = true
+      }
+    }
+    removed
+  }
 }
