@@ -26,11 +26,7 @@ object BenchExtra {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", 2 * cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      // GRAFT_AQE=0: hypothesis-testing knob — measures how much of a
-      // query's wall is AQE per-exchange re-planning latency (the Bench
-      // session itself always runs AQE on; this main is not the contract).
-      .config("spark.sql.adaptive.enabled",
-        if (sys.env.get("GRAFT_AQE").contains("0")) "false" else "true")
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
       .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
       .config("spark.ui.enabled", "false")
@@ -69,25 +65,6 @@ object BenchExtra {
       }
       spark.stop()
       return
-    }
-
-    // Optional per-stage listener (GRAFT_STAGES=1): prints slow stages.
-    if (sys.env.get("GRAFT_STAGES").exists(v => v.nonEmpty && v != "0")) {
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val i = sc.stageInfo
-            val wall = i.completionTime.getOrElse(0L) -
-              i.submissionTime.getOrElse(0L)
-            if (wall > 200) {
-              val site = i.details.linesIterator
-                .filterNot(_.contains("org.apache.spark")).take(1)
-                .mkString
-              println(f"[stage] ${i.stageId} ${i.name.take(50)} wall=${wall}ms tasks=${i.numTasks} site=$site")
-            }
-          }
-        })
     }
 
     def timeQueries(only: String => Boolean): Seq[(String, Option[Double])] =

@@ -244,11 +244,11 @@ object SynthCorpus {
   }
 
   // ---- skew-stress generators (bench GRAFT_SKEW mode; round 5) -------------
-  // The power-law shape the auto-router's broadcast route exists for
-  // (SURVEY §7.4-4: one 北京市-sized district ≫ rural counties): the FIRST
-  // anchor district holds ~hotTenths/10 of the historical corpus, while the
-  // query stream only rarely touches it — hot-but-NARROW, so the router
-  // must answer those queries WITHOUT shuffling the district's doc mass.
+  // The power-law shape the link's cell planner must absorb (SURVEY
+  // §7.4-4: one 北京市-sized district ≫ rural counties): the FIRST anchor
+  // district holds ~hotTenths/10 of the historical corpus, while the query
+  // stream only rarely touches it — hot-but-NARROW, so the memory valve,
+  // not the query count, decides how many cells its docs split into.
 
   /** Corpus with district 0 drawing `hotTenths`/10 of rows (rest uniform
     * over the other districts). `hotTenths = 3` reproduces the standard
@@ -273,8 +273,8 @@ object SynthCorpus {
 
   /** Transcripts whose mention anchors EXCLUDE the hot district except for
     * every `hotConvEvery`-th conversation — keeps the hot district's query
-    * count small (broadcast-route eligible) while the rest of the stream
-    * stays busy. */
+    * count small (a few queries against its whole doc side) while the rest
+    * of the stream stays busy. */
   def transcriptsDSSkewed(spark: org.apache.spark.sql.SparkSession,
       bdict: org.apache.spark.broadcast.Broadcast[graft.link.Dict],
       nConvs: Long, nDistricts: Int, seed: Long, hotConvEvery: Long)

@@ -67,9 +67,6 @@ final class Regions private (
 
   def all: IndexedSeq[Region] = ArraySeq.unsafeWrapArray(rows)
 
-  /** A Scala map view of the id index, for callers that want one. */
-  @transient lazy val byId: Map[Long, Region] = all.iterator.map(r => r.id -> r).toMap
-
   def get(id: Long): Region = {
     val r = rowIndex(id)
     if (r < 0) null else rows(r)
@@ -90,8 +87,6 @@ final class Regions private (
   }
 
   def hasChildren(id: Long): Boolean = runs.runOf(id) >= 0
-
-  def roots: IndexedSeq[Region] = ArraySeq.unsafeWrapArray(rootRows.map(rows(_)))
 }
 
 object Regions {

@@ -305,7 +305,7 @@ final class AddressInterpreter(val regions: Regions, val termIndex: TermIndex)
           if (z.length == 2 && text.startsWith("村", z.length)) {
             c = z + "村"; ic = iz + 1
           } else if (isAcceptableTownFollowingChars(z, text, z.length)) {
-            if (acceptTown(towns, z, addr.division.district, addr.rawText, addr.text) >= 0) {
+            if (acceptTown(towns, z, addr.division.district) >= 0) {
               addr.setText(Str.substring(text, iz))
               result = 1
             }
@@ -319,7 +319,7 @@ final class AddressInterpreter(val regions: Regions, val termIndex: TermIndex)
           if (x.length == 2 && text.startsWith("村", x.length)) {
             c = x + "村"; ic = ix + 1
           } else if (isAcceptableTownFollowingChars(x, text, x.length)) {
-            if (acceptTown(towns, x, addr.division.district, addr.rawText, addr.text) >= 0) {
+            if (acceptTown(towns, x, addr.division.district) >= 0) {
               addr.setText(Str.substring(text, ix))
               result = 1
             }
@@ -340,7 +340,7 @@ final class AddressInterpreter(val regions: Regions, val termIndex: TermIndex)
           c = Str.tail(c, c.length - 1)
         if (c.length == 2 && !isAcceptableTownFollowingChars(c, leftString, 0))
           return ic
-        if (acceptTown(towns, c, addr.division.district, addr.rawText, addr.text) >= 0) {
+        if (acceptTown(towns, c, addr.division.district) >= 0) {
           addr.setText(leftString)
           result = 1
         }
@@ -352,7 +352,7 @@ final class AddressInterpreter(val regions: Regions, val termIndex: TermIndex)
   /** `AddressInterpreter.acceptTown` `:507-536`: blacklist, dedup, anti-check
     * against the dictionary, 4-char+街 rejection. */
   private def acceptTown(all: mutable.Map[Long, mutable.ArrayBuffer[String]],
-      town: String, district: Region, text1: String, text2: String): Int = {
+      town: String, district: Region): Int = {
     if (all == null || town == null || town.isEmpty || district == null) return -1
     if (InvalidTown.contains(town)) return -1
     val list = all.getOrElse(district.id, null)

@@ -5,12 +5,11 @@ import graft.model.{DocVec, LinkHit}
 import Linker.TopK
 
 /** The link's one scoring kernel: one district's queries, their top-k heaps
-  * and their WAND limits, fed doc sides one array at a time. The shuffle
-  * cells and `LinkIndex` feed a whole cell once (`Linker.scoreCell`);
-  * the broadcast route feeds each streamed batch of a district's docs, and
-  * heaps and limits carry over from one array to the next. `TopK` is
-  * order-independent and the skip is admissible, so the hits do not depend
-  * on how the docs are split into arrays.
+  * and their WAND limits, fed an array of doc sides. The one cell engine
+  * feeds it a whole cell once (`Linker.scoreCell`), for the batch link and
+  * `LinkIndex` alike. `TopK` is order-independent and the skip is
+  * admissible, so the hits do not depend on how a district's docs are split
+  * into cells.
   *
   * Per array:
   *  - postings (term hash → doc indices) are built once; each query only
@@ -44,8 +43,6 @@ private[graft] final class LinkKernel(queries: Iterator[DocVec], topN: Int,
   // Recomputed only when the heap's kth key moves.
   private val limits = Array.fill(qsides.length)(Double.NegativeInfinity)
   private val lastKeys = Array.fill(qsides.length)(Long.MinValue)
-
-  def isEmpty: Boolean = qsides.isEmpty
 
   def feed(dsides: Array[Scoring.Side]): Unit = {
     if (qsides.isEmpty || dsides.isEmpty) return

@@ -2,7 +2,6 @@ package graft.link
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.graft.SessionRdd
 
@@ -127,16 +126,14 @@ object Dict {
   *    stamps idfs inside its scoring cells.
   *  - `linkPlanned`: the reference's partition-pruned candidate retrieval
   *    (D1) + weighted-cosine scoring (D2/D3) + bounded top-k (E1/E2) along a
-  *    `RoutePlan`: shuffled districts as a skew-safe blocked cross join
+  *    `RoutePlan`: every queried district as a skew-safe blocked cross join
   *    (binary doc blocks, query bucketing, optional doc bucketing, in-cell
-  *    idf stamping — see `cellHits`), hot-but-narrow districts with the
-  *    query side broadcast and the doc side streaming with NO shuffle (see
-  *    `broadcastHits`). `linkTopKAuto` plans the routes from counted stats
+  *    idf stamping). `linkTopKAuto` plans the cells from counted stats
   *    (`planRoutes`) and links along them.
   *
-  * Every route scores with the one kernel, [[LinkKernel]], and runs on pair
-  * RDDs (`Cells`); a route converts to a `Dataset[LinkHit]` once, at its
-  * end.
+  * The link scores with the one kernel, [[LinkKernel]], in the one cell
+  * engine on pair RDDs (`Cells`), and converts to a `Dataset[LinkHit]` once,
+  * at its end.
   */
 object Linker {
 
@@ -321,66 +318,6 @@ object Linker {
   private def shufflePartitions(spark: SparkSession): Int =
     spark.sessionState.conf.numShufflePartitions
 
-  /** The shuffled route's cells: a blocked cross join of queries ×
-    * candidate docs within each partKey, laid out by `Cells`: the DOC side
-    * ships as packed binary blocks (`DocBlob`), the QUERY side splits into
-    * qBuckets by queryId. `knobsByPk` is the only shape input: a district
-    * without an entry is one cell, `CellKnobs(1, 1)`. Returns each cell's
-    * partial top-k, final unless some district splits its docs.
-    *
-    * Skew + shuffle design (measured on this box, see git history):
-    *  - partKey is the district key: power-law skewed, low cardinality. A
-    *    plain partKey cogroup caps parallelism at #districts and the hot
-    *    district serializes the O(|q|·|d|) pair scoring.
-    *  - with db = 1 queries are NOT replicated: each goes to one
-    *    (partKey, qBucket) cell and sees the full candidate set there → a
-    *    single pass emits final top-k, no merge step.
-    *  - docs ARE replicated ×qBuckets, but as `Cells.BlobDocs`-doc binary
-    *    blocks: per-row deserialization (nested arrays, per-term Strings)
-    *    was ~half the stage CPU; blocks amortize it ~256× and unpack
-    *    directly into the kernel's compiled Side layout.
-    *  - dBuckets optionally splits the doc side too (cells then hold
-    *    1/dBuckets of a district's docs and partial top-k heaps merge in a
-    *    tiny final `TopK` reduce) — the memory valve for districts whose full
-    *    doc set would not fit a task; results are bit-identical for any knobs.
-    *  - idfs are stamped INSIDE each cell: the per-district `idf` table
-    *    ships into every cell of its district as chunked binary blocks, and
-    *    both sides are stamped from it (`Scoring.stampSideIdfs` for docs,
-    *    `DocAnalyser.stampIdf` for queries) before scoring. Neither side
-    *    needs a stamping cogroup, the replicated doc blobs carry no idf
-    *    payload, and input idfs are ignored (stamping overwrites them). A
-    *    district's distinct-term table is far smaller than its doc-term
-    *    payload, so shipping it ×(g·db) is cheap.
-    *  - the cells are pair-RDD rows cogrouped by `Cells.score` under a
-    *    `HashPartitioner` of `spark.sql.shuffle.partitions` — the same
-    *    engine `LinkIndex` runs with its persisted partitioner.
-    */
-  private def cellHits(spark: SparkSession, queries: RDD[DocVec],
-      docs: RDD[DocVec], idf: RDD[IdfRow], knobsByPk: Map[String, CellKnobs],
-      topN: Int): RDD[LinkHit] = {
-    val bknobs = spark.sparkContext.broadcast(knobsByPk)
-    // The query side may arrive CLUSTERED by partKey (one partition per
-    // district after any partKey-keyed stage), so without a rebalance the
-    // ×dBuckets replication flatMap and its shuffle write for a hot district
-    // run inside ONE map task — measured as an 81 s straggler (= the fixed
-    // Amdahl term that capped 2→8-core scaling at 0.62) at the sf0.1 scaling
-    // point: the hot district's 210k queries × db=60 ≈ 6.6 GB written
-    // serially. One cheap extra shuffle of the small UNREPLICATED query side
-    // (hash on queryId — uniform by construction) makes the replication
-    // stage embarrassingly parallel. Bit-identical results: the cell cogroup
-    // re-keys every row anyway, and per-query top-k is order-independent.
-    val qSpread =
-      if (!Cells.splitsDocs(knobsByPk)) queries // no ×db replication
-      else queries.keyBy(_.docId).partitionBy(new HashPartitioner(
-        math.max(spark.sparkContext.defaultParallelism, shufflePartitions(spark))))
-        .values
-    Cells.score(
-      docs.mapPartitions(Cells.docCells(_, bknobs.value))
-        .union(idf.mapPartitions(Cells.idfCells(_, bknobs.value))),
-      qSpread.mapPartitions(Cells.queryCells(_, bknobs.value)),
-      new HashPartitioner(shufflePartitions(spark)), topN)
-  }
-
   /** Score one link cell: unpack its tag-0 doc blobs and tag-1 idf blobs,
     * stamp both sides from the cell's idfs, and feed the whole cell to one
     * [[LinkKernel]]. Called only by the one cell engine, `Cells.score`, so
@@ -418,61 +355,54 @@ object Linker {
       .map { case (pk, n) => (pk, n(0), n(1)) }.toArray
 
   /** The auto-router's decision, exposed for inspection (the skew-stress
-    * bench reports routes and cell counts from the SAME planner the link
-    * executes). */
+    * bench reports cell counts from the SAME planner the link executes):
+    * the queried districts and each one's cell knobs. */
   final case class RoutePlan(qCounts: Map[String, Long],
-      dCounts: Map[String, Long], bcastPks: Set[String],
-      shufflePks: Set[String], knobs: Map[String, CellKnobs]) {
+      dCounts: Map[String, Long], shufflePks: Set[String],
+      knobs: Map[String, CellKnobs]) {
     /** Total candidate pair work q·d across queried districts. */
     def pairWork: Long = qCounts.iterator
       .map { case (pk, q) => q * dCounts.getOrElse(pk, 0L) }.sum
     def shuffleCells: Long = knobs.valuesIterator
       .map(k => k.qBuckets.toLong * k.dBuckets).sum
+
+    /** Districts on the broadcast route, which is gone: always empty. Kept
+      * only because the frozen benchmark sources (`Bench.scala`,
+      * `perfbench/`) read it; it goes with the next change to the
+      * benchmark. */
+    @deprecated("every queried district is in shufflePks", "0.1.0")
+    def bcastPks: Set[String] = Set.empty
   }
 
+  /** The most query buckets one district splits into. */
+  private val MaxQBuckets = 256
+
   /** Pure route planning from counted stats — extracted from `linkTopKAuto`
-    * so the decision is inspectable; the link path calls exactly this. */
+    * so the decision is inspectable; the link path calls exactly this.
+    * Every queried district gets cells sized from its counted work. */
   def planRoutes(stats: Array[(String, Long, Long)], parallelism: Int,
       targetPairsPerCell: Long = 1L << 22,
-      maxDocsPerCell: Int = Cells.MaxDocsPerCell, maxQBuckets: Int = 256,
-      bcastQMax: Long = 512, bcastTotalMax: Long = 1L << 17): RoutePlan = {
+      maxDocsPerCell: Int = Cells.MaxDocsPerCell): RoutePlan = {
     val qCounts = stats.iterator.filter(_._2 > 0).map(s => s._1 -> s._2).toMap
     val dCounts = stats.iterator.map(s => s._1 -> s._3).toMap
-
-    // Broadcast route: narrow-query/huge-doc partitions, ordered by doc
-    // count (largest shuffle saving first), under a TOTAL driver-collect
-    // budget — with many qualifying districts the route must not collect
-    // unbounded query rows; overflow districts stay on the shuffle path.
-    var bcastBudget = bcastTotalMax
-    val bcastPks = qCounts.keysIterator
-      .filter { pk =>
-        qCounts(pk) <= bcastQMax && dCounts.getOrElse(pk, 0L) >= maxDocsPerCell
-      }
-      .toSeq.sortBy(pk => (-dCounts(pk), pk))
-      .filter { pk => // not takeWhile: a later, smaller district may still fit
-        val q = qCounts(pk)
-        if (q <= bcastBudget) { bcastBudget -= q; true } else false
-      }.toSet
-    val shufflePks = qCounts.keySet -- bcastPks
 
     // Parallelism floor: when total work is far below cluster capacity ×
     // target, shrink the per-cell target so the cluster still fills (the
     // work-based split alone would give one cell per district at small
     // scale). At scale totalWork dominates and the configured target wins.
-    val totalWork = shufflePks.iterator
-      .map(pk => qCounts(pk) * dCounts.getOrElse(pk, 0L)).sum
+    val totalWork = qCounts.iterator
+      .map { case (pk, q) => q * dCounts.getOrElse(pk, 0L) }.sum
     val para = math.max(1, parallelism)
     val effTarget = math.max(1L,
       math.min(targetPairsPerCell, totalWork / (3L * para)))
 
-    val knobs = shufflePks.iterator.flatMap { pk =>
-      val q = qCounts(pk)
+    val knobs = qCounts.iterator.flatMap { case (pk, q) =>
       val d = dCounts.getOrElse(pk, 0L)
       if (d == 0) None
       else {
         val work = q * d
         val cells = math.max(1L, (work + effTarget - 1) / effTarget)
-        val g = math.max(1L, math.min(math.min(q, maxQBuckets.toLong),
+        val g = math.max(1L, math.min(math.min(q, MaxQBuckets.toLong),
           math.round(math.sqrt(cells.toDouble * q / d)))).toInt
         val dbWork = (cells + g - 1) / g
         val dbMem = Cells.valve(d, maxDocsPerCell)
@@ -487,10 +417,10 @@ object Linker {
         // where fixed per-exchange overhead dominates (measured at sf0.1:
         // cells≈8/district, the db=4 plan cost a query-replication
         // exchange + a merge shuffle for zero memory benefit). At scale
-        // cells ≫ maxQBuckets or the 4× bound fails and the 2-D split
+        // cells ≫ MaxQBuckets or the 4× bound fails and the 2-D split
         // stands unchanged. Results are bit-identical for ANY knobs
         // (KgPipelineSpec pins it); only shuffle topology changes.
-        val gOnly = math.min(cells, math.min(q, maxQBuckets.toLong))
+        val gOnly = math.min(cells, math.min(q, MaxQBuckets.toLong))
         val knob =
           if (db > 1 && dbMem <= 1 && gOnly >= cells &&
               gOnly * d <= 4L * (g * d + 2L * db * q))
@@ -499,11 +429,11 @@ object Linker {
         Some(pk -> knob)
       }
     }.toMap
-    RoutePlan(qCounts, dCounts, bcastPks, shufflePks, knobs)
+    RoutePlan(qCounts, dCounts, qCounts.keySet, knobs)
   }
 
   /** Self-tuning link (the 100×-survival path): counts both sides per
-    * district (`countStats`), plans the routes from the counts with the
+    * district (`countStats`), plans the cells from the counts with the
     * default thresholds (`planRoutes`) and links along that plan
     * ([[linkPlanned]]). Output is bit-identical to any manual knob setting
     * (KgPipelineSpec). */
@@ -513,54 +443,88 @@ object Linker {
       spark.sparkContext.defaultParallelism), queries, docs, topN, idf)
 
   /** Top-k linking along a route plan, the one explicit-route link: a
-    * hand-built `RoutePlan` pins the routes and knobs, `linkTopKAuto` passes
-    * `planRoutes`' plan. Ties pinned (desc similarity, asc docId) —
+    * hand-built `RoutePlan` pins the districts and knobs, `linkTopKAuto`
+    * passes `planRoutes`' plan. Ties pinned (desc similarity, asc docId) —
     * documented divergence from the reference's scan-order tie-keep
     * (`Query.java:73,89`; SURVEY.md §7.4-3). Hits with similarity <= 0 are
     * dropped (`Query.addSimiDoc` `Query.java:62`).
     *
-    * Per partKey with q queries and d candidate docs (`planRoutes`):
-    *  - docs in districts with NO queries never enter the shuffle (broadcast
-    *    membership filter) — with a small query batch against a 100 TB
-    *    corpus this prunes the dominant cost;
-    *  - hot-but-narrow partitions (q ≤ bcastQMax, d ≥ maxDocsPerCell) take
-    *    the broadcast route (`broadcastHits`): their docs stream with NO
-    *    shuffle at all;
-    *  - the rest 2-D block (`cellHits` with the plan's knobs): cells
-    *    C = ⌈q·d / targetPairsPerCell⌉ bound the per-task pair work;
-    *    qBuckets ∝ √(C·q/d) and dBuckets = ⌈C/g⌉ split replication evenly
-    *    (replicated bytes ≈ db·|q| + g·|d| is minimized at g/db ≈ q/d), with
-    *    dBuckets also forced up until a cell's doc set fits the
-    *    `maxDocsPerCell` task-memory valve (`Cells.valve`). The old failure
-    *    modes — docs replicated ×64 regardless of query count, and one whole
-    *    hot district's blobs buffered in a single task — cannot occur by
-    *    construction.
+    * Each district in `plan.shufflePks` is a blocked cross join of its
+    * queries × candidate docs, laid out by `Cells`: the DOC side ships as
+    * packed binary blocks (`DocBlob`), the QUERY side splits into qBuckets
+    * by queryId. `plan.knobs` is the only shape input: a district without
+    * an entry is one cell, `CellKnobs(1, 1)`. Docs in districts with NO
+    * queries never enter the shuffle (broadcast membership filter) — with a
+    * small query batch against a 100 TB corpus this prunes the dominant
+    * cost. Returns each query's top-k, merged from its partial lists when
+    * some district splits its docs.
+    *
+    * Skew + shuffle design (measured on this box, see git history):
+    *  - partKey is the district key: power-law skewed, low cardinality. A
+    *    plain partKey cogroup caps parallelism at #districts and the hot
+    *    district serializes the O(|q|·|d|) pair scoring. `planRoutes` sizes
+    *    cells from counted work instead: C = ⌈q·d / targetPairsPerCell⌉
+    *    cells bound the per-task pair work; qBuckets ∝ √(C·q/d) and
+    *    dBuckets = ⌈C/g⌉ split replication evenly (replicated bytes ≈
+    *    db·|q| + g·|d| is minimized at g/db ≈ q/d).
+    *  - with db = 1 queries are NOT replicated: each goes to one
+    *    (partKey, qBucket) cell and sees the full candidate set there → a
+    *    single pass emits final top-k, no merge step.
+    *  - docs ARE replicated ×qBuckets, but as `Cells.BlobDocs`-doc binary
+    *    blocks: per-row deserialization (nested arrays, per-term Strings)
+    *    was ~half the stage CPU; blocks amortize it ~256× and unpack
+    *    directly into the kernel's compiled Side layout.
+    *  - dBuckets also splits the doc side (cells then hold 1/dBuckets of a
+    *    district's docs and partial top-k heaps merge in a tiny final `TopK`
+    *    reduce), and the memory valve (`Cells.valve`) forces it up until a
+    *    cell's doc set fits `maxDocsPerCell`. So a hot district, however few
+    *    its queries, never buffers its whole doc side in one task, and no
+    *    doc is replicated more than its district's work asks for.
+    *  - idfs are stamped INSIDE each cell: the per-district `idf` table
+    *    ships into every cell of its district as chunked binary blocks, and
+    *    both sides are stamped from it (`Scoring.stampSideIdfs` for docs,
+    *    `DocAnalyser.stampIdf` for queries) before scoring. Neither side
+    *    needs a stamping cogroup, the replicated doc blobs carry no idf
+    *    payload, and input idfs are ignored (stamping overwrites them). A
+    *    district's distinct-term table is far smaller than its doc-term
+    *    payload, so shipping it ×(g·db) is cheap.
+    *  - the cells are pair-RDD rows cogrouped by `Cells.score` under a
+    *    `HashPartitioner` of `spark.sql.shuffle.partitions` — the same
+    *    engine `LinkIndex` runs with its persisted partitioner.
     *
     * Output is bit-identical for any plan (KgPipelineSpec). */
   def linkPlanned(spark: SparkSession, plan: RoutePlan,
       queries: Dataset[DocVec], docs: Dataset[DocVec], topN: Int,
       idf: Dataset[IdfRow]): Dataset[LinkHit] = {
     import spark.implicits._
-    val (qs, ds, is) = (queries.rdd, docs.rdd, idf.rdd)
-    val bShuffle = spark.sparkContext.broadcast(plan.shufflePks)
-    val cells = cellHits(spark,
-      qs.filter(q => bShuffle.value.contains(q.partKey)),
-      ds.filter(d => bShuffle.value.contains(d.partKey)),
-      is.filter(r => bShuffle.value.contains(r.partKey)), plan.knobs, topN)
-    val partial =
-      if (plan.bcastPks.isEmpty) cells
-      else {
-        val bBcast = spark.sparkContext.broadcast(plan.bcastPks)
-        cells.union(broadcastHits(spark, SessionRdd.action(spark)(
-          qs.filter(q => bBcast.value.contains(q.partKey)).collect()),
-          ds.filter(d => bBcast.value.contains(d.partKey)),
-          is.filter(r => bBcast.value.contains(r.partKey)), topN))
-      }
-    // One merge for both routes: the broadcast route's lists are always
-    // partial, the cells' only when a district splits its docs.
+    val bPks = spark.sparkContext.broadcast(plan.shufflePks)
+    val bknobs = spark.sparkContext.broadcast(plan.knobs)
+    val splits = Cells.splitsDocs(plan.knobs)
+    val qs = queries.rdd.filter(q => bPks.value.contains(q.partKey))
+    // The query side may arrive CLUSTERED by partKey (one partition per
+    // district after any partKey-keyed stage), so without a rebalance the
+    // ×dBuckets replication flatMap and its shuffle write for a hot district
+    // run inside ONE map task — measured as an 81 s straggler (= the fixed
+    // Amdahl term that capped 2→8-core scaling at 0.62) at the sf0.1 scaling
+    // point: the hot district's 210k queries × db=60 ≈ 6.6 GB written
+    // serially. One cheap extra shuffle of the small UNREPLICATED query side
+    // (hash on queryId — uniform by construction) makes the replication
+    // stage embarrassingly parallel. Bit-identical results: the cell cogroup
+    // re-keys every row anyway, and per-query top-k is order-independent.
+    val qSpread =
+      if (!splits) qs // no ×db replication
+      else qs.keyBy(_.docId).partitionBy(new HashPartitioner(
+        math.max(spark.sparkContext.defaultParallelism, shufflePartitions(spark))))
+        .values
+    val hits = Cells.score(
+      docs.rdd.filter(d => bPks.value.contains(d.partKey))
+        .mapPartitions(Cells.docCells(_, bknobs.value))
+        .union(idf.rdd.filter(r => bPks.value.contains(r.partKey))
+          .mapPartitions(Cells.idfCells(_, bknobs.value))),
+      qSpread.mapPartitions(Cells.queryCells(_, bknobs.value)),
+      new HashPartitioner(shufflePartitions(spark)), topN)
     spark.createDataset(
-      if (plan.bcastPks.isEmpty && !Cells.splitsDocs(plan.knobs)) partial
-      else Cells.mergeHits(partial, topN, shufflePartitions(spark)))
+      if (splits) Cells.mergeHits(hits, topN, shufflePartitions(spark)) else hits)
   }
 
   /** The pre-collapse call shape of [[linkTopKAuto]], kept only because the
@@ -574,65 +538,6 @@ object Linker {
     require(idf.isDefined && stampQueries,
       "the link always stamps idf in-cell: pass idf and stampQueries = true")
     linkTopKAuto(spark, queries, docs, topN, idf.get)
-  }
-
-  /** The broadcast route, for hot partitions / huge doc side: the docs side
-    * streams with NO shuffle; queries (small) are broadcast grouped by
-    * partKey. Emits per-partition partial top-k; final top-k is a tiny
-    * `TopK` reduce of k·|queries| rows (`Cells.mergeHits`).
-    *
-    * Scoring is the cells' kernel ([[LinkKernel]]): each task keeps one
-    * kernel per district it meets and feeds it that district's streamed,
-    * idf-stamped docs in batches of [[BroadcastBatch]], so heaps and WAND
-    * limits carry across batches and task memory stays bounded by the
-    * batch, not by the partition.
-    *
-    * idf: the districts' idf tables are collected and broadcast next to the
-    * queries. Queries are stamped driver-side and each streamed doc side
-    * in-task, both from the same per-district map; a partKey absent from
-    * the map stamps against the empty map (every term MISSING_IDF). Driver
-    * memory is bounded by those districts' DISTINCT-term dictionaries,
-    * which address-shaped vocabularies saturate — a broadcast-dimension-
-    * sized collect, like the queries themselves. */
-  private def broadcastHits(spark: SparkSession, queries: Array[DocVec],
-      docs: RDD[DocVec], idf: RDD[IdfRow], topN: Int): RDD[LinkHit] = {
-    val idfByPk = {
-      val m = new scala.collection.mutable.HashMap[
-        String, java.util.HashMap[String, java.lang.Double]]()
-      SessionRdd.action(spark)(idf.collect()).foreach { r =>
-        m.getOrElseUpdate(r.partKey,
-          new java.util.HashMap[String, java.lang.Double]())
-          .put(r.termKey, r.idf)
-      }
-      spark.sparkContext.broadcast(m.toMap)
-    }
-    val byPart = queries
-      .map(q => DocAnalyser.stampIdf(q,
-        idfByPk.value.getOrElse(q.partKey, EmptyIdfMap)))
-      .groupBy(_.partKey)
-    val bq = spark.sparkContext.broadcast(byPart)
-    docs.mapPartitions { it =>
-      final class District(val kernel: LinkKernel) {
-        val batch = scala.collection.mutable.ArrayBuffer.empty[Scoring.Side]
-        def flush(): Unit = { kernel.feed(batch.toArray); batch.clear() }
-      }
-      val byPk = new scala.collection.mutable.HashMap[String, District]()
-      it.foreach { d =>
-        val district = byPk.getOrElseUpdate(d.partKey, new District(
-          new LinkKernel(bq.value.getOrElse(d.partKey, Array.empty).iterator, topN)))
-        if (!district.kernel.isEmpty) {
-          val ds = new Scoring.Side(d)
-          Scoring.stampSideIdfs(ds,
-            idfByPk.value.getOrElse(d.partKey, EmptyIdfMap))
-          district.batch += ds
-          if (district.batch.length == BroadcastBatch) district.flush()
-        }
-      }
-      byPk.valuesIterator.flatMap { district =>
-        district.flush()
-        district.kernel.hits
-      }
-    }
   }
 
   /** A link hit with its per-term scoring explanation (the reference's
@@ -659,13 +564,6 @@ object Linker {
       ExplainedHit(h.queryId, h.docId, h.rank, h.similarity, terms)
     }
   }
-
-  private val EmptyIdfMap = new java.util.HashMap[String, java.lang.Double]()
-
-  /** Docs per kernel feed on the broadcast route: large enough that the
-    * per-feed postings and candidate passes amortize, small enough that a
-    * district's bound masses (4 bytes × queries × batch) stay a few MB. */
-  private[graft] val BroadcastBatch = 4096
 
   /** Stage ids (this JVM) whose tasks ran the scoring kernel — bench/test
     * instrumentation so the skew-stress report attributes task time to the

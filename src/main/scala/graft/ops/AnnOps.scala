@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{CosineSim, HyperplaneBits, HyperplaneProbes}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`), Spark-first:
@@ -24,8 +25,8 @@ object AnnOps {
 
   /** Cosine similarity between two array<float> columns, double precision,
     * 0 when either norm is 0 — the native codegen'd Catalyst expression
-    * (`graft.functions.CosineSim`). */
-  def cosine(a: Column, b: Column): Column = graft.functions.CosineSim(a, b)
+    * (`org.apache.spark.sql.graft.CosineSim`). */
+  def cosine(a: Column, b: Column): Column = CosineSim(a, b)
 
   /** The original higher-order-function formulation — kept as the
     * independent semantics witness for the native expression (OpsSpec pins
@@ -67,7 +68,7 @@ object AnnOps {
     * (round 2 measured the HOF formulation as the q16/q22 hot-path constant:
     * bits×tables interpreted lambdas per corpus row). */
   def lshBucket(vec: Column, planes: Array[Array[Double]]): Column =
-    graft.functions.HyperplaneBits(vec, planes)
+    HyperplaneBits(vec, planes)
 
   /** The original higher-order-function formulation — kept as the
     * independent semantics witness (OpsSpec pins native == HOF exactly:
@@ -114,7 +115,7 @@ object AnnOps {
       // Confidence-ordered probe buckets, shifted into this table's key
       // space (the transform HOF is fine here: a handful of QUERY rows).
       transform(
-        graft.functions.HyperplaneProbes(col(vecCol), tablePlanes(t), probes),
+        HyperplaneProbes(col(vecCol), tablePlanes(t), probes),
         b => b + lit(t.toLong << bits))
     }
     val q = queries.select(col(idCol).as("qid"), col(vecCol).as("qvec"),

@@ -63,7 +63,7 @@ object AnnQueries {
       // GraftExtensions (Verify/Bench sessions) — registered here too so the
       // query is self-contained in any session — and the plan matches
       // AnnOps.bruteForceTopK (broadcast query side, corpus streams once).
-      graft.functions.CosineSim.register(s)
+      org.apache.spark.sql.graft.CosineSim.register(s)
       t(s, dir, "embeddings").createOrReplaceTempView("q15_embeddings")
       s.sql("""
         WITH q AS (SELECT vec_id AS qid, embedding AS qv

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * and idf blobs, and only `Cells.score` cogroups and scores cells, so the
   * shuffled cells (`Linker.linkPlanned`) and the persisted cells (`LinkIndex`)
   * cannot drift apart on which cell a blob goes to or how a cell is
-  * scored. */
+  * scored. And no link route collects its inputs to the driver. */
 class CellGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src", "main", "scala")
@@ -61,5 +61,21 @@ class CellGuardSpec extends AnyFunSuite {
     assert(hits.map(l => (l._1, grouping.findFirstIn(l._3).get)) ==
       Seq((link.resolve("Cells.scala"), ".cogroup(")),
       "the one cell cogroup must be Cells.score's:\n" + hits.mkString("\n"))
+  }
+
+  test("the link collects to the driver only district counts and discovered towns") {
+    // A driver collect of link inputs is fixed serial cost and unbounded
+    // driver memory: the two allowed are `Cells.countByPk`'s per-district
+    // counts and `Linker.discoverTowns`' town vocabulary.
+    val call = """\.collect\s*\(\s*\)""".r
+    val calls = sources(link).flatMap { p =>
+      val raw = Files.readAllLines(p).asScala
+      lines(p).filter(l => call.findFirstIn(l._3).isDefined).map { l =>
+        val owner = raw.take(l._2).lastIndexWhere(_.matches("""\s*(private\S*\s+)?def\s.*"""))
+        (p.getFileName.toString, """def\s+(\w+)""".r.findFirstMatchIn(raw(owner)).get.group(1))
+      }
+    }
+    assert(calls.sorted == Seq(("Cells.scala", "countByPk"), ("Linker.scala", "discoverTowns")),
+      "driver collects under graft/link:\n" + calls.mkString("\n"))
   }
 }

@@ -27,19 +27,18 @@ import graft.pipeline.KgJob
   * evicts its own classes and recompiles them on every run.
   *
   * So a warm run of docs → idf → mentions → link → triples, on a fixture
-  * that takes both link routes and the partial top-k merge, must compile no
-  * class at all, and must run no more jobs than the pair-RDD link needs. And
-  * the ingest cycle (`KgJob.run`, co-mention, PMI, PageRank, resume) must
-  * generate few enough classes that every segment holds its share with room
-  * to spare, and a warm cycle compiles nothing. */
+  * that splits a district's docs and takes the partial top-k merge, must
+  * compile no class at all, and must run no more jobs than the pair-RDD
+  * link needs. And the ingest cycle (`KgJob.run`, co-mention, PMI, PageRank,
+  * resume) must generate few enough classes that every segment holds its
+  * share with room to spare, and a warm cycle compiles nothing. */
 class CodegenBudgetSpec extends AnyFunSuite {
   import GoldenFixtures.{dict => d0}
 
   private lazy val spark = SparkTestBase.spark
 
-  /** Jobs one warm run starts: the route counts, the broadcast route's
-    * query and idf collects, and the triples action, whose adaptive plan
-    * runs its exchanges as jobs of their own. */
+  /** Jobs one warm run may start: the route counts and the triples
+    * action, whose adaptive plan runs its exchanges as jobs of their own. */
   private val MaxJobs = 7
 
   /** Classes a cold ingest cycle may compile: 64 entries average 16 of a
@@ -55,13 +54,11 @@ class CodegenBudgetSpec extends AnyFunSuite {
     val corpus = SynthCorpus.corpus(d0.regions, 400, 4, seed = 23)
     val turns = SynthCorpus.transcripts(d0.regions, 120, 4, seed = 24)
 
-    // The route thresholds come from the fixture's own counts: the
-    // narrowest queried district takes the broadcast route and the rest
-    // split into 2-D cells (valve 32 docs, so db > 1 and partial lists
-    // merge).
+    // Every queried district splits into 2-D cells (valve 32 docs, so
+    // db > 1 and partial lists merge).
     def plan(stats: Array[(String, Long, Long)]) = Linker.planRoutes(stats,
       s.sparkContext.defaultParallelism, targetPairsPerCell = 64,
-      maxDocsPerCell = 32, bcastQMax = stats.iterator.map(_._2).filter(_ > 0).min)
+      maxDocsPerCell = 32)
 
     def run(): (Set[graft.model.Triple], Linker.RoutePlan) = {
       val docs = Linker.buildDocs(s, s.createDataset(corpus).repartition(4), bdict)
@@ -87,9 +84,8 @@ class CodegenBudgetSpec extends AnyFunSuite {
     val coldCompiled0 = compiled()
     val (cold, coldPlan) = run()
     info(s"cold run: ${compiled() - coldCompiled0} classes compiled")
-    assert(coldPlan.bcastPks.nonEmpty && coldPlan.shufflePks.nonEmpty,
-      s"fixture must take both routes: $coldPlan")
-    assert(coldPlan.knobs.valuesIterator.exists(_.dBuckets > 1), coldPlan.knobs)
+    assert(coldPlan.knobs.valuesIterator.exists(_.dBuckets > 1),
+      s"the cold plan must split a district's docs: $coldPlan")
     assert(cold.exists(_.pred == "linkedTo"))
 
     org.apache.spark.perfbench.ListenerDrain(s.sparkContext)

@@ -42,7 +42,7 @@ class DictLoopSpec extends AnyFunSuite {
       // any existing child; parent must be the carrying district.
       assert(r.id >= r.parentId * 10000L && r.id < (r.parentId + 1) * 10000L)
       assert(d0.regions.get(r.parentId) != null)
-      assert(!d0.regions.byId.contains(r.id), s"id collision with base dict: ${r.id}")
+      assert(d0.regions.get(r.id) == null, s"id collision with base dict: ${r.id}")
       val last = r.name.charAt(r.name.length - 1)
       if (last == '村') assert(r.regionType == RegionTypes.Village)
       else assert(Set('镇', '乡').contains(last) && r.regionType == RegionTypes.Town)
@@ -96,7 +96,7 @@ class DictLoopSpec extends AnyFunSuite {
     assert(Seq(extB, compat).sorted == Seq(extB, compat),
       "precondition: UTF-16 order differs from code-point order here")
     val d2 = Dict.withDiscoveredTowns(d0, Seq((did, extB), (did, compat)))
-    val newRs = d2.regions.all.filterNot(r => d0.regions.byId.contains(r.id))
+    val newRs = d2.regions.all.filter(r => d0.regions.get(r.id) == null)
       .sortBy(_.id)
     assert(newRs.map(_.name) == Seq(compat, extB),
       s"ids must follow code-point order: ${newRs.map(r => (r.id, r.name))}")

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The link has one scoring kernel: `LinkKernel.feed` is the only loop that
-  * calls `Scoring.score`, and every route (shuffle cells, broadcast,
+  * calls `Scoring.score`, and the one cell engine (the batch cells and
   * `LinkIndex`) feeds it. Pruning is always on: nothing reads a WAND
   * switch from the environment. */
 class KernelGuardSpec extends AnyFunSuite {

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.analyse.DocAnalyser
 import graft.data.SynthCorpus
 import graft.kg.KgPipeline
-import graft.link.{Linker, Scoring}
+import graft.link.{Cells, Linker, Scoring}
 import graft.model._
 
 /** Differential oracle (SURVEY.md §5.2): the distributed Dataset pipeline must
@@ -186,44 +186,38 @@ class KgPipelineSpec extends AnyFunSuite {
     // Use corpus docs themselves as queries (self-link); one cell per
     // district is the base every knob setting must reproduce.
     val pks = docs.collect().map(_.partKey).distinct.sorted
-    // A hand-built plan: `bcast` districts take the broadcast route, the
-    // rest the shuffled cells with `knobs` (one cell where absent).
-    def routed(bcast: Set[String], knobs: Map[String, Linker.CellKnobs]) =
-      key(Linker.linkPlanned(s, Linker.RoutePlan(Map.empty, Map.empty, bcast,
-        pks.toSet -- bcast, knobs), docs, docs, 5, idf))
+    // A hand-built plan: every district in the shuffled cells with `knobs`
+    // (one cell where absent).
+    def routed(knobs: Map[String, Linker.CellKnobs]) =
+      key(Linker.linkPlanned(s, Linker.RoutePlan(Map.empty, Map.empty,
+        pks.toSet, knobs), docs, docs, 5, idf))
     def run(qb: Int, db: Int) =
-      routed(Set.empty, pks.map(_ -> Linker.CellKnobs(qb, db)).toMap)
+      routed(pks.map(_ -> Linker.CellKnobs(qb, db)).toMap)
     val base = run(1, 1)
     assert(base.nonEmpty)
     assert(run(24, 1) == base)
     assert(run(7, 3) == base)
 
-    // Broadcast-query variant (hot-partition escape hatch) agrees too.
-    assert(routed(pks.toSet, Map.empty) == base)
-
     // Per-partKey knob overrides agree (mixed g/db across districts).
     val mixed = pks.zipWithIndex.map { case (pk, i) =>
       pk -> Linker.CellKnobs(1 + (i % 5), 1 + (i % 3))
     }.toMap
-    assert(routed(Set.empty, mixed) == base)
+    assert(routed(mixed) == base)
 
-    // Mixed routes agree: half the districts broadcast, the rest split
-    // their docs (db > 1), so both routes' partial lists share one merge.
-    val (bcastHalf, cellHalf) = pks.splitAt(pks.length / 2)
-    assert(bcastHalf.nonEmpty && cellHalf.nonEmpty)
-    assert(routed(bcastHalf.toSet,
-      cellHalf.map(_ -> Linker.CellKnobs(3, 2)).toMap) == base)
+    // Mixed merge: half the districts are one cell, the rest split their
+    // docs (db > 1), so final and partial lists share one merge.
+    val (oneCell, cellHalf) = pks.splitAt(pks.length / 2)
+    assert(oneCell.nonEmpty && cellHalf.nonEmpty)
+    assert(routed(cellHalf.map(_ -> Linker.CellKnobs(3, 2)).toMap) == base)
 
-    // Auto mode (counted stats → knobs + broadcast routing) agrees, with
-    // thresholds forced low enough that BOTH the 2-D blocking and the
-    // broadcast route actually exercise on this small input.
-    def auto(bcastQMax: Long) = key(Linker.linkPlanned(s,
-      Linker.planRoutes(Linker.countStats(s, docs, docs),
-        s.sparkContext.defaultParallelism, targetPairsPerCell = 64,
-        maxDocsPerCell = 32, bcastQMax = bcastQMax),
-      docs, docs, 5, idf))
-    assert(auto(bcastQMax = 0) == base)
-    assert(auto(bcastQMax = 1000000) == base)
+    // Auto mode (counted stats → knobs) agrees, with thresholds forced low
+    // enough that the 2-D blocking and the memory valve exercise on this
+    // small input.
+    val plan = Linker.planRoutes(Linker.countStats(s, docs, docs),
+      s.sparkContext.defaultParallelism, targetPairsPerCell = 64,
+      maxDocsPerCell = 32)
+    assert(Cells.splitsDocs(plan.knobs), plan.knobs)
+    assert(key(Linker.linkPlanned(s, plan, docs, docs, 5, idf)) == base)
   }
 
   test("co-mention adjacency: edge weights count distinct conversations") {

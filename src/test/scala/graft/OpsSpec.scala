@@ -104,8 +104,8 @@ class OpsSpec extends AnyFunSuite {
     // Probe list: first element IS the base bucket; every other probe is
     // hamming-1 from it; count = min(nProbes, bits+1); no duplicates.
     val pr = vecs.select(col("embedding"),
-        graft.functions.HyperplaneBits(col("embedding"), planes).as("base"),
-        graft.functions.HyperplaneProbes(col("embedding"), planes, 4).as("probes"))
+        org.apache.spark.sql.graft.HyperplaneBits(col("embedding"), planes).as("base"),
+        org.apache.spark.sql.graft.HyperplaneProbes(col("embedding"), planes, 4).as("probes"))
       .collect()
     pr.foreach { r =>
       val base = r.getLong(1)
@@ -177,7 +177,7 @@ class OpsSpec extends AnyFunSuite {
       .agg(max(abs(col("c")))).head().getDouble(0)
     assert(mixed <= 1.0 + 1e-9)
     // SQL surface: registry injection makes cosine_sim callable from SQL.
-    graft.functions.CosineSim.register(s)
+    org.apache.spark.sql.graft.CosineSim.register(s)
     vecs.createOrReplaceTempView("cosine_sim_vecs")
     val viaSql = s.sql(
       """SELECT cosine_sim(a.embedding, b.embedding) AS c

@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analyse.DocAnalyser
 import graft.data.SynthCorpus
-import graft.link.{LinkKernel, Linker, Scoring}
+import graft.link.{Cells, LinkKernel, Linker, Scoring}
 import graft.model.{DocVec, IdfRow, LinkHit}
 
 /** WAND-style admissible pruning (round 5): the scoring loop skips a
@@ -13,8 +12,8 @@ import graft.model.{DocVec, IdfRow, LinkHit}
   * maxQtfidf² / minSumQQ, float mass inflated by the safety factor) cannot
   * beat the heap's quantized kth key. The skip is BIT-IDENTICAL by the
   * TopK.offer contract — these tests pin that against a brute-force
-  * reference on every route, the admissibility of the bound itself, and
-  * that pruning actually engages.
+  * reference in the kernel and through the planned link, the admissibility
+  * of the bound itself, and that pruning actually engages.
   */
 class WandSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -76,16 +75,6 @@ class WandSpec extends AnyFunSuite {
   private def sorted(hits: Seq[(Long, Long, Int, Long)]) =
     hits.sortBy(x => (x._1, x._3))
 
-  /** Link every query's district along the broadcast route alone. */
-  private def broadcastRoute(queries: Seq[DocVec], docs: Dataset[DocVec],
-      idf: Dataset[IdfRow]) = {
-    val s = spark
-    import s.implicits._
-    Linker.linkPlanned(s, Linker.RoutePlan(Map.empty, Map.empty,
-      queries.map(_.partKey).toSet, Set.empty, Map.empty),
-      s.createDataset(queries), docs, 5, idf).collect().map(bits).toSeq
-  }
-
   test("pruned scoring is bit-identical to exhaustive scoring, and engages") {
     val docs = cellInputs(1200)
     val dsides = docs.map(new Scoring.Side(_)).toArray
@@ -119,48 +108,28 @@ class WandSpec extends AnyFunSuite {
     }
   }
 
-  test("broadcast route is bit-identical to the brute-force reference") {
+  test("a hot district with few queries splits its docs into cells, bit-identical to the brute-force reference") {
     val s = spark
     import s.implicits._
+    // One district far above the cell valve, queried by a handful of rows:
+    // the planner must split its docs (db > 1) however few its queries.
+    val maxDocsPerCell = 256
     val docs = cellInputs(1500)
-    val queries = docs.take(120).toArray
+    val queries = docs.take(6)
+    assert(docs.size > 2 * maxDocsPerCell, s"need a hot district, got ${docs.size} docs")
     val ds = s.createDataset(docs).repartition(4)
+    val qs = s.createDataset(queries)
     val idf = Linker.buildIdf(s, ds).persist()
     try {
-      val got = broadcastRoute(queries.toSeq, ds, idf)
+      val plan = Linker.planRoutes(Linker.countStats(s, qs, ds),
+        s.sparkContext.defaultParallelism, maxDocsPerCell = maxDocsPerCell)
+      assert(plan.shufflePks == Set("pk"), plan)
+      assert(plan.knobs("pk").dBuckets >= Cells.valve(docs.size, maxDocsPerCell) &&
+        plan.knobs("pk").dBuckets > 1, plan.knobs)
+      val got = Linker.linkPlanned(s, plan, qs, ds, 5, idf).collect().map(bits).toSeq
       val idfRows = idf.collect().toSeq
-      val exp = reference(stamped(queries.toSeq, idfRows),
-        stamped(docs, idfRows), 5)
+      val exp = reference(stamped(queries, idfRows), stamped(docs, idfRows), 5)
       assert(got.nonEmpty && sorted(got) == sorted(exp))
-    } finally { idf.unpersist(); () }
-  }
-
-  test("broadcast route carries heaps across kernel batches") {
-    val s = spark
-    import s.implicits._
-    val docs = cellInputs(2 * Linker.BroadcastBatch + 1000)
-    assert(docs.size > 2 * Linker.BroadcastBatch,
-      s"need > two batches of one district in one partition, got ${docs.size}")
-    val queries = docs.take(120)
-    val exp = reference(queries, docs, 5)
-    assert(exp.nonEmpty)
-
-    // The kernel fed batch by batch keeps one heap per query: no merge.
-    val kernel = new LinkKernel(queries.iterator, 5)
-    docs.grouped(Linker.BroadcastBatch)
-      .foreach(b => kernel.feed(b.map(new Scoring.Side(_)).toArray))
-    assert(kernel.hits.map(bits).toVector == exp)
-
-    // One partition holds every doc of the district, so its task feeds
-    // its kernel three batches.
-    val ds = s.createDataset(docs).repartition(1)
-    val idf = Linker.buildIdf(s, ds).persist()
-    try {
-      val got = broadcastRoute(queries, ds, idf)
-      val idfRows = idf.collect().toSeq
-      val expStamped = reference(stamped(queries, idfRows),
-        stamped(docs, idfRows), 5)
-      assert(got.nonEmpty && sorted(got) == sorted(expStamped))
     } finally { idf.unpersist(); () }
   }
 
