@@ -108,7 +108,7 @@ class WandSpec extends AnyFunSuite {
     }
   }
 
-  test("a hot district with few queries splits its docs into cells, bit-identical to the brute-force reference") {
+  test("a hot district with few queries splits into cells, bit-identical to brute force") {
     val s = spark
     import s.implicits._
     // One district far above the cell valve, queried by a handful of rows:
