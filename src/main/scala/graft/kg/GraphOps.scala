@@ -38,6 +38,9 @@ import graft.ops.Par
   */
 object GraphOps {
 
+  /** PageRank's damping factor d, shared with the q35 DuckDB oracle. */
+  val Damping = 0.85
+
   /** Weighted PageRank on an UNDIRECTED weighted edge list (src, dst,
     * weight) with src < dst (co-mention convention) — each edge transfers
     * mass both ways, proportional to its weight share of the endpoint's
@@ -70,8 +73,7 @@ object GraphOps {
     * contract is what lets an independent engine (the DuckDB oracle's
     * chained-CTE recomputation) reproduce the values exactly, the same
     * quantization argument as `Linker.TopK`. */
-  def pageRank[T](edges: DataFrame, iters: Int, damping: Double = 0.85)
-      (use: DataFrame => T): T =
+  def pageRank[T](edges: DataFrame, iters: Int)(use: DataFrame => T): T =
     CacheScope { w =>
       val spark = edges.sparkSession
       val ud = w.persist(bothWays(edges)(_.doubleValue))
@@ -90,7 +92,7 @@ object GraphOps {
         val n = outW.count() // every node has an incident edge
         val trans = w.persist(ud.join(outW, part)
           .mapValues { case ((dst, x), out) => (dst, x / out) })
-        val base = (1.0 - damping) / n
+        val base = (1.0 - Damping) / n
         var ranks = outW.mapValues(_ => 1.0 / n)
         var it = 0
         while (it < iters) {
@@ -98,7 +100,7 @@ object GraphOps {
             .values.map { case ((dst, p), rank) => (dst, p * rank) }
             .reduceByKey(part, _ + _)
           ranks = outW.leftOuterJoin(inflow, part)
-            .mapValues { case (_, in) => base + damping * in.getOrElse(0.0) }
+            .mapValues { case (_, in) => base + Damping * in.getOrElse(0.0) }
           it += 1
         }
         use(SessionRdd.frame(spark,

@@ -3,18 +3,20 @@ package graft.link
 import java.io.{ByteArrayOutputStream, DataOutputStream}
 
 import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.graft.SessionRdd
 
 import graft.model.{DocVec, IdfRow, LinkHit}
 
 import Linker.{CellKnobs, TopK}
 
-/** The link's one cell layout and its one cell engine, shared by the
+/** The link's one cell layout and its one link body, shared by the
   * shuffled batch cells (`Linker.linkPlanned`) and the persisted streaming
   * cells (`LinkIndex`; `CellKnobs(1, db)` per district). A cell is
   * `(partKey, qBucket, dBucket)`; a district's knobs `CellKnobs(g, db)` give
-  * it g·db cells, and a district without an entry is one cell.
+  * it g·db cells, and the knob map is the link's whole blocking ([[link]]).
   *
   *  - docs pack per input partition into blobs of [[BlobDocs]] docs of one
   *    district; blob i of the partition goes to dBucket `i mod db` and is
@@ -27,7 +29,7 @@ import Linker.{CellKnobs, TopK}
   * Cell rows are pair-RDD rows `(key, (tag, blob))`, tag 0 a doc blob and
   * tag 1 an idf blob: what `Linker.scoreCell` reads. The per-partition
   * functions are plain iterator maps, so both paths (and the layout test)
-  * run the same code, and [[score]] is the one cogroup that scores cells.
+  * run the same code, and [[link]] is the one body that scores and merges.
   * Everything here runs on pair RDDs rather than Datasets: the link's rows
   * are opaque blobs and object rows, so Catalyst has nothing to optimise,
   * and every Dataset operator would add generated classes that Spark's
@@ -86,13 +88,26 @@ private[graft] object Cells {
       (0 until dbOf(knobs, q.partKey)).iterator.map(dbk => ((q.partKey, qb, dbk), q))
     }
 
-  /** The one cell engine: cogroup the cell rows (doc and idf blobs) with
-    * the query cells under `partitioner` and score each cell that has
-    * queries with `Linker.scoreCell`. Returns each cell's partial top-k;
-    * they are final only when no district splits its docs. A side already
-    * partitioned by `partitioner` (the persisted index cells) is read in
-    * place: only the other side shuffles. */
-  def score(cells: RDD[(Key, Blob)], queries: RDD[(Key, DocVec)],
+  /** The one link body: the queries of districts with knobs, keyed by their
+    * cells, scored against `cells` (the same knobs' doc and idf cells), and
+    * their partial lists merged at `partitioner`'s width when needed. */
+  def link(cells: RDD[(Key, Blob)], queries: RDD[DocVec],
+      knobs: Broadcast[Map[String, CellKnobs]], partitioner: Partitioner,
+      topN: Int): RDD[LinkHit] = {
+    val partial = score(cells, queries.mapPartitions(it => queryCells(
+      it.filter(q => knobs.value.contains(q.partKey)), knobs.value)),
+      partitioner, topN)
+    if (splitsDocs(knobs.value)) mergeHits(partial, topN, partitioner.numPartitions)
+    else partial
+  }
+
+  /** Cogroup the cell rows (doc and idf blobs) with the query cells under
+    * `partitioner` and score each cell that has queries with
+    * `Linker.scoreCell`. Returns each cell's partial top-k; they are final
+    * only when no district splits its docs. A side already partitioned by
+    * `partitioner` (the persisted index cells) is read in place: only the
+    * other side shuffles. */
+  private def score(cells: RDD[(Key, Blob)], queries: RDD[(Key, DocVec)],
       partitioner: Partitioner, topN: Int): RDD[LinkHit] =
     cells.cogroup(queries, partitioner).flatMap { case (_, (cellIt, qIt)) =>
       if (qIt.isEmpty) Iterator.empty
@@ -102,7 +117,7 @@ private[graft] object Cells {
   /** Each query's final top-k from its partial lists: one queryId-keyed
     * `TopK` reduce over `partitions` partitions, combined map-side. Exact:
     * `TopK` is order-independent. */
-  def mergeHits(partial: RDD[LinkHit], topN: Int,
+  private def mergeHits(partial: RDD[LinkHit], topN: Int,
       partitions: Int): RDD[LinkHit] =
     partial.map(h => (h.queryId, h)).combineByKey(
       (h: LinkHit) => new TopK(topN).add(h),
@@ -114,7 +129,8 @@ private[graft] object Cells {
   /** Per-partKey row counts of each side, in ONE job: per-partition local
     * maps merged on the driver. District cardinality is bounded (~10³
     * nationally), so the partial maps are tiny and no exchange runs.
-    * `counts(pk)(i)` is side i's count (0 where the side lacks pk). */
+    * `counts(pk)(i)` is side i's count (0 where the side lacks pk). Runs
+    * under the first side's session loader (`SessionRdd.action`). */
   def countByPk(sides: Dataset[DocVec]*): Map[String, Array[Long]] = {
     val partials = sides.zipWithIndex.map { case (ds, side) =>
       ds.rdd.mapPartitions { it =>
@@ -124,9 +140,10 @@ private[graft] object Cells {
       }
     }
     val merged = new scala.collection.mutable.HashMap[String, Array[Long]]()
-    partials.reduce(_ union _).collect().foreach { case (pk, side, n) =>
-      merged.getOrElseUpdate(pk, new Array[Long](sides.length))(side) += n
-    }
+    SessionRdd.action(sides.head.sparkSession)(
+      partials.reduce(_ union _).collect()).foreach { case (pk, side, n) =>
+        merged.getOrElseUpdate(pk, new Array[Long](sides.length))(side) += n
+      }
     merged.toMap
   }
 

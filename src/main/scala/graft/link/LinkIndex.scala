@@ -3,6 +3,7 @@ package graft.link
 import org.apache.spark.{HashPartitioner, Partitioner}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.graft.SessionRdd
 import org.apache.spark.storage.StorageLevel
 
 import graft.model.{DocVec, IdfRow, LinkHit}
@@ -44,11 +45,11 @@ import graft.model.{DocVec, IdfRow, LinkHit}
   * The cells are the batch link's pair-RDD cells, persisted: the
   * `partitionBy` + same-partitioner `cogroup`/union contract carries the
   * partitioning ACROSS queries, which is the reuse the streaming path needs.
-  * Scoring is the batch cells' one engine, `Cells.score` (in-cell idf
-  * stamping, one `LinkKernel` feed, quantized TopK), run with the index's
-  * persisted partitioner, so indexed output is bit-identical to
-  * `linkTopKAuto` (LinkIndexSpec). Queries of a district the index does not
-  * hold are dropped before the shuffle: they have no candidates.
+  * Linking is the batch path's one body, `Cells.link`, run with the
+  * index's persisted cells and partitioner, so indexed output is
+  * bit-identical to `linkTopKAuto` (LinkIndexSpec). Queries of a district
+  * the index does not hold have no knobs, so it drops them before the
+  * shuffle: they have no candidates.
   *
   * Query buckets are fixed at g=1: micro-batch query sets are small, so
   * per-cell pair work `q·maxDocsPerCell` stays bounded by the batch size and
@@ -72,9 +73,6 @@ final class LinkIndex private (
 
   private def partitioner = docCells.partitioner.get
 
-  /** Number of persisted cell partitions (for tests/inspection). */
-  def numPartitions: Int = partitioner.numPartitions
-
   /** Districts whose accumulated doc mass exceeds the per-cell valve ×
     * their frozen bucket count — appended growth eventually owes these a
     * compaction (full re-build for just those districts). */
@@ -90,19 +88,14 @@ final class LinkIndex private (
   def link(spark: SparkSession, queries: Dataset[DocVec],
       topN: Int): Dataset[LinkHit] = {
     import spark.implicits._
-    val bknobs = spark.sparkContext.broadcast(knobs)
-    val qCells = queries.rdd.mapPartitions(it => Cells.queryCells(
-      it.filter(q => bknobs.value.contains(q.partKey)), bknobs.value))
     // Partitioner-aware union of the doc and idf cells: both sides carry
     // the SAME partitioner, so the union is narrow and so is the cogroup's
     // static leg.
     val cells = docCells.union(idfCells)
     assert(cells.partitioner.contains(partitioner),
       "cell union lost its partitioner — static side would re-shuffle")
-    val partial = Cells.score(cells, qCells, partitioner, topN)
-    spark.createDataset(
-      if (Cells.splitsDocs(knobs)) Cells.mergeHits(partial, topN, numPartitions)
-      else partial)
+    spark.createDataset(Cells.link(cells, queries.rdd,
+      spark.sparkContext.broadcast(knobs), partitioner, topN))
   }
 
   /** The pre-collapse call shape of [[link]], kept only because the frozen
@@ -165,7 +158,7 @@ object LinkIndex {
     }
 
   /** One cell family of `rows`, partitioned, persisted and EAGERLY
-    * materialized. */
+    * materialized under the session loader (`SessionRdd.action`). */
   private def persisted[T](spark: SparkSession, rows: Dataset[T],
       knobs: Map[String, Linker.CellKnobs], partitioner: Partitioner)(
       cells: (Iterator[T], Map[String, Linker.CellKnobs]) => Iterator[(Cells.Key, Cells.Blob)])
@@ -173,7 +166,7 @@ object LinkIndex {
     val bknobs = spark.sparkContext.broadcast(knobs)
     val p = rows.rdd.mapPartitions(cells(_, bknobs.value))
       .partitionBy(partitioner).persist(StorageLevel.MEMORY_AND_DISK)
-    p.count()
+    SessionRdd.action(spark)(p.count())
     p
   }
 

@@ -5,11 +5,11 @@ import graft.model.{DocVec, LinkHit}
 import Linker.TopK
 
 /** The link's one scoring kernel: one district's queries, their top-k heaps
-  * and their WAND limits, fed an array of doc sides. The one cell engine
-  * feeds it a whole cell once (`Linker.scoreCell`), for the batch link and
-  * `LinkIndex` alike. `TopK` is order-independent and the skip is
-  * admissible, so the hits do not depend on how a district's docs are split
-  * into cells.
+  * and their WAND limits, fed an array of doc sides. The one link body,
+  * `Cells.link`, feeds it a whole cell once (`Linker.scoreCell`), for the
+  * batch link and `LinkIndex` alike. `TopK` is order-independent and the
+  * skip is admissible, so the hits do not depend on how a district's docs
+  * are split into cells.
   *
   * Per array:
   *  - postings (term hash → doc indices) are built once; each query only

@@ -3,7 +3,6 @@ package graft.link
 import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.graft.SessionRdd
 
 import graft.analyse.DocAnalyser
 import graft.dict.{Regions, TermIndex}
@@ -315,14 +314,11 @@ object Linker {
   /** Per-partKey cell-split knobs (query buckets × doc buckets). */
   final case class CellKnobs(qBuckets: Int, dBuckets: Int)
 
-  private def shufflePartitions(spark: SparkSession): Int =
-    spark.sessionState.conf.numShufflePartitions
-
   /** Score one link cell: unpack its tag-0 doc blobs and tag-1 idf blobs,
     * stamp both sides from the cell's idfs, and feed the whole cell to one
-    * [[LinkKernel]]. Called only by the one cell engine, `Cells.score`, so
-    * the batch cells and the persisted streaming cells (`LinkIndex`) score
-    * bit-identically. */
+    * [[LinkKernel]]. Called only by the one link body's cogroup
+    * (`Cells.link`), so the batch cells and the persisted streaming cells
+    * (`LinkIndex`) score bit-identically. */
   private[link] def scoreCell(blobs: Iterator[(Int, Array[Byte])],
       queries: Iterator[DocVec], topN: Int): Iterator[LinkHit] = {
     val buf = scala.collection.mutable.ArrayBuffer.empty[Scoring.Side]
@@ -345,21 +341,18 @@ object Linker {
 
   /** Both sides' per-partKey (query, doc) counts in ONE job (fixed per-job
     * overhead is the measured scaling bound on this box — don't pay it
-    * twice; `Cells.countByPk`). Driver-sized result: one row per district.
-    * The job runs under the session's executor class loader
-    * (`SessionRdd.action`), so its scans share the codegen-cache entries of
-    * the SQL executions that read the same stages. */
+    * twice; `Cells.countByPk`, which runs it under `queries`' session
+    * loader). Driver-sized result: one row per district. */
   def countStats(spark: SparkSession, queries: Dataset[DocVec],
       docs: Dataset[DocVec]): Array[(String, Long, Long)] =
-    SessionRdd.action(spark)(Cells.countByPk(queries, docs)).iterator
+    Cells.countByPk(queries, docs).iterator
       .map { case (pk, n) => (pk, n(0), n(1)) }.toArray
 
   /** The auto-router's decision, exposed for inspection (the skew-stress
     * bench reports cell counts from the SAME planner the link executes):
-    * the queried districts and each one's cell knobs. */
+    * each district's counts and the knobs of the districts it links. */
   final case class RoutePlan(qCounts: Map[String, Long],
-      dCounts: Map[String, Long], shufflePks: Set[String],
-      knobs: Map[String, CellKnobs]) {
+      dCounts: Map[String, Long], knobs: Map[String, CellKnobs]) {
     /** Total candidate pair work q·d across queried districts. */
     def pairWork: Long = qCounts.iterator
       .map { case (pk, q) => q * dCounts.getOrElse(pk, 0L) }.sum
@@ -370,7 +363,7 @@ object Linker {
       * only because the frozen benchmark sources (`Bench.scala`,
       * `perfbench/`) read it; it goes with the next change to the
       * benchmark. */
-    @deprecated("every queried district is in shufflePks", "0.1.0")
+    @deprecated("every linked district has cell knobs", "0.1.0")
     def bcastPks: Set[String] = Set.empty
   }
 
@@ -379,7 +372,7 @@ object Linker {
 
   /** Pure route planning from counted stats — extracted from `linkTopKAuto`
     * so the decision is inspectable; the link path calls exactly this.
-    * Every queried district gets cells sized from its counted work. */
+    * Every queried district with docs gets cells sized from its work. */
   def planRoutes(stats: Array[(String, Long, Long)], parallelism: Int,
       targetPairsPerCell: Long = 1L << 22,
       maxDocsPerCell: Int = Cells.MaxDocsPerCell): RoutePlan = {
@@ -429,7 +422,7 @@ object Linker {
         Some(pk -> knob)
       }
     }.toMap
-    RoutePlan(qCounts, dCounts, qCounts.keySet, knobs)
+    RoutePlan(qCounts, dCounts, knobs)
   }
 
   /** Self-tuning link (the 100×-survival path): counts both sides per
@@ -449,12 +442,11 @@ object Linker {
     * (`Query.java:73,89`; SURVEY.md §7.4-3). Hits with similarity <= 0 are
     * dropped (`Query.addSimiDoc` `Query.java:62`).
     *
-    * Each district in `plan.shufflePks` is a blocked cross join of its
+    * Each district in `plan.knobs` is a blocked cross join of its
     * queries × candidate docs, laid out by `Cells`: the DOC side ships as
     * packed binary blocks (`DocBlob`), the QUERY side splits into qBuckets
-    * by queryId. `plan.knobs` is the only shape input: a district without
-    * an entry is one cell, `CellKnobs(1, 1)`. Docs in districts with NO
-    * queries never enter the shuffle (broadcast membership filter) — with a
+    * by queryId. `plan.knobs` is the whole blocking: a district without an
+    * entry reaches no cell, and its docs never enter the shuffle — with a
     * small query batch against a 100 TB corpus this prunes the dominant
     * cost. Returns each query's top-k, merged from its partial lists when
     * some district splits its docs.
@@ -488,19 +480,17 @@ object Linker {
     *    payload, and input idfs are ignored (stamping overwrites them). A
     *    district's distinct-term table is far smaller than its doc-term
     *    payload, so shipping it ×(g·db) is cheap.
-    *  - the cells are pair-RDD rows cogrouped by `Cells.score` under a
+    *  - the cells are pair-RDD rows linked by `Cells.link` under a
     *    `HashPartitioner` of `spark.sql.shuffle.partitions` — the same
-    *    engine `LinkIndex` runs with its persisted partitioner.
+    *    body `LinkIndex` runs with its persisted cells and partitioner.
     *
     * Output is bit-identical for any plan (KgPipelineSpec). */
   def linkPlanned(spark: SparkSession, plan: RoutePlan,
       queries: Dataset[DocVec], docs: Dataset[DocVec], topN: Int,
       idf: Dataset[IdfRow]): Dataset[LinkHit] = {
     import spark.implicits._
-    val bPks = spark.sparkContext.broadcast(plan.shufflePks)
+    val width = spark.sessionState.conf.numShufflePartitions
     val bknobs = spark.sparkContext.broadcast(plan.knobs)
-    val splits = Cells.splitsDocs(plan.knobs)
-    val qs = queries.rdd.filter(q => bPks.value.contains(q.partKey))
     // The query side may arrive CLUSTERED by partKey (one partition per
     // district after any partKey-keyed stage), so without a rebalance the
     // ×dBuckets replication flatMap and its shuffle write for a hot district
@@ -512,19 +502,16 @@ object Linker {
     // stage embarrassingly parallel. Bit-identical results: the cell cogroup
     // re-keys every row anyway, and per-query top-k is order-independent.
     val qSpread =
-      if (!splits) qs // no ×db replication
-      else qs.keyBy(_.docId).partitionBy(new HashPartitioner(
-        math.max(spark.sparkContext.defaultParallelism, shufflePartitions(spark))))
+      if (!Cells.splitsDocs(plan.knobs)) queries.rdd // no ×db replication
+      else queries.rdd.keyBy(_.docId).partitionBy(new HashPartitioner(
+        math.max(spark.sparkContext.defaultParallelism, width)))
         .values
-    val hits = Cells.score(
-      docs.rdd.filter(d => bPks.value.contains(d.partKey))
-        .mapPartitions(Cells.docCells(_, bknobs.value))
-        .union(idf.rdd.filter(r => bPks.value.contains(r.partKey))
-          .mapPartitions(Cells.idfCells(_, bknobs.value))),
-      qSpread.mapPartitions(Cells.queryCells(_, bknobs.value)),
-      new HashPartitioner(shufflePartitions(spark)), topN)
-    spark.createDataset(
-      if (splits) Cells.mergeHits(hits, topN, shufflePartitions(spark)) else hits)
+    val cells = docs.rdd.filter(d => bknobs.value.contains(d.partKey))
+      .mapPartitions(Cells.docCells(_, bknobs.value))
+      .union(idf.rdd.filter(r => bknobs.value.contains(r.partKey))
+        .mapPartitions(Cells.idfCells(_, bknobs.value)))
+    spark.createDataset(Cells.link(cells, qSpread, bknobs,
+      new HashPartitioner(width), topN))
   }
 
   /** The pre-collapse call shape of [[linkTopKAuto]], kept only because the

@@ -91,6 +91,9 @@ object DedupOps {
       .where(col("jaccard") >= minJaccard)
   }
 
+  /** [[sortedNeighborhood]]'s sort-key length, shared with the q47 oracle. */
+  val SortKeyPrefixLen = 64
+
   /** SORTED-NEIGHBORHOOD dedup blocking (Hernández & Stolfo, SIGMOD 1995) —
     * the sort-based counterpart to the hash-based candidate generators here
     * (MinHash-LSH bands, SimHash buckets, embedding LSH): order the corpus
@@ -104,7 +107,7 @@ object DedupOps {
     * The global order is NOT a single-partition window (the classic 100 TB
     * killer): it is [[OrderedScan.exclusivePrefixSum]] with weight 1 — the
     * same two-pass scan as `epochShards` — over the total (key, id) order.
-    * The sort key is a BOUNDED prefix (`keyPrefixLen` chars) of the
+    * The sort key is a BOUNDED prefix ([[SortKeyPrefixLen]] chars) of the
     * normalized text: the method's own premise is that near-dups share a
     * long prefix, so ordering by the whole document would ship and compare
     * full bodies as range-partition keys for no extra adjacency (ties
@@ -119,8 +122,8 @@ object DedupOps {
     * the lower-ranked doc and round(jaccard,4) ≥ `tau`. */
   def sortedNeighborhood(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", w: Int = 3, n: Int = 8,
-      tau: Double = 0.5, keyPrefixLen: Int = 64): DataFrame = {
-    require(w > 0 && keyPrefixLen > 0)
+      tau: Double = 0.5): DataFrame = {
+    require(w > 0)
     // (An A/B of a Par.scanSpread floor on this projection showed a small
     // measured LOSS: the rank input feeds repartitionByRange immediately, so
     // the added exchange only saves the range-sampler's one-task scan and
@@ -128,7 +131,7 @@ object DedupOps {
     // rides shingleRows' spread.)
     val keyed = docs.select(col(idCol).cast("long").as("id"),
       substring(lower(regexp_replace(trim(col(textCol)), "\\s+", " ")),
-        1, keyPrefixLen).as("skey"))
+        1, SortKeyPrefixLen).as("skey"))
     val ranked = OrderedScan.exclusivePrefixSum(keyed,
         Seq(col("skey"), col("id")), lit(1L), "rnk")
       .select("id", "rnk")
@@ -381,27 +384,17 @@ object DedupOps {
     * integers end-to-end, so the DuckDB oracle (same gaps-and-islands in
     * SQL) matches without any float contract. */
   def duplicateSpanIntervals(docs: DataFrame, idCol: String = "doc_id",
-      textCol: String = "text", n: Int = 8, minDf: Int = 2,
-      hashSpans: Boolean = false): DataFrame = {
+      textCol: String = "text", n: Int = 8, minDf: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val words = split(trim(col(textCol)), "\\s+")
     val nw = size(words)
     val idxs = when(nw >= n, sequence(lit(1), nw - (n - 1)))
       .otherwise(array().cast("array<int>"))
-    val rawPos = Par.scanSpread(docs.select(col(idCol), col(textCol)))
+    val pos = Par.scanSpread(docs.select(col(idCol), col(textCol)))
       .select(col(idCol).as("sid"),
         explode(transform(idxs, i => struct(i.as("i"),
           concat_ws(" ", slice(words, i, lit(n))).as("span")))).as("ps"))
       .select(col("sid"), col("ps.i").as("i"), col("ps.span").as("span"))
-    // hashSpans = the corpus-scale path: span STRINGS (n words each) become
-    // xxhash64 keys before the distinct/df shuffle and join back, cutting
-    // the shuffled key bytes ~6× at n=8 (collision odds ~2⁻⁶⁴ per pair).
-    // Off for the driver query so the DuckDB oracle can regroup the raw
-    // strings; OpsSpec pins hashed == raw.
-    val pos =
-      if (hashSpans)
-        rawPos.select(col("sid"), col("i"), xxhash64(col("span")).as("span"))
-      else rawPos
     val dup = pos.select("sid", "span").distinct()
       .groupBy("span").agg(count(lit(1)).as("span_df"))
       .where(col("span_df") >= minDf)
@@ -523,6 +516,9 @@ object DedupOps {
     sums.select(col("sid"), fp.as("simhash"))
   }
 
+  /** Star rounds [[connectedComponents]] runs before it gives up. */
+  private val MaxCcRounds = 50
+
   /** Connected components of the near-dup PAIR graph → dedup GROUPS — the
     * step every production dedup pipeline ends with: near-dup similarity is
     * not transitive, so the pair emitters above (Jaccard, MinHash-LSH,
@@ -551,14 +547,13 @@ object DedupOps {
     * canonically-oriented edge set), not via a hash checksum — a false
     * "converged" would silently emit a wrong grouping.
     *
-    * Returns one row per node that appears in any pair:
+    * Returns one row per node in any pair (long columns `a`, `b` of `pairs`):
     * (id, group_id = component min id — the canonical keeper, group_size).
     */
-  def connectedComponents(pairs: DataFrame, aCol: String = "a",
-      bCol: String = "b", maxRounds: Int = 50): DataFrame =
+  def connectedComponents(pairs: DataFrame): DataFrame =
     CacheScope { w =>
       val spark = pairs.sparkSession
-      val Seq(ai, bi) = Seq(aCol, bCol).map(pairs.schema.fieldIndex)
+      val Seq(ai, bi) = Seq("a", "b").map(pairs.schema.fieldIndex)
       // Canonical orientation (u > v), self-loop-free.
       val canon = w.persist(pairs.rdd.flatMap { r =>
         def id(i: Int) = r.get(i).asInstanceOf[Number].longValue
@@ -590,7 +585,7 @@ object DedupOps {
       w.drop(canon)
       var round = 0
       var done = n == 0L
-      while (!done && round < maxRounds) {
+      while (!done && round < MaxCcRounds) {
         val next = w.persist(smallStar(largeStar(e)))
         val nNext = next.count()
         // Both sides distinct + canonical ⇒ equal counts ∧ empty difference
@@ -603,7 +598,7 @@ object DedupOps {
         n = nNext
         round += 1
       }
-      require(done, s"connectedComponents did not converge in $maxRounds rounds")
+      require(done, s"connectedComponents did not converge in $MaxCcRounds rounds")
       // At the fixpoint every edge is (member, root); roots appear only as v.
       val members = e.flatMap { case (u, v) => Iterator((v, u), (v, v)) }
         .distinct(width)

@@ -318,7 +318,8 @@ object DedupQueries {
     val w = 3; val tau = 0.5
     s"""${shingleCte(8)},
        nk AS (SELECT doc_id AS id,
-           substr(lower(regexp_replace(trim(text), '\\s+', ' ', 'g')), 1, 64)
+           substr(lower(regexp_replace(trim(text), '\\s+', ' ', 'g')), 1,
+             ${DedupOps.SortKeyPrefixLen})
              AS skey
          FROM documents),
        rk AS (SELECT id, row_number() OVER (ORDER BY skey, id) AS rnk

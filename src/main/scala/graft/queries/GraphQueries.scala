@@ -17,7 +17,7 @@ object GraphQueries {
     // all 5 iterations as chained CTEs — two independent iterative
     // implementations must agree to the 1e-9 rounding contract.
     QuerySpec.of("q35_pagerank", Oracle(q35OracleSql)) { (s, dir, name) =>
-      onCoMentionGraph(s, dir)(GraphOps.pageRank(_, iters = 5) { pr =>
+      onCoMentionGraph(s, dir)(GraphOps.pageRank(_, Q35Iters) { pr =>
         stash(s, pr.orderBy("doc_id"), name)
       })
     },
@@ -76,9 +76,11 @@ object GraphQueries {
     * recurrence with its own join/aggregation engine, and the two must
     * agree under the round(…, 9) contract. Generated so the iteration
     * count/damping stay single-sourced with the Spark query. */
+  private val Q35Iters = 5
+
   private def q35OracleSql: String = {
-    val d = "0.85"
-    val iters = 5
+    val d = GraphOps.Damping
+    val iters = Q35Iters
     val head =
       s"""WITH l AS (
            SELECT DISTINCT split_part(m.subj, '#', 1) AS convId, h.docId

@@ -6,11 +6,13 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The link has one cell layout and one cell engine: only `Cells` packs doc
-  * and idf blobs, and only `Cells.score` cogroups and scores cells, so the
-  * shuffled cells (`Linker.linkPlanned`) and the persisted cells (`LinkIndex`)
-  * cannot drift apart on which cell a blob goes to or how a cell is
-  * scored. And no link route collects its inputs to the driver. */
+/** The link has one cell layout and one link body: only `Cells` packs doc
+  * and idf blobs, and only `Cells.link` takes queries into cells, scores
+  * them (`Cells.score`, the one cogroup) and merges partial lists, so the
+  * shuffled cells (`Linker.linkPlanned`) and the persisted cells
+  * (`LinkIndex`) cannot drift apart on which cell a blob or query goes to,
+  * how a cell is scored or how lists merge. And no link route collects its
+  * inputs to the driver. */
 class CellGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src", "main", "scala")
@@ -46,6 +48,32 @@ class CellGuardSpec extends AnyFunSuite {
       "scoreCell must be called once, from Cells.score:\n" + calls.mkString("\n"))
   }
 
+  /** The def enclosing line `n` (1-based) of `raw`. */
+  private def owner(raw: Seq[String], n: Int): String = {
+    val at = raw.take(n).lastIndexWhere(_.matches("""\s*(private\S*\s+)?def\s.*"""))
+    """def\s+(\w+)""".r.findFirstMatchIn(raw(at)).get.group(1)
+  }
+
+  test("cells are scored and partial lists merged only by the one link body") {
+    // `Linker.linkPlanned` and `LinkIndex.link` both call `Cells.link`;
+    // neither runs the cell cogroup or the top-k merge itself.
+    val cells = link.resolve("Cells.scala")
+    val call = """(\bCells\s*\.\s*|\bdef\s+)?\b(score|mergeHits)\s*\(""".r
+    val calls = sources(root).flatMap { p =>
+      val raw = Files.readAllLines(p).asScala.toSeq
+      lines(p).flatMap { l =>
+        call.findAllMatchIn(l._3).collect {
+          case m if Option(m.group(1)).fold(p == cells)(_.startsWith("Cells")) =>
+            (p.getFileName.toString, owner(raw, l._2), m.group(2))
+        }
+      }
+    }
+    assert(calls.sorted == Seq(("Cells.scala", "link", "mergeHits"),
+      ("Cells.scala", "link", "score")),
+      "Cells.score and Cells.mergeHits must be called only from Cells.link:\n" +
+        calls.mkString("\n"))
+  }
+
   test("no Dataset cell grouping or Dataset top-k merge is left in the link") {
     // `Linker.attachIdf` is the cold-path idf view (explain, stage tables),
     // not a cell: its Dataset cogroup is the one allowed.
@@ -69,11 +97,9 @@ class CellGuardSpec extends AnyFunSuite {
     // counts and `Linker.discoverTowns`' town vocabulary.
     val call = """\.collect\s*\(\s*\)""".r
     val calls = sources(link).flatMap { p =>
-      val raw = Files.readAllLines(p).asScala
-      lines(p).filter(l => call.findFirstIn(l._3).isDefined).map { l =>
-        val owner = raw.take(l._2).lastIndexWhere(_.matches("""\s*(private\S*\s+)?def\s.*"""))
-        (p.getFileName.toString, """def\s+(\w+)""".r.findFirstMatchIn(raw(owner)).get.group(1))
-      }
+      val raw = Files.readAllLines(p).asScala.toSeq
+      lines(p).filter(l => call.findFirstIn(l._3).isDefined)
+        .map(l => (p.getFileName.toString, owner(raw, l._2)))
     }
     assert(calls.sorted == Seq(("Cells.scala", "countByPk"), ("Linker.scala", "discoverTowns")),
       "driver collects under graft/link:\n" + calls.mkString("\n"))

@@ -186,11 +186,10 @@ class KgPipelineSpec extends AnyFunSuite {
     // Use corpus docs themselves as queries (self-link); one cell per
     // district is the base every knob setting must reproduce.
     val pks = docs.collect().map(_.partKey).distinct.sorted
-    // A hand-built plan: every district in the shuffled cells with `knobs`
-    // (one cell where absent).
+    // A hand-built plan: `knobs` name every district it links.
     def routed(knobs: Map[String, Linker.CellKnobs]) =
       key(Linker.linkPlanned(s, Linker.RoutePlan(Map.empty, Map.empty,
-        pks.toSet, knobs), docs, docs, 5, idf))
+        knobs), docs, docs, 5, idf))
     def run(qb: Int, db: Int) =
       routed(pks.map(_ -> Linker.CellKnobs(qb, db)).toMap)
     val base = run(1, 1)
@@ -208,7 +207,8 @@ class KgPipelineSpec extends AnyFunSuite {
     // docs (db > 1), so final and partial lists share one merge.
     val (oneCell, cellHalf) = pks.splitAt(pks.length / 2)
     assert(oneCell.nonEmpty && cellHalf.nonEmpty)
-    assert(routed(cellHalf.map(_ -> Linker.CellKnobs(3, 2)).toMap) == base)
+    assert(routed((oneCell.map(_ -> Linker.CellKnobs(1, 1)) ++
+      cellHalf.map(_ -> Linker.CellKnobs(3, 2))).toMap) == base)
 
     // Auto mode (counted stats → knobs) agrees, with thresholds forced low
     // enough that the 2-D blocking and the memory valve exercise on this

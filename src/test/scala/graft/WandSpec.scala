@@ -123,7 +123,7 @@ class WandSpec extends AnyFunSuite {
     try {
       val plan = Linker.planRoutes(Linker.countStats(s, qs, ds),
         s.sparkContext.defaultParallelism, maxDocsPerCell = maxDocsPerCell)
-      assert(plan.shufflePks == Set("pk"), plan)
+      assert(plan.knobs.keySet == Set("pk"), plan)
       assert(plan.knobs("pk").dBuckets >= Cells.valve(docs.size, maxDocsPerCell) &&
         plan.knobs("pk").dBuckets > 1, plan.knobs)
       val got = Linker.linkPlanned(s, plan, qs, ds, 5, idf).collect().map(bits).toSeq
